@@ -3,29 +3,26 @@
 ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec, ...}, "sf": ...}.
 
-Round-5 artifact fix: the driver's tail capture holds ~2 KB, and by
-round 4 the single full-name per-query map outgrew it — BENCH_r04.json
-recorded ``parsed: null`` and the headline number was lost. Stdout is
-now EXACTLY one compact line: headline + e2e + per-stage e1 seconds
-first, then the per-query map keyed by each query's short code (the
-"d3"/"e7" prefix before the first underscore — unique across the
-registry, and the form VERDICT.md itself uses). If the line would still
+The driver's tail capture holds ~2 KB, so stdout is EXACTLY one compact
+line: headline + e2e + per-stage e1 seconds first, then the per-query
+map keyed by each query's short code (the "d3"/"e7" prefix before the
+first underscore, unique across the registry). If the line would still
 exceed the capture budget it drops the fastest queries first, never the
 headline. The complete full-name record is written to BENCH_FULL.json
-next to this file every run (committed with the repo), so every
-per-query time stays on the record regardless of capture limits.
+next to this file every run, so every per-query time stays on the
+record regardless of capture limits.
 
 Each query materializes through the ``noop`` sink (full execution, no
 driver-side row transfer). First execution of a complex plan pays
 whole-stage-codegen compilation + JVM JIT warmup (measured 3-6x on the
 widest plans), so each query gets one untimed warmup execution and the
-reported figure is the MEDIAN of three timed runs with a per-query
-[min, max] bracket (the round-9 default; SPARK_GRAFT_BENCH_REPEATS
-overrides — 2 restores the pre-r9 best-of-2 contract) — steady-state
-engine throughput, which is the number that extrapolates to a
-long-running cluster. The cold first-execution total is reported
-separately as ``cold_total_sec`` and keeps one-full-rebuild semantics
-at any repeat count.
+reported figure is the MEDIAN of ``REPEATS`` timed runs with a
+per-query [min, max] bracket — steady-state engine throughput, which is
+the number that extrapolates to a long-running cluster. The cold
+first-execution total is reported separately as ``cold_total_sec``.
+
+``SPARK_GRAFT_BENCH_ONLY="d15,t32"`` (short codes or full names) runs a
+slice of the headline suite and writes BENCH_SLICE.json instead.
 """
 
 from __future__ import annotations
@@ -41,6 +38,9 @@ from x17a5_spark.cache import release_stage_caches
 from x17a5_spark.queries import registry
 from x17a5_spark.session import get_spark
 from x17a5_spark.tables import TABLE_NAMES, load_table
+
+# timed runs per query; the reported figure is their median
+REPEATS = 3
 
 HEADLINE = [
     "q1_pricing_summary",
@@ -62,27 +62,25 @@ HEADLINE = [
     "s1_cosine_topk",
     "st3_session_window",
     "e3_structured_assets",
-    # round 2 additions: the wide unstructured build and the one-pass
-    # accounting-check chain
+    # the wide unstructured build and the one-pass accounting-check chain
     "u6_unstructured_wide",
     "c5_accounting_chain",
-    # round 2 corpus-prep layer: the cleaning composite and the packing
-    # kernel
+    # corpus-prep layer: the cleaning composite and the packing kernel
     "e4_corpus_pipeline",
     "k7_sequence_pack",
-    # round 3 additions: liability-side structured build, watermark-drop
-    # semantics, IVF cell-probe ANN
+    # liability-side structured build, watermark-drop semantics, IVF
+    # cell-probe ANN
     "e3l_structured_liabilities",
     "st4_watermark_drop",
     "s3_ivf_probe",
-    # round 3, late additions: range join, salted skew join, bottom-k
+    # range join, salted skew join, bottom-k
     # sample quantiles, IVF-cell SemDeDup, unigram-LM perplexity filter
     "j9_range_join",
     "j10_salted_skew_join",
     "a17_sample_quantiles",
     "d8_semdedup",
     "t13_perplexity_filter",
-    # round 3, session 3: CDC upsert merge, equi-width histogram, video
+    # CDC upsert merge, equi-width histogram, video
     # frame-sample fan-out (g1 PageRank is oracle-checked but excluded
     # here: 5 fixed iterations of tiny exchanges measure scheduler
     # latency at bench SF, not engine throughput)
@@ -112,7 +110,7 @@ HEADLINE = [
     "st7_rate_anomaly",
     "w9_rolling_median",
     "e6_curation_funnel",
-    # round 4: the end-to-end docs -> OCR -> clean -> gold pipeline —
+    # the end-to-end docs -> OCR -> clean -> gold pipeline —
     # the single most reference-comparable number (BASELINE.md's >30 h
     # envelope for 93,599 filings); SCALE.md converts it to filings/sec
     "e1_full_pipeline",
@@ -141,16 +139,16 @@ HEADLINE = [
     "m7_audio_frames",
     "j16_fuzzy_name_join",
     "e9_training_manifest",
-    # round 5: closed-form HLL (was rows-only), Count-Min sketch,
+    # closed-form HLL, Count-Min sketch,
     # compaction planner
     "t19_hll_distinct",
     "t27_countmin",
     "v3_compaction_plan",
-    # round 6: moments quantile sketch (exact-DECIMAL power sums),
+    # moments quantile sketch (exact-DECIMAL power sums),
     # bucketed co-located join (zero-exchange fact-fact SMJ)
     "t28_moments_sketch",
     "j17_bucketed_join",
-    # round 7: asymmetric containment near-dup join (prefix-filter
+    # asymmetric containment near-dup join (prefix-filter
     # blocked on the contained side, df-capped postings) + paragraph
     # (sub-document) dedup with reassembly
     "d14_containment_join",
@@ -159,23 +157,23 @@ HEADLINE = [
     "t29_ngram_novelty",
     "k11_length_batching",
     "e11_cluster_canonical",
-    # round 8: delimiter-mode paragraph dedup (structural split +
+    # delimiter-mode paragraph dedup (structural split +
     # fixed-width chunking of oversized spans only)
     "d16_paragraph_dedup_delim",
-    # round 9: eval-set n-gram decontamination (broadcast semi-join
+    # eval-set n-gram decontamination (broadcast semi-join
     # shape — the corpus gram set never shuffles)
     "t30_decontamination",
-    # round 10: cc_star chained components (the hub-safety claim now
+    # cc_star chained components (the hub-safety claim now
     # has a measured skew row in SCALE.md, not just a plan argument)
     "d17_cc_star_chain",
-    # round 10: Gopher in-document repetition gate (two hash exchanges,
+    # Gopher in-document repetition gate (two hash exchanges,
     # zero joins — within-doc repeats collapse map-side)
     "t32_repetition_filter",
-    # round 12: the Unicode-fold gate (stateless scalar chain + one
+    # the Unicode-fold gate (stateless scalar chain + one
     # fingerprint window) and paragraph-grain minhash near-dedup
     "t33_unicode_normalize",
     "d18_paragraph_near_dedup",
-    # round 13: the frozen model-based quality gate (codegen scalar
+    # the frozen model-based quality gate (codegen scalar
     # chain; the model is ~70 interpolated integer literals)
     "t34_model_quality_filter",
 ]
@@ -184,24 +182,6 @@ HEADLINE = [
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(sf_dir.rstrip("/")).removeprefix("sf")
-    # variance-bracket protocol (round-7 VERDICT ask #3): the scaled-lake
-    # join/kernel tails vary run-to-run on this VM (d13 14.5-41.0 s
-    # between identical-plan suite samples), so single-sample artifacts
-    # cannot distinguish a regression from noise. SPARK_GRAFT_BENCH_REPEATS=N
-    # (N >= 3) switches the steady-state figure from best-of-2 to
-    # MEDIAN-of-N and records a per-query [min, max] bracket in
-    # BENCH_FULL.json. Round 9 (VERDICT r8 #2): median-of-3 IS the
-    # committed default — the sf0.1 artifact every round-over-round
-    # comparison reads carries brackets too, so single-session noise
-    # (r8's 50.0-vs-56.1 s snapshot/artifact mismatch) can't read as a
-    # regression. SPARK_GRAFT_BENCH_REPEATS=2 restores the old
-    # best-of-2 contract. Regression rule (SCALE.md): flag a query
-    # only when its new median moves >1.5x outside the recorded bracket.
-    repeats = max(2, int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3")))
-    # SPARK_GRAFT_BENCH_ONLY="d15,d16,st8" (short codes or full names):
-    # run a targeted slice of the headline suite — the skew-lake and
-    # 100x protocols (round 10) measure specific queries without paying
-    # for the whole suite at a big lake.
     only_env = os.environ.get("SPARK_GRAFT_BENCH_ONLY", "")
     headline = HEADLINE
     if only_env:
@@ -226,7 +206,9 @@ def main() -> None:
     # sinks into a fresh tmpdir), so reusing one plan would time a bare
     # parquet read of the gold table. The reference-comparable number is
     # the END-TO-END wall clock — construction + every stage write +
-    # the final materialization — so e1 rebuilds from scratch each run.
+    # the final materialization — so e1 rebuilds from scratch each run,
+    # with no warmup: the cold number IS the one comparable to the
+    # reference's >30 h envelope.
     END_TO_END = {"e1_full_pipeline"}
 
     timings: dict[str, float] = {}
@@ -239,57 +221,30 @@ def main() -> None:
         # per execution — and the per-query cache clear below keeps one
         # query's stage tables from evicting the next's.
         rebuild = name in END_TO_END
-        # (end-to-end queries skip the shared plan: construction alone
-        # executes their full pipeline, which belongs inside the timer)
         df = None if rebuild else queries[name](spark, sf_dir)
 
         def run() -> float:
             t0 = time.time()
-            # end-to-end queries rebuild INSIDE the timer: construction
-            # is where their stage tables are written
             d = queries[name](spark, sf_dir) if rebuild else df
             d.write.mode("overwrite").format("noop").save()
             return time.time() - t0
 
-        if rebuild:
-            # timed end-to-end execution(s) (construction + stage
-            # writes + materialization into a fresh tmpdir); no
-            # warmup/best-of-2 — every run is a full from-scratch
-            # pipeline, and the cold number IS the one comparable to
-            # the reference's >30 h envelope. Under the bracket
-            # protocol the end-to-end pipelines repeat too (e1 was one
-            # of the documented variance offenders), each repeat a
-            # full rebuild.
-            if repeats == 2:
-                timings[name] = round(run(), 3)
-                cold_total += timings[name]
-            else:
-                samples = sorted(run() for _ in range(repeats))
-                timings[name] = round(samples[len(samples) // 2], 3)
-                brackets[name] = [round(samples[0], 3), round(samples[-1], 3)]
-                # cold_total keeps ONE-full-rebuild semantics at any
-                # repeat count (ADVICE r8: sum(samples) scaled with the
-                # protocol and broke comparability to best-of-2
-                # artifacts) — the median rebuild is the representative
-                # sample; the full spread lives in the bracket map
-                cold_total += timings[name]
-        else:
+        if not rebuild:
             cold_total += run()  # warmup: codegen + JIT + stage fill
-            samples = sorted(run() for _ in range(repeats))
-            if repeats == 2:
-                timings[name] = round(samples[0], 3)  # best-of-2 contract
-            else:
-                timings[name] = round(samples[len(samples) // 2], 3)  # median
-                brackets[name] = [round(samples[0], 3), round(samples[-1], 3)]
+        samples = sorted(run() for _ in range(REPEATS))
+        timings[name] = round(samples[len(samples) // 2], 3)
+        brackets[name] = [round(samples[0], 3), round(samples[-1], 3)]
+        if rebuild:
+            # cold_total counts one full rebuild: the median sample
+            cold_total += timings[name]
         # scoped release first (drops the Python references so the JVM
         # can reclaim the blocks), then the defensive catalog sweep
         release_stage_caches()
         spark.catalog.clearCache()
 
-    # "value" stays the STEADY-STATE suite total (comparable across
-    # rounds); the end-to-end pipeline numbers are reported separately
-    # so an ~85 s full-pipeline run doesn't read as a 3x suite
-    # regression against earlier rounds' steady-state-only totals.
+    # "value" is the STEADY-STATE suite total; the end-to-end pipeline
+    # numbers are reported separately so a full-pipeline run does not
+    # read as a suite regression.
     from x17a5_spark import pipeline
 
     steady = {k: v for k, v in timings.items() if k not in END_TO_END}
@@ -304,20 +259,17 @@ def main() -> None:
         "e2e_pipeline_sec": {k: timings[k] for k in END_TO_END if k in timings},
         "e1_stages": e1_stages,
         "n_queries": len(timings),
-    }
-    if brackets:
-        full["protocol"] = f"median_of_{repeats}"
-        full["bracket"] = brackets
-        full["regression_rule"] = (
+        "protocol": f"median_of_{REPEATS}",
+        "bracket": brackets,
+        "regression_rule": (
             "flag only if a query's new median moves >1.5x outside the "
             "recorded [min,max] bracket"
-        )
+        ),
+    }
     # a BENCH_ONLY slice must never overwrite the committed full-suite
-    # artifact (round 10: a t30-only probe was accidentally committed
-    # as BENCH_FULL.json) — slices write to BENCH_SLICE.json. The
-    # artifact name and (for slices) the query list go INTO the file
-    # before it is dumped, so the on-disk record is self-describing —
-    # a committed slice can never masquerade as a full run (ADVICE r10).
+    # artifact, so slices write to BENCH_SLICE.json. The artifact name
+    # and (for slices) the query list go INTO the file, so a committed
+    # slice can never masquerade as a full run.
     artifact = "BENCH_SLICE.json" if only_env else "BENCH_FULL.json"
     full["queries_file"] = artifact
     if only_env:
@@ -344,8 +296,8 @@ LINE_BUDGET = 1800
 def compose_stdout_line(
     full: dict, timings: dict[str, float], budget: int = LINE_BUDGET
 ) -> str:
-    """One compact JSON line that NEVER exceeds ``budget`` chars
-    (ADVICE r5+r6): per-query map keyed by short codes, truncated
+    """One compact JSON line that NEVER exceeds ``budget`` chars:
+    per-query map keyed by short codes, truncated
     slowest-first, then dropped entirely, then a minimal headline
     record — the headline number always survives. Unit-tested against
     synthetic long keys in tests/test_scale_patterns.py."""
@@ -376,7 +328,7 @@ def compose_stdout_line(
         # even 10 entries can blow the capture budget (long full-name
         # fallbacks, future top-level keys): drop the queries map
         # entirely — the headline survives, BENCH_FULL.json has the
-        # rest (ADVICE r5)
+        # rest
         line = line_for(0)
     if len(line) > budget:
         # last-resort hard clamp: if the non-query maps themselves

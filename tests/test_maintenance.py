@@ -497,6 +497,38 @@ def test_curation_funnel_is_monotone(spark):
         assert counts[-1] <= E6_QUOTA
 
 
+def test_curation_funnel_omits_stages_a_source_never_reaches(spark, tmp_path):
+    """A source whose documents all fail the language gate keeps only its
+    1_raw row, as the oracle's per-stage GROUP BY does — no n_kept = 0
+    rows for the later stages."""
+    import duckdb
+
+    from x17a5_spark.queries.corpus import E6_SQL, e6_curation_funnel
+
+    con = duckdb.connect()
+    base = f"'{SF}/documents.parquet'"
+    con.execute(
+        f"COPY (SELECT * FROM {base} UNION ALL "
+        f"SELECT max_id + i, 'zzz qqq xxv', 'xx', 'junk', 11 "
+        f"FROM (SELECT max(doc_id) AS max_id FROM {base}), range(1, 4) t(i)) "
+        f"TO '{tmp_path}/documents.parquet' (FORMAT parquet)"
+    )
+    rows = {
+        tuple(r)
+        for r in e6_curation_funnel(spark, str(tmp_path))
+        .select("stage", "source", "n_kept")
+        .collect()
+    }
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM '{tmp_path}/documents.parquet'"
+    )
+    oracle = {tuple(r) for r in con.execute(E6_SQL).fetchall()}
+    assert ("1_raw", "junk", 3) in rows
+    assert not [r for r in rows if r[1] == "junk" and r[0] != "1_raw"]
+    assert all(r[2] > 0 for r in rows)
+    assert rows == oracle
+
+
 def test_bpe_apply_replace_trick_equals_real_bpe(spark):
     """e8's chained literal replace on space-joined symbols must equal
     a real sequential BPE apply (merge-by-merge pair scan) for every

@@ -60,6 +60,28 @@ def test_ocr_source_with_error_ledger(spark):
     assert len(e) == 1 and e[0]["cik"] == "2" and "stub OCR failure" in e[0]["error"]
 
 
+def test_ocr_cell_missing_a_key_is_null_not_a_failed_partition(spark):
+    class NoConfidenceBackend(StubOcrBackend):
+        def fetch(self, job_id):
+            cells = super().fetch(job_id)
+            for cell in cells:
+                del cell["confidence"]
+            return cells
+
+    docs = spark.createDataFrame(
+        [("1", "2020-01-01", b"Cash|100\nTotal assets|100")],
+        "cik string, filing_date string, content binary",
+    )
+    good, errors = quarantine(
+        OcrSource(backend_factory=NoConfidenceBackend).run(docs)
+    )
+    rows = sorted(good.collect(), key=lambda r: r["row_idx"])
+    assert [r["col0"] for r in rows] == ["Cash", "Total assets"]
+    assert [r["col1"] for r in rows] == ["100", "100"]
+    assert all(r["confidence"] is None for r in rows)
+    assert errors.count() == 0
+
+
 # --------------------------------------------------------- multimodal
 def test_multimodal_plumbing(spark):
     rows = [

@@ -66,10 +66,11 @@ def _line_scale_py(line: str) -> float | None:
 @F.pandas_udf(T.DoubleType())
 def _line_scale(lines: pd.Series) -> pd.Series:
     """Vectorized wrapper: score each DISTINCT line once per batch
-    (plus the cross-batch lru caches above). Round 11: the uncached
-    per-line difflib scan was 22.7 s of e1's silver at the 100× lake —
-    the single most expensive silver stage — and is value-identical
-    memoized (r10 #4 attribution; tools/e1_kernel_profile.py)."""
+    (plus the cross-batch lru caches above). The uncached per-line
+    difflib scan was 22.7 s of e1's silver at the 100× lake — the
+    single most expensive silver stage — and is value-identical
+    memoized (per-stage timing: the traced ``ingest`` benchmark run's
+    ``silver.scale_s``)."""
     mapping = {
         v: (_line_scale_py(v) if isinstance(v, str) else None)
         for v in pd.unique(lines)

@@ -71,9 +71,10 @@ def _silver_dense(scaled: DataFrame) -> DataFrame:
 def silver_stages(text: DataFrame) -> list[tuple[str, object]]:
     """The silver chain as an ORDERED list of (name, transform) — the
     single source of truth composed by ``clean_filings`` and timed
-    stage-by-stage by ``tools/e1_kernel_profile.py`` (VERDICT r10 #4:
-    the per-kernel attribution must profile the shipped composition,
-    not a copy that can drift)."""
+    stage-by-stage by the traced benchmark run
+    (``python3 perfbench/run.py --workload ingest --seed 1 --seconds 5
+    --trace 1``, the ``silver.<stage>_s`` layers), which must profile
+    the shipped composition, not a copy that can drift."""
     return [
         ("purge", _silver_purge),
         (

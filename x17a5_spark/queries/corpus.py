@@ -868,9 +868,13 @@ def e6_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.struct(F.lit(nm).alias("stage"), F.col(f"n{i}").alias("n_kept"))
         for i, nm in enumerate(names, start=1)
     ]
-    return per_src.select(
-        "source", F.explode(F.array(*entries)).alias("e")
-    ).select("e.stage", "source", "e.n_kept")
+    # the oracle's per-stage GROUP BY emits no row for a stage a source
+    # does not survive to
+    return (
+        per_src.select("source", F.explode(F.array(*entries)).alias("e"))
+        .filter(F.col("e.n_kept") > 0)
+        .select("e.stage", "source", "e.n_kept")
+    )
 
 
 def _e6_sql() -> str:

@@ -37,37 +37,21 @@ def get_spark(app_name: str = "x17a5_spark", shuffle_partitions: int | None = No
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
-    # Round-13 optimization round: a long-lived driver running the full
-    # registry compiles thousands of whole-stage-codegen classes, and
-    # the JVM's DEFAULT reserved code cache (240 MB) fills after ~70
-    # queries — the JIT compiler shuts off ("CodeCache is full") and
-    # every later query runs interpreted. Measured on the full sf0.1
-    # suite: the late-suite queries inflated 2-3x (t30 4.33 s -> 1.89 s,
-    # a27 3.17 -> 1.05, m6's cached-probe 2.05 -> 0.15, t26/s7/s3 all
-    # normalized; suite total 68.4 -> 54.5 s) with nothing but this
-    # flag. ReservedCodeCacheSize is VIRTUAL reservation — it costs
-    # memory only as compiled code actually fills it — so the setting
-    # is safe at any deployment size; code-cache flushing stays at its
-    # JVM default. This is not a local[32] tuning: any production
-    # driver/executor serving a large query registry hits the same
-    # cliff. Parameterized for A/B against the default
-    # (SPARK_GRAFT_CODE_CACHE=240m restores the stock JVM behaviour).
-    # Only effective when THIS process creates the JVM; a getOrCreate()
-    # against a live session ignores driver JVM opts.
-    java_opts = [
-        "-XX:ReservedCodeCacheSize="
-        + os.environ.get("SPARK_GRAFT_CODE_CACHE", "1g")
-    ]
-    # GC-log knob (VERDICT r12 #1): turns the 100x variance class from
-    # attribution prose into data — full-GC stalls either show up in
-    # the log during a slow sample or the GC hypothesis is dead. Used
-    # by the fresh-JVM protocol in tools/bench_100x.py.
-    gc_log = os.environ.get("SPARK_GRAFT_GC_LOG")
-    if gc_log:
-        java_opts.append(f"-Xlog:gc*:file={gc_log}:time,uptime,level,tags")
-    builder = builder.config(
-        "spark.driver.extraJavaOptions", " ".join(java_opts)
-    )
-    spark = builder.getOrCreate()
+    # A long-lived driver running the full registry compiles thousands
+    # of whole-stage-codegen classes, and the JVM's default reserved
+    # code cache (240 MB) fills after ~70 queries: the JIT compiler
+    # shuts off ("CodeCache is full") and every later query runs
+    # interpreted. Measured on the full sf0.1 suite, the late-suite
+    # queries inflated 2-3x (t30 4.33 s -> 1.89 s, a27 3.17 -> 1.05,
+    # m6's cached probe 2.05 -> 0.15; suite total 68.4 -> 54.5 s) with
+    # nothing but this flag. ReservedCodeCacheSize is a virtual
+    # reservation that costs memory only as compiled code fills it, so
+    # it is safe at any deployment size, and any driver or executor
+    # serving a large query registry hits the same cliff. Only effective
+    # when this process creates the JVM; a getOrCreate() against a live
+    # session ignores driver JVM options.
+    spark = builder.config(
+        "spark.driver.extraJavaOptions", "-XX:ReservedCodeCacheSize=1g"
+    ).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

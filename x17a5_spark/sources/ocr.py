@@ -155,7 +155,9 @@ class OcrSource:
                         out["filing_date"].extend([fdate] * n)
                         for c in _CELL_COLS:
                             col = out[c]
-                            col.extend(cell[c] for cell in cells)
+                            # a key the backend left out is a null cell,
+                            # not a failed partition
+                            col.extend(cell.get(c) for cell in cells)
                         out["error"].extend([None] * n)
                 yield pd.DataFrame(out, columns=_COLS)
 
