@@ -362,26 +362,25 @@ def test_st8_oracle_non_monotone_event_ids():
     assert (kept_id, n_sup) == (7, 1), rows
 
 
-def test_d8_cell_count_derives_from_corpus_no_env_knob(spark, monkeypatch):
-    """VERDICT r10 #3: the 100×-safe cell count lived only in
-    X17A5_D8_CELLS — the default k=16 meant 50,000-vector cells (a
-    ~20 GB matmul) on the 100× lake. The default path now derives k
-    from one corpus count with the round-12 perf-optimal cap (~1k
-    augmented vectors per cell). Pins: (a) every shipped gate lake
-    derives EXACTLY the historic (16, 4) so the registry stays
-    byte-identical; (b) the per-cell bound n/k <= D8_CELL_CAP (the
-    round-12 perf-tuned cap: 1024^2 x 8 B ~= 8 MB of per-cell scores,
-    the measured U-curve optimum, far below Arrow limits) holds for ANY
-    corpus size, so the matmul can never outgrow an Arrow batch; (c)
-    the derived super count is a true divisor near sqrt(k) (a prime k
-    would collapse staged assignment to flat N*k); (d) env-unset and
-    env=16 produce identical output rows."""
+def test_d8_cell_count_derives_from_corpus_no_env_knob():
+    """d8 derives its cell count from one corpus count with the
+    perf-optimal cap (~1k augmented vectors per cell), so no hand-set
+    knob is needed at 100× (a fixed k=16 meant 50,000-vector cells, a
+    ~20 GB matmul, on the 100× lake). Pins: (a) every shipped gate lake
+    derives EXACTLY (16, 4), the cell counts the static oracle is
+    written with; (b) the per-cell bound n/k <= D8_CELL_CAP (1024^2 x
+    8 B ~= 8 MB of per-cell scores, the measured U-curve optimum, far
+    below Arrow limits) holds for ANY corpus size, so the matmul can
+    never outgrow an Arrow batch; (c) the derived super count is a true
+    divisor near sqrt(k) (a prime k would collapse staged assignment to
+    flat N*k)."""
     import math
 
-    from x17a5_spark.queries.advanced import D8_CELL_CAP, _d8_derive, d8_semdedup
+    from x17a5_spark.queries.advanced import D8_CELL_CAP, _d8_derive
+    from x17a5_spark.queries.similarity import N_CELLS, N_SUPERS
 
     # (a) gate lakes: sf0.001/0.01 = 500 embeddings, sf0.1 = 2000
-    assert _d8_derive(2 * 500) == (16, 4)
+    assert _d8_derive(2 * 500) == (16, 4) == (N_CELLS, N_SUPERS)
     assert _d8_derive(2 * 2000) == (16, 4)
     # (b)+(c) OOM guard across 6 orders of magnitude, incl. the 100×
     # lake (400k aug vecs -> the recipe's 1600) and awkward sizes
@@ -391,9 +390,3 @@ def test_d8_cell_count_derives_from_corpus_no_env_knob(spark, monkeypatch):
         assert k % s == 0, f"supers not a divisor at n={n}"
         assert s >= math.isqrt(k) // 2, f"degenerate staging at n={n}"
     assert _d8_derive(400_000) == (400, 20)  # the documented 100× point
-    # (d) derived default == explicit 16 on a real lake
-    monkeypatch.delenv("X17A5_D8_CELLS", raising=False)
-    derived = {tuple(r) for r in d8_semdedup(spark, SF).collect()}
-    monkeypatch.setenv("X17A5_D8_CELLS", "16")
-    explicit = {tuple(r) for r in d8_semdedup(spark, SF).collect()}
-    assert derived == explicit and derived

@@ -122,6 +122,26 @@ def test_pipeline_quarantines_ocr_failures(spark, tmp_path):
     assert errors.collect()[0]["cik"] == "202"
 
 
+def test_pipeline_rerun_keeps_one_ledger_row_per_filing_error(spark, tmp_path):
+    """A filing that keeps failing OCR never reaches bronze, so every
+    rerun re-OCRs it; the quarantine ledger must still hold one row per
+    (filing, error), not one per run."""
+    out = str(tmp_path / "lake")
+    docs = spark.createDataFrame(
+        [
+            ("211", "2021-06-30", bytearray(DOC)),
+            ("212", "2021-06-30", bytearray(b"__FAIL__")),
+        ],
+        "cik string, filing_date string, content binary",
+    )
+    for _ in range(2):
+        run_pipeline(
+            spark, docs, _text(spark, ["211", "212"]), out, _label_map(spark), LABELS
+        )
+    rows = [tuple(r) for r in spark.read.parquet(out + "/ocr_errors").collect()]
+    assert len(rows) == 1 and rows[0][0] == "212", rows
+
+
 def test_build_unstructured_prunes_and_orders(spark):
     long_df = spark.createDataFrame(
         [

@@ -195,8 +195,7 @@ def test_grouped_kernel_handles_groups_spanning_arrow_batches(spark):
     """grouped_kernel's carry path: with maxRecordsPerBatch far smaller
     than a group, every group spans several Arrow batches and must
     still be dispatched exactly once — output equal to the
-    applyInPandas reference for both fn forms, including a NaN group
-    key."""
+    applyInPandas reference, including a NaN group key."""
     import pandas as pd
     from pyspark.sql import functions as F
 
@@ -243,12 +242,5 @@ def test_grouped_kernel_handles_groups_spanning_arrow_batches(spark):
         )
         assert got.equals(ref), (got, ref)
         assert got["n"].sum() == 600  # every row dispatched exactly once
-
-        # two-arg form: key tuple must match the group column value
-        def fn2(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            return pd.DataFrame({"k": [key[0]], "n": [len(pdf)]})
-
-        got2 = grouped_kernel(df, ["k"], fn2, "k string, n long", with_key=True)
-        assert got2.toPandas()["n"].sum() == 600
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)

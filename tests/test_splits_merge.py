@@ -253,10 +253,7 @@ def test_fused_tail_equals_composition(spark):
     fused = {tuple(r[c] for c in cols)
              for r in bisect_and_remove_subtotals(df).collect()}
     composed = {tuple(r[c] for c in cols)
-                for r in remove_subtotals(
-                    split_balance_sheet(df),
-                    group_cols=["cik", "filing_date", "side"],
-                ).collect()}
+                for r in remove_subtotals(split_balance_sheet(df)).collect()}
     assert fused == composed and len(fused) > 0
 
 
@@ -307,8 +304,6 @@ def test_fused_tail_equals_composition_randomized(spark):
     )
     composed = sorted(
         tuple(r[c] for c in cols)
-        for r in remove_subtotals(
-            split_balance_sheet(df), group_cols=["cik", "filing_date", "side"]
-        ).collect()
+        for r in remove_subtotals(split_balance_sheet(df)).collect()
     )
     assert fused == composed

@@ -1,16 +1,15 @@
-"""Audit Spark result dtypes vs DuckDB oracle result types per column.
+"""Audit Spark result dtypes vs DuckDB oracle result types per column,
+without running any query.
 
-Round 1's two driver hash failures (p2/f21) were pure type drift: the
-oracle SQL's bare integer ``sum()`` came back as DuckDB HUGEINT (int128)
-while Spark produced BIGINT, and the driver's value hasher renders the
-two differently even though the values are equal. The local value
-checker (tools/check_correctness.py) compares through ``str()`` and so
-cannot see this class of bug.
-
-This tool catches it statically: for every registered oracle it runs
-``DESCRIBE <sql>`` on DuckDB (no execution of the query body) and reads
-the Spark DataFrame schema (no action), canonicalizes both type systems,
-and flags any column whose canonical types differ. Flagged classes:
+Type drift is a real failure class: an oracle's bare integer ``sum()``
+comes back as DuckDB HUGEINT (int128) while Spark produces BIGINT, and
+a pandas-based value hash renders the two differently even though the
+values are equal. ``tools/check_correctness.py`` catches it too, with
+the dtype-class gate in ``compare()``, but only after executing both
+sides. This tool runs ``DESCRIBE <sql>`` on DuckDB (no execution of the
+query body) and reads the Spark DataFrame schema (no action),
+canonicalizes both type systems, and flags any column whose canonical
+types differ — finer-grained than ``compare()``'s classes. Flagged:
 
 - DuckDB HUGEINT anywhere (always wrong: Spark has no int128)
 - decimal scale mismatch (renders "1.50" vs "1.500")
@@ -24,15 +23,11 @@ Usage: python tools/audit_types.py [query_name ...]
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-import duckdb
-
-SF_DIR = "/root/testdata/sf0.01"
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
+from check_correctness import SF_DIR, duck_connection
 
 INT_TYPES = {"tinyint", "smallint", "int", "integer", "bigint", "byte", "short", "long"}
 
@@ -70,16 +65,14 @@ def canon(t: str) -> str:
 
 
 def main() -> int:
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from x17a5_spark.queries import registry
     from x17a5_spark.session import get_spark
 
     queries, oracles = registry()
     wanted = sys.argv[1:] or [n for n in queries if n in oracles]
     spark = get_spark("audit_types")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
+    con = duck_connection()
 
     bad = 0
     for name in wanted:

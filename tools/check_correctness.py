@@ -11,20 +11,22 @@ Usage: python tools/check_correctness.py [query_name ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
 import duckdb
 
 SF_DIR = "/root/testdata/sf0.01"
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
 
 
 def duck_connection() -> duckdb.DuckDBPyConnection:
+    """DuckDB views of every lake table under ``SF_DIR`` (read at call
+    time: the benchmark points it at its own lake)."""
+    from x17a5_spark.tables import TABLE_NAMES
+
     con = duckdb.connect()
-    for t in TABLES:
+    for t in TABLE_NAMES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'"
         )
@@ -176,7 +178,7 @@ def compare(name: str, spark_df, con) -> dict:
 
 
 if __name__ == "__main__":
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from x17a5_spark.queries import registry
     from x17a5_spark.session import get_spark
 

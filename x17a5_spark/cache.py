@@ -6,29 +6,27 @@ indexes, s7/s8 trained codebooks, t30's eval slice, g1's edge list —
 each a stand-in for a pre-materialized production stage table). Those
 persists happen at plan-CONSTRUCTION time, the returned DataFrame is
 lazy, and the constructing function cannot know when the caller is
-done materializing — so before round 12 every such site leaked a
-CacheManager registration per invocation (bounded ad hoc: t30 kept a
-module-global single slot, everything else relied on callers'
-``spark.catalog.clearCache()``).
+done materializing — so without an owner every such site would leak a
+CacheManager registration per invocation.
 
-Round 12 (VERDICT r11 #2): ONE owner. Every construction-time persist
-in the query registry routes through :func:`stage_persist`, which
-registers the DataFrame here; sweep consumers (bench.py between
-queries, tools/check_correctness.py, tools/dump_plans.py, the registry
-tests) call :func:`release_stage_caches` when they are done with a
-query. Releasing unpersists AND drops the Python references, so the
-JVM side can actually reclaim the blocks (``clearCache()`` alone
-unpersists but leaves live references pinning re-registration paths).
+ONE owner: every construction-time persist in the query registry
+routes through :func:`stage_persist`, which registers the DataFrame
+here; sweep consumers (bench.py between queries,
+tools/check_correctness.py, tools/dump_plans.py, the registry tests)
+call :func:`release_stage_caches` when they are done with a query.
+Releasing unpersists AND drops the Python references, so the JVM side
+can actually reclaim the blocks (``clearCache()`` alone unpersists but
+leaves live references pinning re-registration paths).
 
 At 100-TB scale this is the eviction policy between pipeline stages: a
 suite/driver process that runs many queries in one session would
 otherwise accumulate every query's stage tables in executor storage
 memory — the measured cause of e1's in-suite vs isolated gap at the
-100x lake (87.4 s vs 18.8 s, SCALE.md r11).
+100x lake (87.4 s vs 18.8 s, SCALE.md).
 
 The registry stays append-only per query: re-invoking the same query
 twice tracks both persists and ``release_stage_caches()`` drops both —
-there is no single-slot aliasing (the r10 t30 mechanism this replaces).
+there is no single-slot aliasing.
 """
 
 from __future__ import annotations
@@ -41,18 +39,16 @@ from pyspark.sql import DataFrame
 _STAGE_CACHES: list[DataFrame] = []
 
 
-def stage_persist(
-    df: DataFrame,
-    level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
-) -> DataFrame:
-    """``df.persist(level)``, registered for scoped release.
+def stage_persist(df: DataFrame) -> DataFrame:
+    """``df.persist(MEMORY_AND_DISK)``, registered for scoped release.
+    Stage tables are corpus-sized: they spill to disk, never OOM.
 
     Use for every persist created during query CONSTRUCTION whose
     lifetime must extend past the builder's return (the returned plan
     references it). Persists that a builder both creates and
     unpersists itself (e.g. t18's per-round BPE vocab) don't need
     tracking."""
-    out = df.persist(level)
+    out = df.persist(StorageLevel.MEMORY_AND_DISK)
     _STAGE_CACHES.append(out)
     return out
 
@@ -79,8 +75,8 @@ def tracked_stage_count() -> int:
 def stage_scope():
     """Release ONLY the stage caches registered inside the scope.
 
-    The stage-boundary eviction policy for multi-stage runs (VERDICT
-    r12 #7): ``run_pipeline`` wraps each bronze/silver/gold stage so a
+    The stage-boundary eviction policy for multi-stage runs:
+    ``run_pipeline`` wraps each bronze/silver/gold stage so a
     stage's construction-time persists are dropped the moment its
     parquet sink is materialized — a long-lived production driver must
     not carry bronze's OCR cache through the gold build. Scoped (a

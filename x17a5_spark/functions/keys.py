@@ -5,6 +5,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+# The one filing key every cleaning and database-build operator groups on.
+FILING_KEY = ["cik", "filing_date"]
+
 
 def cik_from_edgar_url(col: Column | str) -> Column:
     """F5 — CIK from ``edgar/data/<cik>/<accession>`` paths

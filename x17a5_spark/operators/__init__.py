@@ -2,14 +2,20 @@
 per-filing sequential kernels the reference implements as pandas loops,
 re-expressed for Spark.
 
+Every cleaning and database-build operator works on the one filing
+table shape: grouped on ``functions.keys.FILING_KEY`` (cik,
+filing_date), ordered by ``row_idx``, with ``lineitem`` and ``value``
+(or ``raw_value`` before parsing) columns. The column names are fixed,
+not parameters.
+
 Design rule (SURVEY §7): anything order-dependent carries an explicit
 ``row_idx``; per-filing groups are tiny (≤ ~100 rows), so the genuinely
 sequential algorithms run as grouped pandas kernels — one shuffle on
 the filing key, then embarrassingly parallel — while everything
-declaratively expressible stays in Catalyst. Kernels dispatch through
-``kernel_part.grouped_kernel`` (mapInPandas over key-sorted partitions
-+ in-batch groupby: batched group dispatch, AQE-coalesce-immune
-explicit width).
+declaratively expressible stays in Catalyst. Every kernel dispatches
+through ``kernel_part.batched_grouped_kernel`` (mapInPandas over
+key-sorted partitions at an AQE-coalesce-immune explicit width), either
+directly or via its per-group form ``kernel_part.grouped_kernel``.
 """
 
 from x17a5_spark.operators.merge import merge_three_columns, special_merge

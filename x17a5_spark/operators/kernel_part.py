@@ -6,9 +6,9 @@ That is the right policy for JVM operators, but a grouped
 ``applyInPandas`` stage is CPU-bound per GROUP (Arrow slice + pandas
 frame + Python fn ≈ 2-4 ms each), not byte-bound: a corpus of thousands
 of small filings is only a few MB, so AQE folds the exchange to ONE
-partition and the kernels run serially — measured round 6 at sf0.1,
-the e1 silver chain's three kernels spent 24 s + 17 s + 40 s on single
-tasks (silver_clean 90 s) and dropped to ~1/30th of that once spread.
+partition and the kernels run serially — measured at sf0.1, the e1
+silver chain's three kernels spent 24 s + 17 s + 40 s on single tasks
+(silver_clean 90 s) and dropped to ~1/30th of that once spread.
 
 ``kernel_partitions`` therefore repartitions a kernel input explicitly
 on the group key: an explicit width is exempt from AQE coalescing, and
@@ -20,12 +20,13 @@ anyway; when the upstream already clusters on the same key (e.g. a
 window over the filing key feeding a kernel) it adds one cheap exchange
 of kernel-input rows in return for full-width execution.
 
-``grouped_kernel`` (round 7) additionally removes the PER-GROUP
-dispatch cost: instead of applyInPandas's one Arrow round trip per
-group, groups stream through ``mapInPandas`` over key-sorted
-partitions and are dispatched by an in-batch pandas groupby — measured
-2.2× on the k1 kernel at the 20× lake. All silver-chain kernels run
-through it; the partitioning policy above is unchanged underneath.
+``batched_grouped_kernel`` additionally removes the PER-GROUP dispatch
+cost: instead of applyInPandas's one Arrow round trip per group, groups
+stream through ``mapInPandas`` over key-sorted partitions, many
+complete groups per call. ``grouped_kernel`` is the per-group form on
+top of it (an in-batch pandas groupby) — measured 2.2× on the k1
+kernel at the 20× lake. All silver-chain kernels run through this one
+path; the partitioning policy above is unchanged underneath.
 """
 
 from __future__ import annotations
@@ -41,8 +42,8 @@ def kernel_width(df: DataFrame) -> int:
     The returned width is deliberately NEVER equal to
     ``spark.sql.shuffle.partitions``: Spark elides an explicit
     repartition whose hash partitioning exactly matches the child's
-    (same keys, same width) at planning time — measured round 6, the
-    silver kernels silently lost their spread and ran serially on the
+    (same keys, same width) at planning time — measured, the silver
+    kernels silently lost their spread and ran serially on the
     AQE-coalesced upstream window exchange. A width off by one keeps
     the exchange in the plan with shuffleOrigin REPARTITION_BY_NUM,
     which AQE is contractually not allowed to coalesce."""
@@ -71,57 +72,35 @@ def kernel_partitions(df: DataFrame, group_cols: list[str]) -> DataFrame:
     return df.repartition(kernel_width(df), *group_cols)
 
 
-def grouped_kernel(
-    df: DataFrame, group_cols: list[str], fn, schema: str, with_key: bool = False
-) -> DataFrame:
-    """Run a per-group pandas kernel with BATCHED group dispatch:
-    ``mapInPandas`` over key-partitioned, key-sorted input, applying
-    ``fn`` to each group via an in-batch pandas groupby.
+def grouped_kernel(df: DataFrame, group_cols: list[str], fn, schema: str) -> DataFrame:
+    """Run a per-group pandas kernel with BATCHED group dispatch.
 
     Same contract as ``kernel_partitions(df, g).groupBy(*g)
     .applyInPandas(fn, schema)`` — ``fn`` receives one group's frame
-    (group columns included, row order unspecified: kernels sort by
-    their own order column) and returns a frame matched to ``schema``
-    by column name; ``with_key=True`` selects applyInPandas's two-arg
-    form ``fn(key_tuple, pdf)``. The difference is dispatch cost: applyInPandas pays
-    a JVM→Arrow→pandas round trip PER GROUP, which dominates when
-    groups are tiny (a filing side is ~10-25 rows). Batching groups
-    through one mapInPandas stream measured 2.2× faster on the k1
-    kernel at the 20× lake (31.9 s → 14.6 s for 200k groups,
-    value-identical output).
-
-    Memory stays bounded at O(Arrow batch + largest group), NOT
-    O(partition): input is sorted by the group key within partitions
-    (local SortExec, no extra exchange), so a group is a contiguous run
-    and only the possibly-incomplete TRAILING group of each Arrow batch
-    is carried into the next. NaN group keys are handled (dropna=False
-    + isna-aware carry detection) to match applyInPandas semantics.
+    (group columns included, so it reads its key from the frame; row
+    order unspecified: kernels sort by their own order column) and
+    returns a frame matched to ``schema`` by column name. The
+    difference is dispatch cost: applyInPandas pays a JVM→Arrow→pandas
+    round trip PER GROUP, which dominates when groups are tiny (a
+    filing side is ~10-25 rows). Here the groups of one Arrow batch are
+    split by an in-batch pandas groupby — measured 2.2× faster on the
+    k1 kernel at the 20× lake (31.9 s → 14.6 s for 200k groups,
+    value-identical output). NaN group keys form their own group
+    (dropna=False), as in applyInPandas.
     """
     import pandas as pd
 
     group_cols = list(group_cols)
 
-    def run(pdf: pd.DataFrame):
+    def batch_fn(pdf: pd.DataFrame) -> pd.DataFrame | None:
         outs = []
-        for key, g in pdf.groupby(group_cols, sort=False, dropna=False):
-            g = g.reset_index(drop=True)
-            if with_key:
-                o = fn(key if isinstance(key, tuple) else (key,), g)
-            else:
-                o = fn(g)
+        for _, g in pdf.groupby(group_cols, sort=False, dropna=False):
+            o = fn(g.reset_index(drop=True))
             if o is not None and len(o):
                 outs.append(o)
-        if outs:
-            yield pd.concat(outs, ignore_index=True)
+        return pd.concat(outs, ignore_index=True) if outs else None
 
-    def op(batches):
-        yield from _stream_complete_groups(batches, group_cols, run)
-
-    return (
-        kernel_partitions(df, group_cols)
-        .sortWithinPartitions(*group_cols)
-        .mapInPandas(op, schema=schema)
-    )
+    return batched_grouped_kernel(df, group_cols, batch_fn, schema)
 
 
 def _stream_complete_groups(batches, group_cols: list[str], run):
@@ -163,16 +142,18 @@ def _stream_complete_groups(batches, group_cols: list[str], run):
 def batched_grouped_kernel(
     df: DataFrame, group_cols: list[str], batch_fn, schema: str
 ) -> DataFrame:
-    """Like ``grouped_kernel``, but ``batch_fn`` receives a frame
-    holding MANY complete groups at once (one per Arrow batch, group
-    boundaries guaranteed intact) and returns one output frame (or
-    None). For kernels whose per-group work is tiny — a filing side is
-    ~6-25 rows — the per-group pandas machinery (groupby dispatch,
-    frame slice/copy/concat per group) dominates grouped_kernel's
-    cost; a batch_fn can sort once, walk numpy group boundaries, run
-    the pure-Python kernels over list slices, and build ONE output
-    frame per batch (round 11: 23.9 s → 1.2 s on the fused silver
-    tail at the 20× lake — 20×, value-identical output)."""
+    """Run ``batch_fn`` over frames holding MANY complete groups at once
+    (one per Arrow batch, group boundaries guaranteed intact): the
+    input is repartitioned on the group key (``kernel_partitions``),
+    sorted within partitions (local SortExec, no extra exchange) and
+    streamed through ``mapInPandas``. ``batch_fn`` returns one output
+    frame matched to ``schema`` by column name, or None. For kernels
+    whose per-group work is tiny — a filing side is ~6-25 rows — the
+    per-group pandas machinery (groupby dispatch, frame
+    slice/copy/concat per group) dominates; a batch_fn can sort once,
+    walk numpy group boundaries, run the pure-Python kernels over list
+    slices, and build ONE output frame per batch (23.9 s → 1.2 s on the
+    fused silver tail at the 20× lake — 20×, value-identical output)."""
     group_cols = list(group_cols)
 
     def run(pdf):

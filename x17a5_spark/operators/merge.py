@@ -10,9 +10,10 @@ and isn't the first row. Rows matching neither rule drop out.
 ``special_merge`` — J7, the PDF/PNG sequence-alignment union
 (reference DatabaseUnstructured.py:186-257): difflib opcodes over the
 two line-item sequences; on ``replace`` keep both sides only when the
-pairwise partial-ratio similarity is < 90. Inherently sequential and
-Python-library-bound, so it runs as an ``applyInPandas`` kernel per
-filing (the engine's single sanctioned fuzzy-matching UDF surface).
+pairwise partial-ratio similarity is < ``SIMILARITY_THRESHOLD`` (90).
+Inherently sequential and Python-library-bound, so it runs as a grouped
+pandas kernel per filing (the engine's single sanctioned
+fuzzy-matching UDF surface).
 """
 
 from __future__ import annotations
@@ -20,24 +21,25 @@ from __future__ import annotations
 from difflib import SequenceMatcher
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from x17a5_spark.functions.keys import FILING_KEY
+from x17a5_spark.operators.kernel_part import grouped_kernel
 
-def merge_three_columns(
-    df: DataFrame,
-    group_cols: list[str] = ("cik", "filing_date"),
-    order_col: str = "row_idx",
-    item_col: str = "lineitem",
-    col1: str = "col1",
-    col2: str = "col2",
-) -> DataFrame:
-    """Declarative 3→2 merge; output column ``raw_value``.
+# partial-ratio score at or above which two ``replace`` line items are
+# the same item (the reference's fuzzy-merge cut-off)
+SIMILARITY_THRESHOLD = 90
+
+
+def merge_three_columns(df: DataFrame) -> DataFrame:
+    """Declarative 3→2 merge of ``col1``/``col2`` per filing; output
+    column ``raw_value``.
 
     The two F1 parses land as staged intermediate columns (not inlined
     Column expressions): inlined, the duplicated parse trees push the
     generated stage past janino's 64 KB limit and the whole merge runs
-    interpreted (round-5 e1 regression; VERDICT r5 what's-wrong #2).
+    interpreted.
     """
     from x17a5_spark.functions.accounting import (
         _STAGE_SEQ,
@@ -47,41 +49,37 @@ def merge_three_columns(
     # collision-proof parse-output names (the input is caller data — a
     # fixed "_n1" could silently clobber an existing column)
     mp = f"__m3c{next(_STAGE_SEQ)}"
-    df = stage_parse_accounting_number(df, col1, f"{mp}n1")
-    df = stage_parse_accounting_number(df, col2, f"{mp}n2")
-    w = Window.partitionBy(*group_cols).orderBy(order_col)
+    df = stage_parse_accounting_number(df, "col1", f"{mp}n1")
+    df = stage_parse_accounting_number(df, "col2", f"{mp}n2")
+    w = Window.partitionBy(*FILING_KEY).orderBy("row_idx")
     n1 = F.col(f"{mp}n1")
     n2 = F.col(f"{mp}n2")
-    prev_c1 = F.lag(col1, 1).over(w)
-    prev_c2 = F.lag(col2, 1).over(w)
-    prev_pos = F.lag(order_col, 1).over(w)
+    prev_c1 = F.lag("col1", 1).over(w)
+    prev_c2 = F.lag("col2", 1).over(w)
+    prev_pos = F.lag("row_idx", 1).over(w)
     # the reference's `indexer > 0` guard: borrowing needs the previous
     # row to exist *and* not be the very first row of the table
-    first_pos = F.first(order_col).over(
-        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
     borrow_ok = (
-        F.col(col1).isNull()
-        & F.col(col2).isNull()
+        F.col("col1").isNull()
+        & F.col("col2").isNull()
         & prev_pos.isNotNull()
-        & (prev_pos != F.min(order_col).over(Window.partitionBy(*group_cols)))
+        & (prev_pos != F.min("row_idx").over(Window.partitionBy(*FILING_KEY)))
         & prev_c1.isNotNull()
         & prev_c2.isNotNull()
     )
     raw = (
-        F.when(n1.isNotNull(), F.col(col1))
-        .when(n2.isNotNull(), F.col(col2))
+        F.when(n1.isNotNull(), F.col("col1"))
+        .when(n2.isNotNull(), F.col("col2"))
         .when(borrow_ok, prev_c2)
     )
     emit = n1.isNotNull() | n2.isNotNull() | borrow_ok
-    _ = first_pos  # documented intent; min() used for the guard
     # window expressions must be materialized before the filter (ANSI
     # planner rejects window functions inside WHERE)
     return (
         df.withColumn("raw_value", raw)
         .withColumn("_emit", emit)
         .filter(F.col("_emit"))
-        .select(*group_cols, order_col, item_col, "raw_value")
+        .select(*FILING_KEY, "row_idx", "lineitem", "raw_value")
     )
 
 
@@ -114,11 +112,10 @@ def special_merge_kernel(
     values1: list[float],
     items2: list[str],
     values2: list[float],
-    threshold: float = 90.0,
 ) -> list[tuple[str, float]]:
     """Pure kernel: align the two (item, value) sequences by line-item
     text; union per opcode, keeping both sides of a ``replace`` pair
-    only when they are dissimilar (< threshold partial ratio)."""
+    only when they are dissimilar (partial ratio < SIMILARITY_THRESHOLD)."""
     out: list[tuple[str, float]] = []
     sm = SequenceMatcher(a=items1, b=items2)
     for op, i1, i2, j1, j2 in sm.get_opcodes():
@@ -127,7 +124,7 @@ def special_merge_kernel(
                 zip(items1[i1:i2], items2[j1:j2])
             ):
                 score = partial_ratio(left.lower(), right.lower())
-                if score < threshold:
+                if score < SIMILARITY_THRESHOLD:
                     out.extend(zip(items1[i1 : i1 + it + 1], values1[i1 : i1 + it + 1]))
                     out.extend(zip(items2[j1 : j1 + it + 1], values2[j1 : j1 + it + 1]))
                 else:
@@ -150,47 +147,37 @@ def special_merge_kernel(
     return dedup
 
 
-def special_merge(
-    df_a: DataFrame,
-    df_b: DataFrame,
-    group_cols: list[str] = ("cik", "filing_date"),
-    order_col: str = "row_idx",
-    item_col: str = "lineitem",
-    value_col: str = "value",
-) -> DataFrame:
+def special_merge(df_a: DataFrame, df_b: DataFrame) -> DataFrame:
     """Fuzzy full-outer union of two per-filing tables (PDF vs PNG
-    extractions). Both inputs are side-tagged and unioned, then one
-    grouped kernel per filing aligns the two sequences — a single
-    shuffle on the filing key at any scale. (The union form, rather
-    than cogroup, also sidesteps Spark's attribute dedup when both
-    inputs derive from the same source plan.)"""
-    group_cols = list(group_cols)
+    extractions) of (row_idx, lineitem, value). Both inputs are
+    side-tagged and unioned, then one grouped kernel per filing aligns
+    the two sequences — a single shuffle on the filing key at any
+    scale. (The union form, rather than cogroup, also sidesteps Spark's
+    attribute dedup when both inputs derive from the same source plan.)"""
     key_t = dict(df_a.dtypes)
     schema = ", ".join(
-        [f"{c} {key_t[c]}" for c in group_cols]
-        + ["row_idx int", f"{item_col} string", f"{value_col} double"]
+        [f"{c} {key_t[c]}" for c in FILING_KEY]
+        + ["row_idx int", "lineitem string", "value double"]
     )
-    cols = group_cols + [order_col, item_col, value_col]
+    cols = FILING_KEY + ["row_idx", "lineitem", "value"]
     tagged = df_a.select(*cols).withColumn("_side", F.lit("a")).unionByName(
         df_b.select(*cols).withColumn("_side", F.lit("b"))
     )
 
-    def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_col)
+    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values("row_idx")
         pdf_a = pdf[pdf["_side"] == "a"]
         pdf_b = pdf[pdf["_side"] == "b"]
         merged = special_merge_kernel(
-            pdf_a[item_col].tolist(),
-            pdf_a[value_col].tolist(),
-            pdf_b[item_col].tolist(),
-            pdf_b[value_col].tolist(),
+            pdf_a["lineitem"].tolist(),
+            pdf_a["value"].tolist(),
+            pdf_b["lineitem"].tolist(),
+            pdf_b["value"].tolist(),
         )
-        out = pd.DataFrame(merged, columns=[item_col, value_col])
-        for c, k in zip(group_cols, key):
-            out[c] = k
+        out = pd.DataFrame(merged, columns=["lineitem", "value"])
+        for c in FILING_KEY:
+            out[c] = pdf[c].iloc[0]
         out["row_idx"] = range(len(out))
-        return out[group_cols + ["row_idx", item_col, value_col]]
+        return out[FILING_KEY + ["row_idx", "lineitem", "value"]]
 
-    from x17a5_spark.operators.kernel_part import grouped_kernel
-
-    return grouped_kernel(tagged, group_cols, fn, schema, with_key=True)
+    return grouped_kernel(tagged, FILING_KEY, fn, schema)

@@ -44,7 +44,6 @@ Scale decisions (each measured / plan-pinned, see SCALE.md round 7):
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -131,7 +130,6 @@ def paragraph_table(
 
     base = stage_persist(
         staged.select("doc_id", para_arr.alias("paras")),
-        StorageLevel.MEMORY_AND_DISK,
     )
     paras = base.select(
         "doc_id",
@@ -271,7 +269,7 @@ def near_dedup_paragraphs(
     )
     from x17a5_spark.cache import stage_persist
 
-    mins = stage_persist(mins, StorageLevel.MEMORY_AND_DISK)
+    mins = stage_persist(mins)
     bands = mins.select(
         "w",
         F.explode(

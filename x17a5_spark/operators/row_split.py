@@ -12,8 +12,8 @@ candidate; counts are aligned under the reference's rules —
   * otherwise -> the fused row is dropped entirely.
 The per-filing flag records whether any fused row was seen.
 
-Sequential and map-dependent, so it runs as a per-filing
-``applyInPandas`` kernel; the *detector* (multi-token value cell) is
+Sequential and map-dependent, so it runs as a grouped pandas kernel
+per filing; the *detector* (multi-token value cell) is
 the declarative F3 expression exercised by
 queries/scalars.py::f3_conjoined_detect.
 """
@@ -21,8 +21,12 @@ queries/scalars.py::f3_conjoined_detect.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from x17a5_spark.cache import stage_persist
+from x17a5_spark.functions.keys import FILING_KEY
+from x17a5_spark.operators.kernel_part import grouped_kernel
 
 
 def _is_conjoined(raw: str | None) -> bool:
@@ -71,40 +75,31 @@ def row_split_kernel(
     return rows, flag
 
 
-def split_conjoined_rows(
-    df: DataFrame,
-    text: DataFrame,
-    group_cols: list[str] = ("cik", "filing_date"),
-    order_col: str = "row_idx",
-    item_col: str = "lineitem",
-    raw_col: str = "raw_value",
-) -> DataFrame:
-    """Expand fused rows using the per-filing TEXT line map.
+def split_conjoined_rows(df: DataFrame, text: DataFrame) -> DataFrame:
+    """Expand fused rows of a per-filing (row_idx, lineitem, raw_value)
+    table using the filing's TEXT line map.
 
-    ``text`` holds (group_cols..., line_text). The map rides into the
-    kernel via a cogroup on the filing key — no driver-side dict, so the
-    text corpus can be arbitrarily large.
+    ``text`` holds (cik, filing_date, line_idx, line_text). The map
+    rides into the kernel as one array column per filing — no
+    driver-side dict, so the text corpus can be arbitrarily large.
 
-    SELECTIVE ROUTING (round 11, VERDICT r10 #4): fused rows are rare —
-    most filings have none — yet every filing used to round-trip the
-    Python kernel (Arrow out, pandas sort, list-of-tuples rebuild,
-    Arrow back) only to come out unchanged. The declarative F3 detector
-    (an exact Column mirror of ``_is_conjoined``) now flags fused rows
-    JVM-side; filings with zero fused rows take a pure window
-    passthrough (renumber + split_flag=0 — exactly what the kernel
-    emits for them), and ONLY filings containing a fused row pay the
-    kernel and its TEXT-map join. At e1's corpus shape (no fused rows)
-    this converts the whole stage to JVM window work; at a corpus where
-    every filing is fused (k4's fixture) it degrades gracefully to the
-    old shape plus one cheap window pass."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F  # local: keep module header lean
-
-    group_cols = list(group_cols)
+    SELECTIVE ROUTING: fused rows are rare — most filings have none —
+    and a filing without one comes out of the kernel unchanged, so
+    sending it through the Python kernel (Arrow out, pandas sort,
+    list-of-tuples rebuild, Arrow back) is pure overhead. The
+    declarative F3 detector (an exact Column mirror of
+    ``_is_conjoined``) flags fused rows JVM-side; filings with zero
+    fused rows take a pure window passthrough (renumber +
+    split_flag=0 — exactly what the kernel emits for them), and ONLY
+    filings containing a fused row pay the kernel and its TEXT-map
+    join. At e1's corpus shape (no fused rows) this converts the whole
+    stage to JVM window work; at a corpus where every filing is fused
+    (k4's fixture) it degrades gracefully to one kernel pass plus one
+    cheap window pass."""
     key_t = dict(df.dtypes)
     schema = ", ".join(
-        [f"{c} {key_t[c]}" for c in group_cols]
-        + ["row_idx int", f"{item_col} string", f"{raw_col} string", "split_flag int"]
+        [f"{c} {key_t[c]}" for c in FILING_KEY]
+        + ["row_idx int", "lineitem string", "raw_value string", "split_flag int"]
     )
     # declarative _is_conjoined: split on single spaces (empty tokens
     # from runs of spaces survive, as in Python's str.split(" ")),
@@ -112,22 +107,19 @@ def split_conjoined_rows(
     is_fused = (
         F.size(
             F.filter(
-                F.split(F.col(raw_col), " ", -1),
+                F.split(F.col("raw_value"), " ", -1),
                 lambda t: ~t.isin("$", "S"),
             )
         )
         > 1
-    ) & F.col(raw_col).isNotNull()
-    wp = Window.partitionBy(*group_cols)
-    from x17a5_spark.cache import stage_persist
-
+    ) & F.col("raw_value").isNotNull()
+    wp = Window.partitionBy(*FILING_KEY)
     # persist the classification point: both routing branches (clean
     # passthrough + fused kernel) reference it, and without the persist
     # each branch replays the ENTIRE upstream subtree — in e1's silver
     # chain that is the bronze scan plus the whole merge3 window chain,
-    # twice per run (guide §5 "reused and recomputing is expensive";
-    # plans/r13/e1_before.txt shows the duplicated subtree). Corpus
-    # sized, MEMORY_AND_DISK: spills, never OOMs; released by the
+    # twice per run (guide §5 "reused and recomputing is expensive").
+    # Corpus sized, MEMORY_AND_DISK: spills, never OOMs; released by the
     # registry scope / pipeline stage_scope like every stage table.
     flagged = stage_persist(
         df.withColumn("_has_fused", F.max(is_fused.cast("int")).over(wp))
@@ -136,13 +128,13 @@ def split_conjoined_rows(
         flagged.filter(F.col("_has_fused") == 0)
         .withColumn(
             "_rn",
-            F.row_number().over(wp.orderBy(order_col)) - 1,
+            F.row_number().over(wp.orderBy("row_idx")) - 1,
         )
         .select(
-            *group_cols,
+            *FILING_KEY,
             F.col("_rn").cast("int").alias("row_idx"),
-            item_col,
-            raw_col,
+            "lineitem",
+            "raw_value",
             F.lit(0).alias("split_flag"),
         )
     )
@@ -152,32 +144,28 @@ def split_conjoined_rows(
     # pre-aggregated left join) rather than a cogroup — one extra small
     # shuffle, but robust to shared-lineage inputs and keeps exactly one
     # grouped kernel. Only the fused branch pays it.
-    text_arrays = text.groupBy(*group_cols).agg(
+    text_arrays = text.groupBy(*FILING_KEY).agg(
         F.array_sort(
             F.collect_list(F.struct(F.col("line_idx"), F.col("line_text")))
         ).alias("_text_lines")
     )
-    from x17a5_spark.operators.kernel_part import grouped_kernel
+    joined = fused.join(text_arrays, FILING_KEY, "left")
 
-    # full-width kernel execution (AQE would serialize this CPU-bound
-    # stage on a byte-small corpus; see kernel_part.py)
-    joined = fused.join(text_arrays, group_cols, "left")
-
-    def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_col)
+    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values("row_idx")
         first_lines = pdf["_text_lines"].iloc[0]
         text_lines = (
             [t["line_text"] for t in first_lines] if first_lines is not None else []
         )
         rows, flag = row_split_kernel(
-            pdf[item_col].tolist(), pdf[raw_col].tolist(), text_lines
+            pdf["lineitem"].tolist(), pdf["raw_value"].tolist(), text_lines
         )
-        out = pd.DataFrame(rows, columns=[item_col, raw_col])
-        for c, k in zip(group_cols, key):
-            out[c] = k
+        out = pd.DataFrame(rows, columns=["lineitem", "raw_value"])
+        for c in FILING_KEY:
+            out[c] = pdf[c].iloc[0]
         out["row_idx"] = range(len(out))
         out["split_flag"] = flag
-        return out[group_cols + ["row_idx", item_col, raw_col, "split_flag"]]
+        return out[FILING_KEY + ["row_idx", "lineitem", "raw_value", "split_flag"]]
 
-    kernelled = grouped_kernel(joined, group_cols, fn, schema, with_key=True)
+    kernelled = grouped_kernel(joined, FILING_KEY, fn, schema)
     return clean.unionByName(kernelled)

@@ -22,16 +22,16 @@ not to balance-sheet data.
 from __future__ import annotations
 
 from difflib import SequenceMatcher
+from functools import lru_cache
 
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from x17a5_spark.functions.keys import FILING_KEY
+
 SCALE_WORDS = [("thousands", 1e3), ("hundreds", 1e2), ("millions", 1e6), ("billions", 1e9)]
-
-
-from functools import lru_cache
 
 
 @lru_cache(maxsize=1 << 17)
@@ -78,45 +78,39 @@ def _line_scale(lines: pd.Series) -> pd.Series:
     return lines.map(mapping)
 
 
-def detect_unit_scale(
-    text: DataFrame,
-    group_cols: list[str] = ("cik", "filing_date"),
-    line_order_col: str = "line_idx",
-) -> DataFrame:
+def detect_unit_scale(text: DataFrame) -> DataFrame:
     """Per-filing scale factor from the page-text table
-    (group_cols..., line_idx, line_text) with per-CIK carry-forward.
+    (cik, filing_date, line_idx, line_text) with per-CIK carry-forward.
 
     Plan shape: one scan + pandas-UDF projection, a groupBy on the
     filing key (min over matching lines = "first matching line"), then
     a carry-forward window per CIK — two narrow shuffles, no kernel.
     """
-    group_cols = list(group_cols)
-    cik_col, date_col = group_cols[0], group_cols[1]
     # NO explicit repartition here, by policy (kernel_part.py boundary):
     # the indel-ratio UDF is byte-proportional (cost ~ lines scanned),
     # so scan-split sizing is already correct at scale, and the groupBy
     # below partial-aggregates map-side — only ~1 row per filing ever
     # crosses the exchange. An explicit spread would shuffle the FULL
     # text corpus on the silver hot path at 100 TB to save ~1 s on a
-    # byte-small bench corpus (round-6 self-review finding #2).
+    # byte-small bench corpus.
     per_line = text.withColumn("line_scale", _line_scale(F.col("line_text")))
     first_match = (
         per_line.withColumn(
             "match_line",
-            F.when(F.col("line_scale").isNotNull(), F.col(line_order_col)),
+            F.when(F.col("line_scale").isNotNull(), F.col("line_idx")),
         )
-        .groupBy(*group_cols)
+        .groupBy(*FILING_KEY)
         .agg(
             F.min_by("line_scale", "match_line").alias("own_scale"),
         )
     )
     w = (
-        Window.partitionBy(cik_col)
-        .orderBy(F.col(date_col).asc())
+        Window.partitionBy("cik")
+        .orderBy(F.col("filing_date").asc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return first_match.select(
-        *group_cols,
+        *FILING_KEY,
         F.coalesce(
             F.last("own_scale", ignorenulls=True).over(w), F.lit(1.0)
         ).alias("scale"),

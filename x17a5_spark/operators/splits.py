@@ -13,7 +13,7 @@ Rows [0, stop1) are assets; [stop1, stop2) are liabilities & equity;
 filings missing either side are rejected (left out of both outputs).
 
 The prefix-dependent bound update is a sequential fold, so it runs as a
-tiny ``applyInPandas`` kernel per filing; the declarative last-match
+tiny grouped pandas kernel per filing; the declarative last-match
 form (max(when(rlike, pos))) is exercised by
 queries/windows.py::w3_last_match_split.
 """
@@ -22,8 +22,17 @@ from __future__ import annotations
 
 import re
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+
+from x17a5_spark.functions.keys import FILING_KEY
+from x17a5_spark.operators.kernel_part import batched_grouped_kernel, grouped_kernel
+from x17a5_spark.operators.totals_check import (
+    TOTAL_ASSET_RE,
+    TOTAL_LE_RE,
+    totals_check_kernel,
+)
 
 ASSET_RE = re.compile("assets", re.I)
 LIABLE_RE = re.compile("liability|liabilities", re.I)
@@ -43,11 +52,11 @@ def bs_split_kernel(items: list[str]) -> tuple[int, int] | None:
 
 
 def bs_split_kernel_flags(hits_a, hits_l) -> tuple[int, int] | None:
-    """The bisection fold over PRE-MATCHED term flags (r13, guide §4.2:
-    the batch path vectorizes the two regex passes with pandas'
-    C-level ``.str.contains`` over the whole Arrow batch and hands this
-    fold plain booleans — the per-row Python ``re.search`` calls were
-    the kernel's hot loop). ``bs_split_kernel`` delegates here, so the
+    """The bisection fold over PRE-MATCHED term flags (guide §4.2: the
+    batch path vectorizes the two regex passes with pandas' C-level
+    ``.str.contains`` over the whole Arrow batch and hands this fold
+    plain booleans — the per-row Python ``re.search`` calls were the
+    kernel's hot loop). ``bs_split_kernel`` delegates here, so the
     fused==composition pin also pins flags==search semantics."""
     n = len(hits_a)
     stop1, stop2 = 0, n
@@ -68,21 +77,16 @@ def bs_split_kernel_flags(hits_a, hits_l) -> tuple[int, int] | None:
     return stop1, stop2
 
 
-def split_balance_sheet(
-    df: DataFrame,
-    group_cols: list[str] = ("cik", "filing_date"),
-    order_col: str = "row_idx",
-    item_col: str = "lineitem",
-) -> DataFrame:
-    """Tag every surviving row with ``side`` ∈ {asset, liability};
-    filings rejected by the bisection emit no rows."""
-    group_cols = list(group_cols)
+def split_balance_sheet(df: DataFrame) -> DataFrame:
+    """Tag every surviving row of a per-filing (row_idx, lineitem, ...)
+    table with ``side`` ∈ {asset, liability}; filings rejected by the
+    bisection emit no rows."""
     in_cols = [c for c, _ in df.dtypes]
     schema = ", ".join([f"{c} {t}" for c, t in df.dtypes] + ["side string"])
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_col).reset_index(drop=True)
-        bounds = bs_split_kernel(pdf[item_col].tolist())
+        pdf = pdf.sort_values("row_idx").reset_index(drop=True)
+        bounds = bs_split_kernel(pdf["lineitem"].tolist())
         if bounds is None:
             return pdf.iloc[0:0].assign(side=pd.Series(dtype="object"))[
                 in_cols + ["side"]
@@ -92,35 +96,26 @@ def split_balance_sheet(
         out["side"] = ["asset"] * stop1 + ["liability"] * (stop2 - stop1)
         return out[in_cols + ["side"]]
 
-    from x17a5_spark.operators.kernel_part import grouped_kernel
-
-    return grouped_kernel(df, group_cols, fn, schema)
+    return grouped_kernel(df, FILING_KEY, fn, schema)
 
 
-def bisect_and_remove_subtotals(
-    df: DataFrame,
-    group_cols: list[str] = ("cik", "filing_date"),
-    order_col: str = "row_idx",
-    item_col: str = "lineitem",
-    value_col: str = "value",
-) -> DataFrame:
+def bisect_and_remove_subtotals(df: DataFrame) -> DataFrame:
     """Fused silver tail: W3 bisection + W1 subtotal removal in ONE
-    grouped kernel pass per filing.
+    grouped kernel pass per filing over (row_idx, lineitem, value).
 
     Semantically identical to ``split_balance_sheet`` followed by
     ``remove_subtotals`` (pinned equal by
     tests/test_splits_merge.py::test_fused_tail_equals_composition);
     the fusion exists because kernel-PASS overhead, not exchange
-    bytes, dominates the silver chain (round-6 attribution: the two
-    tail kernels cost 2.3 s + 4.1 s at sf0.1 on near-identical keys).
-    One exchange on the filing key replaces two grouped shuffles —
-    also the right shape at 100 TB, where the silver mass crosses the
-    wire once instead of twice.
+    bytes, dominates the silver chain (measured: the two tail kernels
+    cost 2.3 s + 4.1 s at sf0.1 on near-identical keys). One exchange
+    on the filing key replaces two grouped shuffles — also the right
+    shape at 100 TB, where the silver mass crosses the wire once
+    instead of twice.
 
-    Round 11 (VERDICT r10 #4): dispatched at BATCH level
-    (``batched_grouped_kernel``) — the r10 per-kernel attribution
-    showed this stage at 70% of silver wall at the 20× lake, and the
-    cost was per-group pandas machinery (a sort, three frame
+    Dispatched at BATCH level (``batched_grouped_kernel``): per-kernel
+    attribution put this stage at 70% of silver wall at the 20× lake,
+    and the cost was per-group pandas machinery (a sort, three frame
     slices/copies and a concat per ~6-row filing), not the sequential
     kernels themselves. The batch form sorts once per Arrow batch,
     walks numpy group boundaries, runs the SAME pure kernels
@@ -128,13 +123,7 @@ def bisect_and_remove_subtotals(
     and builds one output frame per batch — value-identical output,
     pinned by test_fused_tail_equals_composition.
     """
-    import numpy as np
-
-    from x17a5_spark.operators.kernel_part import batched_grouped_kernel
-    from x17a5_spark.operators.totals_check import totals_check_kernel
-
-    group_cols = list(group_cols)
-    sel = df.select(*group_cols, order_col, item_col, value_col)
+    sel = df.select(*FILING_KEY, "row_idx", "lineitem", "value")
     in_cols = [c for c, _ in sel.dtypes]
     schema = ", ".join(
         [f"{c} {t}" for c, t in sel.dtypes]
@@ -142,7 +131,7 @@ def bisect_and_remove_subtotals(
     )
 
     def batch_fn(pdf: pd.DataFrame) -> pd.DataFrame | None:
-        pdf = pdf.sort_values([*group_cols, order_col]).reset_index(drop=True)
+        pdf = pdf.sort_values([*FILING_KEY, "row_idx"]).reset_index(drop=True)
         n = len(pdf)
         if not n:
             return None
@@ -150,35 +139,29 @@ def bisect_and_remove_subtotals(
         # non-null strings; NaN-aware anyway to mirror dropna=False)
         change = np.zeros(n, dtype=bool)
         change[0] = True
-        for c in group_cols:
+        for c in FILING_KEY:
             arr = pdf[c].to_numpy()
             prev, curr = arr[:-1], arr[1:]
             neq = curr != prev
             both_na = pd.isna(curr) & pd.isna(prev)
             change[1:] |= neq & ~both_na
         starts = np.flatnonzero(change).tolist() + [n]
-        items_all = pdf[item_col].tolist()
-        values_all = pdf[value_col].tolist()
-        # r13 (guide §4.2): all four term regexes run ONCE per batch at
-        # pandas C speed; the sequential folds below consume plain
-        # boolean lists. Semantics identical to the per-row re.search
-        # (same compiled patterns, na=False == the kernels' non-str
-        # guard); pinned by test_fused_tail_equals_composition.
-        # r14 (ADVICE r13): .str.contains raises on non-string
-        # non-null values where the per-row kernels' isinstance guards
-        # tolerated them — pre-mask to strings so the invariant is
-        # enforced, not assumed (Arrow string columns yield str/None
-        # today; this guards any future non-Arrow caller).
-        it_s = pdf[item_col]
+        items_all = pdf["lineitem"].tolist()
+        values_all = pdf["value"].tolist()
+        # all four term regexes run ONCE per batch at pandas C speed;
+        # the sequential folds below consume plain boolean lists.
+        # Semantics identical to the per-row re.search (same compiled
+        # patterns, na=False == the kernels' non-str guard); pinned by
+        # test_fused_tail_equals_composition. .str.contains raises on
+        # non-string non-null values where the per-row kernels'
+        # isinstance guards tolerate them, so pre-mask to strings (Arrow
+        # string columns yield str/None; this guards any non-Arrow
+        # caller).
+        it_s = pdf["lineitem"]
         if it_s.dtype == object:
             it_s = it_s.where(it_s.map(lambda v: isinstance(v, str)))
         hits_a = it_s.str.contains(ASSET_RE, na=False).tolist()
         hits_l = it_s.str.contains(LIABLE_RE, na=False).tolist()
-        from x17a5_spark.operators.totals_check import (
-            TOTAL_ASSET_RE,
-            TOTAL_LE_RE,
-        )
-
         hits_t = (
             it_s.str.contains(TOTAL_ASSET_RE, na=False)
             | it_s.str.contains(TOTAL_LE_RE, na=False)
@@ -216,4 +199,4 @@ def bisect_and_remove_subtotals(
         out["total_amt"] = amts
         return out
 
-    return batched_grouped_kernel(sel, group_cols, batch_fn, schema)
+    return batched_grouped_kernel(sel, FILING_KEY, batch_fn, schema)

@@ -16,7 +16,7 @@ reconstructions are column arithmetic.
 Shuffle plan: ONE wide exchange. ``pivot_by_label`` hash-partitions the
 labeled long table by (cik, fiscal_year) right after the broadcast
 label attach (so the exchange carries the bounded label, not the open
-lineitem string, and unlabeled rows are already dropped — r13);
+lineitem string, and unlabeled rows are already dropped);
 HashPartitioning on a key subset
 satisfies the pivot-agg's clustering on the full filing key AND the
 dedup window's clustering on (cik, fiscal_year), so Catalyst plans both
@@ -77,7 +77,7 @@ def pivot_by_label(
     labeled = long_df.join(F.broadcast(label_map), "lineitem", "inner").select(
         *KEY_COLS, "label", "value"
     )
-    # r14: dropping this explicit repartition (to let the pivot partial-
+    # Dropping this explicit repartition (to let the pivot partial-
     # aggregate map-side and shuffle combined rows instead of raw long
     # rows, guide §2.3) was A/B'd and REJECTED — e3 1.79 -> 2.83 s,
     # e3l 1.97 -> 2.97 s (median-of-9 interleaved, oracle-green before

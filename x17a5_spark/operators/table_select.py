@@ -24,6 +24,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from x17a5_spark.functions.keys import FILING_KEY
+from x17a5_spark.operators.kernel_part import grouped_kernel
+
 ASSET_RE = "(?i)^Cash|asset"
 DEBT_RE = "(?i)liabilities|liability"
 DOLLAR_RE = r"\$[^\]]+"
@@ -101,7 +104,7 @@ def select_balance_sheet(cells: DataFrame) -> DataFrame:
     ``bs_order`` preserving the (possibly reversed) table order."""
     flags = candidate_flags(cells)
 
-    def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(["page", "table_idx"]).reset_index(drop=True)
         verdict = stitch_kernel(
             list(zip(pdf["is_candidate"], pdf["has_asset"], pdf["has_debt"]))
@@ -116,16 +119,13 @@ def select_balance_sheet(cells: DataFrame) -> DataFrame:
         out["bs_order"] = [o for _, o in verdict]
         return out
 
-    from x17a5_spark.operators.kernel_part import grouped_kernel
-
-    # full-width kernel execution (the round-6 sweep caught this stage
-    # at 35.8 s on ONE AQE-coalesced task at sf0.1; see kernel_part.py)
+    # full-width kernel execution (measured: this stage ran 35.8 s on
+    # ONE AQE-coalesced task at sf0.1; see kernel_part.py)
     accepted = grouped_kernel(
         flags,
-        ["cik", "filing_date"],
+        FILING_KEY,
         fn,
         "cik string, filing_date string, page int, table_idx int, bs_order int",
-        with_key=True,
     )
     return cells.join(
         accepted, ["cik", "filing_date", "page", "table_idx"]

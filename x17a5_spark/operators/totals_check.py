@@ -15,7 +15,7 @@ total amount (the lookback-sum value when a power-of-ten rewrite fired,
 else the reported value).
 
 The mutation makes this inexpressible as a fixed-frame window
-(SURVEY §7 hard part 2), so the engine runs it as an ``applyInPandas``
+(SURVEY §7 hard part 2), so the engine runs it as a grouped pandas
 kernel per filing side: one shuffle on the group key, tiny groups,
 Arrow-batched. The *declarative* building block (running lookback sums)
 is exercised separately by queries/windows.py::w1_running_and_lookback.
@@ -28,6 +28,9 @@ import re
 
 import pandas as pd
 from pyspark.sql import DataFrame
+
+from x17a5_spark.functions.keys import FILING_KEY
+from x17a5_spark.operators.kernel_part import grouped_kernel
 
 TOTAL_ASSET_RE = re.compile(r"total assets$|^total assets\(|^total assets \(", re.I)
 TOTAL_LE_RE = re.compile(
@@ -43,7 +46,7 @@ def _is_power_of_ten_or_digit_drop(x1: float, x2: float) -> tuple[float, bool]:
     of str(x1) one char shorter (dropped leading digit)."""
     if (
         x1 == 0 or x2 == 0
-        or x1 is None or x1 != x1  # pd.isna on scalar floats (r13)
+        or x1 is None or x1 != x1  # pd.isna on scalar floats
         or x2 is None or x2 != x2
     ):
         return x1, False
@@ -61,7 +64,7 @@ def _is_epsilon_match(x1: float, x2: float, tol: float = 0.01) -> bool:
     in exactly one character, relative difference within tol."""
     if (
         x1 == 0 or x2 == 0
-        or x1 is None or x1 != x1  # pd.isna on scalar floats (r13)
+        or x1 is None or x1 != x1  # pd.isna on scalar floats
         or x2 is None or x2 != x2
     ):
         return False
@@ -86,7 +89,7 @@ def totals_check_kernel(
     lookback: the window ``i-j-1 .. i-1`` addresses *original* positions
     but sums only rows not yet dropped.
 
-    ``total_hits`` (r13, guide §4.2): optional PRE-MATCHED total-name
+    ``total_hits`` (guide §4.2): optional PRE-MATCHED total-name
     flags — the batched caller vectorizes the two regexes with pandas'
     C-level ``.str.contains`` over the whole Arrow batch instead of two
     Python ``re.search`` calls per row here. ``None`` keeps the
@@ -138,39 +141,29 @@ def totals_check_kernel(
     return [k for k in range(m) if alive[k]], total_flag, total_amt
 
 
-def remove_subtotals(
-    df: DataFrame,
-    group_cols: list[str] = ("cik", "filing_date", "side"),
-    order_col: str = "row_idx",
-    item_col: str = "lineitem",
-    value_col: str = "value",
-) -> DataFrame:
-    """Drop detected subtotal rows per filing side; adds ``total_flag``
-    and ``total_amt`` columns (constant within a group).
+def remove_subtotals(df: DataFrame) -> DataFrame:
+    """Drop detected subtotal rows per filing side of a (cik,
+    filing_date, side, row_idx, lineitem, value) table; adds
+    ``total_flag`` and ``total_amt`` columns (constant within a group).
 
     Scale: shuffles once on the filing key; each group is a single page
     of line items, so kernel time is microseconds per group and the
     stage is bound by scan + exchange.
     """
-    group_cols = list(group_cols)
-    out_fields = [f"{c} {t}" for c, t in df.select(*group_cols, order_col, item_col, value_col).dtypes]
-    schema = ", ".join(out_fields + ["total_flag int", "total_amt double"])
+    cols = FILING_KEY + ["side", "row_idx", "lineitem", "value"]
+    sel = df.select(*cols)
+    schema = ", ".join(
+        [f"{c} {t}" for c, t in sel.dtypes] + ["total_flag int", "total_amt double"]
+    )
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_col).reset_index(drop=True)
+        pdf = pdf.sort_values("row_idx").reset_index(drop=True)
         keep, flag, amt = totals_check_kernel(
-            pdf[item_col].tolist(), pdf[value_col].tolist()
+            pdf["lineitem"].tolist(), pdf["value"].tolist()
         )
-        out = pdf.iloc[keep][group_cols + [order_col, item_col, value_col]].copy()
+        out = pdf.iloc[keep][cols].copy()
         out["total_flag"] = flag
         out["total_amt"] = amt
         return out
 
-    from x17a5_spark.operators.kernel_part import grouped_kernel
-
-    return grouped_kernel(
-        df.select(*group_cols, order_col, item_col, value_col),
-        group_cols,
-        fn,
-        schema,
-    )
+    return grouped_kernel(sel, FILING_KEY + ["side"], fn, schema)

@@ -28,39 +28,31 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-DEFAULT_ID_COLS = ("cik", "name", "filing_date", "fiscal_year")
+from x17a5_spark.cache import stage_persist
+
+ID_COLS = ["cik", "name", "filing_date", "fiscal_year"]
 
 
-def build_unstructured(
-    long_df: DataFrame,
-    allowlist: Sequence[str],
-    id_cols: Sequence[str] = DEFAULT_ID_COLS,
-    prune_empty: bool = True,
-) -> DataFrame:
-    """Wide per-filing view of ``long_df`` (id cols + one column per
+def build_unstructured(long_df: DataFrame, allowlist: Sequence[str]) -> DataFrame:
+    """Wide per-filing view of ``long_df`` (``ID_COLS`` + one column per
     allowlisted line item), id columns first, all-null columns pruned.
 
-    ``long_df``: id cols + (lineitem, value). Congruent line items
+    ``long_df``: ``ID_COLS`` + (lineitem, value). Congruent line items
     within a filing are summed (pandas ``groupby().sum(min_count=1)``
     semantics: a group with no non-null values stays null, as does an
     absent (filing, lineitem) pair).
     """
-    id_cols = list(id_cols)
-    keep = list(allowlist)
-    piv = (
-        long_df.groupBy(*id_cols)
-        .pivot("lineitem", keep)
+    # The pruning is a bounded driver-side schema decision from the
+    # PERSISTED wide result: one row of per-column non-null counts
+    # (metadata-scale) — the long table is scanned exactly once, by the
+    # pivot.
+    piv = stage_persist(
+        long_df.groupBy(*ID_COLS)
+        .pivot("lineitem", list(allowlist))
         .agg(F.sum(F.col("value").cast("decimal(27,6)")).cast("double"))
     )
-    if prune_empty:
-        # Bounded driver-side schema decision from the PERSISTED wide
-        # result: one row of per-column non-null counts (metadata-scale)
-        # — the long table is scanned exactly once, by the pivot.
-        from x17a5_spark.cache import stage_persist
-
-        piv = stage_persist(piv)
-        counts = piv.select(
-            *[F.count(F.col(f"`{c}`")).alias(f"c{i}") for i, c in enumerate(keep)]
-        ).first()
-        keep = [c for c, n in zip(keep, counts) if n > 0]
-    return piv.select(*id_cols, *[F.col(f"`{c}`") for c in keep])
+    counts = piv.select(
+        *[F.count(F.col(f"`{c}`")).alias(f"c{i}") for i, c in enumerate(allowlist)]
+    ).first()
+    keep = [c for c, n in zip(allowlist, counts) if n > 0]
+    return piv.select(*ID_COLS, *[F.col(f"`{c}`") for c in keep])

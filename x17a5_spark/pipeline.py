@@ -22,15 +22,20 @@ operators/structured.py.
 from __future__ import annotations
 
 import os
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from x17a5_spark.cache import stage_persist, stage_scope
 from x17a5_spark.functions.accounting import stage_parse_accounting_number
+from x17a5_spark.functions.keys import FILING_KEY
+from x17a5_spark.operators.kernel_part import kernel_width
 from x17a5_spark.operators.merge import merge_three_columns
 from x17a5_spark.operators.row_split import split_conjoined_rows
 from x17a5_spark.operators.scaler import detect_unit_scale
 from x17a5_spark.operators.splits import bisect_and_remove_subtotals
+from x17a5_spark.streaming.incremental import incremental_todo
 
 
 def _silver_purge(raw: DataFrame) -> DataFrame:
@@ -53,8 +58,8 @@ def _silver_parse(split: DataFrame) -> DataFrame:
 
 
 def _silver_scale(parsed: DataFrame, text: DataFrame) -> DataFrame:
-    scales = detect_unit_scale(text, group_cols=["cik", "filing_date"])
-    return parsed.join(scales, ["cik", "filing_date"], "left").withColumn(
+    scales = detect_unit_scale(text)
+    return parsed.join(scales, FILING_KEY, "left").withColumn(
         "value", F.col("value_unscaled") * F.coalesce(F.col("scale"), F.lit(1.0))
     )
 
@@ -77,27 +82,12 @@ def silver_stages(text: DataFrame) -> list[tuple[str, object]]:
     the shipped composition, not a copy that can drift."""
     return [
         ("purge", _silver_purge),
-        (
-            "merge3",
-            lambda df: merge_three_columns(
-                df, group_cols=["cik", "filing_date"], col1="col1", col2="col2"
-            ),
-        ),
-        (
-            "row_split",
-            lambda df: split_conjoined_rows(
-                df, text, group_cols=["cik", "filing_date"]
-            ),
-        ),
+        ("merge3", merge_three_columns),
+        ("row_split", partial(split_conjoined_rows, text=text)),
         ("parse", _silver_parse),
-        ("scale", lambda df: _silver_scale(df, text)),
+        ("scale", partial(_silver_scale, text=text)),
         ("dense", _silver_dense),
-        (
-            "bisect_subtotals",
-            lambda df: bisect_and_remove_subtotals(
-                df, group_cols=["cik", "filing_date"]
-            ),
-        ),
+        ("bisect_subtotals", bisect_and_remove_subtotals),
     ]
 
 
@@ -134,8 +124,6 @@ def clean_filings(raw: DataFrame, text: DataFrame) -> DataFrame:
 # small); no stage ever re-reads more than its own sink's keys.
 # ---------------------------------------------------------------------------
 
-FILING_KEY = ["cik", "filing_date"]
-
 # Stage-level wall clock of the most recent ``run_pipeline`` call
 # (keys: ocr_bronze / silver_clean / gold_build). Stage writes execute
 # eagerly inside run_pipeline, so construction time IS stage time;
@@ -152,8 +140,6 @@ def _incremental_stage(
     append, and return the full sink. The guard sits on the stage
     INPUT, so already-processed filings are never recomputed — the
     whole point of the reference's rerun ladder."""
-    from x17a5_spark.streaming.incremental import incremental_todo
-
     if os.path.isdir(path):
         inp = incremental_todo(inp, spark.read.parquet(path), FILING_KEY)
     transform(inp).write.mode("append").parquet(path)
@@ -194,33 +180,33 @@ def run_pipeline(
     err_path = os.path.join(out_dir, "ocr_errors")
 
     def ocr_stage(todo_docs: DataFrame) -> DataFrame:
-        from x17a5_spark.operators.kernel_part import kernel_width
-
         # spread the per-document OCR calls across every core: the doc
         # batch is byte-small but each document costs a full backend
         # round-trip, so AQE/scan parallelism by bytes serializes it
-        # (round-6: the bronze stage ran as ONE mapInPandas task).
+        # (measured: the bronze stage ran as ONE mapInPandas task).
         # Round-robin is fine — OCR needs no key clustering.
         todo_docs = todo_docs.repartition(kernel_width(todo_docs))
         # persist so the external OCR calls run once, not once per sink
-        # (registry-scoped: the suite releases it between queries —
-        # VERDICT r11 #8, the in-suite-resident stage-table residue)
-        from x17a5_spark.cache import stage_persist
-
+        # (registry-scoped: released with the stage, see stage_scope)
         ocr_out = stage_persist(source.run(todo_docs))
         cells, errors = quarantine(ocr_out)
+        # a filing that fails again on rerun is re-OCR'd (it never
+        # reaches bronze), so append only the (filing, error) rows the
+        # ledger lacks
+        if os.path.isdir(err_path):
+            errors = incremental_todo(
+                errors, spark.read.parquet(err_path), FILING_KEY + ["error"]
+            )
         errors.write.mode("append").parquet(err_path)
         return cells
 
-    # Stage-boundary eviction (VERDICT r12 #7): each stage's
-    # construction-time persists (today: ocr_stage's OCR output) are
-    # released the moment the stage's parquet sink is materialized —
-    # _incremental_stage returns a fresh read of the sink, so nothing
-    # downstream references the cache. stage_scope is a high-water
-    # mark, not a sweep: caches the CALLER registered before
-    # run_pipeline stay tracked and owned by the outer consumer.
-    from x17a5_spark.cache import stage_scope
-
+    # Stage-boundary eviction: each stage's construction-time persists
+    # (today: ocr_stage's OCR output) are released the moment the
+    # stage's parquet sink is materialized — _incremental_stage returns
+    # a fresh read of the sink, so nothing downstream references the
+    # cache. stage_scope is a high-water mark, not a sweep: caches the
+    # CALLER registered before run_pipeline stay tracked and owned by
+    # the outer consumer.
     with stage_scope():
         bronze = _incremental_stage(
             spark, docs, ocr_stage, os.path.join(out_dir, "bronze_cells")

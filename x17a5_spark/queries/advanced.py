@@ -267,30 +267,24 @@ FROM ranked WHERE vr IN ({", ".join(str(r) for r in _A17_RANKS)})
 D8_THRESHOLD = 0.99
 
 # SemDeDup's own recipe scales the cell count with the corpus
-# (k ~ N / target_cell_size); since round 11 the DEFAULT path derives
-# k from a cheap corpus count with that recipe (VERDICT r10 #3: an
-# operator advertised as 100-TB-ready must not need a hand-set env
-# knob to avoid a 20 GB per-cell matmul at 100×). X17A5_D8_CELLS still
-# overrides for the measured-protocol runs, with the ORACLE TRACKING
-# the same k — staged_assign_sql is parameterized, so the hash gate
-# holds at any k. Every shipped gate lake (sf0.001/0.01/0.1: ≤4,000
-# augmented vectors) derives EXACTLY the historic 16, so the registry
-# query and its static oracle stay byte-identical.
+# (k ~ N / target_cell_size), so d8 derives k from a cheap corpus count
+# with that recipe: an operator meant for 100 TB must not need a
+# hand-set knob to avoid a 20 GB per-cell matmul at 100×. Every shipped
+# gate lake (sf0.001/0.01/0.1: ≤4,000 augmented vectors) derives
+# EXACTLY (16, 4) cells/super-cells, the ``staged_assign_sql`` defaults
+# the static oracle below is written with.
 
-# Perf-optimal, memory-safe cell cap (round 12, VERDICT r11 #7): the
-# r11 derivation targeted SemDeDup's literal ~250 vectors/cell, which
-# is OOM-proof but measured +25% at the 20× lake vs fixed k=16. The
-# cost curve is U-shaped in cell size m — per-group fixed costs
-# (shuffle, Arrow, scheduling) dominate small cells while the m²
+# Perf-optimal, memory-safe cell cap: SemDeDup's literal ~250
+# vectors/cell is OOM-proof but measured +25% at the 20× lake vs fixed
+# k=16. The cost curve is U-shaped in cell size m — per-group fixed
+# costs (shuffle, Arrow, scheduling) dominate small cells while the m²
 # score-matrix post-processing dominates big ones — and the measured
-# 20× A/B (this session, isolated medians) pins the optimum near
-# m ≈ 1k: m=250 → 11.8 s, m=1250 → 6.4 s, m=4000 → 26.2 s,
-# m=5000 → 12.6 s. At the cap the per-cell score matrix is
-# m²·8 = 8 MB — two orders inside any executor's per-task budget, so
-# the OOM-proof property is preserved for ANY corpus size. Gate lakes
-# (≤ 4,096 aug vectors) still derive exactly the historic k=16,
-# keeping the registry byte-identical: ⌈4000/1024⌉ = 4 < the k=16
-# floor.
+# 20× A/B (isolated medians) pins the optimum near m ≈ 1k: m=250 →
+# 11.8 s, m=1250 → 6.4 s, m=4000 → 26.2 s, m=5000 → 12.6 s. At the cap
+# the per-cell score matrix is m²·8 = 8 MB — two orders inside any
+# executor's per-task budget, so the OOM-proof property is preserved
+# for ANY corpus size. Gate lakes (≤ 4,096 aug vectors) still derive
+# exactly k=16: ⌈4000/1024⌉ = 4 < the k=16 floor.
 D8_CELL_CAP = 1024
 
 
@@ -311,20 +305,6 @@ def _d8_derive(n_aug_vecs: int) -> tuple[int, int]:
     return s * (-(-raw // s)), s
 
 
-def _d8_params() -> tuple[int, int]:
-    import math
-    import os
-
-    k = int(os.environ.get("X17A5_D8_CELLS", "16"))
-    s = max(1, math.isqrt(k))
-    while k % s:
-        s -= 1
-    return k, s
-
-
-D8_CELLS, D8_SUPERS = _d8_params()
-
-
 def d8_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     aug = emb.select("vec_id", "embedding").unionByName(
@@ -341,16 +321,10 @@ def d8_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     vecs = aug.select(
         "vec_id", _as_double(F.col("embedding")).alias("vec")
     ).withColumn("norm", _norm(F.col("vec")))
-    # cell count: env override for the measured protocols, else DERIVED
-    # from the corpus (one parquet-metadata count at construction time)
-    # so the default path cannot OOM a worker when the lake grows — at
-    # the gate lakes the derivation lands exactly on the historic 16
-    import os
-
-    if os.environ.get("X17A5_D8_CELLS") is not None:
-        cells, supers = D8_CELLS, D8_SUPERS
-    else:
-        cells, supers = _d8_derive(2 * emb.count())
+    # cell count DERIVED from the corpus (one parquet-metadata count at
+    # construction time) so the query cannot OOM a worker when the lake
+    # grows — at the gate lakes the derivation lands exactly on 16
+    cells, supers = _d8_derive(2 * emb.count())
     # two-level coarse assignment (similarity.staged_assignment): the
     # per-vector explode is 2*sqrt(k) wide, so assignment stays
     # N*2*sqrt(k) under SemDeDup's corpus-scaled k — never N*k.
@@ -405,7 +379,7 @@ v AS (
          sqrt(list_sum(list_transform(vec, x -> x * x))) AS norm
   FROM aug
 ),
-{staged_assign_sql(D8_CELLS, D8_SUPERS)},
+{staged_assign_sql()},
 pairs AS (
   SELECT a.vec_id AS id_a, b.vec_id AS id_b,
          round(list_sum(list_transform(range(1, 65), i -> va.vec[i] * vb.vec[i]))

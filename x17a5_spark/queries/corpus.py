@@ -483,8 +483,6 @@ def e5_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the Unicode-fold fingerprint re-ran per reference. Persist the
     # batch-with-fingerprint table once (batch-sized, the incremental
     # ingest's own working set).
-    from pyspark import StorageLevel as _SL
-
     from x17a5_spark.cache import stage_persist as _sp
 
     # r14 (guide §7.2 — duplicated subtrees): the exact-dup SEMI join
@@ -506,7 +504,6 @@ def e5_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         batch.select(
             "doc_id", "text", normalized_fingerprint(F.col("text")).alias("fp")
         ).join(efp, "fp", "left"),
-        _SL.MEMORY_AND_DISK,
     )
     exact_dup = tagged.filter(F.col("_hit").isNotNull()).select("doc_id")
     novel = tagged.filter(F.col("_hit").isNull())
@@ -524,12 +521,10 @@ def e5_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # probe + confirm) — persist instead of re-exploding per reader. In
     # production the existing-corpus index is a PRE-MATERIALIZED stage
     # table; this persist is its bench-scale stand-in.
-    from pyspark import StorageLevel
-
     from x17a5_spark.cache import stage_persist
 
-    shb = stage_persist(shingle(novel, "b_id"), StorageLevel.MEMORY_AND_DISK)
-    she = stage_persist(shingle(existing, "e_id"), StorageLevel.MEMORY_AND_DISK)
+    shb = stage_persist(shingle(novel, "b_id"))
+    she = stage_persist(shingle(existing, "e_id"))
     n_sh = shb.groupBy("b_id").agg(F.count("*").alias("n_sh"))
     # Bounded candidate generation (d13's prefix-blocking discipline,
     # dedup.py): raw `shb JOIN she ON shingle` is quadratic on a hot

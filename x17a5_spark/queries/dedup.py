@@ -19,7 +19,6 @@ from __future__ import annotations
 
 import os
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -35,22 +34,13 @@ _NFP = norm_fp_sql("text")
 N_MINHASH = 16
 N_BANDS = 4  # 4 rows per band
 
-# Shingle width — the PRECISION knob for degenerate vocabularies
-# (SCALE.md round-4: the ~30-word synthetic vocab gives random doc
-# pairs high baseline 3-gram Jaccard, so banding admits ~22 candidates
-# per true pair at the 20x lake). Widening the shingle collapses the
-# random-collision base rate (~vocab^-k) while near-copies keep sharing
-# most shingles, so candidate volume — not the algorithm — shrinks.
-# Env-tunable like d8's X17A5_D8_CELLS, with the ORACLE TRACKING the
-# same k (both the Spark plan and the SQL below derive from it);
-# default 3 keeps every registry hash byte-identical.
-# SCOPE (ADVICE r6): the knob applies to the d3/e7 MinHash chain ONLY.
-# d2_ngram_jaccard — the exact all-pairs validation baseline — pins its
-# own k=3 on both engine and oracle sides, so tuning d3's precision can
-# never silently move the baseline it is validated against.
-import os as _os
-
-D3_SHINGLE_K = int(_os.environ.get("X17A5_D3_SHINGLE", "3"))
+# Word-shingle width of d2's exact baseline and the d3/e7 MinHash
+# chain (both engines). Widening it is the precision lever for
+# degenerate vocabularies (SCALE.md: the ~30-word synthetic vocab gives
+# random doc pairs a high baseline 3-gram Jaccard, so banding admits
+# ~22 candidates per true pair at the 20x lake; the random-collision
+# base rate falls as ~vocab^-k while near-copies keep most shingles).
+SHINGLE_K = 3
 # all-empty-signature sentinel for the densified numeric minhash:
 # outside the packed range (mh·16 + d < 2^60, see d3's densification)
 D3_SENTINEL = 1 << 62
@@ -98,11 +88,11 @@ _d3_pack_guard()
 # AUG_TWIN_OFFSET, which assumes max(doc_id) < AUG_TWIN_OFFSET for
 # every shipped lake (20× tops out at 99,999; t30 carries a
 # raise_error tripwire on the assumption). ONE constant, interpolated
-# into both engines — never a repeated literal (code-review r9).
+# into both engines — never a repeated literal.
 #
-# Round 10: the 100× lake (500,000 docs) exceeds the historical
-# 100,000 default — t30's tripwire fired exactly as designed — so the
-# constant is env-parameterized like X17A5_D8_CELLS: the default keeps
+# The 100× lake (500,000 docs) exceeds the 100,000 default — t30's
+# tripwire fires exactly as designed — so the constant is
+# env-parameterized (X17A5_AUG_OFFSET): the default keeps
 # the registry byte-identical (same plans, same driver rows), and the
 # 100×-scale protocol sets X17A5_AUG_OFFSET=2000000 (copies land at
 # 2M-10M — far inside d15's doc_id < 2^43 packing bound, which fails
@@ -193,23 +183,18 @@ def gram_body_sql(src: str, k: int, alias: str = "shingle") -> str:
         FROM {src})"""
 
 
-def _shingles_sql(k: int = D3_SHINGLE_K) -> str:
-    return f"""
+_SHINGLES_SQL = f"""
 shingles AS (
-{gram_body_sql("aug", k)}
+{gram_body_sql("aug", SHINGLE_K)}
 )
 """
 
 
-_SHINGLES_SQL = _shingles_sql()  # knob-tracking width: d3/e7 chain only
-_D2_SHINGLES_SQL = _shingles_sql(3)  # d2 baseline: pinned, knob-immune
-
-
-def _shingle_table(aug: DataFrame, k: int = D3_SHINGLE_K) -> DataFrame:
+def _shingle_table(aug: DataFrame) -> DataFrame:
     return aug.select(
         "doc_id",
         F.explode(
-            F.array_distinct(word_shingles(F.col("text"), k))
+            F.array_distinct(word_shingles(F.col("text"), SHINGLE_K))
         ).alias("shingle"),
     )
 
@@ -251,7 +236,7 @@ def d2_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         stacklevel=2,
     )
     aug = _augmented_docs(spark, sf_dir)
-    sh = _shingle_table(aug, k=3)
+    sh = _shingle_table(aug)
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_shingles"))
     a = sh.alias("a")
     b = sh.alias("b")
@@ -274,7 +259,7 @@ def d2_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 D2_SQL = f"""
 WITH {_AUG_SQL.strip()},
-{_D2_SHINGLES_SQL.strip()},
+{_SHINGLES_SQL.strip()},
 sizes AS (SELECT doc_id, count(*) AS n_shingles FROM shingles GROUP BY doc_id),
 common AS (
   SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
@@ -296,14 +281,12 @@ WHERE round(n_common / (sa.n_shingles + sb.n_shingles - n_common), 6) >= 0.5
 # engine-independent; candidates come from band-bucket collisions only,
 # then are confirmed with true Jaccard >= 0.5.
 def d3_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark import StorageLevel
-
     aug = _augmented_docs(spark, sf_dir)
     # materialize the shingle table once (MEMORY_AND_DISK: spills, never
     # OOMs) — both the minhash pass and the candidate-confirm pass read
     # it, and a production dedup pipeline would write it as a stage
     # table anyway. Measured 1.8x vs recomputing the explode per pass.
-    sh = stage_persist(_shingle_table(aug), StorageLevel.MEMORY_AND_DISK)
+    sh = stage_persist(_shingle_table(aug))
     rows_per_band = N_MINHASH // N_BANDS
     # One-permutation minhashing (Li/Owen/Zhang, NIPS'12): hash each
     # shingle ONCE, partition the hash space into N_MINHASH buckets by
@@ -365,7 +348,6 @@ def d3_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         hashed.groupBy("doc_id")
         .agg(*minhash_cols, F.count("*").alias("n_shingles"))
         .select("doc_id", *dens_cols, "n_shingles"),
-        StorageLevel.MEMORY_AND_DISK,
     )
     # the band index is folded INTO the signature md5, so band
     # collision is a SINGLE-key equi-join (one narrow string compare
@@ -419,7 +401,6 @@ def d3_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 0.763 s level, with the array-free confirm retained).
     cand_sh = stage_persist(
         sh.join(F.broadcast(cand_docs), "doc_id", "left_semi"),
-        StorageLevel.MEMORY_AND_DISK,
     )
     sh_a = cand_sh.select(F.col("doc_id").alias("id_a"), "shingle")
     sh_b = cand_sh.select(F.col("doc_id").alias("id_b"), "shingle")
@@ -788,8 +769,6 @@ D13_TAU = 0.8
 
 
 def d13_sparse_cosine_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark import StorageLevel
-
     # Stage 0 — exact dedup FIRST (the production ordering): collapse
     # identical texts to their min-doc_id representative. Without this,
     # every K-member exact-duplicate cluster inflates its shingles' df
@@ -925,7 +904,6 @@ def d13_sparse_cosine_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.collect_list(F.struct("term", "w"))
             ).alias("wm")
         ),
-        StorageLevel.MEMORY_AND_DISK,
     )
     dots = (
         cands.join(
@@ -1449,8 +1427,6 @@ D14_MIN_SHINGLES = 3
 
 
 def d14_containment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark import StorageLevel
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     toks = tokens(F.col("text"))
     keep = F.greatest(F.floor(F.size(toks) * 2 / 5).cast("int"), F.lit(1))
@@ -1487,7 +1463,6 @@ def d14_containment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.array_distinct(word_shingles(F.col("text"), 3))
             ).alias("shingle"),
         ).select("doc_id", hash56.alias("g")),
-        StorageLevel.MEMORY_AND_DISK,
     )
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
     dfc = sh.groupBy("g").agg(F.count("*").alias("df"))
@@ -1502,7 +1477,6 @@ def d14_containment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     pw = Window.partitionBy("doc_id").orderBy(F.col("df").asc(), F.col("g"))
     shsz = stage_persist(
         shdf.join(sizes, "doc_id").withColumn("_pk", F.row_number().over(pw)),
-        StorageLevel.MEMORY_AND_DISK,
     )
     prefix = shsz.filter(
         F.col("_pk") <= F.floor(F.col("n") / 5).cast("int") + 1
@@ -1530,7 +1504,7 @@ def d14_containment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("contained_id", "container_id")
         .distinct()
     )
-    cands = stage_persist(cands, StorageLevel.MEMORY_AND_DISK)
+    cands = stage_persist(cands)
     # Verification via per-doc sorted shingle arrays + array_intersect:
     # one row per candidate pair instead of exploding to |pair|x|doc|
     # shingle rows and re-aggregating. Row width is bounded by the
@@ -1574,7 +1548,6 @@ def d14_containment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("shingles"),
         ).withColumn("n", F.size("shingles").cast("long")),
-        StorageLevel.MEMORY_AND_DISK,
     )
     aa = arrs.select(
         F.col("doc_id").alias("contained_id"),

@@ -394,8 +394,6 @@ def t22_boilerplate_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     toks = tokens(F.col("text"))
     n_seg = F.ceil(F.size(toks) / T22_K).cast("int")
-    from pyspark import StorageLevel
-
     segs = docs.select(
         "doc_id",
         F.posexplode(
@@ -413,7 +411,7 @@ def t22_boilerplate_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from x17a5_spark.cache import stage_persist
 
-    segs = stage_persist(segs, StorageLevel.MEMORY_AND_DISK)
+    segs = stage_persist(segs)
     # ^ two consumers (df table, removal join) — the persist stops each
     # from re-running the corpus-wide explode
     df_counts = segs.groupBy("seg").agg(

@@ -463,15 +463,12 @@ def m6_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reuse justifies the cache; §2.3: every downstream join now moves
     # keys + four longs, never bytes). Registry-scoped like every
     # other stage cache.
-    from pyspark import StorageLevel
-
     from x17a5_spark.cache import stage_persist
 
     packed = stage_persist(
         hashed.select(
             "media_id", *[band_val(j).alias(f"v{j}") for j in range(4)]
         ),
-        StorageLevel.MEMORY_AND_DISK,
     )
     bands = packed.select(
         "media_id",

@@ -1187,8 +1187,6 @@ T29_GRAM_K = 5
 
 
 def t29_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark import StorageLevel
-
     from x17a5_spark.functions.text import word_shingles
 
     from x17a5_spark.cache import stage_persist
@@ -1201,7 +1199,6 @@ def t29_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.array_distinct(word_shingles(F.col("text"), T29_GRAM_K))
             ).alias("gram"),
         ),
-        StorageLevel.MEMORY_AND_DISK,
     )
     firsts = grams.groupBy("gram").agg(F.min("doc_id").alias("first_doc"))
     novel = firsts.groupBy("first_doc").agg(F.count("*").alias("n_novel"))
@@ -1303,8 +1300,6 @@ def t30_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    from pyspark import StorageLevel
-
     from x17a5_spark.cache import stage_persist
 
     # persisted: the eval slice (1/23 of docs) feeds BOTH the gram
@@ -1321,7 +1316,6 @@ def t30_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select(guarded_id.alias("doc_id"), "text").filter(
             F.col("doc_id") % T30_EVAL_MOD == 0
         ),
-        StorageLevel.MEMORY_AND_DISK,
     )
     # training corpus = originals + perturbed twins, MINUS the eval docs
     # themselves. Half the eval docs' twins are scrubbed too (the

@@ -118,13 +118,11 @@ class OcrSource:
         def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             backend = backend_factory()  # one client per partition
             for pdf in batches:
-                # r14 (guide §4.2): the cell fan-out is columnar — the
-                # old dict-per-cell rows + pd.DataFrame(list-of-dicts)
-                # paid a per-key dict scan for every OCR cell. The
-                # backend lifecycle per document (start/poll/fetch with
-                # retries — the operator under test) is unchanged; only
-                # the batch assembly is vectorized. iterrows() -> zip
-                # for the same reason.
+                # the cell fan-out is columnar (guide §4.2): one list
+                # per output column, no dict-per-cell rows or
+                # pd.DataFrame(list-of-dicts), which pay a per-key dict
+                # scan for every OCR cell; zip, not iterrows(), for the
+                # same reason
                 out: dict[str, list] = {c: [] for c in _COLS}
                 for cik, fdate, content in zip(
                     pdf["cik"], pdf["filing_date"], pdf["content"]
