@@ -85,9 +85,10 @@ def test_parser_matches_python_reference(spark):
 
 
 def test_staged_parser_matches_column_form(spark):
-    """The staged-projection F1 (wide-hot-path form, round-6 codegen
-    fix) must agree with the Column form on arbitrary dirty strings —
-    including null, which the hot path sees after the borrow merge."""
+    """The staged-projection F1 (the wide-hot-path form that keeps
+    whole-stage codegen under janino's 64 KB method limit) must agree
+    with the Column form on arbitrary dirty strings — including null,
+    which the hot path sees after the borrow merge."""
     from x17a5_spark.functions.accounting import stage_parse_accounting_number
 
     samples: list[str] = []

@@ -17,8 +17,8 @@ from pyspark.sql import functions as F
 # F1 — ``num_strip`` as FOUR shared rewrite steps. Both public forms
 # (the Column expression and the staged-projection variant) compose
 # exactly this list, so a spec fix lands in one place and cannot
-# diverge them (round-6 self-review finding); the property test pins
-# the two forms equal on hypothesis dirt as a second guard.
+# diverge them; the property test pins the two forms equal on
+# hypothesis dirt as a second guard.
 # ---------------------------------------------------------------------------
 
 
@@ -91,10 +91,12 @@ def parse_accounting_number(col: Column | str) -> Column:
         OCR period and removed entirely;
       * bare ``-`` / ``.`` -> 0.0; anything uncastable -> null.
 
-    NOTE this Column form inlines each step into every reference site,
-    so the expression tree multiplies; for wide hot paths (several
-    parses in one projection chain) use
-    ``stage_parse_accounting_number`` — same steps, linear tree.
+    This Column form inlines each step into every reference site of
+    the previous one, so the input subtree is copied about 144 times.
+    Give it a bare column reference. For a compound input, or several
+    parses in one projection chain, use ``stage_parse_accounting_number``
+    (same steps, linear tree): f1/c5's dirty-string CASE staged that way
+    plans 5 ``format_number`` calls instead of 720.
     """
     s = F.col(col) if isinstance(col, str) else col
     for step in _F1_STEPS:
@@ -115,14 +117,17 @@ def stage_parse_accounting_number(
     Same semantics as ``parse_accounting_number`` (property-tested
     equal), but each rewrite step lands in a real intermediate column
     instead of being inlined into every reference site. The Column
-    form's expression tree multiplies (~3 × 3 × 6 copies of the input
+    form's expression tree multiplies (~144 copies of the input
     subtree); composed twice inside the W4 merge plus once on the split
     output, the generated ``processNext`` exceeds janino's 64 KB method
     limit and Spark silently drops the whole stage to interpreted
-    row-at-a-time eval — the round-5 e1 regression. Staging keeps each
-    projection's tree linear; the non-cheap producers referenced more
+    row-at-a-time eval. Staging keeps each projection's tree linear, so
+    plan construction (Catalyst analysis and optimization) stays linear
+    in the input's size too; the non-cheap producers referenced more
     than once are protected from CollapseProject re-inlining
-    (SPARK-36718), so whole-stage codegen compiles again.
+    (SPARK-36718), so whole-stage codegen compiles. A compound ``src``
+    is copied into the first step's three references; land it in a
+    column of its own first to plan it once.
     """
     s = F.col(src) if isinstance(src, str) else src
     p = f"__pan{next(_STAGE_SEQ)}"

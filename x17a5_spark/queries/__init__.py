@@ -39,6 +39,9 @@ WINDOW_ORDER = [
     # --- domain pipeline composites ---
     "e1_full_pipeline",
     "e3_structured_assets",
+    # --- F1 accounting parse ---
+    "f1_parse_accounting",
+    "c5_accounting_chain",
     # --- LLM-data-pipeline: dedup / similarity / text / multimodal ---
     "d2_ngram_jaccard",
     "d3_minhash_lsh",
@@ -76,8 +79,6 @@ WINDOW_ORDER = [
     "e9_training_manifest",
     # --- streaming ---
     "st7_rate_anomaly",
-    "st10_trending",
-    "st8_ttl_dedup",
     # --- analytics / joins / graph / maintenance ---
     "g1_pagerank",
     "g2_triangle_count",

@@ -14,24 +14,22 @@ from pyspark.sql import functions as F
 from x17a5_spark.functions.accounting import (
     epsilon_one_digit_match,
     is_power_of_ten_ratio,
-    parse_accounting_number,
     relative_error_class,
+    stage_parse_accounting_number,
 )
 from x17a5_spark.functions.keys import cik_from_edgar_url, filing_key, year_quarter_range
 from x17a5_spark.functions.text import levenshtein_ratio
 from x17a5_spark.tables import load_table
 
 
-# F1 — parse_accounting_number over five deterministic dirt patterns.
-# Oracle computes the *expected* numeric value independently, so a hash
-# match proves the parser's semantics (paren negatives, I->1, trailing
-# minus, misplaced-decimal removal).
-def f1_parse_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # fanout=True: per-row string-render/parse chain fused into the scan,
-    # no downstream exchange — the measured fan-out winner shape.
-    li = load_table(spark, sf_dir, "lineitem", fanout=True)
-    base = F.floor("l_extendedprice").cast("long")
-    grp = F.format_number(base, 0)  # comma-grouped integer rendering
+def _with_parsed_dirt(li: DataFrame) -> DataFrame:
+    """Add ``parsed``: F1 over five deterministic dirt patterns of
+    ``floor(l_extendedprice)``. The dirty string lands in a column of its
+    own before the staged parse, so the plan holds the CASE once; the
+    Column form would copy it into every F1 step (720 ``format_number``
+    calls instead of 5, and most of the query's time in analysis)."""
+    # comma-grouped integer rendering
+    grp = F.format_number(F.floor("l_extendedprice").cast("long"), 0)
     variant = (F.col("l_orderkey") * 7 + F.col("l_linenumber")) % 5
     dirty = (
         F.when(variant == 0, F.concat(F.lit("$ "), grp))
@@ -40,11 +38,19 @@ def f1_parse_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(variant == 3, F.concat(grp, F.lit("-")))
         .otherwise(F.concat(grp, F.lit(".123")))
     )
-    return li.select(
-        "l_orderkey",
-        "l_linenumber",
-        parse_accounting_number(dirty).alias("parsed"),
-    )
+    li = li.withColumn("__dirty", dirty)
+    return stage_parse_accounting_number(li, "__dirty", "parsed").drop("__dirty")
+
+
+# F1 — the accounting parse over five deterministic dirt patterns.
+# Oracle computes the *expected* numeric value independently, so a hash
+# match proves the parser's semantics (paren negatives, I->1, trailing
+# minus, misplaced-decimal removal).
+def f1_parse_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # fanout=True: per-row string-render/parse chain fused into the scan,
+    # no downstream exchange — the measured fan-out winner shape.
+    li = load_table(spark, sf_dir, "lineitem", fanout=True)
+    return _with_parsed_dirt(li).select("l_orderkey", "l_linenumber", "parsed")
 
 
 F1_SQL = """
@@ -286,17 +292,7 @@ FROM events GROUP BY event_type
 def c5_accounting_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fanout=True: pure codegen scalar chain (no exchange at all) —
     # measured 2.7x faster with the scan fanned out across cores.
-    li = load_table(spark, sf_dir, "lineitem", fanout=True)
-    base = F.floor("l_extendedprice").cast("long")
-    grp = F.format_number(base, 0)
-    variant = (F.col("l_orderkey") * 7 + F.col("l_linenumber")) % 5
-    dirty = (
-        F.when(variant == 0, F.concat(F.lit("$ "), grp))
-        .when(variant == 1, F.concat(F.lit("("), grp, F.lit(")")))
-        .when(variant == 2, F.regexp_replace(grp, "1", "I"))
-        .when(variant == 3, F.concat(grp, F.lit("-")))
-        .otherwise(F.concat(grp, F.lit(".123")))
-    )
+    li = _with_parsed_dirt(load_table(spark, sf_dir, "lineitem", fanout=True))
     a = (F.floor("l_extendedprice") + 1).cast("double")
     scaled = ((F.col("l_orderkey") + F.col("l_linenumber")) % 2) == 0
     b = F.when(scaled, a * 1000.0).otherwise(a * 37.0 + 11.0)
@@ -314,7 +310,7 @@ def c5_accounting_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     return li.select(
         "l_orderkey",
         "l_linenumber",
-        parse_accounting_number(dirty).alias("parsed"),
+        "parsed",
         is_power_of_ten_ratio(a, b).alias("is_multiple"),
         epsilon_one_digit_match(x1, x1 + bump).alias("is_epsilon_match"),
         relative_error_class(err).alias("match_class"),
