@@ -4,7 +4,7 @@
 sf0.001; ``queries()`` exposes every implemented operator from
 SURVEY.md §2 (plus the training-data-pipeline operators); ``oracle_sql()``
 gives the DuckDB-equivalent SQL for each hash-checkable query
-(182 queries / 182 oracles — every registry entry is oracle-backed
+(185 queries / 185 oracles — every registry entry is oracle-backed
 since round 10, when the iterative BPE training kernel's fixed merge
 rounds were unrolled into a closed-form CTE chain; its golden tests
 under tests/ still independently recompute the merge table).

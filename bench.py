@@ -203,8 +203,9 @@ def main() -> None:
 
     # e1 writes its bronze/silver/gold stage tables at plan-CONSTRUCTION
     # time (run_pipeline materializes incrementally-appended parquet
-    # sinks into a fresh tmpdir), so reusing one plan would time a bare
-    # parquet read of the gold table. The reference-comparable number is
+    # sinks, and the returned plan reads the checkpointed gold rows), so
+    # reusing one plan would time a bare read of the gold rows. The
+    # reference-comparable number is
     # the END-TO-END wall clock — construction + every stage write +
     # the final materialization — so e1 rebuilds from scratch each run,
     # with no warmup: the cold number IS the one comparable to the

@@ -11,11 +11,7 @@ force — independent of every engine code path under test.
 
 from __future__ import annotations
 
-import sys
-
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from tools.make_clustered_fixture import exact_topk, write_clustered_embeddings
 

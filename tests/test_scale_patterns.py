@@ -112,9 +112,7 @@ def test_bench_stdout_line_never_exceeds_budget():
     the short codes), many queries, and tiny budgets all stay within
     the capture budget with the headline intact."""
     import json
-    import sys
 
-    sys.path.insert(0, "/root/repo")
     from bench import LINE_BUDGET, compose_stdout_line
 
     def full_for(timings):
@@ -163,9 +161,7 @@ def test_bench_bracket_protocol_stays_out_of_stdout():
     lives in BENCH_FULL.json only — main() strips it before composing
     the ~2KB stdout line, and the median/protocol fields survive."""
     import json
-    import sys
 
-    sys.path.insert(0, "/root/repo")
     from bench import LINE_BUDGET, compose_stdout_line
 
     timings = {f"q{i}_name": 0.1 * i for i in range(1, 60)}

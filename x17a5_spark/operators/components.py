@@ -28,13 +28,13 @@ Each round truncates plan lineage with ``localCheckpoint`` so the
 iterative plan doesn't grow unboundedly; on a cluster, swap for
 ``checkpoint`` to a reliable store (same API, fault-tolerant).
 
-Round 8 adds :func:`cc_star` — the alternating large-star/small-star
-contraction itself (Kiveris et al., SoCC'14) — and an
-``on_exhausted="star"`` escape hatch on :func:`connected_components`:
-the min-label loop stays the fast path for the shallow graphs LSH
-actually emits, and a chain-shaped graph that blows the hop budget
-degrades to the O(log^2 n)-round contraction instead of stopping the
-pipeline. Both return the same ``(id, comp)`` contract.
+:func:`cc_star` is the alternating large-star/small-star contraction
+itself (Kiveris et al., SoCC'14), and :func:`connected_components`
+falls back to it when the hop budget runs out: the min-label loop
+stays the fast path for the shallow graphs LSH actually emits, and a
+chain-shaped graph that blows the budget degrades to the
+O(log^2 n)-round contraction instead of stopping the pipeline. Both
+return the same ``(id, comp)`` contract.
 """
 
 from __future__ import annotations
@@ -189,7 +189,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_rounds: int = 25,
-    on_exhausted: str = "raise",
 ) -> DataFrame:
     """Resolve the pair graph to ``(id, comp)`` with ``comp`` = minimum
     id reachable in the component. Output covers every node incident to
@@ -199,15 +198,11 @@ def connected_components(
     Each driver round-trip batches TWO propagation steps (one
     checkpoint + one convergence action per pair), so ``max_rounds``
     rounds admit ``2 * max_rounds`` hops of label travel. A graph whose
-    diameter exceeds that budget NEVER returns silently unresolved
-    clusters: with ``on_exhausted="raise"`` (default) it raises; with
-    ``on_exhausted="star"`` it falls back to :func:`cc_star`, which
-    contracts any diameter in O(log^2 n) rounds — the production
-    setting for pipelines (d6/e10/e11) where a chain-shaped dup graph
-    must degrade, not stop.
+    diameter exceeds that budget never returns half-resolved clusters:
+    it falls back to :func:`cc_star`, which contracts any diameter in
+    O(log^2 n) rounds, so a chain-shaped dup graph degrades rather than
+    stopping the pipeline.
     """
-    if on_exhausted not in ("raise", "star"):
-        raise ValueError(f"on_exhausted must be 'raise' or 'star', got {on_exhausted!r}")
     sym = _symmetrize(edges, src, dst).localCheckpoint(eager=True)
     labels = (
         sym.select(F.col("u").alias("id"))
@@ -222,14 +217,7 @@ def connected_components(
         labels = updated.drop("_changed")
         if not changed:
             return labels
-    if on_exhausted == "star":
-        return cc_star(edges, src, dst)
-    raise RuntimeError(
-        f"connected_components did not converge within {max_rounds} rounds "
-        f"({2 * max_rounds} propagation steps); the pair graph's diameter "
-        "exceeds the budget. Raise max_rounds, or switch to the "
-        "alternating-star contraction for long-chain graphs."
-    )
+    return cc_star(edges, src, dst)
 
 
 def canonicalize_duplicates(

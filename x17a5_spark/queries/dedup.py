@@ -580,9 +580,7 @@ def d6_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    comp = connected_components(
-        _d6_edges(docs), "src", "dst", on_exhausted="star"
-    )
+    comp = connected_components(_d6_edges(docs), "src", "dst")
     return canonicalize_duplicates(docs.select("doc_id"), comp).select(
         "doc_id", "cluster_id", "is_canonical"
     )
@@ -1156,7 +1154,7 @@ def e10_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     from x17a5_spark.operators.components import connected_components
 
     pairs = d3_minhash_lsh(spark, sf_dir)
-    comp = connected_components(pairs, "id_a", "id_b", on_exhausted="star")
+    comp = connected_components(pairs, "id_a", "id_b")
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
     aug = docs.unionByName(
         docs.select(
@@ -1294,7 +1292,7 @@ def e11_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     from x17a5_spark.operators.components import connected_components
 
     pairs = d3_minhash_lsh(spark, sf_dir)
-    comp = connected_components(pairs, "id_a", "id_b", on_exhausted="star")
+    comp = connected_components(pairs, "id_a", "id_b")
     aug = _augmented_docs(spark, sf_dir)
     scored = aug.select(
         "doc_id", _t2_quality(F.col("text")).alias("quality")
@@ -2024,12 +2022,12 @@ LEFT JOIN rebuilt18 r USING (doc_id)
 
 
 # ---------------------------------------------------------------------------
-# D17 — cc_star on a CHAIN-SHAPED dup graph (round-8 VERDICT ask #1's
-# registry evidence): consecutive doc_ids are linked within blocks of
-# 100, so every component is a path of diameter ~99 — the propagation
-# loop's default budget (25 rounds = 50 hops) REFUSES this graph
-# (test-pinned in tests/test_components.py), while the alternating
-# large-star/small-star contraction resolves it in O(log^2 n) rounds.
+# D17 — cc_star on a CHAIN-SHAPED dup graph: consecutive doc_ids are
+# linked within blocks of 100, so every component is a path of
+# diameter ~99 — past the propagation loop's default budget (25 rounds
+# = 50 hops), which is exactly when connected_components falls back to
+# the alternating large-star/small-star contraction; it resolves the
+# graph in O(log^2 n) rounds.
 # This is exactly the templated-documents-drifting-gradually shape that
 # turns min-label propagation into a pipeline stop at 100 TB.
 #

@@ -627,101 +627,14 @@ E1_DOC = (
 )
 
 
-# most recent e1 sink tree; replaced (and deleted) by the next build
-_E1_PREV_DIR: str | None = None
-
-# sentinel marking a live e1 sink tree; vanishes with the rmtree when a
-# newer build reclaims it, so a stale plan can fail LOUD (ADVICE r6)
-_E1_SENTINEL = "_X17A5_E1_LIVE"
-
-
-_E1_ACTIONS = (
-    "collect",
-    "count",
-    "show",
-    "toPandas",
-    "toLocalIterator",
-    "take",
-    "head",
-    "first",
-    "tail",
-    "foreach",
-    "foreachPartition",
-)
-
-
-def _e1_arm_stale_guard(df: DataFrame, sink_dir: str) -> DataFrame:
-    """Enforce the one-live-plan contract LOUDLY: shadow the plan's
-    action methods with per-instance wrappers that check the sink
-    tree's sentinel first, so a plan whose tree a newer
-    ``e1_full_pipeline`` call reclaimed raises a named error instead of
-    a raw executor FileNotFoundException. Instance-level shadowing
-    (rather than a DataFrame subclass) sidesteps the classic/connect
-    constructor dispatch; transformations return plain unguarded
-    DataFrames — the guard covers actions invoked directly on the
-    returned plan, which is the bench/driver shape."""
-    import functools
-    import os
-
-    def _assert_live() -> None:
-        if not os.path.exists(os.path.join(sink_dir, _E1_SENTINEL)):
-            raise RuntimeError(
-                "stale e1 plan: a newer e1_full_pipeline call reclaimed "
-                "this plan's sink tree (one-live-plan contract, see the "
-                "e1_full_pipeline docstring) — rebuild by calling "
-                "e1_full_pipeline again"
-            )
-
-    for name in _E1_ACTIONS:
-        orig = getattr(df, name)
-
-        @functools.wraps(orig)
-        def guarded(*args, _orig=orig, **kwargs):
-            _assert_live()
-            return _orig(*args, **kwargs)
-
-        setattr(df, name, guarded)
-
-    # the WRITER path (df.write / writeTo / toJSON) executes the plan
-    # too — and it is exactly how bench.py and the driver materialize
-    # queries (noop sink), so it must hit the same sentinel (ADVICE r7).
-    # ``write`` is a getter-only property (a data descriptor), which
-    # instance attributes cannot shadow; a dynamic subclass swap guards
-    # it at ACCESS time without re-running any constructor.
-    cls = type(df)
-    base_write = cls.write
-
-    class _E1Guarded(cls):  # type: ignore[misc, valid-type]
-        @property
-        def write(self):
-            _assert_live()
-            return base_write.fget(self)
-
-        def writeTo(self, *args, **kwargs):  # noqa: N802 (Spark API name)
-            _assert_live()
-            return super().writeTo(*args, **kwargs)
-
-        def toJSON(self, *args, **kwargs):  # noqa: N802 (Spark API name)
-            _assert_live()
-            return super().toJSON(*args, **kwargs)
-
-    df.__class__ = _E1Guarded
-    return df
-
-
 def e1_full_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E1 — bronze→silver→gold with persisted stage sinks.
 
-    ONE-LIVE-PLAN CONTRACT: each call builds a fresh sink tree and
-    deletes the previous call's tree (the returned plan lazily reads
-    its gold parquet, so the tree must outlive the call — but only the
-    MOST RECENT e1 plan is executable). A long-lived session holding
-    two e1 DataFrames will see the older one fail LOUDLY on
-    re-execution — actions on the returned plan check the sink tree's
-    sentinel and raise ``RuntimeError("stale e1 plan: ...")`` instead
-    of a raw executor missing-parquet error (ADVICE r6). Bench and the
-    driver execute sequentially, which is the supported shape.
+    The stage sinks live in a temp tree owned by this call: the selected
+    gold rows are checkpointed eagerly, so the returned plan reads no
+    sink file and the tree is removed before returning.
     """
+    import shutil
     import tempfile
 
     from x17a5_spark.pipeline import run_pipeline
@@ -746,37 +659,22 @@ def e1_full_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     labels = ["Cash", "Receivables", "Total assets"]
     out_dir = tempfile.mkdtemp(prefix="x17a5_e1_")
-    # every e1 execution builds a fresh sink tree; the tree must outlive
-    # this call (the returned plan lazily reads the gold parquet, so an
-    # immediate rmtree would break execution). Keep at most ONE live
-    # tree: building a new e1 means the previous plan is dead, so its
-    # tree goes now; the atexit backstop reclaims the last one.
-    import atexit
-    import shutil
-
-    global _E1_PREV_DIR
-    if _E1_PREV_DIR is not None:
-        shutil.rmtree(_E1_PREV_DIR, ignore_errors=True)
-    _E1_PREV_DIR = out_dir
-    atexit.register(shutil.rmtree, out_dir, ignore_errors=True)
-    gold = run_pipeline(spark, docs, text, out_dir, label_map, labels)
-    import os
-
-    with open(os.path.join(out_dir, _E1_SENTINEL), "w") as fh:
-        fh.write("live e1 sink tree — removed when a newer plan reclaims it\n")
-    result = gold.select(
-        "cik",
-        "name",
-        "filing_date",
-        "fiscal_year",
-        F.col("Cash").alias("cash"),
-        F.col("Receivables").alias("receivables"),
-        F.col("Total assets").alias("total_assets"),
-        F.round("reconstructed_total_assets", 4).alias("recon_total"),
-        F.round("relative_error", 8).alias("rel_err"),
-        "total_asset_check",
-    )
-    return _e1_arm_stale_guard(result, out_dir)
+    try:
+        gold = run_pipeline(spark, docs, text, out_dir, label_map, labels)
+        return gold.select(
+            "cik",
+            "name",
+            "filing_date",
+            "fiscal_year",
+            F.col("Cash").alias("cash"),
+            F.col("Receivables").alias("receivables"),
+            F.col("Total assets").alias("total_assets"),
+            F.round("reconstructed_total_assets", 4).alias("recon_total"),
+            F.round("relative_error", 8).alias("rel_err"),
+            "total_asset_check",
+        ).localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(out_dir, ignore_errors=True)
 
 
 E1_SQL = """
