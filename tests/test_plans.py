@@ -239,31 +239,85 @@ def test_t23_sampling_is_shuffle_free(spark):
     assert "SortMergeJoin" not in plan and "CartesianProduct" not in plan
 
 
+def _main_path(plan: str) -> list[str]:
+    """The plan's nodes from the root down its first-child chain: in a
+    tree string a node's first child is the next line, one level
+    deeper."""
+    def depth(line: str) -> int:
+        marks = [i for i in (line.find("+-"), line.find(":-")) if i >= 0]
+        return min(marks) // 3 + 1 if marks else 0
+
+    lines = plan.splitlines()
+    path = [lines[0]]
+    for line in lines[1:]:
+        if depth(line) != depth(path[-1]) + 1:
+            break
+        path.append(line)
+    return path
+
+
 def test_silver_kernels_keep_explicit_width(spark):
-    """The grouped Python kernels must sit behind REPARTITION_BY_NUM
-    exchanges (kernel_part.py): those are contractually exempt from
-    AQE's byte-based coalescing. Without them, a byte-small corpus
-    collapses every kernel to ONE task and the silver chain serializes
-    (measured round 6: silver_clean 100.6 s -> 15.6 s at sf0.1)."""
+    """The silver chain runs on ONE filing-key exchange with an
+    explicit width: ``clean_filings`` hash-partitions its input at
+    kernel width (kernel_part.py), and every later window, the TEXT-map
+    join and the bisect kernel reuse it. The width is what keeps AQE
+    from coalescing a byte-small corpus onto one task (measured:
+    silver_clean 100.6 s -> 15.6 s at sf0.1); the single exchange is
+    what keeps the chain's stage and Python-task count low. The
+    conjoined-row split is a JVM pass, so the bisect/subtotals tail is
+    the chain's only Python kernel, batched as MapInPandas over
+    key-sorted partitions (grouped_kernel, measured 2.2x over per-group
+    FlatMapGroupsInPandas)."""
+    from x17a5_spark.operators.kernel_part import kernel_width
+    from x17a5_spark.pipeline import clean_filings
     from x17a5_spark.queries.domain import e2_clean_pipeline
 
     plan = _plan(e2_clean_pipeline(spark, SF))
-    # two kernels in the chain: conjoined split + the FUSED tail
-    # (bisection + subtotal removal in one pass) — a third kernel here
-    # means the fusion regressed; fewer means a kernel silently died.
-    # Round 7: kernels run as MapInPandas over key-partitioned
-    # key-sorted streams (grouped_kernel — batched group dispatch,
-    # measured 2.2x over per-group FlatMapGroupsInPandas), still behind
-    # the coalesce-exempt explicit exchanges.
-    assert plan.count("REPARTITION_BY_NUM") >= 2, plan.count("REPARTITION_BY_NUM")
-    assert plan.count("MapInPandas") == 2, plan.count("MapInPandas")
-    assert "FlatMapGroupsInPandas" not in plan
+    assert plan.count("MapInPandas") == 1, plan.count("MapInPandas")
+    for node in ("InMemoryRelation", "Union", "FlatMapGroupsInPandas"):
+        assert node not in plan, node
+    # e2 plants one constant filing_date, which the optimizer folds into
+    # the hash keys and drops from the window keys; every explicit
+    # exchange still hashes the filing key at kernel width
+    width = kernel_width(spark.range(1))
+    repart = [l for l in plan.splitlines() if "REPARTITION_BY_NUM" in l]
+    assert repart
+    assert all(
+        "hashpartitioning(cik#" in l and f"2021-06-30, {width})" in l
+        for l in repart
+    ), repart
+
+    # with a real filing_date column the whole chain, bronze rows to the
+    # bisect kernel, sits on one exchange
+    rows = [
+        ("1", d, i, n, v, None)
+        for d in ("2020-06-30", "2021-06-30")
+        for i, (n, v) in enumerate([
+            ("Cash", "$ 2"), ("Receivables", "5"), ("Total assets", "7"),
+            ("Payables", "11"), ("Total liabilities and equity", "11"),
+        ])
+    ]
+    raw = spark.createDataFrame(
+        rows, "cik string, filing_date string, row_idx int, "
+        "col0 string, col1 string, col2 string",
+    )
+    text = spark.createDataFrame(
+        [("1", "2020-06-30", 0, "(in Millions)")],
+        "cik string, filing_date string, line_idx int, line_text string",
+    )
+    path = _main_path(_plan(clean_filings(raw, text)))
+    exchanges = [l for l in path if "Exchange" in l]
+    assert len(exchanges) == 1, exchanges
+    assert "REPARTITION_BY_NUM" in exchanges[0]
+    assert "filing_date#" in exchanges[0] and f", {width})" in exchanges[0]
+    assert sum("MapInPandas" in l for l in path) == 1
+    assert sum("Window" in l for l in path) >= 3
 
 
 def test_kernel_width_never_equals_session_shuffle_width(spark):
     """kernel_width must differ from spark.sql.shuffle.partitions —
     equal hash partitioning gets the explicit exchange elided at
-    planning time, which re-serializes the kernels (round-6 bug)."""
+    planning time, which re-serializes the kernels."""
     from x17a5_spark.operators.kernel_part import kernel_width
 
     df = spark.range(10)
@@ -332,8 +386,7 @@ def test_f1_parse_plans_the_dirty_string_once(spark, qname):
 
 
 def test_plans_md_matches_live_plans(spark):
-    """VERDICT r9 #2 (the s2 documentation-drift lesson): every plan
-    tree committed in PLANS.md must match the LIVE plan's node-type
+    """Every plan tree committed in PLANS.md must match the LIVE plan's node-type
     skeleton — a plan-shape change cannot strand its documentation.
     Regenerate with `python tools/dump_plans.py` when this fails."""
     import os

@@ -165,42 +165,55 @@ def test_special_merge_spark(spark):
 
 
 # ---------------------------------------------------------- row_split
+# (items, raw values, text lines) of one filing per golden kernel case;
+# the randomized equivalence test also feeds them through the Spark operator
+ROW_SPLIT_GOLDEN = {
+    "perfect_match": (
+        ["Securities Held Total Assets"],
+        ["$ 9,112,943 13,151,663"],
+        ["Securities Held", "Total Assets", "unrelated line"],
+    ),
+    # three candidate names match; two values -> drop leading name
+    "more_names_than_values": (
+        ["Cash Securities Held Total Assets"],
+        ["1,000 2,000"],
+        ["Cash", "Securities Held", "Total Assets"],
+    ),
+    # '$' filtered, then 3 values vs 2 names
+    "one_extra_value": (
+        ["Securities Held Total Assets"],
+        ["$ 7 1,000 2,000"],
+        ["Securities Held", "Total Assets"],
+    ),
+    "unresolvable": (["Mystery fused row", "Normal"], ["1 2 3 4", "5"], ["nomatch"]),
+    "no_fused_rows": (["A", "B"], ["1", "2"], []),
+}
+
+
 def test_row_split_kernel_perfect_match():
-    items = ["Securities Held Total Assets"]
-    raws = ["$ 9,112,943 13,151,663"]
-    text = ["Securities Held", "Total Assets", "unrelated line"]
-    rows, flag = row_split_kernel(items, raws, text)
+    rows, flag = row_split_kernel(*ROW_SPLIT_GOLDEN["perfect_match"])
     assert flag == 1
     assert rows == [("Securities Held", "9,112,943"), ("Total Assets", "13,151,663")]
 
 
 def test_row_split_kernel_more_names_than_values():
-    items = ["Cash Securities Held Total Assets"]
-    raws = ["1,000 2,000"]
-    # three candidate names match; two values -> drop leading name
-    text = ["Cash", "Securities Held", "Total Assets"]
-    rows, flag = row_split_kernel(items, raws, text)
+    rows, flag = row_split_kernel(*ROW_SPLIT_GOLDEN["more_names_than_values"])
     assert rows == [("Securities Held", "1,000"), ("Total Assets", "2,000")]
 
 
 def test_row_split_kernel_one_extra_value():
-    items = ["Securities Held Total Assets"]
-    raws = ["$ 7 1,000 2,000"]  # '$' filtered, then 3 values vs 2 names
-    text = ["Securities Held", "Total Assets"]
-    rows, flag = row_split_kernel(items, raws, text)
+    rows, flag = row_split_kernel(*ROW_SPLIT_GOLDEN["one_extra_value"])
     assert rows == [("Securities Held", "1,000"), ("Total Assets", "2,000")]
 
 
 def test_row_split_kernel_unresolvable_drops_row():
-    items = ["Mystery fused row", "Normal"]
-    raws = ["1 2 3 4", "5"]
-    rows, flag = row_split_kernel(items, raws, ["nomatch"])
+    rows, flag = row_split_kernel(*ROW_SPLIT_GOLDEN["unresolvable"])
     assert flag == 1
     assert rows == [("Normal", "5")]
 
 
 def test_row_split_no_fused_rows():
-    rows, flag = row_split_kernel(["A", "B"], ["1", "2"], [])
+    rows, flag = row_split_kernel(*ROW_SPLIT_GOLDEN["no_fused_rows"])
     assert flag == 0
     assert rows == [("A", "1"), ("B", "2")]
 
@@ -221,9 +234,92 @@ def test_split_conjoined_rows_spark(spark):
     assert (out.split_flag == 1).all()
 
 
+def _random_filing(rng):
+    """One random filing: (items, raw values, text lines or None for a
+    filing with no TEXT map). Names are built from the same phrase pool
+    as the text lines, so fused rows hit every alignment rule."""
+    phrases = [
+        "Cash", "Securities Held", "Total Assets", "Receivables", "Équité nette",
+        "现金及等价物", "Dépôts 💶", "A", "é", "Total", "Held",
+    ]
+    tokens = ["1,000", "2", "(3)", "4.5", "-", "", "$", "S", "$1", "ñ7"]
+    items, raws, used = [], [], []
+    for _ in range(rng.randint(1, 6)):
+        picked = rng.sample(phrases, rng.randint(1, 3))
+        used += picked
+        items.append(None if rng.random() < 0.1 else " ".join(picked))
+        roll = rng.random()
+        if roll < 0.15:
+            raws.append(None)
+        elif roll < 0.25:
+            raws.append(" " * rng.randint(1, 3))
+        else:
+            raws.append(" ".join(rng.choices(tokens, k=rng.randint(1, 4))))
+    if rng.random() < 0.15:
+        return items, raws, None
+    lines = rng.sample(used, rng.randint(0, len(used))) + rng.choices(
+        phrases + [None, "unrelated line"], k=rng.randint(0, 3)
+    )
+    rng.shuffle(lines)
+    return items, raws, lines
+
+
+def test_split_conjoined_rows_equals_kernel_randomized(spark):
+    """The Spark operator must equal ``row_split_kernel`` per filing —
+    rows, their dense order and the flag — on seeded random filings
+    plus the golden kernel cases and the edge shapes listed below."""
+    import random
+
+    rng = random.Random(17)
+    filings = [_random_filing(rng) for _ in range(150)]
+    filings += list(ROW_SPLIT_GOLDEN.values())
+    edge = len(filings)
+    filings += [
+        # the only fused row is dropped: the survivor still carries flag 1
+        (["Mystery fused row", "Cash"], ["1 2 3", "5"], ["Cash"]),
+        # a filing made of one unresolvable fused row vanishes
+        (["Nothing matches"], ["1 2"], ["zz"]),
+        # null line item on a fused row and on a plain row
+        ([None, None], ["1 2", "3"], ["Cash"]),
+        # duplicate and one-character text lines
+        (["Cash Total Cash"], ["$ 1 S 2"], ["Cash", "Cash", "C", "T", None]),
+        # fused row with no TEXT map at all
+        (["Cash Total"], ["1 2"], None),
+    ]
+    rows, text = [], []
+    for f, (items, raws, lines) in enumerate(filings):
+        cik = f"F{f}"
+        for i, (item, raw) in enumerate(zip(items, raws)):
+            rows.append((cik, "2021-06-30", i, item, raw))
+        for j, line in enumerate(lines or []):
+            text.append((cik, "2021-06-30", j, line))
+    df = spark.createDataFrame(
+        rows, "cik string, filing_date string, row_idx int, "
+        "lineitem string, raw_value string",
+    )
+    text_df = spark.createDataFrame(
+        text, "cik string, filing_date string, line_idx int, line_text string"
+    )
+    got: dict[str, list] = {}
+    for r in split_conjoined_rows(df, text_df).collect():
+        got.setdefault(r.cik, []).append(
+            (r.row_idx, r.lineitem, r.raw_value, r.split_flag)
+        )
+    expected: dict[str, list] = {}
+    for f, (items, raws, lines) in enumerate(filings):
+        out, flag = row_split_kernel(items, raws, lines or [])
+        if out:
+            expected[f"F{f}"] = [
+                (i, item, raw, flag) for i, (item, raw) in enumerate(out)
+            ]
+    assert {k: sorted(v) for k, v in got.items()} == expected
+    assert got[f"F{edge}"] == [(0, "Cash", "5", 1)]
+    assert f"F{edge + 1}" not in got
+
+
 def test_fused_tail_equals_composition(spark):
     """bisect_and_remove_subtotals must equal split_balance_sheet |>
-    remove_subtotals row-for-row (the fused silver tail, round 6)."""
+    remove_subtotals row-for-row (the fused silver tail)."""
     from x17a5_spark.operators.splits import (
         bisect_and_remove_subtotals,
         split_balance_sheet,

@@ -94,11 +94,16 @@ PICKS = {
         "join."
     ),
     "e2_clean_pipeline": (
-        "The round-6 silver chain: staged-F1 projections (linear "
-        "expression trees — whole-stage codegen compiles, no 64 KB "
-        "fallback), TWO grouped kernels (conjoined split + FUSED "
-        "bisect/subtotals tail), each behind a REPARTITION_BY_NUM "
-        "exchange that AQE cannot coalesce to one task."
+        "The silver chain: one REPARTITION_BY_NUM exchange on the "
+        "filing key (AQE cannot coalesce it to one task) under the "
+        "merge3 windows, the conjoined-row split as a JVM pass (TEXT "
+        "map as one sorted array per filing, posexplode, renumber), "
+        "staged-F1 projections (linear expression trees — whole-stage "
+        "codegen compiles, no 64 KB fallback) and ONE Python kernel, "
+        "the fused bisect/subtotals tail. e2 plants a constant "
+        "filing_date, which the optimizer drops from the window keys, "
+        "so here the windows add an exchange on cik and the kernel "
+        "keeps its own; with real filing dates the chain shares one."
     ),
     "t28_moments_sketch": (
         "Mergeable power-sum quantile sketch: one scan, exact-DECIMAL "

@@ -25,8 +25,20 @@ cost: instead of applyInPandas's one Arrow round trip per group, groups
 stream through ``mapInPandas`` over key-sorted partitions, many
 complete groups per call. ``grouped_kernel`` is the per-group form on
 top of it (an in-batch pandas groupby) — measured 2.2× on the k1
-kernel at the 20× lake. All silver-chain kernels run through this one
-path; the partitioning policy above is unchanged underneath.
+kernel at the 20× lake. The silver chain has one kernel (the fused
+bisect/subtotals tail); it runs on this path over the chain's own
+filing-key exchange (``pipeline._silver_purge``), whose width and keys
+equal its repartition, so Spark drops the repartition.
+
+Every Python task also pays a fixed cost, whatever its rows: measured
+on a 4-vCPU host, 17 trivial ``mapInPandas`` tasks took 1.0-1.3 s
+against 0.1-0.2 s for the same JVM projection, about 0.18 s of
+Python-worker CPU per task. The cause is pyspark's per-task
+``setup_spark_files``, which calls ``importlib.invalidate_caches()``;
+on Python 3.11 that makes each cached zipimporter (about 16 per
+worker) re-read the 1,328-entry directory of ``pyspark.zip``. A stage
+that Spark's built-in functions can express therefore runs as a JVM
+pass, and a kernel runs on as few tasks and stages as its width allows.
 """
 
 from __future__ import annotations

@@ -12,21 +12,18 @@ candidate; counts are aligned under the reference's rules —
   * otherwise -> the fused row is dropped entirely.
 The per-filing flag records whether any fused row was seen.
 
-Sequential and map-dependent, so it runs as a grouped pandas kernel
-per filing; the *detector* (multi-token value cell) is
-the declarative F3 expression exercised by
-queries/scalars.py::f3_conjoined_detect.
+Every step is a Spark array function, so the split runs as one JVM
+pass (two windows and a left join on the filing key, no Python
+worker). ``row_split_kernel`` is the plain-Python statement of the
+same rules: the tests compare the two on random filings.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from x17a5_spark.cache import stage_persist
 from x17a5_spark.functions.keys import FILING_KEY
-from x17a5_spark.operators.kernel_part import grouped_kernel
 
 
 def _is_conjoined(raw: str | None) -> bool:
@@ -80,92 +77,64 @@ def split_conjoined_rows(df: DataFrame, text: DataFrame) -> DataFrame:
     table using the filing's TEXT line map.
 
     ``text`` holds (cik, filing_date, line_idx, line_text). The map
-    rides into the kernel as one array column per filing — no
-    driver-side dict, so the text corpus can be arbitrarily large.
-
-    SELECTIVE ROUTING: fused rows are rare — most filings have none —
-    and a filing without one comes out of the kernel unchanged, so
-    sending it through the Python kernel (Arrow out, pandas sort,
-    list-of-tuples rebuild, Arrow back) is pure overhead. The
-    declarative F3 detector (an exact Column mirror of
-    ``_is_conjoined``) flags fused rows JVM-side; filings with zero
-    fused rows take a pure window passthrough (renumber +
-    split_flag=0 — exactly what the kernel emits for them), and ONLY
-    filings containing a fused row pay the kernel and its TEXT-map
-    join. At e1's corpus shape (no fused rows) this converts the whole
-    stage to JVM window work; at a corpus where every filing is fused
-    (k4's fixture) it degrades gracefully to one kernel pass plus one
-    cheap window pass."""
-    key_t = dict(df.dtypes)
-    schema = ", ".join(
-        [f"{c} {key_t[c]}" for c in FILING_KEY]
-        + ["row_idx int", "lineitem string", "raw_value string", "split_flag int"]
+    joins in as one ordered array column per filing, so the text corpus
+    can be arbitrarily large. Each row becomes an array of
+    (lineitem, raw_value) pairs — itself when not fused, the aligned
+    split when fused, null when the counts cannot be aligned — which
+    ``posexplode`` expands in place; ``row_number`` over (row_idx, pos)
+    renumbers. Every window and the join are keyed on the filing, so an
+    input already hash-partitioned on it is not shuffled again."""
+    # tokens of _is_conjoined: split on single spaces (empty tokens from
+    # runs of spaces survive, as in Python's str.split(" ")), minus the
+    # '$'/'S' OCR artifacts
+    values = F.filter(
+        F.split(F.col("raw_value"), " ", -1), lambda t: ~t.isin("$", "S")
     )
-    # declarative _is_conjoined: split on single spaces (empty tokens
-    # from runs of spaces survive, as in Python's str.split(" ")),
-    # drop '$'/'S' OCR artifacts, fused iff >1 token remains
-    is_fused = (
-        F.size(
-            F.filter(
-                F.split(F.col("raw_value"), " ", -1),
-                lambda t: ~t.isin("$", "S"),
-            )
-        )
-        > 1
-    ) & F.col("raw_value").isNotNull()
+    is_fused = F.col("raw_value").isNotNull() & (F.size(values) > 1)
     wp = Window.partitionBy(*FILING_KEY)
-    # persist the classification point: both routing branches (clean
-    # passthrough + fused kernel) reference it, and without the persist
-    # each branch replays the ENTIRE upstream subtree — in e1's silver
-    # chain that is the bronze scan plus the whole merge3 window chain,
-    # twice per run (guide §5 "reused and recomputing is expensive").
-    # Corpus sized, MEMORY_AND_DISK: spills, never OOMs; released by the
-    # registry scope / pipeline stage_scope like every stage table.
-    flagged = stage_persist(
-        df.withColumn("_has_fused", F.max(is_fused.cast("int")).over(wp))
-    )
-    clean = (
-        flagged.filter(F.col("_has_fused") == 0)
-        .withColumn(
-            "_rn",
-            F.row_number().over(wp.orderBy("row_idx")) - 1,
-        )
-        .select(
-            *FILING_KEY,
-            F.col("_rn").cast("int").alias("row_idx"),
-            "lineitem",
-            "raw_value",
-            F.lit(0).alias("split_flag"),
-        )
-    )
-    fused = flagged.filter(F.col("_has_fused") == 1).drop("_has_fused")
 
-    # The TEXT map rides in as one ordered array column per filing (a
-    # pre-aggregated left join) rather than a cogroup — one extra small
-    # shuffle, but robust to shared-lineage inputs and keeps exactly one
-    # grouped kernel. Only the fused branch pays it.
-    text_arrays = text.groupBy(*FILING_KEY).agg(
+    text_lines = text.groupBy(*FILING_KEY).agg(
         F.array_sort(
             F.collect_list(F.struct(F.col("line_idx"), F.col("line_text")))
         ).alias("_text_lines")
     )
-    joined = fused.join(text_arrays, FILING_KEY, "left")
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("row_idx")
-        first_lines = pdf["_text_lines"].iloc[0]
-        text_lines = (
-            [t["line_text"] for t in first_lines] if first_lines is not None else []
-        )
-        rows, flag = row_split_kernel(
-            pdf["lineitem"].tolist(), pdf["raw_value"].tolist(), text_lines
-        )
-        out = pd.DataFrame(rows, columns=["lineitem", "raw_value"])
-        for c in FILING_KEY:
-            out[c] = pdf[c].iloc[0]
-        out["row_idx"] = range(len(out))
-        out["split_flag"] = flag
-        return out[FILING_KEY + ["row_idx", "lineitem", "raw_value", "split_flag"]]
-
-    kernelled = grouped_kernel(joined, FILING_KEY, fn, schema)
-    return clean.unionByName(kernelled)
+    splits = F.coalesce(
+        F.filter(
+            F.col("_text_lines.line_text"),
+            lambda k: (F.length(k) > 1) & (F.instr(F.col("lineitem"), k) > 0),
+        ),
+        F.array().cast("array<string>"),
+    )
+    n_values = F.size(values)
+    extra = F.size(splits) - n_values
+    names = F.when(extra >= 0, F.slice(splits, extra + 1, n_values)).when(
+        extra == -1, splits
+    )
+    kept = F.when(extra >= 0, values).when(
+        extra == -1, F.slice(values, 2, n_values - 1)
+    )
+    pairs = F.when(
+        is_fused,
+        F.arrays_zip(names.alias("lineitem"), kept.alias("raw_value")),
+    ).otherwise(
+        F.array(F.struct(F.col("lineitem"), F.col("raw_value")))
+    )
+    # the flag is computed before the explode: a window in the same
+    # projection as the generator is evaluated over its output, which
+    # has lost the dropped fused rows
+    flagged = df.join(text_lines, FILING_KEY, "left").withColumn(
+        "split_flag", F.max(is_fused.cast("int")).over(wp)
+    )
+    exploded = flagged.select(
+        *FILING_KEY,
+        "row_idx",
+        "split_flag",
+        F.posexplode(pairs).alias("_pos", "_pair"),
+    )
+    return exploded.select(
+        *FILING_KEY,
+        (F.row_number().over(wp.orderBy("row_idx", "_pos")) - 1).alias("row_idx"),
+        F.col("_pair.lineitem").alias("lineitem"),
+        F.col("_pair.raw_value").alias("raw_value"),
+        "split_flag",
+    )

@@ -4,16 +4,17 @@ steps main_p1..main_p3) and the per-filing OCR-to-clean chain
 composed from the engine's operators as one DataFrame flow:
 
     raw OCR cells (3 columns, dirty strings)
-      → column purge (P2)
+      → column purge (P2), hash-partitioned on the filing key
       → 3→2 column merge (W4 declarative)
-      → conjoined-row split (F4 kernel, TEXT map)
+      → conjoined-row split (F4 declarative, TEXT map)
       → accounting-number parse (F1)
       → unit scaling (F2/W6 carry-forward)
-      → subtotal removal (W1 kernel)
-      → asset/liability bisection (W3 kernel)
+      → asset/liability bisection + subtotal removal (W3 + W1, one kernel)
       → long silver table (cik, filing_date, side, row_idx, lineitem, value)
 
-Every stage is a narrow transformation or a filing-key shuffle; nothing
+The purge's exchange is the chain's only shuffle of filing rows: every
+later stage is a narrow transformation or a filing-key operator that
+reuses it, and the bisection tail is the only Python stage. Nothing
 re-orders across filings, so the whole chain scales linearly with the
 corpus. The gold stage (label pivot + identity validation) lives in
 operators/structured.py.
@@ -30,7 +31,7 @@ from pyspark.sql import functions as F
 from x17a5_spark.cache import stage_persist, stage_scope
 from x17a5_spark.functions.accounting import stage_parse_accounting_number
 from x17a5_spark.functions.keys import FILING_KEY
-from x17a5_spark.operators.kernel_part import kernel_width
+from x17a5_spark.operators.kernel_part import kernel_partitions, kernel_width
 from x17a5_spark.operators.merge import merge_three_columns
 from x17a5_spark.operators.row_split import split_conjoined_rows
 from x17a5_spark.operators.scaler import detect_unit_scale
@@ -39,7 +40,12 @@ from x17a5_spark.streaming.incremental import incremental_todo
 
 
 def _silver_purge(raw: DataFrame) -> DataFrame:
-    return raw.filter(
+    """Drop blank line items and hash-partition the chain's input on
+    the filing key at kernel width. Every later filing-key operator
+    (the merge3, row-split and dense windows, the TEXT-map join, the
+    bisect kernel's own repartition) reuses this one exchange, and its
+    explicit width keeps AQE from coalescing the chain onto one task."""
+    purged = raw.filter(
         F.col("col0").isNotNull() & (F.trim(F.col("col0")) != "")
     ).select(
         "cik",
@@ -49,6 +55,7 @@ def _silver_purge(raw: DataFrame) -> DataFrame:
         "col1",
         "col2",
     )
+    return kernel_partitions(purged, FILING_KEY)
 
 
 def _silver_parse(split: DataFrame) -> DataFrame:

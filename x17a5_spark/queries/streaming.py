@@ -638,8 +638,8 @@ def _st8_chunked(ev: DataFrame) -> DataFrame:
 
 
 def st8_ttl_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hybrid routing (the row_split selective-kernel pattern applied
-    to windows). A map-side-combined per-key count finds keys over
+    """Hybrid routing: only hot keys take the chunked window path.
+    A map-side-combined per-key count finds keys over
     ST8_HOT_EVENTS; the hot-key list is COLLECTED (bounded: top
     ST8_MAX_HOT_KEYS by count — constant driver traffic, the j11
     bitmap discipline) and drives the split: no hot keys -> the flat

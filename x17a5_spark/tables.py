@@ -102,10 +102,9 @@ def _ship_package(spark: SparkSession) -> None:
     driver happens to run from the repo root. A consumer importing the
     engine from any other cwd (with the repo on the driver's sys.path
     but not on PYTHONPATH) would lose every Python-kernel query with
-    'exception in Python worker' (caught by a round-6 vanilla sweep
-    from /tmp). Fix: zip the package source once per process and
-    ``addPyFile`` it once per SparkContext — workers unpack it onto
-    their sys.path.
+    'exception in Python worker'. Fix: zip the package source once per
+    process and ``addPyFile`` it once per SparkContext — workers unpack
+    it onto their sys.path.
     """
     sc = spark.sparkContext
     if getattr(_ship_package, "_done_for", None) is sc:
