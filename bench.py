@@ -202,12 +202,12 @@ def main() -> None:
         load_table(spark, sf_dir, t).count()
 
     # e1 writes its bronze/silver/gold stage tables at plan-CONSTRUCTION
-    # time (run_pipeline materializes incrementally-appended parquet
-    # sinks, and the returned plan reads the checkpointed gold rows), so
-    # reusing one plan would time a bare read of the gold rows. The
-    # reference-comparable number is
-    # the END-TO-END wall clock — construction + every stage write +
-    # the final materialization — so e1 rebuilds from scratch each run,
+    # time (run_pipeline materializes its parquet stage sinks, and the
+    # returned plan reads the checkpointed gold rows), so reusing one
+    # plan would time a bare read of the gold rows. The
+    # reference-comparable number is the END-TO-END wall clock —
+    # construction + every stage write + the final materialization — so
+    # e1 rebuilds from scratch each run,
     # with no warmup: the cold number IS the one comparable to the
     # reference's >30 h envelope.
     END_TO_END = {"e1_full_pipeline"}

@@ -18,11 +18,13 @@ Releasing unpersists AND drops the Python references, so the JVM side
 can actually reclaim the blocks (``clearCache()`` alone unpersists but
 leaves live references pinning re-registration paths).
 
-At 100-TB scale this is the eviction policy between pipeline stages: a
+At 100-TB scale this is the eviction policy between queries: a
 suite/driver process that runs many queries in one session would
 otherwise accumulate every query's stage tables in executor storage
 memory — the measured cause of e1's in-suite vs isolated gap at the
-100x lake (87.4 s vs 18.8 s, SCALE.md).
+100x lake (87.4 s vs 18.8 s, SCALE.md). The e1 pipeline is not a
+registry client: it persists its OCR output itself and unpersists it
+once the bronze sinks are written.
 
 The registry stays append-only per query: re-invoking the same query
 twice tracks both persists and ``release_stage_caches()`` drops both —
@@ -30,8 +32,6 @@ there is no single-slot aliasing.
 """
 
 from __future__ import annotations
-
-from contextlib import contextmanager
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
@@ -69,24 +69,3 @@ def release_stage_caches() -> int:
 def tracked_stage_count() -> int:
     """How many stage caches are currently tracked (test hook)."""
     return len(_STAGE_CACHES)
-
-
-@contextmanager
-def stage_scope():
-    """Release ONLY the stage caches registered inside the scope.
-
-    The stage-boundary eviction policy for multi-stage runs:
-    ``run_pipeline`` wraps each bronze/silver/gold stage so a
-    stage's construction-time persists are dropped the moment its
-    parquet sink is materialized — a long-lived production driver must
-    not carry bronze's OCR cache through the gold build. Scoped (a
-    high-water mark on the registry, not a full sweep) so a pipeline
-    invoked DURING another query's construction can never release
-    caches it does not own — the registry's single-ownership contract
-    stays with the outer sweep consumer."""
-    mark = len(_STAGE_CACHES)
-    try:
-        yield
-    finally:
-        while len(_STAGE_CACHES) > mark:
-            _STAGE_CACHES.pop().unpersist(blocking=False)

@@ -18,6 +18,10 @@ reuses it, and the bisection tail is the only Python stage. Nothing
 re-orders across filings, so the whole chain scales linearly with the
 corpus. The gold stage (label pivot + identity validation) lives in
 operators/structured.py.
+
+``run_pipeline`` (E1) persists the three stages as parquet sinks:
+bronze and silver are appended per filing behind a skip-if-exists
+guard, and gold is rebuilt from all of silver on every run.
 """
 
 from __future__ import annotations
@@ -25,10 +29,10 @@ from __future__ import annotations
 import os
 from functools import partial
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from x17a5_spark.cache import stage_persist, stage_scope
 from x17a5_spark.functions.accounting import stage_parse_accounting_number
 from x17a5_spark.functions.keys import FILING_KEY
 from x17a5_spark.operators.kernel_part import kernel_partitions, kernel_width
@@ -117,18 +121,23 @@ def clean_filings(raw: DataFrame, text: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 # E1 — the whole run_main flow: bronze (binary docs -> OCR cells) ->
 # silver (clean long rows) -> gold (structured asset table), each stage
-# PERSISTED as a parquet table and guarded by the incremental anti-join
-# (run_main.py:66-74's rerun_job ladder / run_ocr.py:136-141's
-# skip-if-exists): re-running appends only filings whose key is absent
-# from the stage sink, so the pipeline is idempotent and restart-safe
-# with no bookkeeping files. Stage layout under ``out_dir``:
-#   bronze_cells/  OCR table cells        (key: cik, filing_date)
-#   ocr_errors/    S10 quarantine ledger
-#   silver/        clean long rows
-#   gold_assets/   structured asset table
-# At 100 TB each stage write is a partitioned append and each guard is
-# one key-projection anti-join (AQE broadcasts the key listing when
-# small); no stage ever re-reads more than its own sink's keys.
+# PERSISTED as a parquet table under ``out_dir``:
+#   bronze_cells/  OCR table cells        (appended, key: cik, filing_date)
+#   ocr_errors/    S10 quarantine ledger  (appended, key: filing, error)
+#   silver/        clean long rows        (appended, key: cik, filing_date)
+#   gold_assets/   structured asset table (rebuilt from all of silver)
+# Bronze and silver are the expensive, per-filing stages, so they keep
+# the skip-if-exists anti-join (run_main.py:66-74's rerun_job ladder /
+# run_ocr.py:136-141): a rerun processes only filings whose key is
+# absent from the stage sink, with no bookkeeping files. Gold is NOT
+# keyed by filing: keep-first per (cik, fiscal_year)
+# (DatabaseStructured.py:225) is a function of every filing of the
+# year, so an amended or late filing can change which row wins. Gold is
+# therefore recomputed from all of silver and overwritten each run, and
+# a crashed or repeated run converges on the clean run's gold. The
+# rebuild costs one scan of silver's asset rows and one pivot exchange;
+# at 100 TB the step after it is a gold partitioned by fiscal_year with
+# only the touched years overwritten.
 # ---------------------------------------------------------------------------
 
 # Stage-level wall clock of the most recent ``run_pipeline`` call
@@ -139,18 +148,15 @@ def clean_filings(raw: DataFrame, text: DataFrame) -> DataFrame:
 LAST_STAGE_SECONDS: dict[str, float] = {}
 
 
-def _incremental_stage(
-    spark: SparkSession, inp: DataFrame, transform, path: str
+def _todo(
+    spark: SparkSession, inp: DataFrame, path: str, keys: list[str] = FILING_KEY
 ) -> DataFrame:
-    """Run ``transform`` over only the filings of ``inp`` whose key is
-    not yet in the parquet sink at ``path`` (the skip-if-exists guard),
-    append, and return the full sink. The guard sits on the stage
-    INPUT, so already-processed filings are never recomputed — the
-    whole point of the reference's rerun ladder."""
-    if os.path.isdir(path):
-        inp = incremental_todo(inp, spark.read.parquet(path), FILING_KEY)
-    transform(inp).write.mode("append").parquet(path)
-    return spark.read.parquet(path)
+    """Rows of ``inp`` whose ``keys`` are not yet in the parquet sink at
+    ``path`` (the skip-if-exists guard); all of ``inp`` before the sink
+    exists."""
+    if not os.path.isdir(path):
+        return inp
+    return incremental_todo(inp, spark.read.parquet(path), keys)
 
 
 def run_pipeline(
@@ -162,11 +168,16 @@ def run_pipeline(
     labels: list[str],
     ocr_backend_factory=None,
 ) -> DataFrame:
-    """Bronze -> silver -> gold with persisted, incrementally-appended
-    stage tables; returns the gold structured asset table.
+    """Bronze -> silver -> gold with persisted stage tables; returns the
+    gold structured asset table.
 
     ``docs``: (cik, filing_date, content binary) document corpus;
     ``text``: (cik, filing_date, line_idx, line_text) page-text channel.
+
+    Bronze, the OCR error ledger and silver are appended by key; gold is
+    rebuilt from all of silver and its files replaced. So a gold
+    DataFrame returned by an earlier call on the same ``out_dir`` goes
+    stale once this call writes: materialize or checkpoint it first.
     """
     import time
 
@@ -174,6 +185,10 @@ def run_pipeline(
     from x17a5_spark.sources.ocr import OcrSource, StubOcrBackend, quarantine
 
     source = OcrSource(backend_factory=ocr_backend_factory or StubOcrBackend)
+    bronze_path, err_path, silver_path, gold_path = (
+        os.path.join(out_dir, d)
+        for d in ("bronze_cells", "ocr_errors", "silver", "gold_assets")
+    )
     LAST_STAGE_SECONDS.clear()
     t0 = time.time()
 
@@ -184,70 +199,50 @@ def run_pipeline(
 
     # Steps 1-2 (main_p1/main_p2): OCR only the docs not yet in bronze;
     # failures go to the S10 quarantine ledger, not the job.
-    err_path = os.path.join(out_dir, "ocr_errors")
-
-    def ocr_stage(todo_docs: DataFrame) -> DataFrame:
-        # spread the per-document OCR calls across every core: the doc
-        # batch is byte-small but each document costs a full backend
-        # round-trip, so AQE/scan parallelism by bytes serializes it
-        # (measured: the bronze stage ran as ONE mapInPandas task).
-        # Round-robin is fine — OCR needs no key clustering.
-        todo_docs = todo_docs.repartition(kernel_width(todo_docs))
-        # persist so the external OCR calls run once, not once per sink
-        # (registry-scoped: released with the stage, see stage_scope)
-        ocr_out = stage_persist(source.run(todo_docs))
+    todo_docs = _todo(spark, docs, bronze_path)
+    # spread the per-document OCR calls across every core: the doc batch
+    # is byte-small but each document costs a full backend round-trip,
+    # so AQE/scan parallelism by bytes serializes it (measured: the
+    # bronze stage ran as ONE mapInPandas task). Round-robin is fine —
+    # OCR needs no key clustering.
+    ocr_out = source.run(todo_docs.repartition(kernel_width(todo_docs)))
+    # persist so the external OCR calls run once, not once per sink;
+    # released as soon as both sinks are written, even if a write fails
+    ocr_out.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
         cells, errors = quarantine(ocr_out)
         # a filing that fails again on rerun is re-OCR'd (it never
         # reaches bronze), so append only the (filing, error) rows the
         # ledger lacks
-        if os.path.isdir(err_path):
-            errors = incremental_todo(
-                errors, spark.read.parquet(err_path), FILING_KEY + ["error"]
-            )
-        errors.write.mode("append").parquet(err_path)
-        return cells
-
-    # Stage-boundary eviction: each stage's construction-time persists
-    # (today: ocr_stage's OCR output) are released the moment the
-    # stage's parquet sink is materialized — _incremental_stage returns
-    # a fresh read of the sink, so nothing downstream references the
-    # cache. stage_scope is a high-water mark, not a sweep: caches the
-    # CALLER registered before run_pipeline stay tracked and owned by
-    # the outer consumer.
-    with stage_scope():
-        bronze = _incremental_stage(
-            spark, docs, ocr_stage, os.path.join(out_dir, "bronze_cells")
-        )
+        _todo(spark, errors, err_path, FILING_KEY + ["error"]).write.mode(
+            "append"
+        ).parquet(err_path)
+        cells.write.mode("append").parquet(bronze_path)
+    finally:
+        ocr_out.unpersist(blocking=False)
     _mark("ocr_bronze")
 
     # Step 3 (clean chain): clean only the bronze filings not in silver.
-    with stage_scope():
-        silver = _incremental_stage(
-            spark,
-            bronze.select(
-                "cik", "filing_date", "row_idx", "col0", "col1", "col2"
-            ),
-            lambda todo: clean_filings(todo, text),
-            os.path.join(out_dir, "silver"),
-        )
+    bronze = spark.read.parquet(bronze_path).select(
+        "cik", "filing_date", "row_idx", "col0", "col1", "col2"
+    )
+    clean_filings(_todo(spark, bronze, silver_path), text).write.mode(
+        "append"
+    ).parquet(silver_path)
     _mark("silver_clean")
 
-    # Step 4 (main_p3): structured gold from the asset side.
-    def gold_stage(todo: DataFrame) -> DataFrame:
-        return build_structured_assets(
-            todo.filter(F.col("side") == "asset")
-            .withColumn("name", F.concat(F.lit("N"), F.col("cik")))
-            .withColumn(
-                "fiscal_year",
-                (F.substring("filing_date", 1, 4).cast("int") - 1),
-            ),
-            label_map,
-            labels,
+    # Step 4 (main_p3): structured gold from the asset side of ALL of
+    # silver; the plan never reads the gold sink it overwrites.
+    assets = (
+        spark.read.parquet(silver_path)
+        .filter(F.col("side") == "asset")
+        .withColumn("name", F.concat(F.lit("N"), F.col("cik")))
+        .withColumn(
+            "fiscal_year", F.substring("filing_date", 1, 4).cast("int") - 1
         )
-
-    with stage_scope():
-        gold = _incremental_stage(
-            spark, silver, gold_stage, os.path.join(out_dir, "gold_assets")
-        )
+    )
+    build_structured_assets(assets, label_map, labels).write.mode(
+        "overwrite"
+    ).parquet(gold_path)
     _mark("gold_build")
-    return gold
+    return spark.read.parquet(gold_path)

@@ -34,8 +34,8 @@ from x17a5_spark.queries.textops import STOPWORDS, _hits_sql
 from x17a5_spark.tables import load_table
 from x17a5_spark.functions.unicode_fold import norm_fp_sql
 
-# the ONE oracle spelling of text.normalized_fingerprint (round 12:
-# Unicode-folded; identity on the ASCII gate lakes)
+# the ONE oracle spelling of text.normalized_fingerprint (Unicode-
+# folded; identity on the ASCII gate lakes)
 _NFP = norm_fp_sql("text")
 
 CHUNK_SIZE = 200
@@ -430,7 +430,7 @@ def blocked_candidates(shb: DataFrame, she: DataFrame) -> DataFrame:
     P * DF_CAP pairs per batch doc no matter how hot a stop-phrase
     shingle is in either table.
 
-    RECALL CONTRACT (round-4 advice #1, stated explicitly): rejection
+    RECALL CONTRACT (stated explicitly): rejection
     is GUARANTEED only for subset-shingle near-copies — a batch doc
     whose shingles are a subset of one existing doc's (the planted
     exact/90%-truncation classes) always blocks into its source,
@@ -477,15 +477,15 @@ def e5_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    # r13 optimization round (guide §5): bfp feeds the exact-dup semi
-    # join, the novel anti join AND (through batch) the final verdict
-    # attach — un-persisted, the twin-construction token slicing and
-    # the Unicode-fold fingerprint re-ran per reference. Persist the
+    # bfp feeds the exact-dup semi join, the novel anti join AND
+    # (through batch) the final verdict attach — un-persisted, the
+    # twin-construction token slicing and the Unicode-fold fingerprint
+    # re-ran per reference. Persist the
     # batch-with-fingerprint table once (batch-sized, the incremental
     # ingest's own working set).
     from x17a5_spark.cache import stage_persist as _sp
 
-    # r14 (guide §7.2 — duplicated subtrees): the exact-dup SEMI join
+    # Duplicated subtrees: the exact-dup SEMI join
     # and the novel ANTI join are complementary splits of the same
     # batch-vs-existing fingerprint probe, but as two joins each
     # re-derived the existing-corpus side — the ~40-replace Unicode
@@ -740,7 +740,7 @@ E6_QUOTA = 40
 
 
 def e6_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # fanout considered and REJECTED by A/B (round-6 sweep): the funnel
+    # fanout considered and REJECTED by A/B: the funnel
     # head looks map-heavy (per-language token filters fused into a
     # row-group-starved scan, ~1.9 s on one task), but base.persist()
     # amortizes that single computation across all six stage branches,
@@ -789,11 +789,10 @@ def e6_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     eval_grams = grams.filter(F.col("is_eval")).select("gram").distinct()
     train_grams = grams.filter(~F.col("is_eval"))
-    # r13 optimization round (guide §2.3 — aggregate before you
-    # shuffle; §7.2 — duplicated subtrees): tg and cg used to be TWO
-    # aggregations over the exploded train-gram stream (plus a join to
-    # recombine), so the corpus-sized shingle explode ran twice per
-    # execution. One left join against the broadcast eval set marks
+    # Aggregate before you shuffle, and do not duplicate subtrees: tg
+    # and cg as TWO aggregations over the exploded train-gram stream
+    # (plus a join to recombine) run the corpus-sized shingle explode
+    # twice per execution. One left join against the broadcast eval set marks
     # each gram occurrence, and a single groupBy folds both counts —
     # cg = count of non-null markers reproduces the inner-join
     # multiplicity exactly (eval_grams is distinct), and a doc with no
@@ -812,12 +811,12 @@ def e6_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("cg") / F.col("tg")).alias("cfrac"),
         )
     )
-    # r14 (guide §2.3/§7.2 — the a27/v1 fold at funnel grain): the six
-    # per-stage counts used to be SIX aggregate branches unioned, each
-    # re-deriving its whole chain from the cached base — the fp
-    # keep-first window ran 3x, the decontamination join (and its
-    # corpus-sized gram explode) 2x, the quota windows once each. The
-    # survival of a row at every stage is expressible as CUMULATIVE
+    # The a27/v1 fold at funnel grain: as SIX aggregate branches
+    # unioned, the six per-stage counts each re-derive their whole
+    # chain from the cached base — the fp keep-first window runs 3x,
+    # the decontamination join (and its corpus-sized gram explode) 2x,
+    # the quota windows once each. The survival of a row at every
+    # stage is expressible as CUMULATIVE
     # per-row flags in ONE pass, so the chain now runs exactly once and
     # one groupBy(source) folds all six counts (exploded in place as
     # (stage, n_kept) structs). Flag identities, each proven against
@@ -1034,7 +1033,7 @@ FROM phased
 
 # ---------------------------------------------------------------------------
 # E9 — training-data manifest: the capstone composite that hands a
-# corpus to the trainer. Chains the round-4 layers end to end —
+# corpus to the trainer. Chains the corpus-curation layers end to end —
 # t23's quality-weighted importance sampling decides WHO trains,
 # k10's fixed-cutoff curriculum decides WHEN (phase) and WHERE
 # (shard), e8's frozen-merge BPE apply decides HOW MANY pieces — and
@@ -1075,7 +1074,7 @@ def e9_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from x17a5_spark.cache import stage_persist
 
-    # r13 (guide §5, e8's finding applied here): occ feeds the vocab
+    # e8's finding applied here: occ feeds the vocab
     # distinct AND the per-doc piece rollup — un-persisted, the
     # kept-filter + corpus explode + groupBy subtree executed twice.
     occ = stage_persist(

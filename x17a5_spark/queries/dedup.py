@@ -27,8 +27,8 @@ from x17a5_spark.functions.text import normalized_fingerprint, tokens, word_shin
 from x17a5_spark.tables import load_table
 from x17a5_spark.functions.unicode_fold import norm_fp_sql
 
-# the ONE oracle spelling of text.normalized_fingerprint (round 12:
-# Unicode-folded; identity on the ASCII gate lakes)
+# the ONE oracle spelling of text.normalized_fingerprint (Unicode-
+# folded; identity on the ASCII gate lakes)
 _NFP = norm_fp_sql("text")
 
 N_MINHASH = 16
@@ -48,8 +48,8 @@ D3_SENTINEL = 1 << 62
 # the digest) — BOTH engines derive their substring from this constant,
 # and _d3_pack_guard() below fails the module import if a widened value
 # would let packed minhashes (mh·16 + borrow distance) reach the
-# sentinel (round 9, VERDICT r8 #5: the d15/e11 fails-LOUD discipline
-# applied to the packing bound that was previously comment-only).
+# sentinel (the d15/e11 fails-LOUD discipline applied to the packing
+# bound, so it is checked rather than only documented).
 D3_HEX_CHARS = 14
 
 
@@ -104,11 +104,11 @@ AUG_TWIN_OFFSET = int(os.environ.get("X17A5_AUG_OFFSET", "100000"))
 
 def guarded_twin_id(id_col, mult: int, qname: str):
     """``id + mult * AUG_TWIN_OFFSET``, failing LOUD when the original
-    id already reaches the offset. ADVICE r10: the max(id) <
-    AUG_TWIN_OFFSET fixture bound was enforced only inside t30, so any
-    OTHER offset-dependent query run alone against a larger lake
+    id already reaches the offset. Enforcing the max(id) <
+    AUG_TWIN_OFFSET fixture bound only inside t30 would let any OTHER
+    offset-dependent query run alone against a larger lake
     (e.g. ``SPARK_GRAFT_BENCH_ONLY=d15`` at 100× without
-    ``X17A5_AUG_OFFSET``) silently planted COLLIDING ids. The guard
+    ``X17A5_AUG_OFFSET``) silently plant COLLIDING ids. The guard
     lives on the copies branch, so the original branch keeps its scan
     pushdown, while any evaluation of a planted row (even under a
     pushed-through filter, which Catalyst rewrites to contain this
@@ -293,12 +293,12 @@ def d3_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the first hex nibble, take the min per bucket — 16× less hash
     # work than a 16-function family, one map-side-combined groupBy.
     #
-    # The minhash VALUE is numeric (round 8): the next 14 hex chars
+    # The minhash VALUE is numeric: the next 14 hex chars
     # parsed to a 56-bit LONG (engine `conv`, oracle
     # CAST('0x'||… AS BIGINT) — bit-exact parity, probed). min over a
-    # LONG compiles to HashAggregate with map-side combine, where the
-    # pre-round-8 min over the md5 HEX STRING fell back to
-    # SortAggregate and dragged a per-partition sort of the FULL
+    # LONG compiles to HashAggregate with map-side combine, where a
+    # min over the md5 HEX STRING falls back to
+    # SortAggregate and drags a per-partition sort of the FULL
     # shingle table — the engine's largest intermediate, feeding
     # d3/e7/e10/e11 — into every chain execution (the d15 packed-long
     # lesson applied to the chain that taught it).
@@ -327,7 +327,7 @@ def d3_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the docs genuinely share shingle structure; the sentinel survives
     # only for the impossible all-empty signature.
     #
-    # Numeric packing (round 8): own value = mh·16, borrowed =
+    # Numeric packing: own value = mh·16, borrowed =
     # mh_src·16 + distance (distance < 16), so own-vs-borrowed never
     # collide and borrowed-vs-borrowed collide exactly on (source,
     # distance) — the same equality semantics the old mh||'+d' string
@@ -397,8 +397,8 @@ def d3_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (bounded by the duplicate rate, tiny next to the corpus): persist
     # it so the two confirm joins don't each re-scan the FULL cached
     # shingle mass through the semi join — measured 0.73-0.89 s steady
-    # at sf0.1 vs 1.0-1.3 s without (round-3 verdict Next #5; the r1
-    # 0.763 s level, with the array-free confirm retained).
+    # at sf0.1 vs 1.0-1.3 s without, with the array-free confirm
+    # retained).
     cand_sh = stage_persist(
         sh.join(F.broadcast(cand_docs), "doc_id", "left_semi"),
     )
@@ -750,13 +750,13 @@ WHERE nid IS NOT NULL AND substr(k, 1, 24) = substr(nk, 1, 24)
 # selective (2 <= df <= D13_DF_MAX) — the hot-term quadratic blowup
 # ("the" joining everything to everything) is structurally excluded,
 # which is the entire scale story of sparse-similarity joins. The
-# confirm pass (round 12) joins each candidate pair to ONE packed
+# confirm pass joins each candidate pair to ONE packed
 # term->weight map per doc and computes the exact cosine inline with
 # map_zip_with + a decimal fold (per-term products rounded to 1e-12
 # then DECIMAL-summed — exact addition, so order-independent under any
-# map entry order) — the r11 shape shuffled |pairs|x|terms| exploded
-# rows through two joins and a wide groupBy, which was the measured
-# 100x residual (52.4 s isolated, 1.25x/byte). Like LSH, the blocking is
+# map entry order) — an exploded per-term shape shuffles
+# |pairs|x|terms| rows through two joins and a wide groupBy, which was
+# the measured 100x residual (52.4 s isolated, 1.25x/byte). Like LSH, the blocking is
 # a recall heuristic (pairs sharing only stop-words are unseen — by
 # design); the oracle implements the identical pipeline so the
 # decision is hash-checked, not hidden.
@@ -785,7 +785,7 @@ def d13_sparse_cosine_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is tiny (every word is a stop-word-frequency term), so blocking
     # needs the higher-order features — the same reason d2/d3 shingle
     # terms ride as 56-bit md5-derived longs from the explode onward
-    # (round 11, the d14 lesson applied to the sparse-vector family):
+    # (the d14 lesson applied to the sparse-vector family):
     # the tf/df/prefix/confirm joins and both persisted stage tables
     # carry 8-byte longs instead of ~25-byte 3-word strings; the
     # oracle hashes identically so tf merges on collision, prefix
@@ -804,8 +804,8 @@ def d13_sparse_cosine_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id", "term")
         .agg(F.count("*").alias("tf"))
     )
-    # one stats pass serves the norm (w below), and — new round 11 —
-    # the exact weighted-cosine LENGTH filter: for non-negative
+    # one stats pass serves the norm (w below) and the exact
+    # weighted-cosine LENGTH filter: for non-negative
     # weights, cos(a,b) = sum_{A∩B} tf_a·tf_b / (‖a‖‖b‖)
     # ≤ min(S_a·M_b, S_b·M_a) / (‖a‖‖b‖) where S = Σtf, M = max tf —
     # so any pair whose bound falls below τ cannot reach the confirm
@@ -860,7 +860,7 @@ def d13_sparse_cosine_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # (A per-pair complement Cauchy–Schwarz bound over the MATCHED
     # prefix weights — dot_M + sqrt(1−Σ_M w_a²)·sqrt(1−Σ_M w_b²) ≥ τ —
-    # was built and measured here in round 12: it pruned 0 of 5.44M
+    # was built and measured here: it pruned 0 of 5.44M
     # candidate pairs on the 100× lake, because near-uniform TF
     # vectors give every spurious pair a bound ≈ 1. Removed; the
     # length bound above is the one that bites (34% of matched rows).)
@@ -878,12 +878,12 @@ def d13_sparse_cosine_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .union(cands.select(F.col("id_b").alias("doc_id")))
         .distinct()
     )
-    # Round 12 (VERDICT r11 #1): the confirm rides ONE packed
-    # term->weight map per candidate doc instead of the exploded
-    # per-term weight table. The r11 shape joined cands to wa (one
-    # shuffle of |pairs| rows), EXPLODED to |pairs|×|terms(a)| rows,
-    # shuffled THOSE into the (id_b, term) join, then paid a wide
-    # groupBy back down to |pairs| — the measured 100× residual. Here
+    # The confirm rides ONE packed term->weight map per candidate doc
+    # instead of an exploded per-term weight table. The exploded shape
+    # joins cands to wa (one shuffle of |pairs| rows), EXPLODES to
+    # |pairs|×|terms(a)| rows, shuffles THOSE into the (id_b, term)
+    # join, then pays a wide groupBy back down to |pairs| — the
+    # measured 100× residual. Here
     # each pair pulls two 8-byte-keyed maps and the dot product folds
     # inline over ONLY the key intersection (array_intersect is a
     # linear hash-set pass; a map_zip_with union-merge was measured
@@ -1004,8 +1004,8 @@ SELECT id_a, id_b, round(cos, 6) AS cos FROM dots WHERE cos >= {D13_TAU}
 
 
 def e7_dedup_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r13 optimization round: the audit reads the pair table THREE times
-    # (both legs of the involved-docs union, then the per-pair rollup),
+    # The audit reads the pair table THREE times (both legs of the
+    # involved-docs union, then the per-pair rollup),
     # and without a persist each reference re-runs d3's whole confirm
     # chain — the before-plan is 1,888 lines with the candidate/confirm
     # subtree replicated per consumer. The pair table is dup-rate-sized
@@ -1022,9 +1022,9 @@ def e7_dedup_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     n_docs = aug_src.groupBy("source").agg(F.count("*").alias("n_docs"))
-    # r14 (guide §7.2 — duplicated subtrees; §1.2 planning cost): the
-    # audit used to reference the pair table THREE times (two
-    # involved-union legs + the per-pair rollup); even with the pairs
+    # Duplicated subtrees cost planning time: referencing the pair
+    # table THREE times (two involved-union legs + the per-pair
+    # rollup) means that, even with the pairs
     # persisted, every reference embeds d3's full logical subtree, so
     # each bench rep re-planned it three times (~0.4 s/rep of pure
     # driver planning, measured via queryExecution().executedPlan()).
@@ -1443,10 +1443,10 @@ def d14_containment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
-    # 56-bit shingle hashes from the explode onward (VERDICT r10 #1:
-    # the verify join rode full sorted STRING arrays per candidate
-    # pair — ~25-30 bytes per 3-word shingle — and those per-task
-    # structures stopped fitting memory at the 100× lake; an 8-byte
+    # 56-bit shingle hashes from the explode onward (a verify join
+    # over full sorted STRING arrays per candidate pair — ~25-30 bytes
+    # per 3-word shingle — stopped fitting per-task memory at the 100×
+    # lake; an 8-byte
     # long is the d3 packing discipline). The oracle hashes with the
     # IDENTICAL md5-derived conv, so df counts, prefix tie-breaks and
     # intersections stay value-exact cross-engine; 56-bit collisions
@@ -1510,13 +1510,12 @@ def d14_containment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (merge two sorted sets per pair), and at cluster scale the arrays
     # table is one row per doc, joined by doc_id hash partitioning.
     #
-    # Round 13 (VERDICT r12 #1/#2, measured under the fresh-JVM GC-log
-    # protocol): the arrays were built as collect_list over the
-    # EXPLODED persisted shingle table — a full re-shuffle of ~50M
-    # rows per execution at the 100x lake, and THE measured source of
-    # d14's 11x bracket (the GC log shows 0 full GCs and ~4% young
-    # pause time, killing the r12 full-GC attribution; the spread was
-    # this stage's re-execution + page-cache state). The identical
+    # Measured under the fresh-JVM GC-log protocol: building the
+    # arrays as collect_list over the EXPLODED persisted shingle table
+    # re-shuffles ~50M rows per execution at the 100x lake, and was
+    # THE measured source of d14's 11x bracket (the GC log shows 0
+    # full GCs and ~4% young pause time, so GC is not the cause; the
+    # spread was this stage's re-execution + page-cache state). The identical
     # arrays fall out SCALAR-SIDE from the canonical docs — zero
     # exchange: per doc, array_sort over the hashed distinct shingles
     # (hash collisions keep both copies in both shapes, so the arrays
@@ -1753,7 +1752,7 @@ FROM totals15 t LEFT JOIN rebuilt15 r USING (doc_id)
 
 
 # ---------------------------------------------------------------------------
-# D16 — paragraph dedup in DELIMITER mode (round-7 VERDICT ask #6):
+# D16 — paragraph dedup in DELIMITER mode:
 # real corpora split on structural boundaries (blank lines) FIRST, then
 # fixed-width chunk only the oversized spans — d15's fixed-width-only
 # split cuts across real paragraph boundaries and misses boilerplate
@@ -1851,7 +1850,7 @@ LEFT JOIN rebuilt16 r USING (doc_id)
 
 
 # ---------------------------------------------------------------------------
-# D18 — paragraph-level NEAR dedup (round 12, VERDICT r11 missing-#2):
+# D18 — paragraph-level NEAR dedup:
 # d15/d16 are exact-fingerprint at paragraph grain, so boilerplate
 # with a one-token drift (dates, counters, revision numbers) survives
 # them by construction. d18 applies d3's minhash banding AT THE

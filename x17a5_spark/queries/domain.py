@@ -610,13 +610,15 @@ FROM f CROSS JOIN (VALUES
 
 # E1 — the WHOLE pipeline end-to-end (run_main.py:86-144): binary
 # document corpus -> stub OCR (S6) -> quarantine (S10) -> clean chain
-# (E2) -> structured gold (E3), with every stage persisted to parquet
-# and guarded by the incremental anti-join (S7/J6). The document
+# (E2) -> structured gold (E3), with every stage persisted to parquet;
+# bronze and silver are guarded by the incremental anti-join (S7/J6)
+# and gold is rebuilt from silver. The document
 # content is the same closed-form plant as e2, delivered as bytes the
 # OCR backend parses — so the oracle derives the gold table from the
 # plant and a hash match proves the COMPOSITION bronze->silver->gold
-# including the sink round-trips. Idempotence (second run appends 0
-# rows) is asserted in tests/test_pipeline_e1.py.
+# including the sink round-trips. Idempotence (a second run adds no
+# bronze or silver rows and rewrites the same gold) and convergence
+# after faults are asserted in tests/test_pipeline_e1.py.
 E1_DOC = (
     "Cash|$ 2\n"
     "Receivables|5\n"

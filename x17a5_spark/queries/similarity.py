@@ -114,13 +114,13 @@ BITS_PER_TABLE = 3
 # the hash tables — the OR-of-ANDs construction that trades one
 # bucket-join per table for recall; candidate generation is an
 # equi-join on (table, bucket), never a cross product). Oracle-backed
-# since round 4 (S2_SQL below — closed-form md5 hyperplanes); recall
+# (S2_SQL below — closed-form md5 hyperplanes); recall
 # vs the exact s1 baseline is asserted in tests/test_dedup_similarity.py.
 #
-# Round 9 (VERDICT r8 #3): the multi-table dedup is a HashAggregate on
-# numerics, never a SortAggregate on arrays — the old plan deduped
-# (q_id, c_id) with dropDuplicates(subset), whose first(array) over the
-# carried 64-d vectors plans as SortAggregate over the candidate set.
+# The multi-table dedup is a HashAggregate on numerics, never a
+# SortAggregate on arrays — deduping (q_id, c_id) with
+# dropDuplicates(subset), whose first(array) over the carried 64-d
+# vectors, plans as SortAggregate over the candidate set.
 # cos(q, c) is identical no matter WHICH table's bucket matched, so the
 # cosine is computed in the bucket join (same data flow, one map-side
 # fold per collision) and the dedup is groupBy(q_id, c_id).max(cos) —
@@ -131,7 +131,7 @@ BITS_PER_TABLE = 3
 # collisions.)
 def s2_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    # r13 (guide §4.2): bucket assignment rides the d5 Arrow matmul
+    # Bucket assignment rides the d5 Arrow matmul
     # (3 bits/table) instead of 24 zip_with/aggregate fold chains in
     # codegen — the folds measured ~175 µs/row (0.46 s for the 2k-row
     # fixture); only the SIGN of each projection reaches the bucket id,
@@ -251,7 +251,7 @@ D5_BITS = 12
 def _bucket_signature_udf(n_bits: int = D5_BITS):
     """One Arrow-batched (n×64)@(64×(N_TABLES·n_bits)) matmul per vector
     batch, packed to one bucket int per table — shared by d5 (12
-    bits/table) and s2 (3 bits/table; r13 — the 24-plane JVM fold chain
+    bits/table) and s2 (3 bits/table; the 24-plane JVM fold chain
     measured ~175 µs/row, the same ~6x-slower-than-numpy finding that
     motivated this UDF for d5). Table t's bucket packs bit b as 1<<b
     when plane (t·n_bits + b) projects positive — the closed form
@@ -370,7 +370,7 @@ def _ivf_centroid(c: int, dim: int = 64) -> list[float]:
     ]
 
 
-# Two-level coarse quantizer (round-3 verdict design note): a flat
+# Two-level coarse quantizer: a flat
 # argmax fans every vector out to all k cells, and SemDeDup's own
 # recipe scales k with the corpus (k ~ N/cell_size) — making flat
 # assignment N*k, quadratic in N. Staging through sqrt(k) super-cells
@@ -437,7 +437,7 @@ def staged_assignment(
     winning super only — the explode never scales with total cell
     count. Both joins broadcast the (tiny) codebook side.
 
-    r14: a zero-exchange variant (codebook attached as ONE broadcast
+    A zero-exchange variant (codebook attached as ONE broadcast
     row of index-aligned struct arrays, both argmax levels as
     array_max over the same packed longs, fused into the scan) was
     built, oracle-verified and REJECTED by measurement — steady-state
@@ -495,7 +495,7 @@ _ARGMAX_NULL = -(1 << 21)
 def _argmax_packed(scored: DataFrame, cand_col: str) -> DataFrame:
     """(vec_id, cand, cos rounded to 6 dp) -> one winning (vec_id, cand)
     per vector under (cos DESC, cand ASC) — as max() over ONE packed
-    long instead of a row_number window (r13; the d15/e11
+    long instead of a row_number window (the d15/e11
     packed-winner discipline): HashAggregate with map-side partial
     combine, no per-partition sort, and the exchange moves one row per
     (vector, map-partition) instead of one per candidate. cos is
@@ -886,10 +886,10 @@ FROM long
 
 def s6_int8_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    # r13 (guide §2.4 — remove shuffles outright): the old shape
-    # exploded the 64-d vectors to an element table, groupBy'd it for
-    # the per-vector scale, JOINED the scale back and groupBy'd again —
-    # two exchanges plus a join for math that is row-local. The whole
+    # Remove shuffles outright: exploding the 64-d vectors to an
+    # element table, groupBy-ing it for the per-vector scale, JOINING
+    # the scale back and grouping again costs two exchanges plus a
+    # join for math that is row-local. The whole
     # quantization is per-vector array arithmetic: one scan, one
     # projection, ZERO exchange. Every per-element expression (round,
     # clamp, decimal square) is identical to the exploded form, the
@@ -983,8 +983,8 @@ FROM per_el GROUP BY 1
 # gets an exact SQL oracle too. Float discipline per round:
 #   * assignment scores round(|c|^2 - 2 v.c, 6) with cell-id tiebreak
 #     (|v|^2 is constant per vector and cancels from the argmin);
-#   * centroid updates are exact-DECIMAL coordinate sums (round 12 ->
-#     DECIMAL(27,12), d13's discipline) divided by exact counts, so
+#   * centroid updates are exact-DECIMAL coordinate sums
+#     (DECIMAL(27,12), d13's discipline) divided by exact counts, so
 #     both engines derive bit-identical round-2 codebooks;
 #   * empty cells keep their previous centroid (LEFT JOIN + coalesce).
 # Search is then s3's shape over the trained cells: flat probe for the
@@ -1197,7 +1197,7 @@ S7_SQL = _s7_sql()
 # S8 — PQ/ADC over IN-PLAN TRAINED sub-codebooks: s7's unrolled-Lloyd
 # pattern applied per sub-space. Two k-means rounds train each of the
 # M=8 sub-space codebooks (K=16 centroids over 8-d slices) from the
-# md5 seeds — round-6 argmin encoding, exact-DECIMAL coordinate means,
+# md5 seeds — argmin encoding, exact-DECIMAL coordinate means,
 # empty codes carry forward — then the PRODUCTION two-stage search:
 # ADC shortlists S8_SHORTLIST candidates from codes alone (the cheap
 # pass that never touches raw vectors), and an exact-cosine re-rank
@@ -1222,7 +1222,7 @@ def s8_trained_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     vecs = emb.select("vec_id", _as_double(F.col("embedding")).alias("vec"))
     # select vec ALONGSIDE the explode: pure map-side fan-out, no
     # self-join / exchange to re-attach the vector
-    # r13 optimization round: persisting subs / sub_long was A/B-tested
+    # Persisting subs / sub_long was A/B-tested
     # and REJECTED (plain 1.21 s, both persisted 1.52 s, subs-only
     # 1.42 s isolated median-of-3) — the 11 re-derivations of the
     # subvector explode are codegen-cheap at any per-row cost, while

@@ -19,8 +19,8 @@ from x17a5_spark.functions.text import (
 from x17a5_spark.tables import load_table
 from x17a5_spark.functions.unicode_fold import norm_fp_sql
 
-# the ONE oracle spelling of text.normalized_fingerprint (round 12:
-# Unicode-folded; identity on the ASCII gate lakes)
+# the ONE oracle spelling of text.normalized_fingerprint (Unicode-
+# folded; identity on the ASCII gate lakes)
 _NFP = norm_fp_sql("text")
 
 # Tiny per-language stopword lists for the n-gram/stopword lang-ID
@@ -363,7 +363,7 @@ FROM pairs GROUP BY 1 HAVING sum(freq) >= {T17_MIN_COUNT}
 # collects ONE row (the argmax pair — a bounded decision, same pattern
 # as j11's bitmap), and the symbol table stays distributed.
 #
-# Oracle (round 10): the R rounds are FIXED, so the iterative argmax
+# Oracle: the R rounds are FIXED, so the iterative argmax
 # unrolls into a closed-form CTE chain — the same unrolled-lineage
 # pattern g1 (five power iterations) and s7 (two Lloyd rounds) already
 # use. Per round: pair-count over the vocab, argmax with the exact
@@ -371,16 +371,14 @@ FROM pairs GROUP BY 1 HAVING sum(freq) >= {T17_MIN_COUNT}
 # list_reduce fold that REPLICATES the engine's greedy left-to-right
 # rule verbatim: append x to the accumulator unless the accumulator's
 # last symbol is a and x is b, in which case rewrite the tail to the
-# merged symbol. (The first cut expressed the merge as a two-pass
-# separator-bounded replace(); code-review r10 refuted the "two passes
-# are exact" argument with a counter-example — a SELF-pair (a,a) over
-# a run of 5+ identical symbols merges (1,2),(4,5) under replace but
-# (1,2),(3,4) under BPE's greedy scan, and no fixed number of passes
-# converges to the greedy result — so the oracle now folds exactly the
-# semantics the engine folds.) The golden test independently
-# recomputes the merge table with a pure-Python BPE on the same
-# corpus, and a regression test pins the self-pair run corpus the
-# review used to break the old oracle.
+# merged symbol. (A two-pass separator-bounded replace() is NOT exact:
+# a SELF-pair (a,a) over a run of 5+ identical symbols merges
+# (1,2),(4,5) under replace but (1,2),(3,4) under BPE's greedy scan,
+# and no fixed number of passes converges to the greedy result — so
+# the oracle folds exactly the semantics the engine folds.) The golden
+# test independently recomputes the merge table with a pure-Python BPE
+# on the same corpus, and a regression test pins a self-pair run
+# corpus that breaks a replace()-based oracle.
 
 T18_ROUNDS = 4
 T18_SEP = "\u241f"  # symbol-boundary marker for the pair key
@@ -518,9 +516,9 @@ T18_SQL = _t18_unrolled_sql(T18_ROUNDS)
 
 
 # T19 — HyperLogLog approximate distinct next to the exact count, per
-# source. Through round 4 this used Spark's native approx_count_distinct
-# and was rows-only by design (native sketch layouts are
-# engine-specific). Round 5 replaces it with an EXPLICIT HLL whose
+# source. Spark's native approx_count_distinct could only be checked
+# rows-only (native sketch layouts are engine-specific), so this is
+# an EXPLICIT HLL whose
 # every step is closed-form in both engines (the s2 md5-hyperplane
 # trick): register = low 8 bits of the 60-bit md5 prefix, rank =
 # leading-zero count of the remaining 52 bits via length(bin(w)), the
@@ -658,7 +656,7 @@ def t27_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents", fanout=True)
     toks = docs.select(F.explode(tokens(F.lower(F.col("text")))).alias("token"))
-    # r13 (guide §5): freq feeds the sketch fan-out AND the top-k probe
+    # freq feeds the sketch fan-out AND the top-k probe
     # set — un-persisted, the corpus explode + vocab groupBy ran twice.
     freq = stage_persist(
         toks.groupBy("token").agg(F.count("*").alias("true_count"))
@@ -736,7 +734,7 @@ def t21_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("token")
         .agg(F.count("*").alias("freq"))
     )
-    # r14 (guide §2.3 — shuffle fewer bytes): the regression sums are
+    # Shuffle fewer bytes: the regression sums are
     # invariant to rank ASSIGNMENT within a frequency tie — y is
     # constant inside a tie block and the block's rank set is
     # {offset+1 .. offset+cnt} whichever token gets which rank — so the
@@ -744,7 +742,7 @@ def t21_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # need not enter the single-partition sort at all: rank over a
     # freq-only projection, ≈10x narrower exchange. Two full
     # decompositions of the sort were built, oracle-verified and
-    # REJECTED by measurement this round (r14): (a) per-freq-block rank
+    # REJECTED by measurement: (a) per-freq-block rank
     # enumeration via chunked sequence()+explode — 0.85 -> 1.12 s at
     # sf0.1, 0.97 -> 1.58 s at 20x (row machinery for V rank rows costs
     # more than the narrow sort it replaces); (b) per-chunk decimal HOF
@@ -830,7 +828,7 @@ def t25_keyword_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     from x17a5_spark.cache import stage_persist
 
     docs = load_table(spark, sf_dir, "documents")
-    # r13 (guide §5): tf feeds BOTH the document-frequency aggregate and
+    # tf feeds BOTH the document-frequency aggregate and
     # the scoring join — un-persisted, the corpus explode + (doc, term)
     # groupBy subtree executed twice per run. The table is (doc, term)-
     # grain (Heaps-bounded, far below the token stream), three narrow
@@ -918,11 +916,11 @@ def t26_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents", fanout=True)
     tok = docs.select("source", F.explode(tokens(F.lower(F.col("text")))).alias("tok"))
     counts = tok.groupBy("source", "tok").agg(F.count("*").alias("c"))
-    # r13 (guide §2.3): the per-source token total rides an UNORDERED
-    # window over counts instead of a separate totals aggregate — the
-    # old shape derived the corpus explode + (source, tok) groupBy
-    # subtree TWICE (once for totals, once for the entropy join) and
-    # recombined through two joins. stage_persist(counts) was A/B'd
+    # The per-source token total rides an UNORDERED window over counts
+    # instead of a separate totals aggregate — a totals aggregate
+    # derives the corpus explode + (source, tok) groupBy subtree TWICE
+    # (once for totals, once for the entropy join) and recombines
+    # through two joins. stage_persist(counts) was A/B'd
     # first and REJECTED (single-JVM interleaved, median-of-9: persisted
     # 1.14 s vs 0.80 s baseline — caching the vocab-scale table costs
     # more than the re-derive saved). The window form runs ONE explode,
@@ -1306,9 +1304,9 @@ def t30_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     # explode and the final full-coverage re-attach (ADVICE r9) —
     # without the persist the re-attach re-scans documents through the
     # guard projection (the d3 cand_sh stage-table lesson).
-    # VERDICT r11 #2: ownership moved to the registry-scoped cache
-    # context (x17a5_spark.cache) — this replaces the r10 single-slot
-    # module global, so a sweep that constructs t30 and never
+    # Ownership sits with the registry-scoped cache context
+    # (x17a5_spark.cache), not a module global, so a sweep that
+    # constructs t30 and never
     # materializes it releases the registration like every other
     # stage cache (tests/test_registry.py asserts the CacheManager is
     # empty after a full-registry construct-and-release sweep).
@@ -1642,7 +1640,7 @@ def t32_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Gopher's top-n-gram stat is the char mass of the MOST FREQUENT
     # gram (argmax by count), not max(count*chars) — a long singleton
-    # gram must never beat a short frequent one (code-review r10). The
+    # gram must never beat a short frequent one. The
     # argmax rides ONE order-preserving long, cnt·2^20 + len (len <
     # 2^20 by construction — a gram is 2-3 whitespace tokens of a
     # finite doc), so the aggregate stays a codegen HashAggregate (the
@@ -1762,8 +1760,8 @@ FROM f32
 
 
 # ---------------------------------------------------------------------------
-# T33 — Unicode normalization / encoding-repair gate (round 12, VERDICT
-# r11 missing-#1): the fold every production LLM-cleaning stack runs
+# T33 — Unicode normalization / encoding-repair gate: the fold every
+# production LLM-cleaning stack runs
 # before fingerprinting. The corpus is augmented with one corrupted
 # twin per doc — fullwidth transliteration (doc_id % 3 == 0), cp1252
 # mojibake bytes (% 3 == 1, also tripping the double-encoding
@@ -1809,7 +1807,7 @@ def t33_unicode_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
         corrupted.alias("text"),
     )
     aug = docs.unionByName(twins)
-    # stage the fold ONCE per row (r13): n_folded and the fingerprint
+    # stage the fold ONCE per row: n_folded and the fingerprint
     # both consume the folded text, and codegen CSE does not reliably
     # merge the two ~40-replace chains (staged A/B 0.87 -> 0.79 s,
     # rows identical). fingerprint_of_folded is normalized_fingerprint's
@@ -1878,7 +1876,7 @@ FROM f33
 
 
 # ---------------------------------------------------------------------------
-# T34 — model-based document quality filter (VERDICT r12 #5): the
+# T34 — model-based document quality filter: the
 # FineWeb/DCLM-style TRAINED gate at document grain. The X5 family
 # (ml/classifier.py, the reference's run_build_database.py:298-336
 # HashingVectorizer->LogReg) trains and applies distributively but is
@@ -1906,7 +1904,7 @@ def t34_model_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "text"
     )
     # stage the token array ONCE per row at every consumption site (the
-    # e4/t33 staged-projection discipline, r14): codegen CSE does not
+    # e4/t33 staged-projection discipline): codegen CSE does not
     # fold the regex split across the HOF lambdas, so the un-staged form
     # re-split every document FIVE times (size, the z-term size, the
     # weight transform, array_distinct, the char-length transform —
