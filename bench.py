@@ -34,7 +34,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from x17a5_spark.cache import release_stage_caches
 from x17a5_spark.queries import registry
 from x17a5_spark.session import get_spark
 from x17a5_spark.tables import TABLE_NAMES, load_table
@@ -238,9 +237,7 @@ def main() -> None:
         if rebuild:
             # cold_total counts one full rebuild: the median sample
             cold_total += timings[name]
-        # scoped release first (drops the Python references so the JVM
-        # can reclaim the blocks), then the defensive catalog sweep
-        release_stage_caches()
+        # release the query's construction-time stage caches
         spark.catalog.clearCache()
 
     # "value" is the STEADY-STATE suite total; the end-to-end pipeline

@@ -12,8 +12,8 @@ from pyspark.sql import functions as F
 from x17a5_spark.functions.accounting import (
     epsilon_one_digit_match,
     is_power_of_ten_ratio,
-    parse_accounting_number,
     relative_error_class,
+    stage_parse_accounting_number,
 )
 from x17a5_spark.functions.text import (
     levenshtein_ratio,
@@ -49,9 +49,7 @@ def test_parse_accounting_number(spark):
     )
     got = {
         r["id"]: r["parsed"]
-        for r in df.select(
-            "id", parse_accounting_number(F.col("raw")).alias("parsed")
-        ).collect()
+        for r in stage_parse_accounting_number(df, "raw", "parsed").collect()
     }
     for i, (raw, expected) in enumerate(NUM_STRIP_CASES):
         assert got[i] == pytest.approx(expected) if expected is not None else got[i] is None, (

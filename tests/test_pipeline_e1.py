@@ -90,8 +90,13 @@ def _assert_converged(spark, out, clean_gold):
     assert max(years.values()) == 1, years
     assert gold == clean_gold
     ledger = [tuple(r) for r in spark.read.parquet(out + "/ocr_errors").collect()]
-    assert ("199", "2021-06-30") in {r[:2] for r in ledger}
+    ledger_filings = {r[:2] for r in ledger}
+    assert ("199", "2021-06-30") in ledger_filings
     assert len(ledger) == len(set(ledger)), ledger
+    bronze = spark.read.parquet(out + "/bronze_cells").select("cik", "filing_date")
+    bronze_filings = {tuple(r) for r in bronze.distinct().collect()}
+    # a filing that failed once and landed on a rerun has left the ledger
+    assert not ledger_filings & bronze_filings
 
 
 def test_pipeline_idempotent_and_incremental(spark, tmp_path):

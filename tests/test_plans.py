@@ -371,9 +371,9 @@ def test_e11_argmax_is_hash_aggregate_not_sort(spark):
 @pytest.mark.parametrize("qname", ["f1_parse_accounting", "c5_accounting_chain"])
 def test_f1_parse_plans_the_dirty_string_once(spark, qname):
     """f1 and c5 parse a compound dirty-string CASE that holds 5
-    ``format_number`` calls. The Column form of the F1 parse copies its
-    input into every step (720 calls, most of the query's time spent in
-    Catalyst analysis); staged on a column of its own, the optimized
+    ``format_number`` calls. An F1 parse with its steps inlined copies
+    its input into every step (720 calls, most of the query's time spent
+    in Catalyst analysis); staged on a column of its own, the optimized
     plan holds the CASE exactly once."""
     import os
 

@@ -82,22 +82,13 @@ def _noop_seconds(df) -> float:
 
 
 def interleave(
-    spark,
-    builds: list[Callable],
-    releases: list[Callable[[], None]],
-    reps: int,
-    steady: bool,
+    spark, builds: list[Callable], reps: int, steady: bool
 ) -> list[list[float]]:
     """Run ``reps`` timed executions per variant, alternating variants
     within each rep and which variant goes first from rep to rep, after
     one untimed warm-up rep. ``steady`` builds
-    each plan once and releases its caches only at the end; otherwise
+    each plan once and releases the caches only at the end; otherwise
     every execution builds a fresh plan and releases after itself."""
-
-    def release(i: int) -> None:
-        releases[i]()
-        spark.catalog.clearCache()
-
     plans = [build() for build in builds] if steady else None
     samples: list[list[float]] = [[] for _ in builds]
     for rep in range(reps + 1):
@@ -105,12 +96,11 @@ def interleave(
         for i in order:
             dt = _noop_seconds(plans[i] if steady else builds[i]())
             if not steady:
-                release(i)
+                spark.catalog.clearCache()
             if rep:
                 samples[i].append(dt)
     if steady:
-        for i in range(len(builds)):
-            release(i)
+        spark.catalog.clearCache()
     return samples
 
 
@@ -119,23 +109,19 @@ def main() -> None:
     reps = int(sys.argv[2]) if len(sys.argv) > 2 else 7
     rev = sys.argv[3] if len(sys.argv) > 3 else "HEAD"
 
-    from x17a5_spark.cache import release_stage_caches as rel_new
     from x17a5_spark.queries import registry as reg_new
     from x17a5_spark.session import get_spark
     from x17a5_spark.tables import DEFAULT_SF_DIR as sf_dir
 
     with old_tree(rev) as root:
         sys.path.insert(0, root)
-        from x17a5_old.cache import release_stage_caches as rel_old
         from x17a5_old.queries import registry as reg_old
 
         spark = get_spark("ab")
         new_fn, old_fn = reg_new()[0][name], reg_old()[0][name]
         builds = [lambda: new_fn(spark, sf_dir), lambda: old_fn(spark, sf_dir)]
         for protocol in ("cold", "steady"):
-            new_s, old_s = interleave(
-                spark, builds, [rel_new, rel_old], reps, protocol == "steady"
-            )
+            new_s, old_s = interleave(spark, builds, reps, protocol == "steady")
             print(
                 f"{name} {protocol}: NEW median {statistics.median(new_s):.3f} "
                 f"OLD median {statistics.median(old_s):.3f} ({rev})\n"

@@ -187,13 +187,9 @@ if __name__ == "__main__":
     spark = get_spark("check_correctness")
     con = duck_connection()
     failures = 0
-    from x17a5_spark.cache import release_stage_caches
-
     for name in wanted:
-        # scoped stage-cache release between queries (round 12): a
-        # 182-query sweep would otherwise accumulate every query's
+        # a full sweep would otherwise accumulate every query's
         # construction-time persists in one session
-        release_stage_caches()
         spark.catalog.clearCache()
         if name not in QUERIES:
             print(f"{name}: UNKNOWN")
@@ -217,12 +213,8 @@ if __name__ == "__main__":
         print(f"{name}: {status} {info}")
         if status != "OK":
             failures += 1
-    # release the LAST query's construction-time persists too (ADVICE
-    # r12): the loop releases at the TOP of each iteration, which left
-    # the final query's stage caches tracked at exit — harmless for a
-    # process about to die, but inconsistent with cache.py's
-    # single-ownership contract and bench.py's per-query placement.
-    release_stage_caches()
+    # the loop releases at the top of each iteration; release the last
+    # query's persists too
     spark.catalog.clearCache()
     print(f"\n{'PASS' if failures == 0 else 'FAIL'} ({failures} failures)")
     sys.exit(1 if failures else 0)

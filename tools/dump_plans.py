@@ -146,9 +146,6 @@ def plan_tree(spark, queries, name: str, sf_dir: str) -> str:
     fresh-session plan, independent of what ran before it (the r10
     full-suite flake: test_plan_audit's registry sweep left persisted
     stages that drifted the live skeletons under pytest ordering)."""
-    from x17a5_spark.cache import release_stage_caches
-
-    release_stage_caches()
     spark.catalog.clearCache()
     df = queries[name](spark, sf_dir)
     buf = io.StringIO()

@@ -107,9 +107,6 @@ def audit(sf: str, queries) -> tuple[dict[str, list[str]], list[str]]:
             hits["py_udf"].append(name)
         if "SortAggregate" in txt:
             hits["sortagg"].append(name)
-        from x17a5_spark.cache import release_stage_caches
-
-        release_stage_caches()
         spark.catalog.clearCache()
     return hits, failures
 

@@ -9,7 +9,6 @@ equivalent used by the fuzzy sequence merge (see operators/merge.py).
 from x17a5_spark.functions.accounting import (
     epsilon_one_digit_match,
     is_power_of_ten_ratio,
-    parse_accounting_number,
     relative_error_class,
     stage_parse_accounting_number,
 )
@@ -38,7 +37,6 @@ __all__ = [
     "is_power_of_ten_ratio",
     "levenshtein_ratio",
     "normalized_fingerprint",
-    "parse_accounting_number",
     "stage_parse_accounting_number",
     "punct_ratio",
     "relative_error_class",

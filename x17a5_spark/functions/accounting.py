@@ -14,11 +14,8 @@ from pyspark.sql import functions as F
 
 
 # ---------------------------------------------------------------------------
-# F1 — ``num_strip`` as FOUR shared rewrite steps. Both public forms
-# (the Column expression and the staged-projection variant) compose
-# exactly this list, so a spec fix lands in one place and cannot
-# diverge them; the property test pins the two forms equal on
-# hypothesis dirt as a second guard.
+# F1 — ``num_strip`` as FOUR rewrite steps, composed by
+# ``stage_parse_accounting_number``.
 # ---------------------------------------------------------------------------
 
 
@@ -77,8 +74,16 @@ def _f1_cast(s: Column) -> Column:
 _F1_STEPS = [_f1_strip, _f1_minus, _f1_dots, _f1_cast]
 
 
-def parse_accounting_number(col: Column | str) -> Column:
-    """F1 — ``num_strip``: dirty OCR numeric string -> double (or null).
+# unique temp-column prefix per staging call, so the helper can be
+# applied to several columns of the same DataFrame without collisions
+_STAGE_SEQ = itertools.count()
+
+
+def stage_parse_accounting_number(
+    df: DataFrame, src: Column | str, out: str
+) -> DataFrame:
+    """F1 — ``num_strip``: dirty OCR numeric string ``src`` -> double
+    (or null) in column ``out`` of ``df``.
 
     Behavior per reference OCRClean.py:30-88:
       * leading ``(`` marks an accounting negative;
@@ -91,43 +96,20 @@ def parse_accounting_number(col: Column | str) -> Column:
         OCR period and removed entirely;
       * bare ``-`` / ``.`` -> 0.0; anything uncastable -> null.
 
-    This Column form inlines each step into every reference site of
-    the previous one, so the input subtree is copied about 144 times.
-    Give it a bare column reference. For a compound input, or several
-    parses in one projection chain, use ``stage_parse_accounting_number``
-    (same steps, linear tree): f1/c5's dirty-string CASE staged that way
-    plans 5 ``format_number`` calls instead of 720.
-    """
-    s = F.col(col) if isinstance(col, str) else col
-    for step in _F1_STEPS:
-        s = step(s)
-    return s
-
-
-# unique temp-column prefix per staging call, so the helper can be
-# applied to several columns of the same DataFrame without collisions
-_STAGE_SEQ = itertools.count()
-
-
-def stage_parse_accounting_number(
-    df: DataFrame, src: Column | str, out: str
-) -> DataFrame:
-    """F1 as *staged projections* — the wide-hot-path form.
-
-    Same semantics as ``parse_accounting_number`` (property-tested
-    equal), but each rewrite step lands in a real intermediate column
-    instead of being inlined into every reference site. The Column
-    form's expression tree multiplies (~144 copies of the input
-    subtree); composed twice inside the W4 merge plus once on the split
-    output, the generated ``processNext`` exceeds janino's 64 KB method
-    limit and Spark silently drops the whole stage to interpreted
-    row-at-a-time eval. Staging keeps each projection's tree linear, so
-    plan construction (Catalyst analysis and optimization) stays linear
-    in the input's size too; the non-cheap producers referenced more
-    than once are protected from CollapseProject re-inlining
-    (SPARK-36718), so whole-stage codegen compiles. A compound ``src``
-    is copied into the first step's three references; land it in a
-    column of its own first to plan it once.
+    Each rewrite step lands in a real intermediate column instead of
+    being inlined into every reference site of the previous one. Inlined,
+    the input subtree is copied about 144 times; composed twice inside
+    the W4 merge plus once on the split output, the generated
+    ``processNext`` exceeds janino's 64 KB method limit and Spark
+    silently drops the whole stage to interpreted row-at-a-time eval,
+    and f1/c5's dirty-string CASE plans 720 ``format_number`` calls
+    instead of 5. Staging keeps each projection's tree linear, so plan
+    construction (Catalyst analysis and optimization) stays linear in
+    the input's size too; the non-cheap producers referenced more than
+    once are protected from CollapseProject re-inlining (SPARK-36718),
+    so whole-stage codegen compiles. A compound ``src`` is still copied
+    into the first step's three references; land it in a column of its
+    own first to plan it once.
     """
     s = F.col(src) if isinstance(src, str) else src
     p = f"__pan{next(_STAGE_SEQ)}"

@@ -9,7 +9,7 @@ the demo fixture and the DuckDB oracle twin.
 
 Semantics (engine-identical to the oracle):
 - split each doc into paragraphs: fixed ``para_tokens``-token chunks by
-  default, or — ``delimiter`` mode (round 8) — on a structural regex
+  default, or — ``delimiter`` mode — on a structural regex
   (blank lines, newlines) first, fixed-width chunking only the
   oversized spans;
 - keep the FIRST occurrence (min (doc_id, pos)) of every paragraph
@@ -20,7 +20,8 @@ Semantics (engine-identical to the oracle):
   deduplicated to nothing stay in the output with n_kept=0 and empty
   text so the curation funnel can be audited.
 
-Scale decisions (each measured / plan-pinned, see SCALE.md round 7):
+Scale decisions (each measured / plan-pinned, see SCALE.md's d15
+paragraph-dedup section):
 - keep-first is ``groupBy(fingerprint).min(packed-long)`` — NOT a
   row_number window: a hot boilerplate paragraph at 100 TB has
   billions of occurrences and a window partitioned on the fingerprint
@@ -44,6 +45,7 @@ Scale decisions (each measured / plan-pinned, see SCALE.md round 7):
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -126,10 +128,9 @@ def paragraph_table(
             )
         )
         staged = staged.withColumn("_spans", spans)
-    from x17a5_spark.cache import stage_persist
-
-    base = stage_persist(
-        staged.select("doc_id", para_arr.alias("paras")),
+    base = (
+        staged.select("doc_id", para_arr.alias("paras"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     paras = base.select(
         "doc_id",
@@ -153,7 +154,7 @@ def dedup_paragraphs(
 
     ``docs`` must have unique ``doc_id`` (long) and string ``text``.
 
-    ``delimiter`` (round-8, VERDICT #6): a regex — when set, paragraphs
+    ``delimiter``: a regex — when set, paragraphs
     follow the document's REAL structure: split the text on the regex
     (e.g. ``\\n\\s*\\n`` for blank-line paragraphs), drop empty spans,
     then fixed-width chunk only the OVERSIZED spans (> ``para_tokens``
@@ -191,7 +192,7 @@ def dedup_paragraphs(
     )
 
 
-# round 12 (VERDICT r11 missing-#2): paragraph-grain NEAR dedup — d15/
+# Paragraph-grain NEAR dedup — d15/
 # d16 are exact-fingerprint at paragraph grain, so boilerplate with a
 # one-token drift (dates, counters, revision numbers) survives. d3's
 # banding applied at the paragraph level closes it.
@@ -267,9 +268,7 @@ def near_dedup_paragraphs(
             )
         ).alias("gs"),
     )
-    from x17a5_spark.cache import stage_persist
-
-    mins = stage_persist(mins)
+    mins = mins.persist(StorageLevel.MEMORY_AND_DISK)
     bands = mins.select(
         "w",
         F.explode(

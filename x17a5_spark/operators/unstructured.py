@@ -25,10 +25,9 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from x17a5_spark.cache import stage_persist
 
 ID_COLS = ["cik", "name", "filing_date", "fiscal_year"]
 
@@ -46,10 +45,11 @@ def build_unstructured(long_df: DataFrame, allowlist: Sequence[str]) -> DataFram
     # PERSISTED wide result: one row of per-column non-null counts
     # (metadata-scale) — the long table is scanned exactly once, by the
     # pivot.
-    piv = stage_persist(
+    piv = (
         long_df.groupBy(*ID_COLS)
         .pivot("lineitem", list(allowlist))
         .agg(F.sum(F.col("value").cast("decimal(27,6)")).cast("double"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     counts = piv.select(
         *[F.count(F.col(f"`{c}`")).alias(f"c{i}") for i, c in enumerate(allowlist)]

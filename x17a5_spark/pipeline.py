@@ -123,7 +123,7 @@ def clean_filings(raw: DataFrame, text: DataFrame) -> DataFrame:
 # silver (clean long rows) -> gold (structured asset table), each stage
 # PERSISTED as a parquet table under ``out_dir``:
 #   bronze_cells/  OCR table cells        (appended, key: cik, filing_date)
-#   ocr_errors/    S10 quarantine ledger  (appended, key: filing, error)
+#   ocr_errors/    S10 quarantine ledger  (overwritten: the run's failures)
 #   silver/        clean long rows        (appended, key: cik, filing_date)
 #   gold_assets/   structured asset table (rebuilt from all of silver)
 # Bronze and silver are the expensive, per-filing stages, so they keep
@@ -148,15 +148,13 @@ def clean_filings(raw: DataFrame, text: DataFrame) -> DataFrame:
 LAST_STAGE_SECONDS: dict[str, float] = {}
 
 
-def _todo(
-    spark: SparkSession, inp: DataFrame, path: str, keys: list[str] = FILING_KEY
-) -> DataFrame:
-    """Rows of ``inp`` whose ``keys`` are not yet in the parquet sink at
+def _todo(spark: SparkSession, inp: DataFrame, path: str) -> DataFrame:
+    """Rows of ``inp`` whose filing key is not yet in the parquet sink at
     ``path`` (the skip-if-exists guard); all of ``inp`` before the sink
     exists."""
     if not os.path.isdir(path):
         return inp
-    return incremental_todo(inp, spark.read.parquet(path), keys)
+    return incremental_todo(inp, spark.read.parquet(path), FILING_KEY)
 
 
 def run_pipeline(
@@ -174,10 +172,13 @@ def run_pipeline(
     ``docs``: (cik, filing_date, content binary) document corpus;
     ``text``: (cik, filing_date, line_idx, line_text) page-text channel.
 
-    Bronze, the OCR error ledger and silver are appended by key; gold is
-    rebuilt from all of silver and its files replaced. So a gold
-    DataFrame returned by an earlier call on the same ``out_dir`` goes
-    stale once this call writes: materialize or checkpoint it first.
+    Bronze and silver are appended by key; gold is rebuilt from all of
+    silver and its files replaced. So a gold DataFrame returned by an
+    earlier call on the same ``out_dir`` goes stale once this call
+    writes: materialize or checkpoint it first. The OCR error ledger is
+    replaced too: it lists the failures among the documents the latest
+    run attempted, i.e. every document given that was not yet in bronze,
+    so a filing that failed once and landed on a rerun has no row.
     """
     import time
 
@@ -211,12 +212,9 @@ def run_pipeline(
     ocr_out.persist(StorageLevel.MEMORY_AND_DISK)
     try:
         cells, errors = quarantine(ocr_out)
-        # a filing that fails again on rerun is re-OCR'd (it never
-        # reaches bronze), so append only the (filing, error) rows the
-        # ledger lacks
-        _todo(spark, errors, err_path, FILING_KEY + ["error"]).write.mode(
-            "append"
-        ).parquet(err_path)
+        # every failed filing is retried on the next run (it never
+        # reaches bronze), so this run's errors replace the ledger
+        errors.write.mode("overwrite").parquet(err_path)
         cells.write.mode("append").parquet(bronze_path)
     finally:
         ocr_out.unpersist(blocking=False)

@@ -5,16 +5,16 @@ and ``ORACLES`` (name -> DuckDB SQL string) dicts; this package merges
 them for ``__spark_entry__``. Queries without an oracle entry are the
 genuinely non-SQL-expressible kernels (driver records a rows-only check).
 
-Caching contract: a handful of queries persist() stage tables their
+Caching contract: a handful of queries persist stage tables that their
 returned plan references more than once (d3/d13 candidate tables, e5's
 shingle indexes, s7/s8 trained codebooks, g1's edge list — each a
-stand-in for a pre-materialized production stage table). Those
-relations must outlive the builder call, so every such persist routes
-through ``x17a5_spark.cache.stage_persist`` and sweep consumers
-(bench.py per query, tools/check_correctness.py, tools/dump_plans.py)
-call ``x17a5_spark.cache.release_stage_caches()`` when done with a
-query; tests/test_registry.py asserts the CacheManager ends empty
-after a full construct-and-release sweep.
+stand-in for a pre-materialized production stage table), always at
+``StorageLevel.MEMORY_AND_DISK``. Those relations must outlive the
+builder call, so Spark's CacheManager owns them: sweep consumers
+(bench.py per query, tools/check_correctness.py, tools/dump_plans.py,
+tools/plan_audit.py) call ``spark.catalog.clearCache()`` when done with
+a query, and tests/test_registry.py asserts one such call empties the
+CacheManager after a full-registry build.
 
 Ordering matters: the grading driver hash-checks exactly the FIRST 50
 registry entries, so ``WINDOW_ORDER`` pins the window. A query whose

@@ -22,6 +22,7 @@ so the driver's value-hash comparison is exact.
 from __future__ import annotations
 
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -177,21 +178,18 @@ _TWO60 = float(1 << 60)
 
 
 def a17_sample_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r13 optimization round: fanout=True was A/B-tested (isolated
-    # median-of-3, both variants same session) and REJECTED — 1.56 s
-    # plain vs 1.82 s fanned; the round-robin exchange costs more than
-    # the single-task md5 pass saves here.
+    # fanout=True was A/B-tested (isolated median-of-3, both variants
+    # same session) and REJECTED — 1.56 s plain vs 1.82 s fanned; the
+    # round-robin exchange costs more than the single-task md5 pass
+    # saves here.
     li = load_table(spark, sf_dir, "lineitem")
-    # r13 optimization round (guide §7.2 — duplicated expression
-    # evaluation): projecting h = md5(...) BEFORE the survival filter
-    # made every row pay the md5 twice — once inside the pushed-down
-    # filter's conv(substring(md5...)) chain and once for the projected
-    # h column. Deferring the h projection to AFTER the filter keeps
-    # one md5 per row plus a re-hash of only the ~4K survivors
-    # (measured on the survivor stage: 1.62 -> 0.89 s, exceptAll-equal
-    # both ways). fanout=True was also A/B'd and rejected (1.82 vs
-    # 1.56 s plain — the round-robin exchange costs more than the
-    # single-task scan saves).
+    # Guide §7.2 (duplicated expression evaluation): projecting
+    # h = md5(...) BEFORE the survival filter makes every row pay the
+    # md5 twice — once inside the pushed-down filter's
+    # conv(substring(md5...)) chain and once for the projected h
+    # column. Deferring the h projection to AFTER the filter keeps one
+    # md5 per row plus a re-hash of only the ~4K survivors (measured on
+    # the survivor stage: 1.62 -> 0.89 s, exceptAll-equal both ways).
     md5c = F.md5(F.concat_ws(":", "l_orderkey", "l_linenumber"))
     counts = li.agg(F.count("*").alias("n")).withColumn("k", F.lit(1))
     u = F.conv(F.substring(md5c, 1, 15), 16, 10).cast("double") / F.lit(_TWO60)
@@ -313,7 +311,7 @@ def d8_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "embedding",
         )
     )
-    # NOT persisted (r13 A/B): caching this array<double> table was
+    # NOT persisted (A/B): caching this array<double> table was
     # measured 2.02 -> 2.14 s — the 12 re-scans the plan holds are
     # cheap cast+norm chains and columnar array caching costs more
     # than it saves (the s8 subvector finding, guide §5 "only when
@@ -356,7 +354,7 @@ def d8_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # cells are CPU-bound groups (one BLAS matmul each) — spread them
     # explicitly; AQE's byte-based coalescing serialized this stage on
-    # one task at sf0.1 (round-6 kernel sweep)
+    # one task at sf0.1 (kernel sweep)
     dup_pairs = (
         kernel_partitions(assigned.select("cell", "vec_id", "vec"), ["cell"])
         .groupBy("cell")
@@ -420,19 +418,18 @@ def t13_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = docs.select(
         "doc_id", F.explode(tokens(F.lower(F.col("text")))).alias("tok")
     )
-    # ONE corpus explode (r13, guide §2.3/§5): the token stream used to
-    # be re-derived twice — once for the unigram LM counts, once for the
-    # per-doc scoring join — so every document paid the regex split +
+    # ONE corpus explode (guide §2.3/§5): otherwise the token stream is
+    # re-derived twice — once for the unigram LM counts, once for the
+    # per-doc scoring join — so every document pays the regex split +
     # explode twice. Reduce to (doc_id, tok) occurrence counts first
     # (map-side combined) and persist that vocab×doc table; the LM
     # counts are a re-aggregation of it and the scorer weights each
     # distinct token by its count. sum(c_dt · dec(lp)) == sum over
     # occurrences of dec(lp) exactly (integer × exact decimal), so the
     # result is bit-identical to the per-occurrence fold.
-    from x17a5_spark.cache import stage_persist
-
-    cnt = stage_persist(
+    cnt = (
         tok.groupBy("doc_id", "tok").agg(F.count("*").alias("c_dt"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     uni = cnt.groupBy("tok").agg(F.sum("c_dt").alias("c"))
     totals = uni.agg(
@@ -633,15 +630,17 @@ def t24_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 1.2-1.39 s steady; scanning the cache costs what the re-explode
     # costs), unlike the pruned/bounded stage tables that do persist.
     uni = docs.select("doc_id", F.explode(toks).alias("tok"))
-    from x17a5_spark.cache import stage_persist
-
     # persist the VOCAB-sized unigram counts (not the corpus-sized
     # streams — persisting `bi` was measured a loss, see above): c1
     # feeds both the lp join and the vocabulary count, and without the
     # persist the whole scan→explode→aggregate subtree ran twice
     # (plans/r13/t24_before.txt: four corpus scans, two of them the c1
     # subtree). Guide §5: bounded, reused, expensive to recompute.
-    c1 = stage_persist(uni.groupBy("tok").agg(F.count("*").alias("c1")))
+    c1 = (
+        uni.groupBy("tok")
+        .agg(F.count("*").alias("c1"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
     v = c1.agg(F.count("*").alias("v")).withColumn("k", F.lit(1))
     c2 = bi.groupBy("bg").agg(F.count("*").alias("c2"))
     lp_tab = (

@@ -292,19 +292,18 @@ def a21_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", F.unix_micros(F.col("ts").cast("timestamp")).alias("us")
     )
-    # r13 (guide §2.3): the per-user first-event day rides an UNORDERED
-    # window min instead of the old groupBy(user_id) + join-back — one
-    # hash exchange of the event stream serves both the min and the
-    # week arithmetic, where the old shape scanned events twice and at
-    # scale (cohort table too big to broadcast) would shuffle BOTH join
-    # sides plus the aggregate. floor(min/day) over the identical rows
-    # == the old aggregate exactly; the join was inner on user_id (every
+    # Guide §2.3: the per-user first-event day rides an UNORDERED
+    # window min instead of a groupBy(user_id) + join-back — one hash
+    # exchange of the event stream serves both the min and the week
+    # arithmetic, where the join shape scans events twice and at scale
+    # (cohort table too big to broadcast) would shuffle BOTH join sides
+    # plus the aggregate. floor(min/day) over the identical rows equals
+    # that aggregate exactly; the join would be inner on user_id (every
     # event's user has a cohort row by construction), so row sets match.
-    # r14 (ADVICE r13): the old inner join (and the oracle's JOIN USING)
-    # DROPPED null-user events, while a window would give nulls their
-    # own partition — events.user_id has no nulls at any SF today, but
-    # the filter makes the equivalence hold by construction rather than
-    # by fixture luck.
+    # An inner join (and the oracle's JOIN USING) DROPS null-user
+    # events, while a window gives nulls their own partition —
+    # events.user_id has no nulls at any SF today, but the filter makes
+    # the equivalence hold by construction rather than by fixture luck.
     ev = ev.filter(F.col("user_id").isNotNull())
     uw = Window.partitionBy("user_id")
     cohort_day = F.floor(F.min("us").over(uw) / _US_PER_DAY).cast("long")
@@ -476,7 +475,7 @@ def a24_rolling_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.unix_micros(F.col("ts").cast("timestamp")) / _A24_US_PER_DAY
         ).cast("long").alias("day"),
     )
-    # r13: stage_persist(active) was A/B'd and REJECTED (single-JVM
+    # Persisting `active` was A/B'd and REJECTED (single-JVM
     # interleaved, median-of-9: persisted 1.20 s vs 0.49 s plain —
     # caching the (user, day) distinct costs ~2.4x what the re-derived
     # scan+distinct subtree costs; the t13/t25 persist wins all cover
@@ -647,12 +646,11 @@ def a27_correlation_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(to_dec(F.col(a) * F.col(b))).cast("double").alias(f"sp_{a}_{b}")
         )
     stats = li.agg(*aggs)
-    # r13 optimization round: the "ONE scan" promise above was broken by
-    # the plan, not the algebra — building each output row as
-    # ``stats.select(...)`` and unioning referenced the un-persisted
-    # aggregate SIX times, so Catalyst replicated the whole
-    # scan+fanout+aggregate subtree per pair (before-plan: 6 parquet
-    # scans, 12 Exchanges). The pair rows are pure column math on the
+    # The "ONE scan" promise above is kept by the plan, not only the
+    # algebra: building each output row as ``stats.select(...)`` and
+    # unioning would reference the un-persisted aggregate SIX times,
+    # so Catalyst replicates the whole scan+fanout+aggregate subtree
+    # per pair (6 parquet scans, 12 Exchanges). The pair rows are pure column math on the
     # single stats row, so they fold into ONE 6-element struct array
     # exploded in place: one scan, one fan-out exchange, one aggregate,
     # zero unions (guide §2.4 — remove shuffles outright; §7.2 —
@@ -777,9 +775,9 @@ def j15_churn_absence(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("us").alias("lo"), F.max("us").alias("hi")
     )
     with_span = ev.crossJoin(F.broadcast(span))
-    # r13 (guide §2.3/§2.4): the early aggregate and the late-purchase
-    # distinct each re-scanned events and met in an anti join — but
-    # both are per-user facts, so ONE conditional aggregation computes
+    # Guide §2.3/§2.4: an early aggregate and a late-purchase distinct
+    # would each re-scan events and meet in an anti join — but both
+    # are per-user facts, so ONE conditional aggregation computes
     # them in a single pass and the anti join becomes a filter.
     # Identities: early-grouped rows == users with >= 1 early event
     # (n_early > 0); anti-join survival == no late purchase (_late

@@ -19,6 +19,7 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -483,8 +484,6 @@ def e5_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-ran per reference. Persist the
     # batch-with-fingerprint table once (batch-sized, the incremental
     # ingest's own working set).
-    from x17a5_spark.cache import stage_persist as _sp
-
     # Duplicated subtrees: the exact-dup SEMI join
     # and the novel ANTI join are complementary splits of the same
     # batch-vs-existing fingerprint probe, but as two joins each
@@ -500,10 +499,11 @@ def e5_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .withColumn("_hit", F.lit(1))
     )
-    tagged = _sp(
+    tagged = (
         batch.select(
             "doc_id", "text", normalized_fingerprint(F.col("text")).alias("fp")
-        ).join(efp, "fp", "left"),
+        ).join(efp, "fp", "left")
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     exact_dup = tagged.filter(F.col("_hit").isNotNull()).select("doc_id")
     novel = tagged.filter(F.col("_hit").isNull())
@@ -521,10 +521,8 @@ def e5_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # probe + confirm) — persist instead of re-exploding per reader. In
     # production the existing-corpus index is a PRE-MATERIALIZED stage
     # table; this persist is its bench-scale stand-in.
-    from x17a5_spark.cache import stage_persist
-
-    shb = stage_persist(shingle(novel, "b_id"))
-    she = stage_persist(shingle(existing, "e_id"))
+    shb = shingle(novel, "b_id").persist(StorageLevel.MEMORY_AND_DISK)
+    she = shingle(existing, "e_id").persist(StorageLevel.MEMORY_AND_DISK)
     n_sh = shb.groupBy("b_id").agg(F.count("*").alias("n_sh"))
     # Bounded candidate generation (d13's prefix-blocking discipline,
     # dedup.py): raw `shb JOIN she ON shingle` is quadratic on a hot
@@ -779,9 +777,7 @@ def e6_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") % 97 == 0).alias("is_eval"),
         F.md5(F.concat(F.lit("quota:"), F.col("doc_id"))).alias("h"),
     )
-    from x17a5_spark.cache import stage_persist
-
-    base = stage_persist(base)
+    base = base.persist(StorageLevel.MEMORY_AND_DISK)
 
     # decontamination: bigram containment vs the eval split (t11)
     grams = base.select(
@@ -1072,12 +1068,10 @@ def e9_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept = docs.filter(u < p).select(
         "doc_id", "text", phase.alias("phase"), shard.alias("shard")
     )
-    from x17a5_spark.cache import stage_persist
-
     # e8's finding applied here: occ feeds the vocab
     # distinct AND the per-doc piece rollup — un-persisted, the
     # kept-filter + corpus explode + groupBy subtree executed twice.
-    occ = stage_persist(
+    occ = (
         kept.select(
             "doc_id",
             "phase",
@@ -1086,6 +1080,7 @@ def e9_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("doc_id", "phase", "shard", "word")
         .agg(F.count("*").alias("n_occ"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     vocab = occ.select("word").distinct()
     sym = F.array_join(F.filter(F.split("word", ""), lambda c: c != ""), " ")

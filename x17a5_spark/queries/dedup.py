@@ -19,10 +19,10 @@ from __future__ import annotations
 
 import os
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from x17a5_spark.cache import stage_persist
 from x17a5_spark.functions.text import normalized_fingerprint, tokens, word_shingles
 from x17a5_spark.tables import load_table
 from x17a5_spark.functions.unicode_fold import norm_fp_sql
@@ -286,7 +286,7 @@ def d3_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # OOMs) — both the minhash pass and the candidate-confirm pass read
     # it, and a production dedup pipeline would write it as a stage
     # table anyway. Measured 1.8x vs recomputing the explode per pass.
-    sh = stage_persist(_shingle_table(aug))
+    sh = _shingle_table(aug).persist(StorageLevel.MEMORY_AND_DISK)
     rows_per_band = N_MINHASH // N_BANDS
     # One-permutation minhashing (Li/Owen/Zhang, NIPS'12): hash each
     # shingle ONCE, partition the hash space into N_MINHASH buckets by
@@ -344,10 +344,11 @@ def d3_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias(f"mh{i}")
         for i in range(N_MINHASH)
     ]
-    sigs = stage_persist(
+    sigs = (
         hashed.groupBy("doc_id")
         .agg(*minhash_cols, F.count("*").alias("n_shingles"))
-        .select("doc_id", *dens_cols, "n_shingles"),
+        .select("doc_id", *dens_cols, "n_shingles")
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     # the band index is folded INTO the signature md5, so band
     # collision is a SINGLE-key equi-join (one narrow string compare
@@ -387,7 +388,7 @@ def d3_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # docs with a BROADCAST semi join (cand_docs is bounded by the
     # duplicate rate, tiny next to the corpus) — a narrow pass, so the
     # confirm's hash exchanges move only the candidates' shingles.
-    candidates = stage_persist(candidates)
+    candidates = candidates.persist(StorageLevel.MEMORY_AND_DISK)
     cand_docs = (
         candidates.select(F.col("id_a").alias("doc_id"))
         .union(candidates.select(F.col("id_b").alias("doc_id")))
@@ -399,8 +400,9 @@ def d3_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shingle mass through the semi join — measured 0.73-0.89 s steady
     # at sf0.1 vs 1.0-1.3 s without, with the array-free confirm
     # retained).
-    cand_sh = stage_persist(
-        sh.join(F.broadcast(cand_docs), "doc_id", "left_semi"),
+    cand_sh = (
+        sh.join(F.broadcast(cand_docs), "doc_id", "left_semi")
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     sh_a = cand_sh.select(F.col("doc_id").alias("id_a"), "shingle")
     sh_b = cand_sh.select(F.col("doc_id").alias("id_b"), "shingle")
@@ -864,11 +866,12 @@ def d13_sparse_cosine_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # candidate pairs on the 100× lake, because near-uniform TF
     # vectors give every spurious pair a bound ≈ 1. Removed; the
     # length bound above is the one that bites (34% of matched rows).)
-    cands = stage_persist(
+    cands = (
         a.join(b, "term")
         .filter((F.col("id_a") < F.col("id_b")) & length_ok)
         .select("id_a", "id_b")
         .distinct()
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     # confirm only over candidate docs' weights (broadcast semi-join
     # pruning, same shape as d3's confirm) — the full weight table
@@ -894,14 +897,15 @@ def d13_sparse_cosine_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is EXACT addition (scale-12, magnitudes ≤ 1), hence independent
     # of intersection order — same cross-engine discipline as before.
     dec0 = F.lit(0).cast("decimal(27,12)")
-    wmap = stage_persist(
+    wmap = (
         w.join(F.broadcast(cand_docs), "doc_id", "left_semi")
         .groupBy("doc_id")
         .agg(
             F.map_from_entries(
                 F.collect_list(F.struct("term", "w"))
             ).alias("wm")
-        ),
+        )
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     dots = (
         cands.join(
@@ -1011,8 +1015,8 @@ def e7_dedup_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # subtree replicated per consumer. The pair table is dup-rate-sized
     # (hundreds of rows at the gate lakes, |dups| at any scale), so
     # persisting it is the guide §5 case: reused AND far cheaper than
-    # recomputation. Registry-scoped like every stage cache.
-    pairs = stage_persist(d3_minhash_lsh(spark, sf_dir))
+    # recomputation.
+    pairs = d3_minhash_lsh(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK)
     src = load_table(spark, sf_dir, "documents").select("doc_id", "source")
     # copies (doc_id + AUG_TWIN_OFFSET) belong to their base doc's source
     aug_src = src.unionByName(
@@ -1454,13 +1458,14 @@ def d14_containment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash56 = F.conv(
         F.substring(F.md5("shingle"), 2, D3_HEX_CHARS), 16, 10
     ).cast("long")
-    sh = stage_persist(
+    sh = (
         canon.select(
             "doc_id",
             F.explode(
                 F.array_distinct(word_shingles(F.col("text"), 3))
             ).alias("shingle"),
-        ).select("doc_id", hash56.alias("g")),
+        ).select("doc_id", hash56.alias("g"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
     dfc = sh.groupBy("g").agg(F.count("*").alias("df"))
@@ -1473,8 +1478,9 @@ def d14_containment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # postings (container side) — shdf⋈sizes is built once, persisted,
     # and filtered two ways, instead of two independent join subtrees.
     pw = Window.partitionBy("doc_id").orderBy(F.col("df").asc(), F.col("g"))
-    shsz = stage_persist(
-        shdf.join(sizes, "doc_id").withColumn("_pk", F.row_number().over(pw)),
+    shsz = (
+        shdf.join(sizes, "doc_id").withColumn("_pk", F.row_number().over(pw))
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     prefix = shsz.filter(
         F.col("_pk") <= F.floor(F.col("n") / 5).cast("int") + 1
@@ -1502,7 +1508,7 @@ def d14_containment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("contained_id", "container_id")
         .distinct()
     )
-    cands = stage_persist(cands)
+    cands = cands.persist(StorageLevel.MEMORY_AND_DISK)
     # Verification via per-doc sorted shingle arrays + array_intersect:
     # one row per candidate pair instead of exploding to |pair|x|doc|
     # shingle rows and re-aggregating. Row width is bounded by the
@@ -1535,7 +1541,7 @@ def d14_containment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash56_of = lambda c: F.conv(  # noqa: E731
         F.substring(F.md5(c), 2, D3_HEX_CHARS), 16, 10
     ).cast("long")
-    arrs = stage_persist(
+    arrs = (
         canon.join(cand_docs, "doc_id", "left_semi").select(
             "doc_id",
             F.array_sort(
@@ -1544,7 +1550,8 @@ def d14_containment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                     hash56_of,
                 )
             ).alias("shingles"),
-        ).withColumn("n", F.size("shingles").cast("long")),
+        ).withColumn("n", F.size("shingles").cast("long"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     aa = arrs.select(
         F.col("doc_id").alias("contained_id"),

@@ -22,6 +22,7 @@ both engines). Scale notes per operator:
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -409,23 +410,20 @@ def t22_boilerplate_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("pos", "seg"),
     )
-    from x17a5_spark.cache import stage_persist
-
-    segs = stage_persist(segs)
+    segs = segs.persist(StorageLevel.MEMORY_AND_DISK)
     # ^ two consumers (df table, removal join) — the persist stops each
     # from re-running the corpus-wide explode
     df_counts = segs.groupBy("seg").agg(
         F.countDistinct("doc_id").alias("df")
     )
-    # r13 (guide §2.3): the filtered reassembly, the kept count AND the
+    # Guide §2.3: the filtered reassembly, the kept count AND the
     # unfiltered per-doc segment count ride ONE groupBy over the df
     # join — collect_list skips the nulls a failed when() emits, so
     # sorting the conditionally-collected structs reassembles exactly
-    # the old kept-row list. The old shape ran a THIRD segs read for
-    # stats, a separate kept groupBy, and a final left join; a doc
-    # whose every segment is boilerplate collects an empty list ->
-    # array_join('') and n_kept 0, identical to the old left-join
-    # coalesce path. Docs with zero segments appear in neither shape.
+    # the kept-row list. This avoids a THIRD segs read for stats, a
+    # separate kept groupBy and a final left join; a doc whose every
+    # segment is boilerplate collects an empty list -> array_join('')
+    # and n_kept 0, identical to a left-join coalesce. Docs with zero segments appear in neither shape.
     keep = F.col("df") < T22_DF
     joined = segs.join(df_counts, "seg")
     return (

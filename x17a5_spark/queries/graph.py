@@ -29,6 +29,7 @@ fixed), so the driver's value-hash gate covers the full iterative loop.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -111,13 +112,10 @@ def g1_pagerank(
     outw = edges.groupBy("src").agg(dsum("w", "out_w"))
     # edge list annotated with its source's out-weight; persisted once —
     # every iteration re-reads it (at 100 TB: bucketed by src on disk).
-    # Registered with the registry-scoped cache context (round 12): the
-    # returned plan references e once per iteration, and unpersisting
-    # before execution would recompute the edge build G1_ITERS times —
-    # sweep consumers release it via cache.release_stage_caches().
-    from x17a5_spark.cache import stage_persist
-
-    e = stage_persist(edges.join(outw, "src"))
+    # The returned plan references e once per iteration, and
+    # unpersisting before execution would recompute the edge build
+    # G1_ITERS times — sweep consumers release it with clearCache().
+    e = edges.join(outw, "src").persist(StorageLevel.MEMORY_AND_DISK)
     ranks = outw.select(F.col("src").alias("node"), F.lit(1.0).alias("rank"))
     for _ in range(iters):
         contrib = e.join(ranks, e["src"] == ranks["node"]).select(
@@ -137,8 +135,9 @@ def g1_pagerank(
         # — at sf0.01 the 5-round plan cost ~7 s of pure Catalyst
         # compile; at real scale a 20-round walk would never finish
         # ANALYZING. Values are unaffected: every iteration's ranks are
-        # already exact (round-9 then DECIMAL-sum), so checkpointed ==
-        # unrolled, and the oracle keeps its unrolled CTE chain.
+        # already exact (rounded to 9 places, then DECIMAL-summed), so
+        # checkpointed == unrolled, and the oracle keeps its unrolled
+        # CTE chain.
         if checkpoint_dir is not None:
             # persist first so the eager checkpoint's write pass reads
             # the cached iteration instead of recomputing its lineage;
@@ -307,11 +306,11 @@ G2_MIN_W = 2
 
 def g2_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    # r13 optimization round (guide §2.4): the co-occurrence pairs used
-    # to come from a lineitem SELF-JOIN on l_orderkey — two full scans,
-    # two exchanges and a sort-merge join, all to pair rows WITHIN one
-    # order. Orders are bounded (≤7 lineitems in TPC-H shaped data), so
-    # one groupBy(l_orderkey) + a higher-order pair expansion computes
+    # Guide §2.4: the co-occurrence pairs do not come from a lineitem
+    # SELF-JOIN on l_orderkey — two full scans, two exchanges and a
+    # sort-merge join, all to pair rows WITHIN one order. Orders are
+    # bounded (≤7 lineitems in TPC-H shaped data), so one
+    # groupBy(l_orderkey) + a higher-order pair expansion computes
     # the identical multiset of (u, v) value pairs from a single scan
     # and a single exchange. Value-pair semantics match the join
     # exactly: for every element x of the order's part list, every
@@ -332,9 +331,7 @@ def g2_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("w") >= G2_MIN_W)
         .select("u", "v")
     )
-    from x17a5_spark.cache import stage_persist
-
-    edges = stage_persist(edges)
+    edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
     deg = (
         edges.select(F.col("u").alias("node"))
         .unionAll(edges.select(F.col("v").alias("node")))
@@ -347,20 +344,21 @@ def g2_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     lower_first = (F.col("du") < F.col("dv")) | (
         (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
     )
-    # r13: persist the oriented edge list — the wedge step used to
-    # self-join `oriented`, replicating the two degree joins per side;
-    # and generate wedges with the same single-exchange groupBy + pair
+    # Persist the oriented edge list (a self-join of `oriented` in the
+    # wedge step would replicate the two degree joins per side), and
+    # generate wedges with the same single-exchange groupBy + pair
     # expansion as the edge build (per-src out-neighbor list, all
     # dst1 < dst2 value pairs). Degree orientation bounds out-degree by
     # O(sqrt(m)), so the per-src list is the standard triangle-count
     # bound — and the d² pair work per src lands on one task in the
     # join shape too (hash partitioned by src), so this changes
     # exchange count, not skew.
-    oriented = stage_persist(
+    oriented = (
         ranked.select(
             F.when(lower_first, F.col("u")).otherwise(F.col("v")).alias("src"),
             F.when(lower_first, F.col("v")).otherwise(F.col("u")).alias("dst"),
         )
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     wedge_expr = (
         "flatten(transform(ps, x -> transform(filter(ps, y -> y > x), "
@@ -375,9 +373,8 @@ def g2_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     triangles = wedges.join(edges, ["u", "v"], "left_semi")
     # n_edges derived inside the plan (broadcast of a 1-row aggregate)
     # so building the query stays lazy — no eager action at construction.
-    # The persist above is registry-scoped like g1's edge cache
-    # (cache.release_stage_caches()): the plan reads `edges` three
-    # times (degree, orientation, closing semi-join) and unpersisting
+    # The persist above is released by the caller, like g1's edge
+    # cache: the plan reads `edges` three times (degree, orientation, closing semi-join) and unpersisting
     # here would drop it before the caller ever executes the plan.
     n_e = edges.agg(F.count("*").alias("n_edges"))
     return triangles.agg(F.count("*").alias("n_triangles")).crossJoin(

@@ -12,6 +12,7 @@ bad blobs land in the error channel instead of failing the stage.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -252,15 +253,14 @@ M5_PATCH = 32
 
 
 def m5_patch_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from x17a5_spark.cache import stage_persist
-
     media = _fake_media(spark, sf_dir)
-    # r13 (guide §5): the grid branch and the error branch both read the
-    # decode output — un-persisted, the Python decode round-tripped the
-    # media blobs TWICE. Persist only the narrow metadata (never the
+    # Guide §5: the grid branch and the error branch both read the
+    # decode output — un-persisted, the Python decode would round-trip
+    # the media blobs TWICE. Persist only the narrow metadata (never the
     # blob — the m6 packed-band discipline: bytes stay out of caches).
-    decoded = stage_persist(
+    decoded = (
         decode_metadata(media).select("media_id", "width", "height", "error")
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     good = decoded.filter(F.col("error").isNull())
     nx = (F.col("width") / M5_PATCH).cast("int")
@@ -453,22 +453,20 @@ def m6_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(0).cast("long"),
         )
 
-    # r13 optimization round: `packed` feeds FOUR plan references (both
-    # sides of the band self-join, then pa/pb of the Hamming verify),
-    # and with no exchange between the mapInPandas chain and those
-    # consumers Spark duplicates the whole Python subtree per
-    # reference — the before-plan shows 16 MapInPandas nodes (8 copies
-    # of the encode+decode chain). Persist the 40-byte-per-image packed
-    # table so the PNG round-trip runs ONCE per execution (guide §5:
-    # reuse justifies the cache; §2.3: every downstream join now moves
-    # keys + four longs, never bytes). Registry-scoped like every
-    # other stage cache.
-    from x17a5_spark.cache import stage_persist
-
-    packed = stage_persist(
+    # `packed` feeds FOUR plan references (both sides of the band
+    # self-join, then pa/pb of the Hamming verify), and with no exchange
+    # between the mapInPandas chain and those consumers Spark
+    # duplicates the whole Python subtree per reference — un-persisted,
+    # the plan holds 16 MapInPandas nodes (8 copies of the
+    # encode+decode chain). Persist the 40-byte-per-image packed table
+    # so the PNG round-trip runs ONCE per execution (guide §5: reuse
+    # justifies the cache; §2.3: every downstream join moves keys +
+    # four longs, never bytes).
+    packed = (
         hashed.select(
             "media_id", *[band_val(j).alias(f"v{j}") for j in range(4)]
-        ),
+        )
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     bands = packed.select(
         "media_id",
@@ -597,11 +595,11 @@ def m7_audio_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     def enc(batches):
         import numpy as np
 
-        # r13 (guide §4.2): the per-sample synth ran as a 256-element
-        # Python list comprehension per doc (~6M interpreted ops per
-        # 25k-doc batch). One numpy expression per doc generates the
-        # identical int sequence; the WAV container encode (the
-        # operator under test) is unchanged.
+        # Guide §4.2: a per-sample synth as a 256-element Python list
+        # comprehension per doc costs ~6M interpreted ops per 25k-doc
+        # batch. One numpy expression per doc generates the identical
+        # int sequence; the WAV container encode is the operator under
+        # test.
         base = np.arange(M7_N_SAMPLES, dtype=np.int64) * 13
         for pdf in batches:
             blobs = []
@@ -620,10 +618,9 @@ def m7_audio_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         import numpy as np
 
-        # r13 (guide §4.2): the frame fold ran as nested Python loops
-        # (sum of squares over 64 samples per frame). The WAV decode
-        # (the operator under test) is unchanged; the per-frame math is
-        # one reshaped numpy pass per doc. Arithmetic is identical:
+        # Guide §4.2: the frame fold (sum of squares over 64 samples
+        # per frame) is one reshaped numpy pass per doc, not nested
+        # Python loops. The WAV decode is the operator under test. Arithmetic is identical:
         # int64-exact sum of squares, /64.0, sqrt, round-half-even 6 —
         # value-equal to the scalar path (oracle-checked).
         for pdf in batches:

@@ -25,9 +25,10 @@ from x17a5_spark.tables import load_table
 def _with_parsed_dirt(li: DataFrame) -> DataFrame:
     """Add ``parsed``: F1 over five deterministic dirt patterns of
     ``floor(l_extendedprice)``. The dirty string lands in a column of its
-    own before the staged parse, so the plan holds the CASE once; the
-    Column form would copy it into every F1 step (720 ``format_number``
-    calls instead of 5, and most of the query's time in analysis)."""
+    own before the staged parse, so the plan holds the CASE once; as the
+    parse's ``src`` it would be copied into every F1 step (720
+    ``format_number`` calls instead of 5, and most of the query's time in
+    analysis)."""
     # comma-grouped integer rendering
     grp = F.format_number(F.floor("l_extendedprice").cast("long"), 0)
     variant = (F.col("l_orderkey") * 7 + F.col("l_linenumber")) % 5

@@ -16,6 +16,7 @@ AND recall-checked against s1 in tests/test_dedup_similarity.py.
 from __future__ import annotations
 
 import pandas as pd
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -1049,10 +1050,8 @@ def s7_trained_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     # the trained codebook is a 16-row stage artifact (in production
     # it's trained once and stored); persisting it keeps steady-state
-    # executions from re-running the Lloyd rounds (registry-scoped)
-    from x17a5_spark.cache import stage_persist
-
-    cents = stage_persist(cents)
+    # executions from re-running the Lloyd rounds
+    cents = cents.persist(StorageLevel.MEMORY_AND_DISK)
     assigned = _assign_to(vecs, cents).join(vecs, "vec_id")
     # query-side probe: nearest nprobe trained cells by the same score
     wsq = _dot(F.col("w"), F.col("w"))
@@ -1285,10 +1284,8 @@ def s8_trained_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("m", "j", F.coalesce("w_new", "w").alias("w"))
         )
     # 128-row trained codebook: persisted stage artifact, same reason
-    # as s7's cents (registry-scoped)
-    from x17a5_spark.cache import stage_persist
-
-    cb = stage_persist(cb)
+    # as s7's cents
+    cb = cb.persist(StorageLevel.MEMORY_AND_DISK)
     scores = subs.join(F.broadcast(cb), "m").select(
         "vec_id", "m", "j", d2.alias("d2")
     )

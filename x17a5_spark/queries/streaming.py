@@ -10,6 +10,7 @@ windows additionally merge per-key state — all built-in operators.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -126,20 +127,17 @@ def _arrival_survivors(events: DataFrame) -> DataFrame:
     drop (shared by st4 and the st6 stream-stream join)."""
     from pyspark.sql import Window
 
-    from x17a5_spark.cache import stage_persist
-
     h8 = F.conv(
         F.substring(F.md5(F.col("event_id").cast("string")), 1, 8), 16, 10
     ).cast("long")
     arrival_sec = F.unix_timestamp("ts") + h8 % 1200
-    # r13 (guide §5): the batch-tagged event table feeds BOTH the
-    # watermark aggregate and the survivors join — un-persisted, the
-    # events scan plus the md5 arrival hash ran twice per execution.
-    # Persisting it is the batch ledger a real micro-batch pipeline
-    # materializes anyway; MEMORY_AND_DISK via stage_persist, released
-    # by the registry scope between queries.
-    b = stage_persist(
+    # The batch-tagged event table feeds BOTH the watermark aggregate
+    # and the survivors join — un-persisted, the events scan plus the
+    # md5 arrival hash would run twice per execution. Persisting it is
+    # the batch ledger a real micro-batch pipeline materializes anyway.
+    b = (
         events.withColumn("batch_id", (arrival_sec - arrival_sec % 600) / 600)
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     bmax = b.groupBy("batch_id").agg(F.max("ts").alias("batch_max"))
     wm = bmax.select(
@@ -428,18 +426,18 @@ WHERE n_hist >= 12
 # beyond a partition sort, unlike the streaming form whose state store
 # holds one timestamp per live key.
 #
-# Round 9 (VERDICT r8 #3): the per-burst rollup used to be a
-# groupBy(..., burst).agg(min(struct(us, event_id)), count(*)) — min
+# The per-burst rollup is run-start filtering, not a
+# groupBy(..., burst).agg(min(struct(us, event_id)), count(*)): min
 # over a STRUCT plans as SortAggregate, a second per-partition sort of
-# the full event stream; rewritten to run-start filtering.
+# the full event stream.
 #
-# Round 11 (VERDICT r10 #5) — CHUNKED sessionization: the per-key
-# window meant one task sorted a hot user's ENTIRE stream (skew lake:
-# a 30%-hot user serialized 30% of the window scan, 1.65×). The gap
-# scan is a segmented scan, so it decomposes: sessionize WITHIN
-# (user, type, time-chunk) partitions, then stitch bursts across chunk
-# edges with a per-chunk summary pass whose row count is #chunks, not
-# #events. Per-task work is now bounded by (event rate × chunk width)
+# CHUNKED sessionization: a per-key window alone means one task sorts
+# a hot user's ENTIRE stream (skew lake: a 30%-hot user serialized 30%
+# of the window scan, 1.65×). The gap scan is a segmented scan, so
+# it decomposes: sessionize WITHIN (user, type, time-chunk)
+# partitions, then stitch bursts across chunk edges with a per-chunk
+# summary pass whose row count is #chunks, not #events. Per-task work
+# is bounded by (event rate × chunk width)
 # — a retention contract a hot key cannot break. Correctness of the
 # stitch: with CHUNK ≥ TTL (build-time assert), an event whose
 # PRECEDING event is not in the same or adjacent chunk is always a
@@ -456,11 +454,11 @@ ST8_CHUNK_US = 6 * ST8_TTL_US  # 1 h; any value >= TTL is correct
 # ST8_HOT_EVENTS rows is a bounded, seconds-scale straggler (measured
 # ~0.4 s/M rows), while the chunked bookkeeping costs ~3x per row —
 # worth paying only when a single key outgrows what one task can sort
-# (round-11 A/B at the 20x skew lake: routing 120k-row keys through
-# the chunked path made the skew ratio WORSE, 2.6x vs flat's ~1.5x,
+# (an A/B at the 20x skew lake: routing 120k-row keys through the
+# chunked path made the skew ratio WORSE, 2.6x vs flat's ~1.5x,
 # because at that size the straggler is cheaper than the extra
 # passes; at the 5M-row design point the chunked path wins ~4x and
-# the flat straggler dominates the stage — SCALE.md round-11 table).
+# the flat straggler dominates the stage — SCALE.md's st8 section).
 # The hot-key listing is driver-collected, bounded by
 # ST8_MAX_HOT_KEYS (top keys by count): constant driver traffic at
 # any corpus size; keys past the cap keep the flat path.
@@ -471,9 +469,9 @@ assert ST8_CHUNK_US >= ST8_TTL_US, "st8 chunk must cover the TTL"
 
 
 def _st8_flat(ev: DataFrame) -> DataFrame:
-    """One-window gap sessionization (the r9 rollup-as-filter shape,
-    byte-identical plan to r9/r10 when no hot keys exist): per-key
-    total via an unordered frame over the SAME window exchange."""
+    """One-window gap sessionization (the rollup-as-filter shape, and
+    the whole plan when no hot keys exist): per-key total via an
+    unordered frame over the SAME window exchange."""
     from pyspark.sql import Window
 
     w = Window.partitionBy("user_id", "event_type").orderBy("us", "event_id")
@@ -527,7 +525,7 @@ def _st8_flat(ev: DataFrame) -> DataFrame:
 
 
 def _st8_chunked(ev: DataFrame) -> DataFrame:
-    """Chunked sessionization for HOT keys (VERDICT r10 #5): gap scans
+    """Chunked sessionization for HOT keys: gap scans
     are segmented scans, so they decompose into ONE within-(user,
     type, time-chunk) window pass plus a stitch computed entirely on
     per-chunk summaries (one row per chunk, not per event) — per-task
@@ -722,14 +720,13 @@ def st10_trending(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_trunc("hour", F.col("ts")).alias("hour_start"),
         "event_type",
     ).agg(F.count("*").alias("n"))
-    # r13 (guide §2.3): the hour total rides an UNORDERED window over
-    # the same hour_start partitioning the rank window already
-    # exchanges on — the old groupBy(hour_start)+join re-derived the
-    # hourly aggregate subtree (scan + explode-free but still a second
-    # exchange) and recombined through a join. sum over the partition
-    # == the old per-hour groupBy sum exactly (same long addition over
-    # the same rows; every hour has >= 1 row so the old inner join
-    # never dropped a row either).
+    # The hour total rides an UNORDERED window over the same
+    # hour_start partitioning the rank window already exchanges on; a
+    # groupBy(hour_start)+join would re-derive the hourly aggregate
+    # subtree (a second exchange) and recombine through a join. sum
+    # over the partition equals that per-hour groupBy sum exactly (same
+    # long addition over the same rows; every hour has >= 1 row, so the
+    # inner join would drop no row either).
     w = Window.partitionBy("hour_start").orderBy(
         F.col("n").desc(), F.col("event_type").asc()
     )

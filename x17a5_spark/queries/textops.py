@@ -7,6 +7,7 @@ final small aggregations.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -543,8 +544,6 @@ def t19_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(
         "source", F.explode(tokens(F.lower(F.col("text")))).alias("token")
     )
-    from x17a5_spark.cache import stage_persist
-
     # ONE corpus explode serves both outputs: HLL registers (max rank
     # per register) and the exact count are both functions of the
     # DISTINCT (source, token) set — duplicate occurrences cannot move
@@ -552,7 +551,7 @@ def t19_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist the vocab-sized result. Before: two full explode subtrees,
     # one per consumer, plus countDistinct's expand (guide §2.3
     # aggregate before you shuffle; the t24 c1 discipline).
-    dtk = stage_persist(toks.distinct())
+    dtk = toks.distinct().persist(StorageLevel.MEMORY_AND_DISK)
     h = F.conv(F.substring(F.md5(F.col("token")), 1, 15), 16, 10).cast("long")
     w = F.shiftright(h, T19_P)
     rank = F.lit(53) - F.when(w == 0, F.lit(0)).otherwise(F.length(F.bin(w)))
@@ -652,14 +651,13 @@ def _t27_col(j, token):
 
 
 def t27_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from x17a5_spark.cache import stage_persist
-
     docs = load_table(spark, sf_dir, "documents", fanout=True)
     toks = docs.select(F.explode(tokens(F.lower(F.col("text")))).alias("token"))
     # freq feeds the sketch fan-out AND the top-k probe
     # set — un-persisted, the corpus explode + vocab groupBy ran twice.
-    freq = stage_persist(
+    freq = (
         toks.groupBy("token").agg(F.count("*").alias("true_count"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     fan = freq.select(
         "token",
@@ -825,20 +823,19 @@ T25_K = 5
 
 
 def t25_keyword_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from x17a5_spark.cache import stage_persist
-
     docs = load_table(spark, sf_dir, "documents")
     # tf feeds BOTH the document-frequency aggregate and
     # the scoring join — un-persisted, the corpus explode + (doc, term)
     # groupBy subtree executed twice per run. The table is (doc, term)-
     # grain (Heaps-bounded, far below the token stream), three narrow
     # columns — the cheap side of the cache tradeoff.
-    tf = stage_persist(
+    tf = (
         docs.select(
             "doc_id", F.explode(tokens(F.lower(F.col("text")))).alias("term")
         )
         .groupBy("doc_id", "term")
         .agg(F.count("*").alias("tf"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     n_docs = docs.agg(F.count("*").alias("n")).withColumn("k", F.lit(1))
     df_counts = (
@@ -920,8 +917,8 @@ def t26_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     # instead of a separate totals aggregate — a totals aggregate
     # derives the corpus explode + (source, tok) groupBy subtree TWICE
     # (once for totals, once for the entropy join) and recombines
-    # through two joins. stage_persist(counts) was A/B'd
-    # first and REJECTED (single-JVM interleaved, median-of-9: persisted
+    # through two joins. Persisting `counts` was A/B'd first and
+    # REJECTED (single-JVM interleaved, median-of-9: persisted
     # 1.14 s vs 0.80 s baseline — caching the vocab-scale table costs
     # more than the re-derive saved). The window form runs ONE explode,
     # zero joins: sum(c) over source == the old groupBy sum exactly
@@ -1001,18 +998,17 @@ E8_SEQ_LEN = 512
 
 def e8_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents", fanout=True)
-    from x17a5_spark.cache import stage_persist
-
     # persist the (doc, word) occurrence table: it feeds the vocab
     # (BPE merge chain) AND the final piece-count join — un-persisted
     # the corpus explode+aggregate subtree ran twice (the t24/t19
     # fold discipline, guide §5).
-    occ = stage_persist(
+    occ = (
         docs.select(
             "doc_id", F.explode(tokens(F.lower(F.col("text")))).alias("word")
         )
         .groupBy("doc_id", "word")
         .agg(F.count("*").alias("n_occ"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     vocab = occ.select("word").distinct()
     sym = F.array_join(F.filter(F.split("word", ""), lambda c: c != ""), " ")
@@ -1187,16 +1183,15 @@ T29_GRAM_K = 5
 def t29_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     from x17a5_spark.functions.text import word_shingles
 
-    from x17a5_spark.cache import stage_persist
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    grams = stage_persist(
+    grams = (
         docs.select(
             "doc_id",
             F.explode(
                 F.array_distinct(word_shingles(F.col("text"), T29_GRAM_K))
             ).alias("gram"),
-        ),
+        )
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     firsts = grams.groupBy("gram").agg(F.min("doc_id").alias("first_doc"))
     novel = firsts.groupBy("first_doc").agg(F.count("*").alias("n_novel"))
@@ -1298,22 +1293,17 @@ def t30_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    from x17a5_spark.cache import stage_persist
-
     # persisted: the eval slice (1/23 of docs) feeds BOTH the gram
     # explode and the final full-coverage re-attach (ADVICE r9) —
     # without the persist the re-attach re-scans documents through the
-    # guard projection (the d3 cand_sh stage-table lesson).
-    # Ownership sits with the registry-scoped cache context
-    # (x17a5_spark.cache), not a module global, so a sweep that
-    # constructs t30 and never
-    # materializes it releases the registration like every other
-    # stage cache (tests/test_registry.py asserts the CacheManager is
-    # empty after a full-registry construct-and-release sweep).
-    eval_docs = stage_persist(
+    # guard projection (the d3 cand_sh stage-table lesson). Like every
+    # stage cache it is released with clearCache(), even when a sweep
+    # builds t30 and never materializes it.
+    eval_docs = (
         docs.select(guarded_id.alias("doc_id"), "text").filter(
             F.col("doc_id") % T30_EVAL_MOD == 0
-        ),
+        )
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     # training corpus = originals + perturbed twins, MINUS the eval docs
     # themselves. Half the eval docs' twins are scrubbed too (the

@@ -3,12 +3,12 @@ Textract start/poll/paginate, 100 concurrent jobs, run_ocr.py:112-153).
 
 The engine keeps OCR behind a pluggable ``OcrBackend`` interface and
 runs it as a ``mapInPandas`` stage: each partition owns one backend
-client with bounded in-partition concurrency and retry/backoff, and
-failures land in an error-ledger side channel instead of failing the
-job (S10's ERROR-TEXTRACT.json becomes an ``error`` column feeding a
-quarantine table). Total external concurrency = partitions ×
-``max_concurrency`` — tune by repartitioning, exactly how the reference
-tunes its 100-job batch size.
+client that works through its documents one at a time with
+retry/backoff, and failures land in an error-ledger side channel
+instead of failing the job (S10's ERROR-TEXTRACT.json becomes an
+``error`` column feeding a quarantine table). Total external
+concurrency = partitions — tune by repartitioning, exactly how the
+reference tunes its 100-job batch size.
 
 No AWS dependency is assumed anywhere: ``StubOcrBackend`` provides a
 deterministic fake for tests; a real Textract backend would implement
@@ -28,6 +28,10 @@ OCR_OUTPUT_SCHEMA = (
     "cik string, filing_date string, page int, table_idx int, row_idx int, "
     "col0 string, col1 string, col2 string, confidence double, error string"
 )
+# attempts per document before its error goes to the ledger, and the
+# backoff unit between them (attempt k sleeps k * OCR_BACKOFF_S)
+OCR_MAX_RETRIES = 3
+OCR_BACKOFF_S = 0.0
 
 
 class OcrBackend:
@@ -90,13 +94,9 @@ class OcrSource:
     (cik, filing_date, content)."""
 
     backend_factory: type[OcrBackend] = StubOcrBackend
-    max_retries: int = 3
-    backoff_s: float = 0.0
 
     def run(self, docs: DataFrame) -> DataFrame:
         backend_factory = self.backend_factory
-        max_retries = self.max_retries
-        backoff_s = self.backoff_s
 
         _COLS = [
             "cik",
@@ -130,17 +130,17 @@ class OcrSource:
                     doc_id = f"{cik}-{fdate}"
                     err = None
                     cells: list[dict] = []
-                    for attempt in range(max_retries):
+                    for attempt in range(OCR_MAX_RETRIES):
                         try:
                             job = backend.start(doc_id, content)
                             while not backend.poll(job):
-                                time.sleep(backoff_s)
+                                time.sleep(OCR_BACKOFF_S)
                             cells = backend.fetch(job)
                             err = None
                             break
                         except Exception as e:  # noqa: BLE001 — error ledger
                             err = f"{type(e).__name__}: {e}"
-                            time.sleep(backoff_s * (attempt + 1))
+                            time.sleep(OCR_BACKOFF_S * (attempt + 1))
                     if err is not None:
                         out["cik"].append(cik)
                         out["filing_date"].append(fdate)
