@@ -1,4 +1,4 @@
-"""t34 — frozen model-based document quality filter (VERDICT r12 #5).
+"""t34 — frozen model-based document quality filter.
 
 The FineWeb/DCLM-style gate: a TRAINED classifier applied to every
 corpus document, closing the gap between the hand-crafted heuristics

@@ -51,11 +51,10 @@ def normalized_fingerprint(col: Column | str) -> Column:
     engines (used by exact dedup; the oracle twin is
     ``unicode_fold.norm_fp_sql``).
 
-    Round 12 (VERDICT r11 missing-#1): the fold runs FIRST, so
-    visually-identical NFC/NFD/fullwidth/mojibake twins collapse to
-    one fingerprint instead of escaping d1/d15 — identity on ASCII
-    corpora (every shipped gate lake), so every existing hash gate is
-    unchanged by construction."""
+    The fold runs FIRST, so visually-identical NFC/NFD/fullwidth/
+    mojibake twins collapse to one fingerprint instead of escaping
+    d1/d15 — identity on ASCII corpora (every shipped gate lake), so
+    every existing hash gate is unchanged by construction."""
     from x17a5_spark.functions.unicode_fold import unicode_fold
 
     c = F.col(col) if isinstance(col, str) else col
@@ -68,7 +67,7 @@ def fingerprint_of_folded(col: Column | str) -> Column:
     callers that also need the folded text itself (t33 derives
     ``n_folded`` from it): staging the fold once and fingerprinting
     the staged column avoids running the ~40-replace fold chain twice
-    per row (r13, guide §1.2 per-task work)."""
+    per row (guide §1.2 per-task work)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.md5(F.lower(F.regexp_replace(F.trim(c), r"\s+", " ")))
 

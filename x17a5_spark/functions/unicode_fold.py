@@ -1,6 +1,6 @@
-"""Unicode normalization / encoding-repair fold (round 12, VERDICT r11
-missing-#1): the gate every production LLM-cleaning stack (CCNet,
-Dolma) runs before fingerprinting. Three codegen-expressible layers,
+"""Unicode normalization / encoding-repair fold: the gate every
+production LLM-cleaning stack (CCNet, Dolma) runs before
+fingerprinting. Three codegen-expressible layers,
 derived from ONE set of Python tables interpolated into BOTH engines
 (the d3 md5-constant discipline), so the fold is value-exact
 cross-engine by construction:
@@ -132,7 +132,7 @@ TRANSLATE_FROM = "".join(_FOLD_1TO1) + _DELETE
 TRANSLATE_TO = "".join(_FOLD_1TO1.values())
 
 # pre-repair detection markers (the double-encoding tell-tales).
-# KNOWN FALSE-POSITIVE CLASS (ADVICE r12): single 'Ã'/'Â' are
+# KNOWN FALSE-POSITIVE CLASS: single 'Ã'/'Â' are
 # legitimate codepoints in well-formed Portuguese / Vietnamese /
 # French text ("Ângela", "IRMÃ"), so had_mojibake means "contains a
 # double-encoding MARKER", not "double-encoding proven". The flag is
@@ -158,7 +158,7 @@ def _sq(s: str) -> str:
 def unicode_fold(col: Column | str) -> Column:
     """The full fold as built-in column expressions (codegen'd).
 
-    ASCII fast path (round 12, result-preserving): every FOLD_SEQ
+    ASCII fast path (result-preserving): every FOLD_SEQ
     pattern and every translate source char is non-ASCII, so pure
     ASCII text is a FIXED POINT of the fold — detected in O(1)+O(n)
     JVM work as ``octet_length == length`` (UTF-8 bytes == chars iff
@@ -187,8 +187,8 @@ def unicode_fold_sql(expr: str) -> str:
 
 def norm_fp_sql(expr: str = "text") -> str:
     """The DuckDB twin of ``text.normalized_fingerprint`` — ONE
-    builder for every oracle that spells the fingerprint (10 sites
-    before round 12 hand-spelled the pre-fold form)."""
+    builder for every oracle that spells the fingerprint, so no oracle
+    can hand-spell a form that skips the fold."""
     return (
         f"md5(lower(regexp_replace(trim({unicode_fold_sql(expr)}),"
         f" '\\s+', ' ', 'g')))"

@@ -154,23 +154,21 @@ def build_structured_liabilities(
     base = _row_sum_except(labels, [TOTAL_LE])
     tl = F.coalesce(F.col(f"`{TOTAL_L}`"), F.lit(0.0)) if TOTAL_L in labels else F.lit(0.0)
     te = F.coalesce(F.col(f"`{TOTAL_E}`"), F.lit(0.0)) if TOTAL_E in labels else F.lit(0.0)
-    out = (
-        piv.withColumn("recon_total_le", base)
-        .withColumn("recon_total_le_less_liab", base - tl)
-        .withColumn("recon_total_le_less_equity", base - te)
-        .withColumn("recon_total_le_less_both", base - tl - te)
-    )
+    # one withColumns per dependent layer: each DataFrame op re-analyzes
+    # the whole plan, so 8 withColumn calls cost 8 analysis passes
+    recons = {
+        "recon_total_le": base,
+        "recon_total_le_less_liab": base - tl,
+        "recon_total_le_less_equity": base - te,
+        "recon_total_le_less_both": base - tl - te,
+    }
     reported = F.col(f"`{TOTAL_LE}`")
-    for i, c in enumerate(
-        [
-            "recon_total_le",
-            "recon_total_le_less_liab",
-            "recon_total_le_less_equity",
-            "recon_total_le_less_both",
-        ],
-        start=1,
-    ):
-        out = out.withColumn(f"relative_error{i}", _relative_error(F.col(c), reported))
+    out = piv.withColumns(recons).withColumns(
+        {
+            f"relative_error{i}": _relative_error(F.col(c), reported)
+            for i, c in enumerate(recons, start=1)
+        }
+    )
     best = F.least(
         *[F.col(f"relative_error{i}") for i in range(1, 5)]
     )

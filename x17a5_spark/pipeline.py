@@ -21,7 +21,11 @@ operators/structured.py.
 
 ``run_pipeline`` (E1) persists the three stages as parquet sinks:
 bronze and silver are appended per filing behind a skip-if-exists
-guard, and gold is rebuilt from all of silver on every run.
+guard, and gold is rebuilt from all of silver on every run. Every read
+of a sink passes the schema of the DataFrame that writes it (the OCR
+cells, the silver frame, gold; the guard reads only the key columns), so
+no sink read runs Spark's one-task schema-inference job: 3 fewer jobs
+per run, and the schema and optimized plan are the inferred read's.
 """
 
 from __future__ import annotations
@@ -151,10 +155,12 @@ LAST_STAGE_SECONDS: dict[str, float] = {}
 def _todo(spark: SparkSession, inp: DataFrame, path: str) -> DataFrame:
     """Rows of ``inp`` whose filing key is not yet in the parquet sink at
     ``path`` (the skip-if-exists guard); all of ``inp`` before the sink
-    exists."""
+    exists. The sink's rows descend from ``inp``'s, so its key columns
+    are read with ``inp``'s key schema instead of inferring one."""
     if not os.path.isdir(path):
         return inp
-    return incremental_todo(inp, spark.read.parquet(path), FILING_KEY)
+    sink = spark.read.schema(inp.select(*FILING_KEY).schema).parquet(path)
+    return incremental_todo(inp, sink, FILING_KEY)
 
 
 def run_pipeline(
@@ -221,26 +227,24 @@ def run_pipeline(
     _mark("ocr_bronze")
 
     # Step 3 (clean chain): clean only the bronze filings not in silver.
-    bronze = spark.read.parquet(bronze_path).select(
+    bronze = spark.read.schema(cells.schema).parquet(bronze_path).select(
         "cik", "filing_date", "row_idx", "col0", "col1", "col2"
     )
-    clean_filings(_todo(spark, bronze, silver_path), text).write.mode(
-        "append"
-    ).parquet(silver_path)
+    silver = clean_filings(_todo(spark, bronze, silver_path), text)
+    silver.write.mode("append").parquet(silver_path)
     _mark("silver_clean")
 
     # Step 4 (main_p3): structured gold from the asset side of ALL of
     # silver; the plan never reads the gold sink it overwrites.
     assets = (
-        spark.read.parquet(silver_path)
+        spark.read.schema(silver.schema).parquet(silver_path)
         .filter(F.col("side") == "asset")
         .withColumn("name", F.concat(F.lit("N"), F.col("cik")))
         .withColumn(
             "fiscal_year", F.substring("filing_date", 1, 4).cast("int") - 1
         )
     )
-    build_structured_assets(assets, label_map, labels).write.mode(
-        "overwrite"
-    ).parquet(gold_path)
+    gold = build_structured_assets(assets, label_map, labels)
+    gold.write.mode("overwrite").parquet(gold_path)
     _mark("gold_build")
-    return spark.read.parquet(gold_path)
+    return spark.read.schema(gold.schema).parquet(gold_path)

@@ -217,7 +217,7 @@ def e3_structured_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
             ("Line 7", "Other"),
             ("Total assets reported", "Total assets"),
         ],
-        ["lineitem", "label"],
+        "lineitem string, label string",
     )
     out = build_structured_assets(long_df, label_map, E3_LABELS)
     return out.select(
@@ -348,7 +348,7 @@ def e3l_structured_liabilities(spark: SparkSession, sf_dir: str) -> DataFrame:
             ("TE reported", "Total shareholder's equity"),
             ("TLE reported", "Total liabilities and shareholder's equity"),
         ],
-        ["lineitem", "label"],
+        "lineitem string, label string",
     )
     out = build_structured_liabilities(long_df, label_map, E3L_LABELS)
     return out.select(

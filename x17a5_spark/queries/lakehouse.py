@@ -668,11 +668,11 @@ def j14_pit_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "version",
         F.sum("chg").over(w.rowsBetween(Window.unboundedPreceding, 0)),
     )
-    # per-run rollup as a FILTER, not a groupBy (round 9, VERDICT r8 #3):
-    # the chg=1 row is the run's first event, which carries the run's
-    # state and minimum us by construction — the old
-    # agg(min(state), min(us)) planned a SortAggregate (string min) over
-    # the full event stream; this is the j12 rewrite applied here
+    # per-run rollup as a FILTER, not a groupBy: the chg=1 row is the
+    # run's first event, which carries the run's state and minimum us by
+    # construction, while agg(min(state), min(us)) plans a SortAggregate
+    # (string min) over the full event stream; this is the j12 rewrite
+    # applied here
     per_run = runs.filter(F.col("chg") == 1).select(
         "user_id",
         "version",
@@ -788,10 +788,10 @@ def v2_profile_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ]
     stats = orders.agg(*aggs)
-    # r13: building each per-column row as ``stats.select(...)`` and
-    # unioning referenced the un-persisted aggregate THREE times, so
-    # Catalyst replicated the whole scan+fanout+aggregate subtree per
-    # column (before-plan: 3 parquet scans + 3 countDistinct expands).
+    # Building each per-column row as ``stats.select(...)`` and
+    # unioning would reference the un-persisted aggregate THREE times, so
+    # Catalyst would replicate the whole scan+fanout+aggregate subtree per
+    # column (3 parquet scans + 3 countDistinct expands).
     # The rows are pure column math on the single stats row — fold them
     # into ONE struct array exploded in place (the a27 discipline,
     # guide §7.2 duplicated subtrees). Row order (V2_COLS order) is

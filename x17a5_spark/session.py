@@ -5,6 +5,17 @@ cluster: AQE on (runtime re-planning, skew-join splitting, partition
 coalescing), Arrow for the pandas-UDF kernels, UTC session timezone so
 results compare bit-for-bit against the DuckDB oracle, and shuffle
 partitions sized by ``SPARK_GRAFT_CPUS`` rather than the 200 default.
+
+PySpark's DataFrame call-site capture is off
+(``spark.python.sql.dataFrameDebugging.enabled=false``). With it on,
+every ``F.*`` function and ``Column`` method walks the Python stack and
+sends the call site to the JVM, several py4j round trips per call:
+building e3's plan takes about 1,330 round trips with it and about 500
+without. The setting belongs in the builder because pyspark reads it
+once per process, from the first active session, and caches it. The cost
+is in error messages only: an analysis or runtime error keeps its error
+class and message but loses the Python ``file:line`` of the DataFrame
+call that built the failing expression.
 """
 
 from __future__ import annotations
@@ -36,6 +47,7 @@ def get_spark(app_name: str = "x17a5_spark", shuffle_partitions: int | None = No
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     # A long-lived driver running the full registry compiles thousands
     # of whole-stage-codegen classes, and the JVM's default reserved

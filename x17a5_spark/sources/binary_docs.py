@@ -44,7 +44,7 @@ def slice_pages(
     Engine ladder inside each Arrow batch: pypdf when importable (full
     PDF spec), else the vendored pure-Python slicer
     (sources/pdf_mini.py — handles content streams opaquely, FlateDecode
-    object streams, nested page trees, and — round 9 — empty-user-
+    object streams, nested page trees, and empty-user-
     password encryption via the standard security handler, RC4-40/128,
     AES-128 and AES-256; declines genuinely passworded or broken
     files), else pass-through — so the operator does real work with
@@ -57,7 +57,7 @@ def slice_pages(
     ``short`` (already within the bound, bytes untouched),
     ``short-decrypted`` (within the bound but the file was encrypted:
     re-serialized as plaintext so every decryptable output is readable
-    downstream, ADVICE r9) or
+    downstream) or
     ``passthrough:<reason>`` (bytes untouched; reason ``encrypted`` =
     the standard handler could not open it with the empty user
     password — a real password or a non-Standard filter —
@@ -65,9 +65,10 @@ def slice_pages(
     stream, ``not-pdf``, ``broken``, or ``error`` on the pypdf path) —
     so a pipeline can QUANTIFY how much of its corpus kept the page
     bound, and audits can separate "encrypted" from
-    "codec-unsupported" (ADVICE r5/r6, round-7 VERDICT #8). The
-    sliced/short decision comes from the slicer's explicit page-count
-    status, never byte equality (round-7 VERDICT #5).
+    "codec-unsupported". The sliced/short decision comes from the
+    slicer's explicit page-count status, never byte equality: a slicer
+    that re-serializes an unchanged-page-count file would otherwise be
+    reported as "sliced".
     """
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

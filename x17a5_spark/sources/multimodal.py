@@ -483,9 +483,9 @@ def sample_frames(
         for pdf in batches:
             # per-media box walk stays a Python loop (the decode is the
             # operator under test); the per-FRAME fan-out is numpy
-            # (r13, guide §4.2) — the old inner loop appended one row
-            # per sampled frame in interpreted Python (~35 frames per
-            # media at the fixture durations).
+            # (guide §4.2) rather than one interpreted-Python row append
+            # per sampled frame (~35 frames per media at the fixture
+            # durations).
             ok_ids, ok_ns, err_ids, err_msgs = [], [], [], []
             for media_id, content in zip(pdf["media_id"], pdf[content_col]):
                 try:

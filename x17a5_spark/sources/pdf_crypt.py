@@ -6,9 +6,8 @@ Security Handler", Algorithms 2-5).
 Why: the overwhelming majority of "encrypted" regulatory filings are
 owner-password-only — the spec derives the file key from the USER
 password, and an empty user password is recoverable by construction —
-so a slicer that declines every ``/Encrypt`` file (the pre-round-9
-behavior, VERDICT r8 "What's missing #1") passes through a corpus
-slice that the reference's pypdf-backed slicer
+so a slicer that declines every ``/Encrypt`` file passes through a
+corpus slice that the reference's pypdf-backed slicer
 (FocusReportSlicing.py:78-109) handles. Genuinely user-passworded
 files still decline: :func:`authenticate_empty_user` verifies the
 derived key against ``/U`` before any decryption happens.

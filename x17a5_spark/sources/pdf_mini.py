@@ -2,12 +2,11 @@
 sources/binary_docs.slice_pages, reference FocusReportSlicing.py:78-109,
 when pypdf is absent from the container).
 
-Round-7 rewrite: the round-6 version refused any object containing a
-``stream`` keyword, so virtually every production PDF passed through
-UNSLICED on the zero-dependency path. This version parses the object
-graph for real while copying stream payloads OPAQUELY — only the page
-tree needs understanding, the content/image/font streams are moved as
-bytes:
+A slicer that refuses any object containing a ``stream`` keyword passes
+virtually every production PDF through UNSLICED on the zero-dependency
+path. This one parses the object graph for real while copying stream
+payloads OPAQUELY — only the page tree needs understanding, the
+content/image/font streams are moved as bytes:
 
 - sequential object scanner that skips ``stream .. endstream`` payloads
   by their declared ``/Length`` (delimiter scan when the length is an
@@ -247,7 +246,7 @@ def _dict_value(body: bytes, key: bytes) -> bytes | None:
 
 
 # --------------------------------------------------------------------------
-# PDF string parsing + standard-security-handler decryption (round 9)
+# PDF string parsing + standard-security-handler decryption
 # --------------------------------------------------------------------------
 
 _LIT_ESCAPES = {
@@ -706,8 +705,7 @@ def _parse(content: bytes):
     password — a real password or a non-Standard filter) /
     ``objstm-filter`` (page tree likely inside a codec-unsupported
     object stream) / ``broken``. Empty-user-password RC4 / AES-128 /
-    AES-256 files are decrypted here and parse like plaintext
-    (round 9)."""
+    AES-256 files are decrypted here and parse like plaintext."""
     if not content.startswith(b"%PDF"):
         return None, "not-pdf"
     encrypted = _ENCRYPT_RE.search(content) is not None
@@ -750,9 +748,9 @@ def slice_pdf_first_pages(content: bytes, max_pages: int) -> bytes | None:
 
 def slice_pdf(content: bytes, max_pages: int) -> tuple["bytes | None", str]:
     """First-``max_pages`` subset with an EXPLICIT status, never
-    inferred from byte equality (round-7 VERDICT hardening: if the
-    slicer ever re-serializes an unchanged-page-count file, a
-    byte-equality caller would silently misreport it as "sliced").
+    inferred from byte equality (if the slicer ever re-serializes an
+    unchanged-page-count file, a byte-equality caller would silently
+    misreport it as "sliced").
 
     Returns ``(bytes, "sliced")`` on a real truncation,
     ``(content, "short")`` when a PLAINTEXT file's page count is

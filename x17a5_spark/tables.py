@@ -5,13 +5,22 @@ documents embeddings (see TESTDATA.md). On a production lake these would
 be partitioned bronze tables; here each is a single parquet file. The
 loader is schema-on-read (parquet carries the schema) so Catalyst gets
 full pushdown/pruning through every query in ``__spark_entry__``.
+
+The schema is read from the file once per file version, not once per
+load: ``_FILE_META`` keeps, per (path, mtime_ns, size) of a plain file,
+the schema of its first inferred read and its row-group count, and later
+loads of the same version pass that schema to the reader. A rewritten
+file has a new version and is inferred again; a directory always is.
 """
 
 from __future__ import annotations
 
 import os
+import stat
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLE_NAMES = (
     "region",
@@ -35,10 +44,56 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 BROADCAST_SAFE = {"region", "nation"}
 
 
-# (path, mtime_ns, size) -> (row-group count, size) for the small-scan
-# remedy below (footer read once per file version per process; None =
-# not a single plain parquet file).
-_ROW_GROUP_CACHE: dict[tuple[str, int, int], int | None] = {}
+class _FileMeta(NamedTuple):
+    schema: StructType
+    row_groups: int | None
+
+
+# File version (path, mtime_ns, size) -> the Spark schema of the first
+# inferred read and the parquet row-group count, for plain files only.
+# Keyed by version, so a rewritten file misses and is inferred afresh.
+_FILE_META: dict[tuple[str, int, int], _FileMeta] = {}
+
+
+def _file_version(path: str) -> tuple[str, int, int] | None:
+    """(path, mtime_ns, size) of a plain file; None for a directory or
+    a missing path, which are read with schema inference every time."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not stat.S_ISREG(st.st_mode):
+        return None
+    return (path, st.st_mtime_ns, st.st_size)
+
+
+def _row_groups(path: str) -> int | None:
+    """Row-group count from the parquet footer; None when pyarrow cannot
+    read the file as parquet."""
+    import pyarrow.parquet as pq
+
+    try:
+        return pq.ParquetFile(path).metadata.num_row_groups
+    except (OSError, ValueError):
+        return None
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without the schema-inference job on
+    every load. Inference runs a one-task Spark job (about 0.13 s per
+    warm load at sf0.001 on 4 vCPUs, against 0.025 s and no job with
+    the schema given), and a query loads each of its tables afresh. The
+    first read of a file version infers and records its schema; later
+    reads of the same version pass it in, which gives an equal schema
+    and the same optimized plan."""
+    key = _file_version(path)
+    meta = _FILE_META.get(key) if key is not None else None
+    if meta is not None:
+        return spark.read.schema(meta.schema).parquet(path)
+    df = spark.read.parquet(path)
+    if key is not None:
+        _FILE_META[key] = _FileMeta(df.schema, _row_groups(path))
+    return df
 
 
 def _scan_fanout(spark: SparkSession, path: str) -> int | None:
@@ -66,28 +121,15 @@ def _scan_fanout(spark: SparkSession, path: str) -> int | None:
     tables stay single-partition so broadcast plans are untouched).
     At production scale a 100 TB table has millions of row groups, this
     returns None, and the loader adds nothing — the remedy is strictly
-    a small-file/local-mode fix, not a standing shuffle.
+    a small-file/local-mode fix, not a standing shuffle. The row-group
+    count comes from the footer read that ``_read_parquet`` recorded.
     """
-    try:
-        st = os.stat(path)
-        key = (path, st.st_mtime_ns, st.st_size)
-    except OSError:
-        return None
-    if key not in _ROW_GROUP_CACHE:
-        n_rg: int | None = None
-        try:
-            if os.path.isfile(path):
-                import pyarrow.parquet as pq
-
-                n_rg = pq.ParquetFile(path).metadata.num_row_groups
-        except Exception:
-            n_rg = None
-        _ROW_GROUP_CACHE[key] = n_rg
-    n_rg = _ROW_GROUP_CACHE[key]
-    if n_rg is None:
+    key = _file_version(path)
+    meta = _FILE_META.get(key) if key is not None else None
+    if meta is None or meta.row_groups is None:
         return None
     cores = spark.sparkContext.defaultParallelism
-    if n_rg < max(cores // 2, 2) and 200_000 <= st.st_size <= (1 << 30):
+    if meta.row_groups < max(cores // 2, 2) and 200_000 <= key[2] <= (1 << 30):
         return cores
     return None
 
@@ -173,7 +215,7 @@ def load_table(
     if name == "events":
         df = _load_events(spark, path)
     else:
-        df = spark.read.parquet(path)
+        df = _read_parquet(spark, path)
     if fanout:
         n = _scan_fanout(spark, path)
         if n is not None:
@@ -193,8 +235,10 @@ def _load_events(spark: SparkSession, path: str):
     """
     from pyspark.sql import functions as F
 
+    # set before any read, so the schema ``_read_parquet`` records (ts
+    # as bigint) is the one every later read of the file gets
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
+    df = _read_parquet(spark, path)
     if dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
     return df
