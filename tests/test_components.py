@@ -3,6 +3,8 @@ multi-round propagation on chains, star merges, singleton handling."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 import pytest
@@ -196,3 +198,23 @@ def test_cc_star_matches_loop_on_d6_fixture(spark):
     loop = {r.id: r.comp for r in connected_components(edges, "src", "dst").collect()}
     star = {r.id: r.comp for r in cc_star(edges, "src", "dst").collect()}
     assert star == loop and len(star) > 0
+
+
+def _local_checkpoints(spark) -> set[int]:
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()
+    return {int(k) for k in rdds.keySet() if rdds.get(k).rdd().isLocallyCheckpointed()}
+
+
+@pytest.mark.parametrize("query", ["d6_dedup_components", "d17_cc_star_chain"])
+def test_build_keeps_only_the_final_local_checkpoint(spark, query):
+    # every superseded round's checkpoint is unpersisted during the build;
+    # the one left is the checkpoint the returned plan reads
+    from x17a5_spark.queries import dedup
+    from x17a5_spark.tables import DEFAULT_SF_DIR
+
+    sf_dir = os.path.join(os.path.dirname(DEFAULT_SF_DIR), "sf0.001")
+    before = _local_checkpoints(spark)
+    df = getattr(dedup, query)(spark, sf_dir)
+    new = _local_checkpoints(spark) - before
+    assert len(new) == 1, new
+    assert df.count() > 0

@@ -3,13 +3,17 @@ idempotence (a rerun adds no bronze or silver rows), true
 incrementality (a new filing is the ONLY thing the rerun OCRs and
 cleans), and convergence: after an amended or late filing, a flaky or
 key-dropping OCR backend, or a crash between stages, the next run's gold
-equals a clean single run's. Plus the U6 wide unstructured build
+equals a clean single run's, also when a Python worker dies mid-task
+and Spark reruns the task. Plus the U6 wide unstructured build
 (DatabaseUnstructured.py:291-348): allowlist pivot, id-cols-first
 ordering, all-null column pruning.
 """
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
 from collections import Counter
 
 import pytest
@@ -285,3 +289,65 @@ def test_crash_between_bronze_and_silver_converges(
     assert spark.read.parquet(out + "/bronze_cells").count() > 0
     _run(spark, out, FILINGS)
     _assert_converged(spark, out, clean_gold)
+
+
+class ExitsOnceOn102(StubOcrBackend):
+    """Kills its Python worker the first time it fetches CIK 102's
+    document; the marker file lets the task's rerun read it."""
+
+    def __init__(self, marker: str):
+        super().__init__()
+        self.marker = marker
+
+    def fetch(self, job_id):
+        if job_id.startswith("job-102-") and not os.path.exists(self.marker):
+            open(self.marker, "w").close()
+            os._exit(1)
+        return super().fetch(job_id)
+
+
+# local[2,2] lets each task fail once and rerun; the shared session's
+# local[n] fails the job on the first task failure
+_RETRY_SCRIPT = """
+import sys
+from functools import partial
+
+from pyspark.sql import SparkSession
+
+_master = SparkSession.Builder.master
+SparkSession.Builder.master = lambda self, _m: _master(self, "local[2,2]")
+
+import test_pipeline_e1 as t
+from x17a5_spark.session import get_spark
+
+spark = get_spark("e1_task_retry", shuffle_partitions=8)
+out, marker = sys.argv[1], sys.argv[2]
+t._run(spark, out, t.FILINGS, backend=partial(t.ExitsOnceOn102, marker))
+print("MASTER", spark.sparkContext.master)
+"""
+
+
+def test_task_retry_after_worker_crash_converges(spark, tmp_path, clean_gold):
+    """(f) The OCR task whose worker exits is rerun on a fresh worker and
+    the run's gold equals a clean run's, with no ledger row for 102."""
+    out = str(tmp_path / "lake")
+    marker = str(tmp_path / "crashed_once")
+    tests_dir = os.path.dirname(os.path.abspath(__file__))
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in (os.path.dirname(tests_dir), tests_dir, env.get("PYTHONPATH")) if p
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", _RETRY_SCRIPT, out, marker],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert "MASTER local[2,2]" in proc.stdout
+    assert os.path.exists(marker)
+    _assert_converged(spark, out, clean_gold)
+    ledger = spark.read.parquet(out + "/ocr_errors").collect()
+    assert "102" not in {r.cik for r in ledger}

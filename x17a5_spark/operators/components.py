@@ -26,7 +26,10 @@ O(log^2 n) rounds at the cost of two extra shuffles per round.
 
 Each round truncates plan lineage with ``localCheckpoint`` so the
 iterative plan doesn't grow unboundedly; on a cluster, swap for
-``checkpoint`` to a reliable store (same API, fault-tolerant).
+``checkpoint`` to a reliable store (same API, fault-tolerant). Spark's
+CacheManager does not own local checkpoints, so ``clearCache()`` never
+frees them: each round unpersists the checkpoint the next round's eager
+checkpoint supersedes, and only the returned plan's checkpoint is left.
 
 :func:`cc_star` is the alternating large-star/small-star contraction
 itself (Kiveris et al., SoCC'14), and :func:`connected_components`
@@ -50,6 +53,12 @@ def _symmetrize(edges: DataFrame, src: str, dst: str) -> DataFrame:
         .filter(F.col("u") != F.col("v"))
         .distinct()
     )
+
+
+def _unpersist_checkpoint(df: DataFrame) -> None:
+    """Free the blocks of ``df``, a ``localCheckpoint`` result whose
+    plan nothing reads any more."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
 def _propagate(sym: DataFrame, labels: DataFrame) -> DataFrame:
@@ -167,7 +176,9 @@ def cc_star(
     for _ in range(max_rounds):
         nxt = _small_star(_large_star(cur)).localCheckpoint(eager=True)
         nsig = _edge_sig(nxt)
-        if nsig == sig and nxt.exceptAll(cur).isEmpty():
+        converged = nsig == sig and nxt.exceptAll(cur).isEmpty()
+        _unpersist_checkpoint(cur)
+        if converged:
             return (
                 nxt.select(F.col("u").alias("id"), F.col("v").alias("comp"))
                 .unionByName(
@@ -204,7 +215,7 @@ def connected_components(
     stopping the pipeline.
     """
     sym = _symmetrize(edges, src, dst).localCheckpoint(eager=True)
-    labels = (
+    labels = ckpt = (
         sym.select(F.col("u").alias("id"))
         .distinct()
         .withColumn("comp", F.col("id"))
@@ -213,10 +224,15 @@ def connected_components(
     for _ in range(max_rounds):
         first = _propagate(sym, labels).drop("_changed")
         updated = _propagate(sym, first).localCheckpoint(eager=True)
+        _unpersist_checkpoint(ckpt)
+        ckpt = updated
         changed = not updated.filter(F.col("_changed")).isEmpty()
         labels = updated.drop("_changed")
         if not changed:
+            _unpersist_checkpoint(sym)
             return labels
+    _unpersist_checkpoint(ckpt)
+    _unpersist_checkpoint(sym)
     return cc_star(edges, src, dst)
 
 

@@ -30,15 +30,21 @@ bisect/subtotals tail); it runs on this path over the chain's own
 filing-key exchange (``pipeline._silver_purge``), whose width and keys
 equal its repartition, so Spark drops the repartition.
 
-Every Python task also pays a fixed cost, whatever its rows: measured
-on a 4-vCPU host, 17 trivial ``mapInPandas`` tasks took 1.0-1.3 s
-against 0.1-0.2 s for the same JVM projection, about 0.18 s of
-Python-worker CPU per task. The cause is pyspark's per-task
-``setup_spark_files``, which calls ``importlib.invalidate_caches()``;
-on Python 3.11 that makes each cached zipimporter (about 16 per
-worker) re-read the 1,328-entry directory of ``pyspark.zip``. A stage
-that Spark's built-in functions can express therefore runs as a JVM
-pass, and a kernel runs on as few tasks and stages as its width allows.
+Every Python task also pays a fixed cost, whatever its rows. Measured
+on a 4-vCPU host, 17 trivial ``mapInPandas`` tasks take 0.41-0.73 s
+against 0.10-0.33 s for the same JVM projection. Part of it is
+pyspark's per-task ``setup_spark_files``, which calls
+``importlib.invalidate_caches()``; on Python 3.11 that makes each
+cached zipimporter re-read its archive's directory. Workers start on
+the installed pyspark (``session.py``, ``x17a5_pyspark_daemon``), so
+the only zip left on their path is the 66-entry package zip that
+``tables._ship_package`` adds: ``invalidate_caches()`` takes
+0.0003-0.0007 s with it and 0.00003-0.00006 s without it. With
+Spark's default worker path (17 zip and jar importers, among them the
+1,328-entry ``pyspark.zip``) it took 0.14-0.25 s, and the 17 tasks
+took 1.40-2.27 s. A stage that Spark's built-in functions can express
+still runs as a JVM pass, and a kernel runs on as few tasks and stages
+as its width allows.
 """
 
 from __future__ import annotations

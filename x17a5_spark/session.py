@@ -16,6 +16,24 @@ once per process, from the first active session, and caches it. The cost
 is in error messages only: an analysis or runtime error keeps its error
 class and message but loses the Python ``file:line`` of the DataFrame
 call that built the failing expression.
+
+Python workers import the site-packages pyspark, not Spark's zips.
+``spark.python.daemon.module`` names ``x17a5_pyspark_daemon`` and
+``spark.executorEnv.PYTHONPATH`` puts its directory,
+``x17a5_spark/_worker/``, on the workers' path. Spark starts the worker
+daemon with ``pyspark.zip``, the py4j zip and the spark-core jar at the
+front of ``PYTHONPATH``, and every task's ``setup_spark_files`` calls
+``importlib.invalidate_caches()``, which makes each cached zipimporter
+re-read its archive's directory. The daemon drops those three entries
+from ``sys.path`` and ``sys.path_importer_cache`` before it imports
+pyspark, so no task pays that re-read. It does so only when the worker
+interpreter's installed pyspark has the version of the dropped
+``pyspark.zip``. If there is no installed pyspark, or the versions
+differ, it keeps Spark's default path and runs like ``pyspark.daemon``.
+The version check runs in the worker, because ``PYSPARK_PYTHON`` may
+name another interpreter than the driver's. On a cluster the module's
+directory must exist at the same path on every executor, as it does for
+a package installed there.
 """
 
 from __future__ import annotations
@@ -23,6 +41,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# no __init__.py, so importing the daemon never imports this package
+_WORKER_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_worker")
 
 
 def get_spark(app_name: str = "x17a5_spark", shuffle_partitions: int | None = None) -> SparkSession:
@@ -48,6 +69,8 @@ def get_spark(app_name: str = "x17a5_spark", shuffle_partitions: int | None = No
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        .config("spark.python.daemon.module", "x17a5_pyspark_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _WORKER_DIR)
     )
     # A long-lived driver running the full registry compiles thousands
     # of whole-stage-codegen classes, and the JVM's default reserved
