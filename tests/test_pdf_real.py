@@ -225,8 +225,8 @@ def test_out_of_subset_returns_none():
 
 def test_slice_pages_spark_path_with_real_streams(spark, tmp_path):
     """End-to-end through the mapInPandas operator: a stream-bearing
-    PDF in a binaryFile corpus comes out truncated on the no-pypdf
-    path (the container has no pypdf, so this IS the vendored engine)."""
+    PDF in a binaryFile corpus comes out truncated (the vendored
+    slicer is slice_pages' only engine)."""
     from x17a5_spark.sources.binary_docs import read_document_corpus, slice_pages
 
     (tmp_path / "885639-2020-02-28.pdf").write_bytes(_flat_pdf_with_streams(30))

@@ -264,17 +264,19 @@ def test_silver_kernels_keep_explicit_width(spark):
     from coalescing a byte-small corpus onto one task (measured:
     silver_clean 100.6 s -> 15.6 s at sf0.1); the single exchange is
     what keeps the chain's stage and Python-task count low. The
-    conjoined-row split is a JVM pass, so the bisect/subtotals tail is
-    the chain's only Python kernel, batched as MapInPandas over
-    key-sorted partitions (grouped_kernel, measured 2.2x over per-group
-    FlatMapGroupsInPandas)."""
+    conjoined-row split and the unit-scale match are JVM passes, so the
+    bisect/subtotals tail is the chain's only Python stage, batched as
+    MapInPandas over key-sorted partitions (grouped_kernel, measured
+    2.2x over per-group FlatMapGroupsInPandas)."""
     from x17a5_spark.operators.kernel_part import kernel_width
     from x17a5_spark.pipeline import clean_filings
     from x17a5_spark.queries.domain import e2_clean_pipeline
 
     plan = _plan(e2_clean_pipeline(spark, SF))
     assert plan.count("MapInPandas") == 1, plan.count("MapInPandas")
-    for node in ("InMemoryRelation", "Union", "FlatMapGroupsInPandas"):
+    for node in (
+        "InMemoryRelation", "Union", "FlatMapGroupsInPandas", "ArrowEvalPython",
+    ):
         assert node not in plan, node
     # e2 plants one constant filing_date, which the optimizer folds into
     # the hash keys and drops from the window keys; every explicit
@@ -312,6 +314,17 @@ def test_silver_kernels_keep_explicit_width(spark):
     assert "filing_date#" in exchanges[0] and f", {width})" in exchanges[0]
     assert sum("MapInPandas" in l for l in path) == 1
     assert sum("Window" in l for l in path) >= 3
+
+
+def test_k5_unit_scale_runs_no_python(spark):
+    """The scale-word match is a Spark expression (levenshtein inside
+    ``exists``), so unit scaling plans no Python node at all."""
+    from x17a5_spark.queries.domain import k5_unit_scale
+
+    plan = _plan(k5_unit_scale(spark, SF))
+    for node in ("ArrowEvalPython", "BatchEvalPython", "InPandas"):
+        assert node not in plan, node
+    assert "levenshtein" in plan
 
 
 def test_kernel_width_never_equals_session_shuffle_width(spark):

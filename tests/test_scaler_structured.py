@@ -5,6 +5,8 @@ SURVEY §5.1)."""
 
 from __future__ import annotations
 
+import random
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -14,7 +16,12 @@ from x17a5_spark.operators.structured import (
     build_structured_assets,
     build_structured_liabilities,
 )
-from x17a5_spark.operators.scaler import detect_unit_scale
+from x17a5_spark.operators.scaler import (
+    SCALE_WORDS,
+    _line_scale_py,
+    detect_unit_scale,
+    line_scale,
+)
 
 
 def test_detect_unit_scale(spark):
@@ -59,6 +66,51 @@ def test_scale_priority_order(spark):
     )
     out = detect_unit_scale(text).first()
     assert out["scale"] == 1e3
+
+
+def _edits(word: str, rng: random.Random, n: int) -> str:
+    """``word`` after ``n`` random single-character edits (insert,
+    delete or substitute), drawing letters mostly from the scale words
+    so that near-misses keep their subsequence structure."""
+    letters = "thousandmilbr" + "xz)(.İßςΣK"
+    for _ in range(n):
+        i = rng.randrange(len(word) + 1)
+        op = rng.choice("ids") if word else "i"
+        if op == "i":
+            word = word[:i] + rng.choice(letters) + word[i:]
+        elif i < len(word):
+            word = word[:i] + (rng.choice(letters) if op == "s" else "") + word[i + 1:]
+    return word
+
+
+def test_line_scale_matches_difflib_reference(spark):
+    """The closed-form Column rule equals the difflib reference
+    ``_line_scale_py`` line for line: the FIDELITY typos, 1- and 2-edit
+    neighbours of each scale word, empty tokens from doubled spaces,
+    null and empty lines, and characters whose lower case differs in
+    length or context (dotted capital I, sharp s, final sigma, the
+    Kelvin sign). All lines go through one DataFrame and one collect."""
+    rng = random.Random(17)
+    words = [w for w, _ in SCALE_WORDS] + ["million", "millions)", "Thousnds", "Millons"]
+    pool = words + ["in", "Dollars", "(in", "İn", "ß", "ΟΔΟΣ", "Kelvin", "", "net"]
+    lines = ["", " ", "  thousands", "Dollars in Thousnds", "Expressed in Millons"]
+    for _ in range(2500):
+        toks = []
+        for _ in range(rng.randint(1, 5)):
+            tok = rng.choice(pool)
+            if tok in words and rng.random() < 0.7:
+                tok = _edits(tok, rng, rng.choice((1, 1, 2)))
+            toks.append(tok.upper() if rng.random() < 0.2 else tok)
+        lines.append(" ".join(toks))
+    rows = [(i, line) for i, line in enumerate(lines)] + [(len(lines), None)]
+    df = spark.createDataFrame(rows, "i int, line_text string")
+    got = dict(df.select("i", line_scale(F.col("line_text"))).collect())
+    want = [_line_scale_py(line) for line in lines] + [None]
+    mismatches = [(lines[i], got[i], w) for i, w in enumerate(want[:-1]) if got[i] != w]
+    assert not mismatches, mismatches[:10]
+    assert got[len(lines)] is None
+    # the sample exercises every scale word and the no-match case
+    assert {m for _, m in SCALE_WORDS} | {None} <= set(want)
 
 
 LABELS_A = ["Cash and cash equivalents", "Receivables", "Total assets"]

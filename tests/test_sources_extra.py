@@ -52,7 +52,7 @@ def test_binary_document_corpus(spark, tmp_path):
     rows = {r["cik"]: r for r in df.collect()}
     assert rows["885639"]["filing_date"] == "2020-02-28"
     assert rows["123456"]["n_bytes"] == 11
-    # page slice without pypdf: content passes through, schema stable
+    # not-a-PDF content passes through the page slice, schema stable
     sliced = slice_pages(df)
     assert sliced.schema == df.schema
     assert sliced.count() == 2

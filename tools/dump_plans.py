@@ -99,8 +99,10 @@ PICKS = {
         "merge3 windows, the conjoined-row split as a JVM pass (TEXT "
         "map as one sorted array per filing, posexplode, renumber), "
         "staged-F1 projections (linear expression trees — whole-stage "
-        "codegen compiles, no 64 KB fallback) and ONE Python kernel, "
-        "the fused bisect/subtotals tail. e2 plants a constant "
+        "codegen compiles, no 64 KB fallback), the unit-scale match as "
+        "a projection on the text branch (levenshtein inside exists) "
+        "and ONE Python stage, the fused bisect/subtotals tail. e2 "
+        "plants a constant "
         "filing_date, which the optimizer drops from the window keys, "
         "so here the windows add an exchange on cik and the kernel "
         "keeps its own; with real filing dates the chain shares one."

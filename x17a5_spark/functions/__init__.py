@@ -2,8 +2,9 @@
 
 All functions are compositions of built-in ``pyspark.sql.functions``
 column expressions — JVM-side, whole-stage-codegen'd, no Python in the
-hot path. The only UDF in the engine is the ``fuzz.partial_ratio``
-equivalent used by the fuzzy sequence merge (see operators/merge.py).
+hot path and no UDF. Python runs in the operators' and sources' pandas
+kernels and ``mapInPandas`` stages instead (e.g. the fuzzy sequence
+merge's ``fuzz.partial_ratio`` in operators/merge.py).
 """
 
 from x17a5_spark.functions.accounting import (

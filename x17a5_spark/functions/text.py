@@ -12,11 +12,14 @@ from pyspark.sql import functions as F
 
 
 def levenshtein_ratio(a: Column | str, b: Column | str) -> Column:
-    """F2 — ``fuzz.ratio`` equivalent (reference OCRClean.py:370-414 uses
-    a >=90 threshold for unit-scale words): ``1 - lev(a,b)/max(len)``.
-    Note ``fuzz.ratio`` is ``(2M / (len_a+len_b))`` on matching blocks;
-    for the short single tokens the reference compares, the Levenshtein
-    form is equivalent at the thresholds used and stays JVM-side.
+    """F2 — Levenshtein similarity ``1 - lev(a,b)/max(len)``, JVM-side.
+
+    This is not ``fuzz.ratio``, which is indel-based
+    (``2M / (len_a+len_b)`` on matching blocks), and the two disagree at
+    the reference's >=90 unit-scale threshold (OCRClean.py:370-414):
+    'million' vs 'millions' is 87.5 here and 93.3 under ``fuzz.ratio``.
+    Unit scaling uses the exact ``fuzz.ratio`` rule in
+    operators/scaler.py.
     """
     ca = F.col(a) if isinstance(a, str) else a
     cb = F.col(b) if isinstance(b, str) else b

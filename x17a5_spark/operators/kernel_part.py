@@ -25,10 +25,11 @@ cost: instead of applyInPandas's one Arrow round trip per group, groups
 stream through ``mapInPandas`` over key-sorted partitions, many
 complete groups per call. ``grouped_kernel`` is the per-group form on
 top of it (an in-batch pandas groupby) — measured 2.2× on the k1
-kernel at the 20× lake. The silver chain has one kernel (the fused
-bisect/subtotals tail); it runs on this path over the chain's own
-filing-key exchange (``pipeline._silver_purge``), whose width and keys
-equal its repartition, so Spark drops the repartition.
+kernel at the 20× lake. The silver chain has one Python stage, the
+fused bisect/subtotals kernel (the conjoined-row split and the
+unit-scale match are Spark expressions); it runs on this path over the
+chain's own filing-key exchange (``pipeline._silver_purge``), whose
+width and keys equal its repartition, so Spark drops the repartition.
 
 Every Python task also pays a fixed cost, whatever its rows. Measured
 on a 4-vCPU host, 17 trivial ``mapInPandas`` tasks take 0.41-0.73 s

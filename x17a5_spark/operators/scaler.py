@@ -11,91 +11,83 @@ as mutable state across the processing loop — here it is a
 carry-forward window over filing_date, which also pins the previously
 implicit input-order dependence, SURVEY §7 hard part 7). Default 1.
 
-The fuzzy token match is ``fuzz.ratio`` (indel-based: 2M/(la+lb)), which
-differs from a plain Levenshtein ratio near the threshold (e.g.
-'million' vs 'millions' scores 93 indel but 87.5 Levenshtein), so the
-token scorer is a vectorized pandas UDF computing the exact indel ratio
-— Arrow-batched, applied only to page-text tokens (bounded per filing),
-not to balance-sheet data.
+The token match is ``fuzz.ratio`` (indel-based: 2M/(|t|+|w|) with M
+difflib's matched characters), not a plain Levenshtein ratio: 'million'
+vs 'millions' scores 93.3 indel but 87.5 Levenshtein. At the 90
+threshold the match set is closed-form. M is at most min(|t|, |w|), and
+M <= min - 1 caps the ratio at 1 - 1/min <= 1 - 1/9 < 0.9, since no
+scale word is longer than 9. So a match needs the shorter string to be
+a subsequence of the longer: the Levenshtein distance is then the
+length difference, and the ratio is 2·min/(|t|+|w|). ``_scale_hit``
+states that with Spark's built-in ``levenshtein``, so the whole scaler
+is one JVM pass. ``_line_scale_py`` keeps the difflib form as the
+tests' reference.
 """
 
 from __future__ import annotations
 
 from difflib import SequenceMatcher
-from functools import lru_cache
 
-import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from x17a5_spark.functions.keys import FILING_KEY
 
 SCALE_WORDS = [("thousands", 1e3), ("hundreds", 1e2), ("millions", 1e6), ("billions", 1e9)]
 
 
-@lru_cache(maxsize=1 << 17)
-def _token_word_mask(tok: str) -> int:
-    """Bitmask of SCALE_WORDS indices this token fuzzy-matches
-    (indel ratio >= 90). Memoized: page-text token vocabulary is tiny
-    relative to line volume (headers repeat corpus-wide), so after
-    warmup a token costs one dict hit instead of four difflib passes."""
-    mask = 0
-    for i, (word, _mult) in enumerate(SCALE_WORDS):
-        if SequenceMatcher(None, word, tok).ratio() * 100 >= 90:
-            mask |= 1 << i
-    return mask
-
-
-@lru_cache(maxsize=1 << 16)
 def _line_scale_py(line: str) -> float | None:
     """First matching scale multiplier for one text line (null if
     none) — WORD-major order like the reference: 'thousands' against
     every token before 'hundreds' is tried, so the lowest matched word
     index decides. Exact fuzz.ratio semantics via difflib:
     ratio = 2M/(la+lb) * 100."""
-    mask = 0
-    for tok in line.lower().split(" "):
-        mask |= _token_word_mask(tok)
-    for i, (_word, mult) in enumerate(SCALE_WORDS):
-        if mask & (1 << i):
+    toks = line.lower().split(" ")
+    for word, mult in SCALE_WORDS:
+        if any(SequenceMatcher(None, word, t).ratio() * 100 >= 90 for t in toks):
             return mult
     return None
 
 
-@F.pandas_udf(T.DoubleType())
-def _line_scale(lines: pd.Series) -> pd.Series:
-    """Vectorized wrapper: score each DISTINCT line once per batch
-    (plus the cross-batch lru caches above). The uncached per-line
-    difflib scan was 22.7 s of e1's silver at the 100× lake — the
-    single most expensive silver stage — and is value-identical
-    memoized (per-stage timing: the traced ``ingest`` benchmark run's
-    ``silver.scale_s``)."""
-    mapping = {
-        v: (_line_scale_py(v) if isinstance(v, str) else None)
-        for v in pd.unique(lines)
-    }
-    return lines.map(mapping)
+def _scale_hit(tok: Column, word: str) -> Column:
+    """``fuzz.ratio(tok, word) >= 90`` in the closed form above. No
+    matching pair is more than 2 edits apart, so ``levenshtein`` may
+    stop at 2 (it returns -1 past the threshold)."""
+    n = F.length(tok)
+    return (F.levenshtein(tok, F.lit(word), 2) == F.abs(n - len(word))) & (
+        200 * F.least(n, F.lit(len(word))) >= 90 * (n + len(word))
+    )
+
+
+def line_scale(line: Column) -> Column:
+    """``_line_scale_py`` as a Column: a word-major CASE over
+    ``SCALE_WORDS``, each branch an ``exists`` over the line's
+    lower-cased single-space tokens. Null for a null line."""
+    toks = F.split(F.lower(line), " ", -1)
+    scale = None
+    for word, mult in SCALE_WORDS:
+        # F.exists builds the lambda's body right here, so the loop
+        # variable is bound per branch
+        hit = F.exists(toks, lambda t: _scale_hit(t, word))
+        scale = F.when(hit, mult) if scale is None else scale.when(hit, mult)
+    return scale
 
 
 def detect_unit_scale(text: DataFrame) -> DataFrame:
     """Per-filing scale factor from the page-text table
     (cik, filing_date, line_idx, line_text) with per-CIK carry-forward.
 
-    Plan shape: one scan + pandas-UDF projection, a groupBy on the
-    filing key (min over matching lines = "first matching line"), then
-    a carry-forward window per CIK — two narrow shuffles, no kernel.
+    Plan shape: one scan + projection, a groupBy on the filing key (min
+    over matching lines = "first matching line"), then a carry-forward
+    window per CIK — two narrow shuffles, no kernel.
     """
-    # NO explicit repartition here, by policy (kernel_part.py boundary):
-    # the indel-ratio UDF is byte-proportional (cost ~ lines scanned),
-    # so scan-split sizing is already correct at scale, and the groupBy
-    # below partial-aggregates map-side — only ~1 row per filing ever
-    # crosses the exchange. An explicit spread would shuffle the FULL
-    # text corpus on the silver hot path at 100 TB to save ~1 s on a
-    # byte-small bench corpus.
-    per_line = text.withColumn("line_scale", _line_scale(F.col("line_text")))
+    # No explicit repartition: the match is a per-line projection whose
+    # cost tracks the bytes scanned, and the groupBy partial-aggregates
+    # map-side, so only ~1 row per filing crosses the exchange. A spread
+    # would shuffle the full text corpus.
     first_match = (
-        per_line.withColumn(
+        text.withColumn("line_scale", line_scale(F.col("line_text")))
+        .withColumn(
             "match_line",
             F.when(F.col("line_scale").isNotNull(), F.col("line_idx")),
         )

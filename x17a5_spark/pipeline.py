@@ -8,13 +8,14 @@ composed from the engine's operators as one DataFrame flow:
       → 3→2 column merge (W4 declarative)
       → conjoined-row split (F4 declarative, TEXT map)
       → accounting-number parse (F1)
-      → unit scaling (F2/W6 carry-forward)
+      → unit scaling (F2/W6 carry-forward, a Spark expression)
       → asset/liability bisection + subtotal removal (W3 + W1, one kernel)
       → long silver table (cik, filing_date, side, row_idx, lineitem, value)
 
 The purge's exchange is the chain's only shuffle of filing rows: every
 later stage is a narrow transformation or a filing-key operator that
-reuses it, and the bisection tail is the only Python stage. Nothing
+reuses it. The bisection tail is the only Python stage: the row split
+and the unit-scale match on the page-text branch are JVM passes. Nothing
 re-orders across filings, so the whole chain scales linearly with the
 corpus. The gold stage (label pivot + identity validation) lives in
 operators/structured.py.

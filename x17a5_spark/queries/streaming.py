@@ -1,10 +1,11 @@
 """Event-time windowing over the ``events`` table (SURVEY.md §2.9).
 
-The same ``window()`` / ``session_window()`` expressions run identically
-under batch and Structured Streaming; the batch forms are declared here
-(oracle-checkable), and the streaming forms (readStream + watermark +
-Trigger.AvailableNow) are exercised in x17a5_spark/streaming/ and its
-tests. Tumbling/sliding windows shuffle once on (window, key); session
+``window()`` / ``session_window()`` run identically under batch and
+Structured Streaming; the batch forms are declared here
+(oracle-checkable). The window counts and the interval join also run
+as streams (readStream + watermark + Trigger.AvailableNow) in
+x17a5_spark/streaming/events.py, whose tests assert stream == batch.
+Tumbling/sliding windows shuffle once on (window, key); session
 windows additionally merge per-key state — all built-in operators.
 """
 

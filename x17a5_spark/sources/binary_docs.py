@@ -41,16 +41,17 @@ def slice_pages(
 ) -> DataFrame:
     """First-N-pages subset (reference FocusReportSlicing.py:78-109).
 
-    Engine ladder inside each Arrow batch: pypdf when importable (full
-    PDF spec), else the vendored pure-Python slicer
-    (sources/pdf_mini.py — handles content streams opaquely, FlateDecode
-    object streams, nested page trees, and empty-user-
+    One engine inside each Arrow batch: the vendored pure-Python
+    slicer (sources/pdf_mini.py — handles content streams opaquely,
+    FlateDecode object streams, nested page trees, and empty-user-
     password encryption via the standard security handler, RC4-40/128,
     AES-128 and AES-256; declines genuinely passworded or broken
-    files), else pass-through — so the operator does real work with
-    zero optional dependencies and never fails a batch on an
-    unparseable document (quarantine-style leniency: a bad PDF flows on
-    unsliced rather than killing the job).
+    files), else pass-through — so the operator needs no optional
+    dependency and never fails a batch on an unparseable document
+    (quarantine-style leniency: a bad PDF flows on unsliced rather than
+    killing the job). pypdf is not used even where it is installed: it
+    returns an encrypted file within the bound as ciphertext, where
+    this operator returns plaintext.
 
     ``status_col``: when set, append a string column recording what
     happened per document — ``sliced`` (truncated to ``max_pages``),
@@ -62,7 +63,7 @@ def slice_pages(
     the standard handler could not open it with the empty user
     password — a real password or a non-Standard filter —
     ``objstm-filter`` = page tree behind a codec-unsupported object
-    stream, ``not-pdf``, ``broken``, or ``error`` on the pypdf path) —
+    stream, ``not-pdf`` or ``broken``) —
     so a pipeline can QUANTIFY how much of its corpus kept the page
     bound, and audits can separate "encrypted" from
     "codec-unsupported". The sliced/short decision comes from the
@@ -74,34 +75,13 @@ def slice_pages(
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from x17a5_spark.sources.pdf_mini import slice_pdf
 
-        try:
-            import io
-
-            from pypdf import PdfReader, PdfWriter  # type: ignore
-
-            def subset(content: bytes) -> tuple[bytes, str]:
-                try:
-                    reader = PdfReader(io.BytesIO(content))
-                    if len(reader.pages) <= max_pages:
-                        return content, "short"
-                    writer = PdfWriter()
-                    for page in reader.pages[:max_pages]:
-                        writer.add_page(page)
-                    buf = io.BytesIO()
-                    writer.write(buf)
-                    return buf.getvalue(), "sliced"
-                except Exception:  # noqa: BLE001 — lenient per-doc
-                    return content, "passthrough:error"
-
-        except ImportError:
-
-            def subset(content: bytes) -> tuple[bytes, str]:
-                sliced, status = slice_pdf(bytes(content), max_pages)
-                if sliced is None:
-                    return content, f"passthrough:{status}"
-                # "sliced" | "short" (verbatim bytes) | "short-decrypted"
-                # (within the bound but re-serialized as plaintext)
-                return sliced, status
+        def subset(content: bytes) -> tuple[bytes, str]:
+            sliced, status = slice_pdf(bytes(content), max_pages)
+            if sliced is None:
+                return content, f"passthrough:{status}"
+            # "sliced" | "short" (verbatim bytes) | "short-decrypted"
+            # (within the bound but re-serialized as plaintext)
+            return sliced, status
 
         for pdf in batches:
             pairs = pdf["content"].map(subset)

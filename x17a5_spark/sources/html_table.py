@@ -7,11 +7,13 @@ a DataFrame of (doc_key, html) and parses tables *inside the executors*
 via ``mapInPandas`` — so a million filing-index pages parse as a
 distributed scan, not a driver loop.
 
-Parsing prefers ``pandas.read_html`` when a parser backend (lxml/bs4)
-is installed; this container has none, so the fallback is a small
-dependency-free tag scanner handling <table>/<tr>/<td|th>, nested
-markup stripping, and entity basics — enough for EDGAR's generated
-tables, swapped out transparently when lxml is present.
+Parsing is one small dependency-free tag scanner handling
+<table>/<tr>/<td|th>, nested markup stripping and entity basics, enough
+for EDGAR's generated tables. Every row is data, header cells too, and
+a document without a table yields no rows; ``pandas.read_html`` would
+promote ``<th>`` rows to column names and raise on a table-less
+document, failing the partition, so it is not used even where a parser
+backend (lxml/bs4) is installed.
 """
 
 from __future__ import annotations
@@ -35,16 +37,6 @@ OUTPUT_SCHEMA = (
 
 def parse_html_tables(doc: str) -> list[list[list[str]]]:
     """All tables in a document as [table][row][cell] of stripped text."""
-    try:
-        from io import StringIO
-
-        frames = pd.read_html(StringIO(doc))  # lxml/bs4 path
-        return [
-            [[("" if pd.isna(v) else str(v)) for v in row] for row in f.values.tolist()]
-            for f in frames
-        ]
-    except ImportError:
-        pass
     tables = []
     for tbl in TABLE_RE.findall(doc or ""):
         rows = []

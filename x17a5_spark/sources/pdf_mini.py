@@ -1,6 +1,6 @@
-"""Dependency-free first-N-pages PDF slicer (fallback engine for
+"""Dependency-free first-N-pages PDF slicer (the engine of
 sources/binary_docs.slice_pages, reference FocusReportSlicing.py:78-109,
-when pypdf is absent from the container).
+which slices with pypdf).
 
 A slicer that refuses any object containing a ``stream`` keyword passes
 virtually every production PDF through UNSLICED on the zero-dependency

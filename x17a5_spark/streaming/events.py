@@ -1,11 +1,13 @@
 """Structured Streaming over the events table: watermarked event-time
-windows and sessionization (SURVEY.md §2.9 — scope beyond the batch
-reference, built entirely from ``window()`` / ``session_window()`` /
-``withWatermark`` built-ins).
+window counts and a watermarked stream-stream interval join (SURVEY.md
+§2.9 — scope beyond the batch reference, built entirely from
+``window()`` / ``withWatermark`` built-ins and an equi-join).
 
-The same expressions run in batch (queries/streaming.py, oracle-checked)
-and under ``readStream`` here; tests drive the stream with
-``Trigger.AvailableNow`` + a memory sink and assert stream == batch.
+Each function runs unchanged over a batch DataFrame and under
+``readStream``; tests/test_sources_streaming.py drives both streams
+with ``Trigger.AvailableNow`` + a memory sink and asserts stream ==
+batch, and tests/test_patches_watermark.py pins the window counts'
+late-event handling.
 """
 
 from __future__ import annotations
@@ -37,25 +39,6 @@ def windowed_event_counts(
         .select(
             F.col("w.start").alias("window_start"),
             "event_type",
-            "n_events",
-            "total_value",
-        )
-    )
-
-
-def sessionized_stream(
-    events: DataFrame, gap: str = "10 minutes", watermark: str = "2 hours"
-) -> DataFrame:
-    """Watermarked session windows per user (stateful merge op)."""
-    events = events.withColumn("ts", F.col("ts").cast("timestamp"))
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
-        .agg(F.count("*").alias("n_events"), F.sum("value").alias("total_value"))
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
             "n_events",
             "total_value",
         )
