@@ -8,6 +8,15 @@ gives the DuckDB-equivalent SQL for each hash-checkable query
 since round 10, when the iterative BPE training kernel's fixed merge
 rounds were unrolled into a closed-form CTE chain; its golden tests
 under tests/ still independently recompute the merge table).
+
+The queries run under the caller's SparkSession.
+``spark.python.daemon.module`` is a static setting, read when the
+SparkContext starts, so only a session built by
+``x17a5_spark.session.get_spark`` starts its Python workers on
+``x17a5_pyspark_daemon``. Under any other session the workers keep
+Spark's default path: they import pyspark from ``pyspark.zip``, and each
+Python task's ``importlib.invalidate_caches()`` re-reads the zip's
+directory (0.14-0.25 s per task, measured on a 4-vCPU host).
 """
 
 from __future__ import annotations

@@ -4,7 +4,9 @@ incrementality (a new filing is the ONLY thing the rerun OCRs and
 cleans), and convergence: after an amended or late filing, a flaky or
 key-dropping OCR backend, or a crash between stages, the next run's gold
 equals a clean single run's, also when a Python worker dies mid-task
-and Spark reruns the task. Plus the U6 wide unstructured build
+and Spark reruns the task. Sink layout: each write adds one
+key-sorted zstd file, and a rerun with nothing new adds none. Plus the
+U6 wide unstructured build
 (DatabaseUnstructured.py:291-348): allowlist pivot, id-cols-first
 ordering, all-null column pruning.
 """
@@ -16,10 +18,13 @@ import subprocess
 import sys
 from collections import Counter
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.classic.dataframe import DataFrame
 
 from x17a5_spark import pipeline
+from x17a5_spark.operators.kernel_part import kernel_width
 from x17a5_spark.operators.unstructured import build_unstructured
 from x17a5_spark.pipeline import run_pipeline
 from x17a5_spark.sources.ocr import StubOcrBackend
@@ -351,3 +356,104 @@ def test_task_retry_after_worker_crash_converges(spark, tmp_path, clean_gold):
     _assert_converged(spark, out, clean_gold)
     ledger = spark.read.parquet(out + "/ocr_errors").collect()
     assert "102" not in {r.cik for r in ledger}
+
+
+def _part_files(out) -> dict[str, set[str]]:
+    return {
+        sink: {f for f in os.listdir(os.path.join(out, sink)) if f.startswith("part-")}
+        for sink in pipeline.SINK_KEYS
+    }
+
+
+def _assert_sink_file_layout(out, sink, name):
+    """Every column chunk of the file is zstd, and its rows are
+    non-decreasing on the sink's key."""
+    f = pq.ParquetFile(os.path.join(out, sink, name))
+    md = f.metadata
+    codecs = {
+        md.row_group(g).column(c).compression
+        for g in range(md.num_row_groups)
+        for c in range(md.num_columns)
+    }
+    assert codecs <= {"ZSTD"}, (sink, codecs)
+    key = pipeline.SINK_KEYS[sink]
+    t = f.read(columns=list(key))
+    rows = list(zip(*(t.column(k).to_pylist() for k in key)))
+    assert rows == sorted(rows), sink
+
+
+def test_each_sink_write_adds_one_sorted_zstd_file(spark, tmp_path, monkeypatch):
+    """Sinks are sized by bytes, not by the computing stage's kernel
+    width: at this scale each write adds exactly one file,
+    zstd-compressed and sorted on the sink's key; a rerun that adds a
+    filing appends one more file to bronze and silver and replaces the
+    ledger's and gold's one file."""
+    written = []
+    write = pipeline._write_sink
+
+    def spy(df, path, mode):
+        written.append((os.path.basename(path), df))
+        write(df, path, mode)
+
+    monkeypatch.setattr(pipeline, "_write_sink", spy)
+    out = str(tmp_path / "lake")
+    _run(spark, out, FILINGS[1:])
+    assert [s for s, _ in written] == [
+        "ocr_errors", "bronze_cells", "silver", "gold_assets",
+    ]
+    fresh = dict(written)
+    first = _part_files(out)
+    assert all(len(files) == 1 for files in first.values()), first
+    for sink, files in first.items():
+        _assert_sink_file_layout(out, sink, *files)
+
+    # the late 06-30 filing of CIK 101 lands on the rerun
+    _run(spark, out, FILINGS)
+    second = _part_files(out)
+    for sink in ("bronze_cells", "silver"):
+        assert first[sink] < second[sink] and len(second[sink]) == 2, sink
+    for sink in ("ocr_errors", "gold_assets"):
+        assert len(second[sink]) == 1, sink
+    for sink, files in second.items():
+        for name in files:
+            _assert_sink_file_layout(out, sink, name)
+    assert len(_gold_rows(spark, out)) == 3
+
+    # the silver write keeps the kernel's own exchange and adds one
+    # rebalance on the sink key, which AQE may coalesce
+    plan = pipeline.sink_layout(fresh["silver"], "silver")
+    lines = plan._jdf.queryExecution().executedPlan().toString().splitlines()
+    rebalance = [l for l in lines if "REBALANCE_PARTITIONS_BY_COL" in l]
+    assert len(rebalance) == 1, rebalance
+    assert all(f"{k}#" in rebalance[0] for k in pipeline.SINK_KEYS["silver"])
+    width = kernel_width(spark.range(1))
+    repart = [l for l in lines if "REPARTITION_BY_NUM" in l]
+    assert repart and all(f", {width})" in l for l in repart), repart
+
+
+def test_noop_reruns_leave_sinks_unchanged(spark, tmp_path, monkeypatch, clean_gold):
+    """A rerun that finds no new filing appends no empty file to bronze
+    or silver, and still rewrites a converged gold and ledger. Only a
+    rerun pays the emptiness check: a run into new sinks starts no
+    extra job for it."""
+    checks = []
+    is_empty = DataFrame.isEmpty
+
+    def counted(df):
+        checks.append(df)
+        return is_empty(df)
+
+    monkeypatch.setattr(DataFrame, "isEmpty", counted)
+    out = str(tmp_path / "lake")
+    _run(spark, out, FILINGS)
+    assert checks == []
+    first = _part_files(out)
+    for _ in range(2):
+        _run(spark, out, FILINGS)
+        files = _part_files(out)
+        for sink in ("bronze_cells", "silver"):
+            assert files[sink] == first[sink], sink
+        for sink in ("ocr_errors", "gold_assets"):
+            assert len(files[sink]) == 1, sink
+        _assert_converged(spark, out, clean_gold)
+    assert len(checks) == 4

@@ -96,6 +96,13 @@ def main() -> None:
         "same accounting-identity rules as the reference",
         "(`DatabaseStructured.py:230-264`).",
         "",
+        "**Enforced in CI.**",
+        "`tests/test_fidelity.py::test_fidelity_pinned_per_class_rates` pins the",
+        "exact per-noise-class distribution of the deterministic N=1500 corpus,",
+        "so a cleaning-kernel regression fails the suite with the cell that",
+        "moved. An intentional kernel change updates that pin and regenerates",
+        "this file (`python tools/run_fidelity.py`) in the same commit.",
+        "",
         "## Headline vs the reference bar (BASELINE.md)",
         "",
         "| Side | Reference (real EDGAR OCR) | This engine (synthetic noise) |",
@@ -141,8 +148,9 @@ def main() -> None:
         "## Scale notes",
         "",
         "Corpus generation is one narrow hash-derived stage (no driver RNG, no",
-        "collect); the cleaning chain shuffles once per kernel on the filing",
-        "key; the structured build is the production single-wide-exchange plan.",
+        "collect); the cleaning chain shuffles the filing rows once, on the",
+        "filing key, and every later kernel reuses that exchange; the",
+        "structured build is the production single-wide-exchange plan.",
         "The same harness runs unchanged at any corpus size.",
         "",
         f"_Generated by `python tools/run_fidelity.py {n}`._",

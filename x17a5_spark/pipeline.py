@@ -27,6 +27,16 @@ of a sink passes the schema of the DataFrame that writes it (the OCR
 cells, the silver frame, gold; the guard reads only the key columns), so
 no sink read runs Spark's one-task schema-inference job: 3 fewer jobs
 per run, and the schema and optimized plan are the inferred read's.
+
+Sinks are sized by bytes, kernels by cores. A stage computes at its
+kernel width, but ``_write_sink`` rebalances its rows on the sink's key
+(``SINK_KEYS``) before the write, so AQE sizes the output files by
+bytes: one file per write on a small corpus, files near the advisory
+partition size on a large one. Each file is sorted on the key, so the
+key columns run-length encode again after the shuffle interleaved
+filings, and is zstd-compressed. A rerun that adds nothing to an
+existing bronze or silver sink skips its append instead of committing
+an empty file.
 """
 
 from __future__ import annotations
@@ -127,9 +137,9 @@ def clean_filings(raw: DataFrame, text: DataFrame) -> DataFrame:
 # E1 — the whole run_main flow: bronze (binary docs -> OCR cells) ->
 # silver (clean long rows) -> gold (structured asset table), each stage
 # PERSISTED as a parquet table under ``out_dir``:
-#   bronze_cells/  OCR table cells        (appended, key: cik, filing_date)
+#   bronze_cells/  OCR table cells        (appended per filing)
 #   ocr_errors/    S10 quarantine ledger  (overwritten: the run's failures)
-#   silver/        clean long rows        (appended, key: cik, filing_date)
+#   silver/        clean long rows        (appended per filing)
 #   gold_assets/   structured asset table (rebuilt from all of silver)
 # Bronze and silver are the expensive, per-filing stages, so they keep
 # the skip-if-exists anti-join (run_main.py:66-74's rerun_job ladder /
@@ -143,7 +153,17 @@ def clean_filings(raw: DataFrame, text: DataFrame) -> DataFrame:
 # rebuild costs one scan of silver's asset rows and one pivot exchange;
 # at 100 TB the step after it is a gold partitioned by fiscal_year with
 # only the touched years overwritten.
+# Every write goes through ``_write_sink``, keyed by ``SINK_KEYS``: silver
+# is re-read by every gold rebuild, so its file count and bytes are paid
+# on every run, and the kernel width that computed it must not set them.
 # ---------------------------------------------------------------------------
+
+SINK_KEYS = {
+    "bronze_cells": ("cik", "filing_date", "row_idx"),
+    "ocr_errors": ("cik", "filing_date"),
+    "silver": ("cik", "filing_date", "side", "row_idx"),
+    "gold_assets": ("cik", "fiscal_year"),
+}
 
 # Stage-level wall clock of the most recent ``run_pipeline`` call
 # (keys: ocr_bronze / silver_clean / gold_build). Stage writes execute
@@ -162,6 +182,23 @@ def _todo(spark: SparkSession, inp: DataFrame, path: str) -> DataFrame:
         return inp
     sink = spark.read.schema(inp.select(*FILING_KEY).schema).parquet(path)
     return incremental_todo(inp, sink, FILING_KEY)
+
+
+def sink_layout(df: DataFrame, sink: str) -> DataFrame:
+    """``df`` as ``sink`` stores it: a REBALANCE_PARTITIONS_BY_COL
+    exchange on the sink's key, which AQE coalesces and splits by bytes
+    (the advisory partition size) whatever width computed ``df``, then a
+    sort on the key within each output partition. The exchange is there
+    even where ``df`` ends in an exchange AQE could coalesce: AQE may
+    drop that one (a deduplication over one row, say), and the write
+    would then take the width of the stage below it."""
+    key = SINK_KEYS[sink]
+    return df.hint("rebalance", *key).sortWithinPartitions(*key)
+
+
+def _write_sink(df: DataFrame, path: str, mode: str) -> None:
+    layout = sink_layout(df, os.path.basename(path))
+    layout.write.mode(mode).option("compression", "zstd").parquet(path)
 
 
 def run_pipeline(
@@ -207,6 +244,7 @@ def run_pipeline(
 
     # Steps 1-2 (main_p1/main_p2): OCR only the docs not yet in bronze;
     # failures go to the S10 quarantine ledger, not the job.
+    bronze_exists, silver_exists = map(os.path.isdir, (bronze_path, silver_path))
     todo_docs = _todo(spark, docs, bronze_path)
     # spread the per-document OCR calls across every core: the doc batch
     # is byte-small but each document costs a full backend round-trip,
@@ -221,8 +259,11 @@ def run_pipeline(
         cells, errors = quarantine(ocr_out)
         # every failed filing is retried on the next run (it never
         # reaches bronze), so this run's errors replace the ledger
-        errors.write.mode("overwrite").parquet(err_path)
-        cells.write.mode("append").parquet(bronze_path)
+        _write_sink(errors, err_path, "overwrite")
+        # an existing sink takes no empty append (the check reads the
+        # cache the ledger write filled); a new one is always created
+        if not bronze_exists or not cells.isEmpty():
+            _write_sink(cells, bronze_path, "append")
     finally:
         ocr_out.unpersist(blocking=False)
     _mark("ocr_bronze")
@@ -231,8 +272,10 @@ def run_pipeline(
     bronze = spark.read.schema(cells.schema).parquet(bronze_path).select(
         "cik", "filing_date", "row_idx", "col0", "col1", "col2"
     )
-    silver = clean_filings(_todo(spark, bronze, silver_path), text)
-    silver.write.mode("append").parquet(silver_path)
+    todo = _todo(spark, bronze, silver_path)
+    silver = clean_filings(todo, text)
+    if not silver_exists or not todo.isEmpty():
+        _write_sink(silver, silver_path, "append")
     _mark("silver_clean")
 
     # Step 4 (main_p3): structured gold from the asset side of ALL of
@@ -246,6 +289,6 @@ def run_pipeline(
         )
     )
     gold = build_structured_assets(assets, label_map, labels)
-    gold.write.mode("overwrite").parquet(gold_path)
+    _write_sink(gold, gold_path, "overwrite")
     _mark("gold_build")
     return spark.read.schema(gold.schema).parquet(gold_path)
