@@ -5,11 +5,13 @@ known-input/known-output corpus)."""
 from __future__ import annotations
 
 import math
+import random
 
 import pytest
 from pyspark.sql import functions as F
 
 from x17a5_spark.functions.accounting import (
+    _py_float_repr,
     epsilon_one_digit_match,
     is_power_of_ten_ratio,
     relative_error_class,
@@ -164,6 +166,94 @@ def test_math_log10_power_identity():
     for k in range(0, 12):
         assert math.log10(10.0**k).is_integer()
 
+
+
+def _float_cases() -> list[float]:
+    """Amounts across every magnitude F10/F11 see: cents and whole
+    values from 1e-4 up to 1e16, 1e7 and above among them, negatives,
+    zeros, both ends of Python's plain range and a few scientific
+    values whose JDK digits are shortest."""
+    rng = random.Random(29)
+    cases = [
+        12345678.5, -12345678.25, 1e15, 0.0001, 9.9e-05, 1e16, 1e-05,
+        1.5e-07, 1e22, 1e100, 123.0, 0.001, 1e7, 9999999.0, 0.0, -0.0,
+        0.1, 100.25, 9999999999999998.0, 123456789012345.67,
+        float("nan"), float("inf"), float("-inf"),
+    ]
+    for _ in range(600):
+        digits = rng.randint(1, 16)
+        whole = rng.randrange(10 ** (digits - 1), 10**digits)
+        sign = rng.choice((1, -1))
+        cases.append(sign * float(whole))
+        cases.append(sign * (whole + rng.randrange(100) / 100))
+        cases.append(sign * whole / 10 ** rng.randint(1, 8))
+    return cases
+
+
+def test_py_float_repr_matches_python_str(spark):
+    cases = _float_cases()
+    df = spark.createDataFrame(list(enumerate(cases)), "i int, x double")
+    got = dict(df.select("i", _py_float_repr(F.col("x"))).collect())
+    bad = [(x, got[i]) for i, x in enumerate(cases) if got[i] != str(x)]
+    assert not bad, bad[:10]
+
+
+def _f10_f11_pairs() -> list[tuple[float, float]]:
+    """Pairs the subtotal check meets: power-of-ten rescales, dropped
+    leading digits, one-digit OCR slips, unrelated amounts, zeros and
+    sign flips, with cents at 1e7 and above."""
+    rng = random.Random(31)
+    pairs = [(12345678.5, 2345678.5), (-12345678.25, -2345678.25), (0.0, 5.0), (5.0, 0.0)]
+    for _ in range(500):
+        cents = rng.random() < 0.5
+        x = float(rng.randrange(10, 10 ** rng.randint(2, 13)))
+        if cents:
+            x += rng.randrange(1, 100) / 100
+        x *= rng.choice((1, -1))
+        text = str(abs(x))
+        pos = rng.randrange(len(text))
+        slip = text[:pos] + ("7" if text[pos] != "7" else "3") + text[pos + 1:]
+        pairs += [
+            (x, x * 10 ** rng.randint(1, 3)),
+            (x, math.copysign(float(text[1:]), x) if text[1] != "." else x),
+            (x, math.copysign(float(slip), x) if slip[-1] != "." else x),
+            (x, rng.choice((1, -1)) * float(rng.randrange(1, 10**9))),
+            (x, -x),
+            (x, 0.0),
+        ]
+    return pairs
+
+
+def test_f10_f11_columns_match_python_predicates(spark):
+    """``is_power_of_ten_ratio`` and ``epsilon_one_digit_match`` equal
+    the subtotal kernel's Python predicates, which run on ``str()``."""
+    from x17a5_spark.operators.totals_check import (
+        _is_epsilon_match,
+        _is_power_of_ten_or_digit_drop,
+    )
+
+    pairs = _f10_f11_pairs()
+    df = spark.createDataFrame(
+        [(i, a, b) for i, (a, b) in enumerate(pairs)], "i int, a double, b double"
+    )
+    a, b = F.col("a"), F.col("b")
+    got = {
+        r["i"]: (r["f10"], r["f11"])
+        for r in df.select(
+            "i",
+            is_power_of_ten_ratio(a, b).alias("f10"),
+            epsilon_one_digit_match(a, b).alias("f11"),
+        ).collect()
+    }
+    want = {
+        i: (_is_power_of_ten_or_digit_drop(a, b)[1], _is_epsilon_match(a, b))
+        for i, (a, b) in enumerate(pairs)
+    }
+    bad = [(pairs[i], got[i], want[i]) for i in want if got[i] != want[i]]
+    assert not bad, bad[:10]
+    # the generator reaches both outcomes of both predicates
+    assert {w[0] for w in want.values()} == {True, False}
+    assert {w[1] for w in want.values()} == {True, False}
 
 # --- round 12: Unicode fold + t33 gate ------------------------------------
 

@@ -141,50 +141,6 @@ def test_bloom_positions_deterministic(spark):
     assert len(set(row1)) == len(row1)  # distinct positions for this key
 
 
-def test_zorder_layout_shrinks_file_bounding_boxes(spark, tmp_path):
-    """Z-ordered files must have far smaller 2-d bounding boxes than a
-    round-robin layout with the same file count — the direct proxy for
-    min/max file skipping on either predicate column."""
-    import glob
-    import os
-
-    from x17a5_spark.operators.layout import zorder_write
-
-    li = load_table(spark, SF, "lineitem").select(
-        "l_suppkey", "l_extendedprice"
-    )
-    n_files = 8
-    zpath = os.path.join(tmp_path, "zorder")
-    rpath = os.path.join(tmp_path, "roundrobin")
-    zorder_write(li, "l_suppkey", "l_extendedprice", zpath, n_files)
-    li.repartition(n_files).write.parquet(rpath)
-
-    def box_mass(path):
-        total = 0.0
-        files = glob.glob(os.path.join(path, "*.parquet"))
-        assert len(files) >= n_files - 1
-        for f in files:
-            r = (
-                spark.read.parquet(f)
-                .agg(
-                    F.min("l_suppkey"),
-                    F.max("l_suppkey"),
-                    F.min("l_extendedprice"),
-                    F.max("l_extendedprice"),
-                )
-                .collect()[0]
-            )
-            total += (r[1] - r[0] + 1) * (r[3] - r[2] + 1)
-        return total
-
-    z, rr = box_mass(zpath), box_mass(rpath)
-    # round-robin files each span ~the full 2-d domain; z-order files
-    # tile it, so total box mass should drop by at least 2x
-    assert z < rr / 2, (z, rr)
-    # layout must not lose rows
-    assert spark.read.parquet(zpath).count() == li.count()
-
-
 def test_pit_join_is_leak_free_and_self_consistent(spark):
     """Every event's point-in-time state must equal its own event_type
     (the intervals derive from the same stream), and versions must be

@@ -106,57 +106,6 @@ def test_temperature_mix_flattens_sources(spark):
     assert {(r["source"], r["rk"], r["doc_id"]) for r in out.collect()} == again
 
 
-def test_streaming_view_maintenance_exact_and_idempotent(spark, tmp_path):
-    """The foreachBatch-maintained view must equal the direct batch
-    aggregate EXACTLY after the stream drains (DECIMAL merge is
-    associative across arbitrary micro-batch splits), and re-running
-    the drained stream must not change it (epoch-skip idempotence)."""
-    import os
-
-    from x17a5_spark.streaming.view_maintenance import (
-        maintain_sum_view,
-        read_view,
-    )
-
-    src = os.path.join(tmp_path, "src")
-    view = os.path.join(tmp_path, "view")
-    ckpt = os.path.join(tmp_path, "ckpt")
-    orders = load_table(spark, SF, "orders").select("o_orderpriority", "o_totalprice")
-    # several input files -> maxFilesPerTrigger(1) forces MULTIPLE epochs
-    orders.repartition(3).write.parquet(src)
-
-    def run():
-        stream = (
-            spark.readStream.schema(orders.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = maintain_sum_view(
-            stream, view, ckpt, "o_orderpriority", "o_totalprice"
-        ).start()
-        q.awaitTermination(180)
-
-    run()
-    got = {
-        r["o_orderpriority"]: (r["n"], r["total"])
-        for r in read_view(spark, view).collect()
-    }
-    want = {
-        r["o_orderpriority"]: (r["n"], r["total"])
-        for r in orders.groupBy("o_orderpriority")
-        .agg(F.count("*").alias("n"), dsum("o_totalprice", "total"))
-        .collect()
-    }
-    assert got == want  # exact, not approx
-
-    run()  # drained stream: no new epochs, view unchanged
-    again = {
-        r["o_orderpriority"]: (r["n"], r["total"])
-        for r in read_view(spark, view).collect()
-    }
-    assert again == want
-
-
 def test_bpe_pair_counts_match_bruteforce(spark):
     """The vocab-weighted pair aggregation must equal a direct Python
     count over every token occurrence (the naive O(corpus) form the

@@ -1,14 +1,8 @@
-"""Tests for the idio-patch ledger operator (F14 full semantics) and
-watermark late-data enforcement across micro-batches."""
+"""Tests for the idio-patch ledger operator (F14 full semantics)."""
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import functions as F
-
 from x17a5_spark.operators.patches import apply_idio_patches
-from x17a5_spark.streaming.events import windowed_event_counts
 
 
 def _base(spark):
@@ -59,56 +53,3 @@ def test_patch_ops_noop_without_match(spark):
     assert out[out.cik == "1"].sort_values("row_idx").value.tolist() == [
         100.0, 5.0, 1171000000.0,
     ]
-
-
-def test_watermark_drops_late_data(spark, tmp_path):
-    """Late rows beyond the watermark are excluded from finalized
-    windows: batch 1 establishes event-time up to 12:00, batch 2 brings
-    an event at 08:30 — more than the 1h watermark behind — which must
-    not resurrect the closed 08:00 window in append mode."""
-    src = os.path.join(tmp_path, "src")
-    os.makedirs(src)
-
-    from datetime import datetime
-
-    def write_batch(rows, name):
-        typed = [(datetime.fromisoformat(ts), et, v) for ts, et, v in rows]
-        spark.createDataFrame(typed, "ts timestamp, event_type string, value double")\
-            .coalesce(1).write.mode("append").parquet(src)
-
-    write_batch(
-        [
-            ("2024-01-01 08:10:00", "click", 1.0),
-            ("2024-01-01 12:00:00", "click", 1.0),
-        ],
-        "b1",
-    )
-    stream = spark.readStream.schema("ts timestamp, event_type string, value double").parquet(src)
-    agg = windowed_event_counts(stream, window="1 hour", watermark="1 hour")
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("wm_out")
-        .option("checkpointLocation", os.path.join(tmp_path, "ckpt"))
-        .trigger(processingTime="1 second")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        # late event: 08:30 while watermark is at 11:00
-        write_batch([("2024-01-01 08:30:00", "click", 99.0)], "b2")
-        q.processAllAvailable()
-        # advance event time so the 08:00 window finalizes and emits
-        write_batch([("2024-01-01 14:00:00", "click", 1.0)], "b3")
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    rows = {
-        (str(r["window_start"]), r["event_type"]): r
-        for r in spark.sql("SELECT * FROM wm_out").collect()
-    }
-    w8 = rows.get(("2024-01-01 08:00:00", "click"))
-    assert w8 is not None, f"08:00 window never finalized: {list(rows)}"
-    # the 08:30 late event (value 99) was dropped: count 1, sum 1.0
-    assert w8["n_events"] == 1
-    assert w8["total_value"] == 1.0

@@ -27,9 +27,10 @@ from x17a5_spark.sources.pdf_mini import (
     _find_root,
     _map_strings,
     _scan_objects,
-    count_pages,
     slice_pdf,
 )
+from tests import pdf_fixtures as fx
+from tests.pdf_fixtures import count_pages
 from tests.test_pdf_real import _flat_pdf_with_streams
 
 FILE_ID0 = bytes(range(16))
@@ -66,7 +67,7 @@ def test_aes_cbc_roundtrip_and_padding():
     key = hashlib.md5(b"k").digest()
     for n in (0, 1, 15, 16, 17, 100):
         data = bytes(range(256))[:n]
-        enc = C.aes_cbc_encrypt(key, hashlib.md5(b"iv").digest(), data)
+        enc = fx.aes_cbc_encrypt(key, hashlib.md5(b"iv").digest(), data)
         assert len(enc) % 16 == 0 and len(enc) >= 32
         assert C.aes_cbc_decrypt(key, enc) == data
     assert C.aes_cbc_decrypt(key, b"short") is None
@@ -220,10 +221,10 @@ def _encrypt_pdf(
         # AES-256: one 32-byte file key, wrapped in /UE; O/OE are
         # owner-path entries the empty-user decryptor never touches
         key = hashlib.sha256(b"v5-file-key").digest()
-        u, ue = C.make_u_ue_v5(key, r, password=user_pwd)
+        u, ue = fx.make_u_ue_v5(key, r, password=user_pwd)
         o, oe = b"\x00" * 48, b"\x00" * 32
     else:
-        o = C.compute_o(owner_pwd, user_pwd, r, length_bits)
+        o = fx.compute_o(owner_pwd, user_pwd, r, length_bits)
         key = C.compute_key(user_pwd, o, PERMS, fid, r, length_bits)
         u = C.compute_u(key, fid, r)
     enc_objs: dict[int, tuple[bytes, bytes | None]] = {}
@@ -231,7 +232,7 @@ def _encrypt_pdf(
         okey = key if v == 5 else C.object_key(key, num, gens.get(num, 0), aes)
         iv = hashlib.md5(b"iv%d" % num).digest()
         body = _map_strings(
-            body, lambda raw, k=okey, s=iv: C.encrypt_bytes(k, raw, aes, iv=s)
+            body, lambda raw, k=okey, s=iv: fx.encrypt_bytes(k, raw, aes, iv=s)
         )
         if data is not None and num in identity_streams:
             # /Crypt-filtered stream: stored PLAINTEXT per §7.4.10
@@ -242,7 +243,7 @@ def _encrypt_pdf(
                 + body[2:]
             )
         elif data is not None:
-            data = C.encrypt_bytes(okey, data, aes, iv=iv)
+            data = fx.encrypt_bytes(okey, data, aes, iv=iv)
             # pin /Length (direct or indirect) to the encrypted payload
             if _LEN_ANY.search(body) is not None:
                 body = _LEN_ANY.sub(b"/Length %d" % len(data), body, count=1)
@@ -416,7 +417,7 @@ def test_aes_cbc_rejects_bad_pad_bytes():
     raw = C._aes_cbc_nopad(key, bytes(16), pt, encrypt=True)
     assert C.aes_cbc_decrypt(key, bytes(16) + raw) is None
     # a VALID pad still strips
-    good = C.aes_cbc_encrypt(key, bytes(16), b"A" * 13)
+    good = fx.aes_cbc_encrypt(key, bytes(16), b"A" * 13)
     assert C.aes_cbc_decrypt(key, good) == b"A" * 13
 
 

@@ -11,7 +11,8 @@ from __future__ import annotations
 
 import zlib
 
-from x17a5_spark.sources.pdf_mini import count_pages, slice_pdf_first_pages
+from x17a5_spark.sources.pdf_mini import slice_pdf
+from tests.pdf_fixtures import count_pages
 
 
 def _assemble(objects: dict[int, bytes], root: int, trailer_extra: bytes = b"") -> bytes:
@@ -82,7 +83,7 @@ def _flat_pdf_with_streams(n_pages: int) -> bytes:
 def test_flat_pdf_with_content_streams_slices():
     pdf = _flat_pdf_with_streams(6)
     assert count_pages(pdf) == 6
-    sliced = slice_pdf_first_pages(pdf, 2)
+    sliced = slice_pdf(pdf, 2)[0]
     assert sliced is not None and sliced != pdf
     assert count_pages(sliced) == 2
     # kept payloads survive byte-identically (incl. the aliasing runs
@@ -104,9 +105,9 @@ def test_flat_pdf_with_content_streams_slices():
     for i, off in enumerate(offsets, start=1):
         assert sliced[off:].startswith(b"%d 0 obj" % i)
     # idempotent: slicing the sliced output is a byte-identical no-op
-    assert slice_pdf_first_pages(sliced, 2) == sliced
+    assert slice_pdf(sliced, 2)[0] == sliced
     # short enough already: untouched original bytes
-    assert slice_pdf_first_pages(pdf, 6) == pdf
+    assert slice_pdf(pdf, 6)[0] == pdf
 
 
 def test_nested_page_tree_flattens_with_inheritance():
@@ -133,7 +134,7 @@ def test_nested_page_tree_flattens_with_inheritance():
         objs[cont] = _stream_obj(b"NESTED-PAGE-%d" % page)
     pdf = _assemble(objs, root=1)
     assert count_pages(pdf) == 4
-    sliced = slice_pdf_first_pages(pdf, 3)
+    sliced = slice_pdf(pdf, 3)[0]
     assert sliced is not None and count_pages(sliced) == 3
     assert b"NESTED-PAGE-5" in sliced and b"NESTED-PAGE-7" in sliced
     assert b"NESTED-PAGE-8" not in sliced
@@ -143,7 +144,7 @@ def test_nested_page_tree_flattens_with_inheritance():
     assert sliced.count(b"[0 0 300 400]") >= 1
     assert b"/Rotate 90" in sliced
     # flattened: every kept page's parent is the single root pages node
-    assert slice_pdf_first_pages(sliced, 3) == sliced
+    assert slice_pdf(sliced, 3)[0] == sliced
 
 
 def _objstm_pdf(n_pages: int) -> bytes:
@@ -196,13 +197,13 @@ def _objstm_offsets(inner: dict[int, bytes]) -> list[tuple[int, int]]:
 def test_objstm_packed_page_tree_slices():
     pdf = _objstm_pdf(5)
     assert count_pages(pdf) == 5
-    sliced = slice_pdf_first_pages(pdf, 2)
+    sliced = slice_pdf(pdf, 2)[0]
     assert sliced is not None and count_pages(sliced) == 2
     assert b"OBJSTM-PAGE-0" in sliced and b"OBJSTM-PAGE-1" in sliced
     assert b"OBJSTM-PAGE-4" not in sliced
     # output is classic-xref and stable under re-slicing
     assert b"trailer" in sliced
-    assert slice_pdf_first_pages(sliced, 2) == sliced
+    assert slice_pdf(sliced, 2)[0] == sliced
 
 
 def test_out_of_subset_returns_none():
@@ -213,14 +214,14 @@ def test_out_of_subset_returns_none():
         root=1,
         trailer_extra=b"/Encrypt 9 0 R ",
     )
-    assert slice_pdf_first_pages(enc, 2) is None
+    assert slice_pdf(enc, 2)[0] is None
     # unterminated stream: broken file
     broken = pdf.replace(b"\nendstream", b"", 1)
-    assert slice_pdf_first_pages(broken, 2) is None
+    assert slice_pdf(broken, 2)[0] is None
     # garbage
-    assert slice_pdf_first_pages(b"not a pdf at all", 2) is None
+    assert slice_pdf(b"not a pdf at all", 2)[0] is None
     assert count_pages(b"%PDF-1.5 nothing here") is None
-    assert slice_pdf_first_pages(pdf, 0) is None
+    assert slice_pdf(pdf, 0)[0] is None
 
 
 def test_slice_pages_spark_path_with_real_streams(spark, tmp_path):
@@ -259,13 +260,13 @@ def test_real_world_pdfs_slice_on_zero_dep_path():
         content = open(path, "rb").read()
         assert count_pages(content) == n_pages, path
         for mp in (2, 20):
-            sliced = slice_pdf_first_pages(content, mp)
+            sliced = slice_pdf(content, mp)[0]
             if mp >= n_pages:
                 assert sliced == content, path
                 continue
             assert sliced is not None and sliced != content, (path, mp)
             assert count_pages(sliced) == mp, (path, mp)
-            assert slice_pdf_first_pages(sliced, mp) == sliced, (path, mp)
+            assert slice_pdf(sliced, mp)[0] == sliced, (path, mp)
 
 
 def test_slice_pages_status_column(spark, tmp_path):
@@ -442,7 +443,6 @@ def test_lzw_roundtrip_widths_and_kwkwk():
 def test_lzw_objstm_page_tree_slices():
     """VERDICT r9 #7: the one remaining DECODABLE slice residue — a
     1990s-era page tree in an LZW-coded object stream — now slices."""
-    from x17a5_spark.sources.pdf_mini import slice_pdf
 
     pdf = _lzw_objstm_pdf(5)
     assert count_pages(pdf) == 5
@@ -459,7 +459,6 @@ def test_lzw_objstm_page_tree_slices():
 def test_slice_pdf_explicit_status_contract():
     """Round-7 VERDICT #5: sliced/short come from the parser's page
     count, never byte equality; out-of-subset reasons are named."""
-    from x17a5_spark.sources.pdf_mini import slice_pdf
 
     pdf = _flat_pdf_with_streams(4)
     out, status = slice_pdf(pdf, 2)
@@ -490,7 +489,7 @@ def test_indirect_length_with_multidigit_object_number():
         15: b"%d" % len(payload),
     }
     pdf = _assemble(objs, root=1)
-    sliced = slice_pdf_first_pages(pdf, 1)
+    sliced = slice_pdf(pdf, 1)[0]
     # page count is 1 <= max_pages, so bytes pass through verbatim; the
     # regression would corrupt the scan and may still parse — assert
     # the payload survives a real re-serialization instead
@@ -500,7 +499,7 @@ def test_indirect_length_with_multidigit_object_number():
          5: b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] >>"},
         root=1,
     )
-    sliced2 = slice_pdf_first_pages(pdf2, 1)
+    sliced2 = slice_pdf(pdf2, 1)[0]
     assert sliced2 is not None
     assert b"stream\nab\nendstream" in sliced2
     assert b"/Length 2" in sliced2  # pinned to the REAL payload length
@@ -526,7 +525,6 @@ def test_delimiter_scan_declines_corrupt_flate_payload():
         15: b"%d" % len(evil),
     }
     pdf = _assemble(objs, root=1)
-    from x17a5_spark.sources.pdf_mini import slice_pdf
 
     assert slice_pdf(pdf, 1) == (None, "broken")
     # variant where the aliasing run mimics a WELL-FORMED object end
@@ -638,7 +636,7 @@ def test_slicer_property_fuzz():
         max_pages = rng.randrange(1, 14)
         pdf, payloads = _random_pdf(rng, n_pages)
         assert count_pages(pdf) == n_pages, seed
-        sliced = slice_pdf_first_pages(pdf, max_pages)
+        sliced = slice_pdf(pdf, max_pages)[0]
         assert sliced is not None, seed
         if n_pages <= max_pages:
             assert sliced == pdf, seed
@@ -654,7 +652,7 @@ def test_slicer_property_fuzz():
                 assert pl[:9] not in sliced or payloads[i][:9] in [
                     p[:9] for p in payloads[:max_pages]
                 ], (seed, i)
-        assert slice_pdf_first_pages(sliced, max_pages) == sliced, seed
+        assert slice_pdf(sliced, max_pages)[0] == sliced, seed
 
 
 def test_real_world_encrypted_pdf_slices(tmp_path):
@@ -688,7 +686,7 @@ def test_real_world_encrypted_pdf_slices(tmp_path):
     assert status == "ok"
     flat = M._serialize(objs, root)
     base_slice, base_status = M.slice_pdf(flat, 20)
-    assert base_status == "sliced" and M.count_pages(base_slice) == 20
+    assert base_status == "sliced" and count_pages(base_slice) == 20
 
     def payload_digests(pdf: bytes) -> list[str]:
         sigs = []
@@ -719,5 +717,5 @@ def test_real_world_encrypted_pdf_slices(tmp_path):
         assert probe not in enc, f"{label}: fixture is not actually opaque"
         out, st = M.slice_pdf(enc, 20)
         assert st == "sliced", (label, st)
-        assert M.count_pages(out) == 20, label
+        assert count_pages(out) == 20, label
         assert payload_digests(out) == base_digests, label

@@ -91,7 +91,7 @@ def test_page_slice_real(spark, tmp_path):
     (sources/pdf_mini.py) handles the classic-xref subset. Verified
     structurally by the independent count_pages parser, and
     cross-checked with pypdf whenever it happens to be importable."""
-    from x17a5_spark.sources.pdf_mini import count_pages
+    from tests.pdf_fixtures import count_pages
 
     (tmp_path / "885639-2020-02-28.pdf").write_bytes(_minimal_pdf(5))
     df = read_document_corpus(spark, str(tmp_path))
@@ -113,11 +113,12 @@ def test_page_slice_real(spark, tmp_path):
 def test_pdf_mini_slicer_unit():
     """Slicer contract on the simple subset: truncates, is idempotent,
     keeps short docs byte-identical, declines garbage/streams."""
-    from x17a5_spark.sources.pdf_mini import count_pages, slice_pdf_first_pages
+    from x17a5_spark.sources.pdf_mini import slice_pdf
+    from tests.pdf_fixtures import count_pages
 
     five = _minimal_pdf(5)
     assert count_pages(five) == 5
-    two = slice_pdf_first_pages(five, 2)
+    two = slice_pdf(five, 2)[0]
     assert two is not None and count_pages(two) == 2
     # xref offsets must be correct: every recorded offset points at
     # "<num> 0 obj"
@@ -125,15 +126,15 @@ def test_pdf_mini_slicer_unit():
     offsets = [int(l[:10]) for l in xref_block.splitlines()[1:] if l[-1:] == b"n"]
     for i, off in enumerate(offsets, start=1):
         assert two[off:].startswith(f"{i} 0 obj".encode())
-    assert slice_pdf_first_pages(five, 9) == five  # already short enough
-    assert slice_pdf_first_pages(two, 2) == two  # idempotent
-    assert slice_pdf_first_pages(b"%PDF-fake", 2) is None
-    assert slice_pdf_first_pages(b"not a pdf", 2) is None
+    assert slice_pdf(five, 9)[0] == five  # already short enough
+    assert slice_pdf(two, 2)[0] == two  # idempotent
+    assert slice_pdf(b"%PDF-fake", 2)[0] is None
+    assert slice_pdf(b"not a pdf", 2)[0] is None
     # round 7: stream OBJECTS are in-subset now (tests/test_pdf_real.py
     # covers them); a stream the file never terminates is still out
-    assert slice_pdf_first_pages(
+    assert slice_pdf(
         five.replace(b"/Type /Page ", b"stream\n/Type /Page ", 1), 2
-    ) is None  # unterminated stream: broken file
+    )[0] is None  # unterminated stream: broken file
 
 
 # ------------------------------------------------------- S3/S4 scans

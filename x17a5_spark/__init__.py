@@ -10,8 +10,8 @@ algorithms. See SURVEY.md for the operator inventory this implements.
 """
 
 from x17a5_spark.session import get_spark
-from x17a5_spark.tables import load_table, load_tables
+from x17a5_spark.tables import load_table
 
-__all__ = ["get_spark", "load_table", "load_tables"]
+__all__ = ["get_spark", "load_table"]
 
 __version__ = "0.1.0"

@@ -134,29 +134,57 @@ def is_power_of_ten_ratio(x1: Column, x2: Column) -> Column:
     exactly one fewer character (dropped-leading-digit OCR error).
     Zero on either side is never a match (reference guards division).
     """
-    lg = F.log10(x2 / x1)
-    # log10 of a negative ratio is null — coalesce so the OR can still
-    # fall through to the substring check (reference: numpy nan -> False)
+    lg = F.log10(F.try_divide(x2, x1))
+    # the ratio over x1 = 0 and log10 of a negative ratio are null —
+    # coalesce so the OR can still fall through to the substring check
+    # (reference: numpy nan -> False)
     power10 = F.coalesce(lg == F.floor(lg), F.lit(False))
     s1 = _py_float_repr(x1)
     s2 = _py_float_repr(x2)
     substring_drop = s1.contains(s2) & (F.length(s2) == F.length(s1) - 1)
-    return F.when((x1 == 0) | (x2 == 0), F.lit(False)).otherwise(
-        power10 | substring_drop
-    )
+    # a plain AND, not a CASE: each rendering appears twice outside any
+    # branch, so subexpression elimination evaluates it once per row in
+    # a method of its own. Inlined into a CASE branch, two copies each
+    # push c5's projection method past the JIT's 8,000-byte limit, and
+    # the JVM interprets it (measured: c5 twice as slow).
+    return ~((x1 == 0) | (x2 == 0)) & (power10 | substring_drop)
 
 
 def _py_float_repr(x: Column) -> Column:
-    """Python-style ``str(float)`` for the string-shape checks: Spark
-    renders doubles >= 1e7 in scientific notation, but the reference's
-    substring/length semantics assume plain decimal. Integral doubles
-    (the OCR common case) render as ``<int>.0``; others fall back to
-    Spark's rendering (identical to Python's below 1e7).
+    """Python's ``str(float)`` for the string-shape checks, which the
+    reference runs on ``str()``.
+
+    Python writes a plain decimal for 1e-4 <= |x| < 1e16
+    (``12345678.5``, ``0.0001``, ``123.0``) and ``1e+16``, ``1.5e-07``
+    outside. Spark's string cast is Java's ``Double.toString``, plain
+    only from 1e-3 to 1e7 (``1.23456785E7``, ``1.0E-4``), and
+    ``NaN``/``Infinity``. Integral amounts, the OCR common case, print
+    from their ``long``. Other values in the plain range cast to
+    ``decimal(38, 20)``, which keeps Java's digits (Spark builds the
+    decimal from ``Double.toString``) and prints them plain, so only
+    the trailing zeros go. Outside it, Java's mantissa and exponent are
+    reformatted to Python's ``e+NN``.
+
+    The digits are Java's. JDK 17's ``Double.toString`` is not always
+    the shortest round-trip form, as Python's is: it renders
+    ``2.82879384806159e17`` as ``2.82879384806159008E17`` and
+    ``5e-324`` as ``4.9E-324``, and those digits carry over.
     """
-    integral = (x == F.floor(x)) & (F.abs(x) < 1e15)
-    return F.when(
-        integral, F.concat(x.cast("long").cast("string"), F.lit(".0"))
-    ).otherwise(x.cast("string"))
+    java = x.cast("string")
+    below_1e16 = F.abs(x) < 1e16  # false for NaN, which Spark orders above all
+    # strip the scale's trailing zeros but the one after the point
+    plain = F.regexp_replace(x.cast("decimal(38, 20)").cast("string"), r"(?<!\.)0+$", "")
+    sci = F.concat(
+        F.substring_index(F.replace(java, F.lit(".0E"), F.lit("E")), "E", 1),
+        F.format_string("e%+03d", F.substring_index(java, "E", -1).cast("int")),
+    )
+    return (
+        F.when((x == F.floor(x)) & below_1e16 & (x != 0), F.concat(x.cast("long").cast("string"), F.lit(".0")))
+        .when((F.abs(x) >= 1e-4) & below_1e16, plain)
+        .when(java.contains("E"), sci)
+        # 0.0, -0.0, NaN, Infinity, -Infinity -> 0.0, -0.0, nan, inf, -inf
+        .otherwise(F.substring_index(F.lower(java), "i", 2))
+    )
 
 
 def epsilon_one_digit_match(x1: Column, x2: Column, tol: float = 0.01) -> Column:

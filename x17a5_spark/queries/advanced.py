@@ -32,7 +32,6 @@ from x17a5_spark.operators.skew import salted_aggregate, salted_join
 from x17a5_spark.queries.dedup import AUG_TWIN_OFFSET, guarded_twin_id
 from x17a5_spark.queries.similarity import (
     _as_double,
-    _dot,
     _norm,
     ivf_tables,
     staged_assign_sql,

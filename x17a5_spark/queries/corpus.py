@@ -358,7 +358,6 @@ FROM r
 
 T16_SHARDS = 8
 T16_SEED = 17
-_T16_TWO60 = float(1 << 60)
 
 
 def t16_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:

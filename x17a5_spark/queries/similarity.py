@@ -25,7 +25,6 @@ from x17a5_spark.tables import load_table
 
 N_QUERIES = 10
 TOP_K = 5
-N_PLANES = 8
 
 
 def _as_double(col: Column) -> Column:
@@ -41,10 +40,6 @@ def _dot(a: Column, b: Column) -> Column:
 
 def _norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return _dot(a, b) / (_norm(a) * _norm(b))
 
 
 # SIM1 — brute-force cosine top-k (exact baseline). Norms are computed
@@ -140,8 +135,8 @@ def s2_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the same bridge; oracle stays value-exact). posexplode's position
     # IS the table id, matching the old struct literals.
     sig = _bucket_signature_udf(n_bits=BITS_PER_TABLE)
-    # norms once per VECTOR, before the table explode — the old cosine()
-    # re-ran both 64-element norm folds per candidate PAIR (s1's
+    # norms once per VECTOR, before the table explode — a per-pair
+    # cosine re-runs both 64-element norm folds per candidate PAIR (s1's
     # precompute discipline; measured +0.24 s on 13k pairs). Same float
     # expression, same order — bit-identical cos_sim.
     vecs = emb.select(
@@ -355,8 +350,7 @@ SELECT id_a, id_b, cos_sim FROM pairs WHERE cos_sim >= 0.99
 # IVF codebook at 100 TB is still ≤ MBs), assignment is one narrow
 # codegen pass over the corpus, and the probe join is an equi-join on
 # cell id — candidates are ~N_PROBE/N_CELLS of the corpus, never a
-# cross product. ml/clustering.py::ivf_assign provides the same
-# structure over LEARNED KMeans centroids.
+# cross product. s7 runs the same structure over LEARNED centroids.
 N_CELLS = 16
 N_PROBE = 4  # 4/16 cells probed: recall ~0.55 on the structureless fixture (SCALE.md)
 
@@ -980,7 +974,7 @@ FROM per_el GROUP BY 1
 # S7 — IVF probe over a TRAINED codebook, trained IN THE PLAN: two
 # unrolled Lloyd (k-means) iterations from the deterministic md5 seeds
 # — the g1-PageRank pattern applied to quantizer training, so the
-# learned-codebook path (ml/clustering.ivf_assign is the MLlib form)
+# learned-codebook path
 # gets an exact SQL oracle too. Float discipline per round:
 #   * assignment scores round(|c|^2 - 2 v.c, 6) with cell-id tiebreak
 #     (|v|^2 is constant per vector and cancels from the argmin);

@@ -2,9 +2,8 @@
 
 ``window()`` / ``session_window()`` run identically under batch and
 Structured Streaming; the batch forms are declared here
-(oracle-checkable). The window counts and the interval join also run
-as streams (readStream + watermark + Trigger.AvailableNow) in
-x17a5_spark/streaming/events.py, whose tests assert stream == batch.
+(oracle-checkable); st4, st6 and st8 replay watermark and state
+semantics deterministically over the batch table.
 Tumbling/sliding windows shuffle once on (window, key); session
 windows additionally merge per-key state — all built-in operators.
 """
@@ -115,8 +114,7 @@ FROM sessions GROUP BY user_id, sess_id
 # compute the identical hash), cut 10-minute arrival micro-batches,
 # advance the watermark per batch (5 min delay), and drop late rows
 # before the tumbling aggregation — the exact semantics of
-# ``withWatermark("ts", "5 minutes")`` over that arrival stream
-# (streaming/events.py runs the real streaming form).
+# ``withWatermark("ts", "5 minutes")`` over that arrival stream.
 #
 # Scale: the per-batch max is a map-side-combined aggregation down to
 # one row per 10 minutes of wall clock (bounded by time, not data
@@ -412,8 +410,8 @@ WHERE n_hist >= 12
 """
 
 
-# ST8 — TTL dedup (the batch twin of streaming/stateful.py's
-# applyInPandasWithState dedup-with-TTL: an event is suppressed when
+# ST8 — TTL dedup (dedup-with-TTL as a streaming state store keeps
+# it: an event is suppressed when
 # another event of the same (user, type) arrived within the previous
 # TTL). "Within TTL of the previous EVENT" chains into bursts, so the
 # declarative form is gap sessionization: a burst starts where the gap

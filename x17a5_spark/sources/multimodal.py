@@ -294,71 +294,6 @@ def decode_mp4_duration(content: bytes) -> float:
     return dur
 
 
-AUDIO_SCHEMA = (
-    "media_id bigint, sample_rate int, channels int, bits int, "
-    "n_frames bigint, duration_sec double, rms array<double>, error string"
-)
-
-
-def extract_audio_stats(df: DataFrame, content_col: str = "media") -> DataFrame:
-    """Real per-channel RMS + header metadata for 16-bit PCM WAV media
-    (stdlib decode); failures route to the error column."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import math
-
-        for pdf in batches:
-            rates, chs, bits_l, frames, durs, rmss, errors = (
-                [], [], [], [], [], [], [],
-            )
-            for content in pdf[content_col]:
-                try:
-                    if content is None:
-                        raise ValueError("null media")
-                    b = bytes(content)
-                    rate, ch, bits, n_frames = decode_wav(b)
-                    if bits != 16:
-                        raise NotImplementedError("only 16-bit PCM RMS")
-                    data_at = b.find(b"data") + 8
-                    acc = [0.0] * ch
-                    for f in range(n_frames):
-                        for c in range(ch):
-                            off = data_at + (f * ch + c) * 2
-                            (s,) = struct.unpack("<h", b[off : off + 2])
-                            acc[c] += s * s
-                    rates.append(rate)
-                    chs.append(ch)
-                    bits_l.append(bits)
-                    frames.append(n_frames)
-                    durs.append(n_frames / rate if rate else None)
-                    rmss.append(
-                        [math.sqrt(a / max(n_frames, 1)) / 32768.0 for a in acc]
-                    )
-                    errors.append(None)
-                except Exception as e:  # noqa: BLE001
-                    rates.append(None)
-                    chs.append(None)
-                    bits_l.append(None)
-                    frames.append(None)
-                    durs.append(None)
-                    rmss.append(None)
-                    errors.append(f"{type(e).__name__}: {e}")
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "sample_rate": pd.array(rates, dtype="Int32"),
-                    "channels": pd.array(chs, dtype="Int32"),
-                    "bits": pd.array(bits_l, dtype="Int32"),
-                    "n_frames": pd.array(frames, dtype="Int64"),
-                    "duration_sec": durs,
-                    "rms": rmss,
-                    "error": errors,
-                }
-            )
-
-    return df.mapInPandas(op, schema=AUDIO_SCHEMA)
-
-
 def decode_metadata(df: DataFrame, content_col: str = "media") -> DataFrame:
     """Extract typed metadata (width/height/bytes) from binary media.
     Bad rows land in the ``error`` column, never fail the stage."""

@@ -21,9 +21,9 @@ filter) declines to the ``encrypted`` passthrough.
 
 Everything here is stdlib-only (hashlib MD5 + a from-scratch FIPS-197
 AES with tables generated from GF(2^8) arithmetic at import), so it
-runs unchanged inside executor ``mapInPandas`` batches. The ENCRYPT
-directions (used only by the test fixture builder) live here too so
-fixtures and decryptor share one implementation of the spec.
+runs unchanged inside executor ``mapInPandas`` batches. The engine
+only decrypts; the encrypt directions that build test fixtures live in
+``tests/pdf_fixtures.py`` and reuse this module's primitives.
 """
 
 from __future__ import annotations
@@ -217,20 +217,6 @@ def aes_cbc_decrypt(key: bytes, data: bytes) -> bytes | None:
     return bytes(out[:-npad])
 
 
-def aes_cbc_encrypt(key: bytes, iv: bytes, data: bytes) -> bytes:
-    """Fixture-builder direction: returns IV || ciphertext with PKCS#7."""
-    rk = _expand_key(key)
-    npad = 16 - len(data) % 16
-    data = data + bytes([npad]) * npad
-    out = bytearray(iv)
-    prev = iv
-    for i in range(0, len(data), 16):
-        block = bytes(a ^ b for a, b in zip(data[i : i + 16], prev))
-        prev = _aes_encrypt_block(rk, block)
-        out += prev
-    return bytes(out)
-
-
 # ---------------------------------------------------------------------------
 # Standard security handler key algorithms (§7.6.3.3-7.6.3.4)
 # ---------------------------------------------------------------------------
@@ -259,21 +245,6 @@ def compute_key(
         for _ in range(50):
             digest = hashlib.md5(digest[:n]).digest()
     return digest[:n]
-
-
-def compute_o(owner_pwd: bytes, user_pwd: bytes, r: int, length_bits: int) -> bytes:
-    """Algorithm 3: the /O entry (fixture-builder direction)."""
-    n = 5 if r == 2 else length_bits // 8
-    digest = hashlib.md5(_pad_password(owner_pwd)).digest()
-    if r >= 3:
-        for _ in range(50):
-            digest = hashlib.md5(digest).digest()
-    rc4_key = digest[:n]
-    o = rc4(rc4_key, _pad_password(user_pwd))
-    if r >= 3:
-        for i in range(1, 20):
-            o = rc4(bytes(b ^ i for b in rc4_key), o)
-    return o
 
 
 def compute_u(key: bytes, id0: bytes, r: int) -> bytes:
@@ -329,13 +300,6 @@ def decrypt_bytes(okey: bytes, data: bytes, aes: bool) -> bytes:
         return rc4(okey, data)
     out = aes_cbc_decrypt(okey, data)
     return data if out is None else out
-
-
-def encrypt_bytes(okey: bytes, data: bytes, aes: bool, iv: bytes = b"") -> bytes:
-    """Fixture-builder direction (IV required for AES)."""
-    if not aes:
-        return rc4(okey, data)
-    return aes_cbc_encrypt(okey, iv or bytes(16), data)
 
 
 # ---------------------------------------------------------------------------
@@ -408,16 +372,3 @@ def authenticate_empty_user_v5(
         return None
     intermediate = _v5_user_hash(b"", ksalt, r)
     return _aes_cbc_nopad(intermediate, bytes(16), ue_entry[:32], encrypt=False)
-
-
-def make_u_ue_v5(
-    file_key: bytes, r: int, password: bytes = b""
-) -> tuple[bytes, bytes]:
-    """Fixture-builder direction: (/U, /UE) for a user password (empty
-    by default) with deterministic salts."""
-    vsalt = hashlib.md5(b"vsalt").digest()[:8]
-    ksalt = hashlib.md5(b"ksalt").digest()[:8]
-    u = _v5_user_hash(password, vsalt, r) + vsalt + ksalt
-    intermediate = _v5_user_hash(password, ksalt, r)
-    ue = _aes_cbc_nopad(intermediate, bytes(16), file_key, encrypt=True)
-    return u, ue

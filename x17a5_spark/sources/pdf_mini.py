@@ -739,13 +739,6 @@ def _parse(content: bytes):
     return (objs, root, pages_num, leaves, decrypted), "ok"
 
 
-def slice_pdf_first_pages(content: bytes, max_pages: int) -> bytes | None:
-    """Back-compat wrapper over :func:`slice_pdf`: the sliced bytes, the
-    original bytes when already <= max_pages, or ``None`` when out of
-    subset — the caller then passes the document through unsliced."""
-    return slice_pdf(content, max_pages)[0]
-
-
 def slice_pdf(content: bytes, max_pages: int) -> tuple["bytes | None", str]:
     """First-``max_pages`` subset with an EXPLICIT status, never
     inferred from byte equality (if the slicer ever re-serializes an
@@ -855,10 +848,3 @@ def _serialize(objs: dict[int, _Obj], root: int) -> bytes:
         % (n_objs + 1, remap[root], xref_at)
     )
     return bytes(out)
-
-
-def count_pages(content: bytes) -> int | None:
-    """Leaf-page count via the same parser (None when unsupported) —
-    an independent structural check for tests."""
-    parsed, _reason = _parse(content)
-    return None if parsed is None else len(parsed[3])

@@ -1,12 +1,8 @@
 """Incremental / idempotent re-run semantics (reference
 run_main.py:66-74, run_ocr.py:136-141: skip-if-exists ladders).
 
-Two equivalent engine forms:
-  * batch: left-anti join of the candidate set against the sink's key
-    listing (J6/S7) — idempotent, restart-safe, no bookkeeping files;
-  * streaming: file source + ``Trigger.AvailableNow`` + checkpoint
-    (see events.py) — Spark's checkpoint replaces the reference's
-    every-200-files JSON saves.
+A left-anti join of the candidate set against the sink's key listing
+(J6/S7): idempotent, restart-safe, no bookkeeping files.
 """
 
 from __future__ import annotations

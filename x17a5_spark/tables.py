@@ -37,12 +37,6 @@ TABLE_NAMES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Dimension tables small enough to broadcast at any scale factor the
-# engine targets (region/nation are bounded by geography; supplier only
-# at test SFs — at 100 TB supplier is NOT broadcast, and queries below
-# rely on AQE's size-based choice rather than forcing a hint).
-BROADCAST_SAFE = {"region", "nation"}
-
 
 class _FileMeta(NamedTuple):
     schema: StructType
@@ -243,12 +237,3 @@ def _load_events(spark: SparkSession, path: str):
         df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
     return df
 
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view for the SQL API."""
-    for name in TABLE_NAMES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
