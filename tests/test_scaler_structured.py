@@ -6,7 +6,6 @@ SURVEY §5.1)."""
 from __future__ import annotations
 
 import random
-from difflib import SequenceMatcher
 
 import pytest
 from pyspark.sql import functions as F
@@ -17,7 +16,12 @@ from x17a5_spark.operators.structured import (
     build_structured_assets,
     build_structured_liabilities,
 )
-from x17a5_spark.operators.scaler import SCALE_WORDS, detect_unit_scale, line_scale
+from x17a5_spark.operators.scaler import (
+    SCALE_WORDS,
+    _line_scale_py,
+    detect_unit_scale,
+    line_scale,
+)
 
 
 def test_detect_unit_scale(spark):
@@ -77,19 +81,6 @@ def _edits(word: str, rng: random.Random, n: int) -> str:
         elif i < len(word):
             word = word[:i] + (rng.choice(letters) if op == "s" else "") + word[i + 1:]
     return word
-
-
-def _line_scale_py(line: str) -> float | None:
-    """First matching scale multiplier for one text line (null if
-    none) — WORD-major order like the reference: 'thousands' against
-    every token before 'hundreds' is tried, so the lowest matched word
-    index decides. Exact fuzz.ratio semantics via difflib:
-    ratio = 2M/(la+lb) * 100."""
-    toks = line.lower().split(" ")
-    for word, mult in SCALE_WORDS:
-        if any(SequenceMatcher(None, word, t).ratio() * 100 >= 90 for t in toks):
-            return mult
-    return None
 
 
 def test_line_scale_matches_difflib_reference(spark):

@@ -30,10 +30,7 @@ that names no definition, is stale and fails the audit.
 Exit code 1 on any unreached, unallowlisted definition or any stale
 allowlist entry.
 
-Usage: python tools/audit_callers.py [package_dir [root_path ...]]
-(default: x17a5_spark/ with this repo's entry points; a package given
-without roots is audited with its module-level statements as the only
-roots)
+Usage: python tools/audit_callers.py
 """
 
 from __future__ import annotations
@@ -46,8 +43,8 @@ from collections.abc import Iterable, Iterator
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # "module.path:name" -> why nothing in production calls it yet. Only
-# reference-pipeline steps that no e1 stage runs, and one test
-# reference; each is a "wire into e1 with an oracle, or delete" item.
+# reference-pipeline steps that no e1 stage runs, each a "wire into e1
+# with an oracle, or delete" item, and two test references.
 ALLOWED = {
     "sources.fwf:read_fixed_width":
         "reference step 1 (EDGAR form.idx listing); no e1 stage reads it yet",
@@ -65,6 +62,8 @@ ALLOWED = {
         "F14, reference OCRClean.idio_chg; no silver stage applies it yet",
     "operators.row_split:row_split_kernel":
         "the Python reference the row-split tests compare the array-function split against",
+    "operators.scaler:_line_scale_py":
+        "the difflib reference line_scale is tested against, here and in perfbench/tests",
 }
 
 DEFAULT_ROOTS = ("bench.py", "__spark_entry__.py", "tools", "perfbench")
@@ -182,13 +181,9 @@ def _reach(seed: set[str], bodies: dict[str, list[ast.AST]]) -> set[str]:
     return reached
 
 
-def main(argv: list[str]) -> int:
-    if argv:
-        pkg_dir, roots, allowed = argv[0], argv[1:], {}
-    else:
-        pkg_dir = os.path.join(REPO, "x17a5_spark")
-        roots, allowed = [os.path.join(REPO, r) for r in DEFAULT_ROOTS], ALLOWED
-    unreached, stale = audit(pkg_dir, roots, allowed)
+def main() -> int:
+    roots = [os.path.join(REPO, r) for r in DEFAULT_ROOTS]
+    unreached, stale = audit(os.path.join(REPO, "x17a5_spark"), roots, ALLOWED)
     for key in unreached:
         print(f"NO CALLER  {key}")
     for key in stale:
@@ -199,4 +194,4 @@ def main(argv: list[str]) -> int:
 
 
 if __name__ == "__main__":
-    sys.exit(main(sys.argv[1:]))
+    sys.exit(main())

@@ -20,11 +20,13 @@ scale word is longer than 9. So a match needs the shorter string to be
 a subsequence of the longer: the Levenshtein distance is then the
 length difference, and the ratio is 2·min/(|t|+|w|). ``_scale_hit``
 states that with Spark's built-in ``levenshtein``, so the whole scaler
-is one JVM pass. tests/test_scaler_structured.py keeps the difflib
-form as the reference it is checked against.
+is one JVM pass. ``_line_scale_py`` keeps the difflib form as the
+tests' reference.
 """
 
 from __future__ import annotations
+
+from difflib import SequenceMatcher
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -32,6 +34,19 @@ from pyspark.sql import functions as F
 from x17a5_spark.functions.keys import FILING_KEY
 
 SCALE_WORDS = [("thousands", 1e3), ("hundreds", 1e2), ("millions", 1e6), ("billions", 1e9)]
+
+
+def _line_scale_py(line: str) -> float | None:
+    """First matching scale multiplier for one text line (null if
+    none) — WORD-major order like the reference: 'thousands' against
+    every token before 'hundreds' is tried, so the lowest matched word
+    index decides. Exact fuzz.ratio semantics via difflib:
+    ratio = 2M/(la+lb) * 100."""
+    toks = line.lower().split(" ")
+    for word, mult in SCALE_WORDS:
+        if any(SequenceMatcher(None, word, t).ratio() * 100 >= 90 for t in toks):
+            return mult
+    return None
 
 
 def _scale_hit(tok: Column, word: str) -> Column:
@@ -45,11 +60,9 @@ def _scale_hit(tok: Column, word: str) -> Column:
 
 
 def line_scale(line: Column) -> Column:
-    """First matching scale multiplier for a text line (null if none),
-    word-major like the reference: 'thousands' is tried against every
-    token before 'hundreds', so the lowest matched word index decides.
-    A CASE over ``SCALE_WORDS``, each branch an ``exists`` over the
-    line's lower-cased single-space tokens. Null for a null line."""
+    """``_line_scale_py`` as a Column: a word-major CASE over
+    ``SCALE_WORDS``, each branch an ``exists`` over the line's
+    lower-cased single-space tokens. Null for a null line."""
     toks = F.split(F.lower(line), " ", -1)
     scale = None
     for word, mult in SCALE_WORDS:
