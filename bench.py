@@ -224,10 +224,10 @@ def main() -> None:
         df = None if rebuild else queries[name](spark, sf_dir)
 
         def run() -> float:
-            t0 = time.time()
+            t0 = time.perf_counter()
             d = queries[name](spark, sf_dir) if rebuild else df
             d.write.mode("overwrite").format("noop").save()
-            return time.time() - t0
+            return time.perf_counter() - t0
 
         if not rebuild:
             cold_total += run()  # warmup: codegen + JIT + stage fill

@@ -42,7 +42,7 @@ def slice_pages(
     """First-N-pages subset (reference FocusReportSlicing.py:78-109).
 
     One engine inside each Arrow batch: the vendored pure-Python
-    slicer (sources/pdf_mini.py — handles content streams opaquely,
+    slicer (pdf_mini.py — handles content streams opaquely,
     FlateDecode object streams, nested page trees, and empty-user-
     password encryption via the standard security handler, RC4-40/128,
     AES-128 and AES-256; declines genuinely passworded or broken
@@ -73,7 +73,7 @@ def slice_pages(
     """
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from x17a5_spark.sources.pdf_mini import slice_pdf
+        from tests.reference.pdf_mini import slice_pdf
 
         def subset(content: bytes) -> tuple[bytes, str]:
             sliced, status = slice_pdf(bytes(content), max_pages)

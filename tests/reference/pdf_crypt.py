@@ -21,9 +21,9 @@ filter) declines to the ``encrypted`` passthrough.
 
 Everything here is stdlib-only (hashlib MD5 + a from-scratch FIPS-197
 AES with tables generated from GF(2^8) arithmetic at import), so it
-runs unchanged inside executor ``mapInPandas`` batches. The engine
+runs unchanged inside executor ``mapInPandas`` batches. This module
 only decrypts; the encrypt directions that build test fixtures live in
-``tests/pdf_fixtures.py`` and reuse this module's primitives.
+``pdf_fixtures.py`` and reuse this module's primitives.
 """
 
 from __future__ import annotations

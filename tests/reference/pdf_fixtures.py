@@ -1,6 +1,6 @@
 """Encrypt-side PDF fixture builders and an independent page count.
 
-The engine only decrypts (``x17a5_spark/sources/pdf_crypt.py``). The
+``pdf_crypt.py`` only decrypts. The
 tests build encrypted fixtures with the same spec algorithms run in
 the encrypt direction, over the module's own AES, RC4 and V5 hash
 primitives, so fixtures and decryptor share one implementation of the
@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import hashlib
 
-from x17a5_spark.sources.pdf_crypt import (
+from tests.reference.pdf_crypt import (
     _aes_cbc_nopad,
     _aes_encrypt_block,
     _expand_key,
@@ -20,7 +20,7 @@ from x17a5_spark.sources.pdf_crypt import (
     _v5_user_hash,
     rc4,
 )
-from x17a5_spark.sources.pdf_mini import _parse
+from tests.reference.pdf_mini import _parse
 
 
 def aes_cbc_encrypt(key: bytes, iv: bytes, data: bytes) -> bytes:

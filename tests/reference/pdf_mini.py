@@ -1,5 +1,5 @@
 """Dependency-free first-N-pages PDF slicer (the engine of
-sources/binary_docs.slice_pages, reference FocusReportSlicing.py:78-109,
+binary_docs.slice_pages, reference FocusReportSlicing.py:78-109,
 which slices with pypdf).
 
 A slicer that refuses any object containing a ``stream`` keyword passes
@@ -35,7 +35,7 @@ handler with RC4-40/128 (V1/V2, R2/R3), AES-128-CBC (V4/R4
 ``/CFM /AESV2``, PDF 32000-1 §7.6.3) and AES-256-CBC (V5/R5/R6
 ``/CFM /AESV3``, ISO 32000-2 §7.6.4 incl. the Algorithm 2.B iterated
 hash), key material verified against ``/U`` before any decryption
-(sources/pdf_crypt.py). Output from a decryptable file is ALWAYS
+(pdf_crypt.py). Output from a decryptable file is ALWAYS
 re-serialized UNENCRYPTED (the trailer the slicer writes has no
 ``/Encrypt``): truncated files as ``sliced``, within-bound encrypted
 files as ``short-decrypted`` (ADVICE r9 — they used to return the
@@ -409,14 +409,14 @@ def _decrypt_in_place(
 ) -> bool:
     """Open the standard security handler with the EMPTY user password
     and decrypt every object's strings and stream payloads in place
-    (sources/pdf_crypt.py). True on success; False declines to the
+    (pdf_crypt.py). True on success; False declines to the
     ``encrypted`` passthrough (real user password, unsupported V/R or
     crypt filter, malformed dictionary).
 
     Order matters: strings inside /ObjStm containers are encrypted as
     part of the CONTAINER stream only (§7.6.2), so this runs before
     _expand_objstm and the expanded objects need no further work."""
-    from x17a5_spark.sources import pdf_crypt as C
+    from tests.reference import pdf_crypt as C
 
     enc_num = None
     for m in _ENCRYPT_RE.finditer(content):

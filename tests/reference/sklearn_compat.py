@@ -4,7 +4,7 @@ sklearn pipeline EXACTLY, so predictions match its shipped joblib models
 'unicode', lowercase=True, analyzer='word', n_features=1000, norm='l2')``
 feeding a LogisticRegression loaded from joblib).
 
-The pyspark.ml route (ml/classifier.py) is the train-on-Spark path, but
+The pyspark.ml route (x17a5_spark/ml/classifier.py) is the train-on-Spark path, but
 its HashingTF uses a different hash than sklearn's MurmurHash3, so its
 feature space — and therefore its predictions — cannot match a model
 trained in sklearn. This module closes that gap without requiring
@@ -157,7 +157,7 @@ def sklearn_predict_labels(
     lineitems: DataFrame, params: LogRegParams, n_features: int = N_FEATURES
 ) -> DataFrame:
     """Distinct line items in, (lineitem, label, max_score) out — the
-    bit-compat twin of ml/classifier.py::predict_labels. The params
+    bit-compat twin of x17a5_spark/ml/classifier.py::predict_labels. The params
     ride the UDF closure (a broadcast under the hood); each Arrow batch
     is vectorized end-to-end in numpy."""
     classes = np.asarray(params.classes)

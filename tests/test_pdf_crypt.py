@@ -21,16 +21,16 @@ from __future__ import annotations
 import hashlib
 import re
 
-from x17a5_spark.sources import pdf_crypt as C
-from x17a5_spark.sources.pdf_mini import (
+from tests.reference import pdf_crypt as C
+from tests.reference.pdf_mini import (
     _LEN_ANY,
     _find_root,
     _map_strings,
     _scan_objects,
     slice_pdf,
 )
-from tests import pdf_fixtures as fx
-from tests.pdf_fixtures import count_pages
+from tests.reference import pdf_fixtures as fx
+from tests.reference.pdf_fixtures import count_pages
 from tests.test_pdf_real import _flat_pdf_with_streams
 
 FILE_ID0 = bytes(range(16))
@@ -496,7 +496,7 @@ def test_slice_pages_spark_path_decrypts(spark, tmp_path):
     DECRYPTED and truncated on the zero-dependency path, status
     ``sliced`` — while a genuinely passworded sibling keeps
     ``passthrough:encrypted`` (the round-9 taxonomy refinement)."""
-    from x17a5_spark.sources.binary_docs import read_document_corpus, slice_pages
+    from tests.reference.binary_docs import read_document_corpus, slice_pages
 
     (tmp_path / "1-2021-03-31.pdf").write_bytes(
         _encrypt_pdf(_plain_with_title(5), v=4, r=4, length_bits=128)
@@ -527,7 +527,7 @@ def test_literal_escape_8_9_do_not_crash():
     """\\8 and \\9 are NOT octal escapes — the spec drops the backslash
     and keeps the digit; the old int(.., 8) raised ValueError, killing
     the whole mapInPandas batch on real-world encrypted PDFs."""
-    from x17a5_spark.sources.pdf_mini import _parse_literal
+    from tests.reference.pdf_mini import _parse_literal
 
     raw, end = _parse_literal(rb"(a\8b\9)", 0)
     assert raw == b"a8b9" and end == 8

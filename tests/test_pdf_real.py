@@ -1,5 +1,5 @@
 """Round-7 contract for the dependency-free PDF slicer
-(sources/pdf_mini.py): real-shaped PDFs WITH content streams slice on
+(tests/reference/pdf_mini.py): real-shaped PDFs WITH content streams slice on
 the no-pypdf path (reference FocusReportSlicing.py:78-109's first-20-
 pages bound), covering direct and indirect /Length, payloads that
 alias structural keywords, nested page trees with attribute
@@ -11,8 +11,8 @@ from __future__ import annotations
 
 import zlib
 
-from x17a5_spark.sources.pdf_mini import slice_pdf
-from tests.pdf_fixtures import count_pages
+from tests.reference.pdf_mini import slice_pdf
+from tests.reference.pdf_fixtures import count_pages
 
 
 def _assemble(objects: dict[int, bytes], root: int, trailer_extra: bytes = b"") -> bytes:
@@ -228,7 +228,7 @@ def test_slice_pages_spark_path_with_real_streams(spark, tmp_path):
     """End-to-end through the mapInPandas operator: a stream-bearing
     PDF in a binaryFile corpus comes out truncated (the vendored
     slicer is slice_pages' only engine)."""
-    from x17a5_spark.sources.binary_docs import read_document_corpus, slice_pages
+    from tests.reference.binary_docs import read_document_corpus, slice_pages
 
     (tmp_path / "885639-2020-02-28.pdf").write_bytes(_flat_pdf_with_streams(30))
     df = read_document_corpus(spark, str(tmp_path))
@@ -272,7 +272,7 @@ def test_real_world_pdfs_slice_on_zero_dep_path():
 def test_slice_pages_status_column(spark, tmp_path):
     """status_col quantifies the slice outcome per document: sliced /
     short / passthrough (ADVICE r5/r6's observability ask)."""
-    from x17a5_spark.sources.binary_docs import read_document_corpus, slice_pages
+    from tests.reference.binary_docs import read_document_corpus, slice_pages
 
     (tmp_path / "1-2020-01-01.pdf").write_bytes(_flat_pdf_with_streams(30))
     (tmp_path / "2-2020-01-02.pdf").write_bytes(_flat_pdf_with_streams(3))
@@ -296,7 +296,7 @@ def test_slice_pages_status_taxonomy(spark, tmp_path):
     """Round-7 VERDICT #8: the passthrough status distinguishes WHY —
     encrypted vs codec-unsupported ObjStm vs not-a-pdf — so a corpus
     audit can tell crypt problems from codec problems."""
-    from x17a5_spark.sources.binary_docs import read_document_corpus, slice_pages
+    from tests.reference.binary_docs import read_document_corpus, slice_pages
 
     enc = _assemble(
         {
@@ -413,7 +413,7 @@ def test_lzw_decoder_matches_published_spec_example():
     """PDF 32000-1 §7.4.4.2's worked example: the encoded bytes
     80 0B 60 50 22 0C 0C 85 01 decode to 45*5 65 45*3 66 — an external
     vector the decoder AND the test-local encoder both pin to."""
-    from x17a5_spark.sources.pdf_mini import _lzw_decode
+    from tests.reference.pdf_mini import _lzw_decode
 
     spec_encoded = bytes.fromhex("800b6050220c0c8501")
     spec_plain = bytes([45] * 5 + [65] + [45] * 3 + [66])
@@ -424,7 +424,7 @@ def test_lzw_decoder_matches_published_spec_example():
 def test_lzw_roundtrip_widths_and_kwkwk():
     """Width bumps past 9/10/11 bits, the KwKwK self-referencing code,
     and EarlyChange=0 all round-trip through the independent pair."""
-    from x17a5_spark.sources.pdf_mini import _lzw_decode
+    from tests.reference.pdf_mini import _lzw_decode
 
     cases = [
         b"aaabaaabaaa",  # KwKwK territory
@@ -660,8 +660,8 @@ def test_real_world_encrypted_pdf_slices(tmp_path):
     Libtasn1 manual shipped by the OS image — TeX-produced, 36 pages,
     subsetted fonts; committed at tests/fixtures/libtasn1.pdf) sliced
     through the encrypted path. The committed AES-128 fixture
-    (libtasn1-aes128.pdf, regenerable via
-    tools/make_real_encrypted_fixture.py) plus in-test RC4-40/128 and
+    (libtasn1-aes128.pdf, built as tests/reference/__init__.py
+    records) plus in-test RC4-40/128 and
     AES-256 variants must each: (a) be opaque before decryption, (b)
     decrypt + slice to exactly 20 pages with status 'sliced', and (c)
     carry BIT-IDENTICAL decompressed stream payloads (fonts, page
@@ -678,7 +678,7 @@ def test_real_world_encrypted_pdf_slices(tmp_path):
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     from test_pdf_crypt import _encrypt_pdf
 
-    from x17a5_spark.sources import pdf_mini as M
+    from tests.reference import pdf_mini as M
 
     fx = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures")
     plain = open(os.path.join(fx, "libtasn1.pdf"), "rb").read()

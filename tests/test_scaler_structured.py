@@ -12,7 +12,6 @@ from pyspark.sql import functions as F
 
 from x17a5_spark.ml import predict_labels, train_lineitem_classifier
 from x17a5_spark.operators.structured import (
-    apply_manual_overrides,
     build_structured_assets,
     build_structured_liabilities,
 )
@@ -198,22 +197,6 @@ def test_structured_liabilities_best_of_four(spark):
     assert row["recon_total_le_less_liab"] == pytest.approx(1000.0)
     assert row["relative_error"] == pytest.approx(0.0)
     assert row["total_le_check"] == "PERFECT MATCH"
-
-
-def test_manual_override(spark):
-    predicted = spark.createDataFrame(
-        [("Cash", "Receivables"), ("Weird item", "Receivables")],
-        ["lineitem", "label"],
-    )
-    training = spark.createDataFrame(
-        [("Cash", "Cash and cash equivalents")], ["lineitem", "label"]
-    )
-    out = {
-        r["lineitem"]: r["label"]
-        for r in apply_manual_overrides(predicted, training).collect()
-    }
-    assert out["Cash"] == "Cash and cash equivalents"  # manual wins
-    assert out["Weird item"] == "Receivables"  # prediction kept
 
 
 def test_classifier_end_to_end(spark):

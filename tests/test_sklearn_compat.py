@@ -1,4 +1,4 @@
-"""Bit-compat sklearn inference route (ml/sklearn_compat.py): the hash
+"""Bit-compat sklearn inference route (tests/reference/sklearn_compat.py): the hash
 is pinned to MurmurHash3's published reference vectors, the vectorizer
 semantics to hand-derived expectations, and — when sklearn is
 importable — token-for-token and probability-for-probability to the
@@ -10,7 +10,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from x17a5_spark.ml.sklearn_compat import (
+from tests.reference.sklearn_compat import (
     LogRegParams,
     hashing_vectorize,
     murmurhash3_32,

@@ -1,6 +1,6 @@
-"""Tests for the HTML table source (S2), binary document corpus (S5),
-CSV/JSON scans (S3/S4), partitioned sinks (S8/S10), and the X6
-cross-validated tuner."""
+"""Tests for the test-side HTML table (S2) and binary document corpus
+(S5) references in tests/reference/, CSV/JSON scans (S3/S4),
+partitioned sinks (S8/S10), and the X6 cross-validated tuner."""
 
 from __future__ import annotations
 
@@ -9,8 +9,8 @@ import os
 
 from pyspark.sql import functions as F
 
-from x17a5_spark.sources.binary_docs import read_document_corpus, slice_pages
-from x17a5_spark.sources.html_table import parse_html_tables, read_html_tables
+from tests.reference.binary_docs import read_document_corpus, slice_pages
+from tests.reference.html_table import parse_html_tables, read_html_tables
 
 
 # ----------------------------------------------------------------- S2
@@ -88,10 +88,10 @@ def _minimal_pdf(n_pages: int) -> bytes:
 def test_page_slice_real(spark, tmp_path):
     """Real first-N-pages slice (reference FocusReportSlicing.py:78-109)
     — runs with NO optional dependency: the vendored pure-Python slicer
-    (sources/pdf_mini.py) handles the classic-xref subset. Verified
+    (tests/reference/pdf_mini.py) handles the classic-xref subset. Verified
     structurally by the independent count_pages parser, and
     cross-checked with pypdf whenever it happens to be importable."""
-    from tests.pdf_fixtures import count_pages
+    from tests.reference.pdf_fixtures import count_pages
 
     (tmp_path / "885639-2020-02-28.pdf").write_bytes(_minimal_pdf(5))
     df = read_document_corpus(spark, str(tmp_path))
@@ -113,8 +113,8 @@ def test_page_slice_real(spark, tmp_path):
 def test_pdf_mini_slicer_unit():
     """Slicer contract on the simple subset: truncates, is idempotent,
     keeps short docs byte-identical, declines garbage/streams."""
-    from x17a5_spark.sources.pdf_mini import slice_pdf
-    from tests.pdf_fixtures import count_pages
+    from tests.reference.pdf_mini import slice_pdf
+    from tests.reference.pdf_fixtures import count_pages
 
     five = _minimal_pdf(5)
     assert count_pages(five) == 5

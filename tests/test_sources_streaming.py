@@ -1,40 +1,11 @@
-"""Tests for source connectors (S1/S5/S6 + multimodal plumbing) and
+"""Tests for source connectors (S6 + multimodal plumbing) and
 incremental anti-join semantics."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
-from x17a5_spark.sources.fwf import read_fixed_width
 from x17a5_spark.sources.multimodal import decode_metadata, extract_features
 from x17a5_spark.sources.ocr import OcrSource, StubOcrBackend, quarantine
 from x17a5_spark.streaming.incremental import incremental_todo
-
-
-# ----------------------------------------------------------------- S1
-def test_fixed_width_reader(spark, tmp_path):
-    def fwf_line(form, company, cik, date, url):
-        return (
-            form.ljust(12) + company.ljust(62) + cik.ljust(12)
-            + date.ljust(12) + url
-        )
-
-    lines = [
-        fwf_line("X-17A-5", "GOLDMAN SACHS & CO.", "885639", "2020-02-28",
-                 "edgar/data/885639/file1.txt"),
-        fwf_line("10-K", "SOME OTHER CORP", "123456", "2020-03-15",
-                 "edgar/data/123456/file2.txt"),
-    ]
-    p = tmp_path / "form.idx"
-    p.write_text("\n".join(lines) + "\n")
-    df = read_fixed_width(spark, str(p))
-    rows = {r["cik"]: r for r in df.collect()}
-    assert rows["885639"]["form_type"] == "X-17A-5"
-    assert rows["885639"]["date_filed"] == "2020-02-28"
-    assert rows["123456"]["company_name"] == "SOME OTHER CORP"
-    # P1 regex filter on top of the scan
-    kept = df.filter(F.col("form_type").rlike("(?i)^x-17a")).count()
-    assert kept == 1
 
 
 # ----------------------------------------------------------------- S6

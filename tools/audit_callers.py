@@ -23,9 +23,13 @@ Matching is by bare name across modules, so two definitions that share
 a name are reached together; the audit can miss an unused function
 that way, never flag a used one.
 
-Allowlisted names are treated as roots, so what they call is reached
-through them. An allowlist entry that production reaches anyway, or
-that names no definition, is stale and fails the audit.
+The allowlist holds test references only: functions that no
+production code calls but that a test compares production code
+against. Allowlisted names are treated as roots, so what they call is
+reached through them. An allowlist entry is stale, and fails the
+audit, when production reaches it anyway, when it names no
+definition, or when no file under ``tests/`` or ``perfbench/tests/``
+references it.
 
 Exit code 1 on any unreached, unallowlisted definition or any stale
 allowlist entry.
@@ -42,24 +46,10 @@ from collections.abc import Iterable, Iterator
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-# "module.path:name" -> why nothing in production calls it yet. Only
-# reference-pipeline steps that no e1 stage runs, each a "wire into e1
-# with an oracle, or delete" item, and two test references.
+# "module.path:name" -> why nothing in production calls it. Only test
+# references: Python forms of an operator that tests/ or perfbench/tests
+# compare the production (Spark expression) form against.
 ALLOWED = {
-    "sources.fwf:read_fixed_width":
-        "reference step 1 (EDGAR form.idx listing); no e1 stage reads it yet",
-    "sources.html_table:read_html_tables":
-        "reference step 2 (HTML filings); no e1 stage reads it yet",
-    "sources.binary_docs:read_document_corpus":
-        "reference steps 2-3 (PDF corpus with its decrypt path); e1 starts from OCR'd cells",
-    "sources.binary_docs:slice_pages":
-        "reference step 3 (first-pages slice, decrypting as needed); called via read_document_corpus",
-    "ml.sklearn_compat:sklearn_predict_labels":
-        "reference step 6: the only route for the reference's joblib models",
-    "operators.structured:apply_manual_overrides":
-        "J5, reference DatabaseStructured.manual_cl_merge; no gold stage applies it yet",
-    "operators.patches:apply_idio_patches":
-        "F14, reference OCRClean.idio_chg; no silver stage applies it yet",
     "operators.row_split:row_split_kernel":
         "the Python reference the row-split tests compare the array-function split against",
     "operators.scaler:_line_scale_py":
@@ -67,6 +57,7 @@ ALLOWED = {
 }
 
 DEFAULT_ROOTS = ("bench.py", "__spark_entry__.py", "tools", "perfbench")
+TEST_DIRS = ("tests", os.path.join("perfbench", "tests"))
 
 
 def _py_files(path: str) -> Iterator[str]:
@@ -124,11 +115,16 @@ def _module_name(pkg_dir: str, path: str) -> str:
 
 
 def audit(
-    pkg_dir: str, roots: Iterable[str] = (), allowed: dict[str, str] | None = None
+    pkg_dir: str,
+    roots: Iterable[str] = (),
+    allowed: dict[str, str] | None = None,
+    tests: Iterable[str] | None = None,
 ) -> tuple[list[str], list[str]]:
     """Return (unreached, stale): ``module:name`` of each top-level
     function or class that no root reaches and ``allowed`` does not
-    name, and each ``allowed`` key that is reached or not defined."""
+    name, and each ``allowed`` key that is reached or not defined or,
+    when ``tests`` (files or directories) is given, that no test
+    references."""
     allowed = {} if allowed is None else allowed
     # name -> bodies to follow once the name is reached
     bodies: dict[str, list[ast.AST]] = {}
@@ -155,19 +151,29 @@ def audit(
                     bodies.setdefault(name, []).append(node)
             else:
                 root_nodes.append(node)
-    for root in roots:
-        for path in _py_files(root):
-            with open(path, encoding="utf-8") as fh:
-                root_nodes.append(ast.parse(fh.read(), path))
+    root_nodes.extend(_parse_all(roots))
 
     allowed_names = {key.split(":", 1)[1] for key in allowed}
     production = _reach(_names(root_nodes), bodies)
     reached = _reach(_names(root_nodes) | allowed_names, bodies)
     unreached = sorted(k for k, n in defs.items() if n not in reached and k not in allowed)
+    tested = None if tests is None else _names(_parse_all(tests))
     stale = sorted(
-        k for k in allowed if k not in defs or defs[k] in production
+        k for k in allowed
+        if k not in defs
+        or defs[k] in production
+        or (tested is not None and defs[k] not in tested)
     )
     return unreached, stale
+
+
+def _parse_all(paths: Iterable[str]) -> list[ast.AST]:
+    trees = []
+    for root in paths:
+        for path in _py_files(root):
+            with open(path, encoding="utf-8") as fh:
+                trees.append(ast.parse(fh.read(), path))
+    return trees
 
 
 def _reach(seed: set[str], bodies: dict[str, list[ast.AST]]) -> set[str]:
@@ -183,11 +189,12 @@ def _reach(seed: set[str], bodies: dict[str, list[ast.AST]]) -> set[str]:
 
 def main() -> int:
     roots = [os.path.join(REPO, r) for r in DEFAULT_ROOTS]
-    unreached, stale = audit(os.path.join(REPO, "x17a5_spark"), roots, ALLOWED)
+    tests = [os.path.join(REPO, t) for t in TEST_DIRS]
+    unreached, stale = audit(os.path.join(REPO, "x17a5_spark"), roots, ALLOWED, tests)
     for key in unreached:
         print(f"NO CALLER  {key}")
     for key in stale:
-        print(f"STALE      {key}  (allowlisted, but reached or not defined)")
+        print(f"STALE      {key}  (allowlisted, but reached, not defined or untested)")
     n = len(unreached) + len(stale)
     print("PASS" if n == 0 else f"FAIL ({n})")
     return 1 if n else 0

@@ -112,14 +112,14 @@ def _arrow_type_class(t) -> str:
 
 
 def compare(name: str, spark_df, con) -> dict:
-    t0 = time.time()
+    t0 = time.perf_counter()
     spark_cols = spark_df.columns
     spark_types = {f.name: _spark_type_class(f.dataType.simpleString())
                    for f in spark_df.schema.fields}
     spark_rows = [tuple(r) for r in spark_df.collect()]
-    t_spark = time.time() - t0
+    t_spark = time.perf_counter() - t0
 
-    t0 = time.time()
+    t0 = time.perf_counter()
     res = con.execute(ORACLES[name])
     arrow = res.fetch_arrow_table()
     duck_cols = arrow.column_names
@@ -134,7 +134,7 @@ def compare(name: str, spark_df, con) -> dict:
         tuple(float(v) if isinstance(v, Decimal) else v for v in r.values())
         for r in arrow.to_pylist()
     ]
-    t_duck = time.time() - t0
+    t_duck = time.perf_counter() - t0
 
     info = {
         "name": name,

@@ -187,12 +187,12 @@ def _py_float_repr(x: Column) -> Column:
     )
 
 
-def epsilon_one_digit_match(x1: Column, x2: Column, tol: float = 0.01) -> Column:
+def epsilon_one_digit_match(x1: Column, x2: Column) -> Column:
     """F11 — ``epsilon_error`` (DatabaseUnstructured.py:62-106).
 
     True when the decimal renderings have equal length and differ in
     exactly one character position, and the relative difference is
-    within ``tol``. A Levenshtein distance of 1 between equal-length
+    within 1%. A Levenshtein distance of 1 between equal-length
     strings is exactly "one substituted character", so the built-in
     ``levenshtein`` replaces the reference's positional scan.
     """
@@ -205,7 +205,7 @@ def epsilon_one_digit_match(x1: Column, x2: Column, tol: float = 0.01) -> Column
         # bounded variant: banded O(n*k) early-exit instead of the full
         # O(n^2) matrix; == 1 is unchanged (distance <= 2 is exact)
         & (F.levenshtein(s1, s2, 2) == 1)
-        & (F.abs((x1 - x2) / x1) <= tol)
+        & (F.abs((x1 - x2) / x1) <= 0.01)
     )
 
 

@@ -236,22 +236,17 @@ def connected_components(
     return cc_star(edges, src, dst)
 
 
-def canonicalize_duplicates(
-    corpus: DataFrame, components: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
-    """Join cluster ids back to the corpus: singletons become their own
-    canonical; ``is_canonical`` marks the one row per cluster to keep."""
+def canonicalize_duplicates(corpus: DataFrame, components: DataFrame) -> DataFrame:
+    """Join cluster ids back to the corpus on ``doc_id``: singletons
+    become their own canonical; ``is_canonical`` marks the one row per
+    cluster to keep."""
     joined = (
         corpus.join(
-            components.select(
-                F.col("id").alias(id_col), F.col("comp")
-            ),
-            id_col,
+            components.select(F.col("id").alias("doc_id"), F.col("comp")),
+            "doc_id",
             "left",
         )
-        .withColumn("cluster_id", F.coalesce("comp", F.col(id_col)))
+        .withColumn("cluster_id", F.coalesce("comp", F.col("doc_id")))
         .drop("comp")
     )
-    return joined.withColumn(
-        "is_canonical", F.col(id_col) == F.col("cluster_id")
-    )
+    return joined.withColumn("is_canonical", F.col("doc_id") == F.col("cluster_id"))

@@ -38,7 +38,7 @@ pyspark's per-task ``setup_spark_files``, which calls
 ``importlib.invalidate_caches()``; on Python 3.11 that makes each
 cached zipimporter re-read its archive's directory. Workers start on
 the installed pyspark (``session.py``, ``x17a5_pyspark_daemon``), so
-the only zip left on their path is the 66-entry package zip that
+the only zip left on their path is the 54-entry package zip that
 ``tables._ship_package`` adds: ``invalidate_caches()`` takes
 0.0003-0.0007 s with it and 0.00003-0.00006 s without it. With
 Spark's default worker path (17 zip and jar importers, among them the

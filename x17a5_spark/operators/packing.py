@@ -44,13 +44,12 @@ def pack_sequences(
     budget: int,
     group_col: str = "source",
     order_col: str = "doc_id",
-    tokens_col: str = "n_tokens",
     n_shards: int = 1,
 ) -> DataFrame:
     """Assign each row a ``bin_id`` (window index within its group) and
     ``bin_fill`` (window occupancy after the row is placed).
 
-    ``df`` must carry ``group_col``, ``order_col`` and ``tokens_col``;
+    ``df`` must carry ``group_col``, ``order_col`` and ``n_tokens``;
     token counting stays upstream in codegen'd column expressions — the
     kernel only does the O(n) greedy scan Spark's built-ins can't
     express (the fill resets feed back into themselves).
@@ -71,7 +70,7 @@ def pack_sequences(
         bins, fills = [], []
         bin_id, fill = 0, 0
         first = True
-        for n in pdf[tokens_col].astype("int64"):
+        for n in pdf["n_tokens"].astype("int64"):
             if not first and fill + n > budget:
                 bin_id += 1
                 fill = 0
@@ -83,7 +82,7 @@ def pack_sequences(
             {
                 "doc_id": pdf[order_col].astype("int64"),
                 "group_key": pdf[group_col].astype(str),
-                "n_tokens": pdf[tokens_col].astype("int32"),
+                "n_tokens": pdf["n_tokens"].astype("int32"),
                 "bin_id": pd.Series(bins, dtype="int32"),
                 "bin_fill": pd.Series(fills, dtype="int32"),
             }
@@ -92,7 +91,7 @@ def pack_sequences(
     slim = df.select(
         F.col(order_col).cast("long").alias(order_col),
         F.col(group_col).cast("string").alias(group_col),
-        F.col(tokens_col).cast("int").alias(tokens_col),
+        F.col("n_tokens").cast("int").alias("n_tokens"),
     )
     if n_shards == 1:
         return slim.groupBy(group_col).applyInPandas(_pack, PACK_SCHEMA)

@@ -8,13 +8,13 @@ registry query (queries/dedup.py::d15_paragraph_dedup) wraps it with
 the demo fixture and the DuckDB oracle twin.
 
 Semantics (engine-identical to the oracle):
-- split each doc into paragraphs: fixed ``para_tokens``-token chunks by
+- split each doc into paragraphs: fixed ``PARA_TOKENS``-token chunks by
   default, or — ``delimiter`` mode — on a structural regex
   (blank lines, newlines) first, fixed-width chunking only the
   oversized spans;
 - keep the FIRST occurrence (min (doc_id, pos)) of every paragraph
   corpus-wide;
-- always keep paragraphs shorter than ``min_tokens`` (a ragged 1-4
+- always keep paragraphs shorter than ``MIN_TOKENS`` (a ragged 1-4
   token tail is noise, not boilerplate);
 - reassemble each doc from its surviving paragraphs in order; docs
   deduplicated to nothing stay in the output with n_kept=0 and empty
@@ -61,21 +61,22 @@ IDSPACE = (1 << 63) // PACK  # doc_id bound so doc_id*PACK+pos fits a long
 _PARA_STRUCT = "array<struct<para:string,para_len:int>>"
 
 
-def _chunk_structs(toks, para_tokens: int):
-    """Token array → array of (para text, token count) fixed-width
-    chunks. The lambda variable binds the token array ONCE per element,
-    so nested references never re-execute an upstream split."""
+def _chunk_structs(toks):
+    """Token array → array of (para text, token count) chunks of
+    ``PARA_TOKENS`` tokens. The lambda variable binds the token array
+    ONCE per element, so nested references never re-execute an upstream
+    split."""
     n = F.size(toks)
-    nseg = F.floor((n + para_tokens - 1) / para_tokens).cast("int")
+    nseg = F.floor((n + PARA_TOKENS - 1) / PARA_TOKENS).cast("int")
     return F.when(
         nseg >= 1,
         F.transform(
             F.sequence(F.lit(0), nseg - 1),
             lambda i: F.struct(
                 F.concat_ws(
-                    " ", F.slice(toks, i * para_tokens + 1, para_tokens)
+                    " ", F.slice(toks, i * PARA_TOKENS + 1, PARA_TOKENS)
                 ).alias("para"),
-                F.least(F.lit(para_tokens), n - i * para_tokens)
+                F.least(F.lit(PARA_TOKENS), n - i * PARA_TOKENS)
                 .cast("int")
                 .alias("para_len"),
             ),
@@ -106,27 +107,21 @@ def packed_para_id():
 
 
 def paragraph_table(
-    docs: DataFrame,
-    para_tokens: int = PARA_TOKENS,
-    delimiter: str | None = None,
+    docs: DataFrame, delimiter: str | None = None
 ) -> tuple[DataFrame, DataFrame]:
     """(doc_id, text) -> (base, paras): the persisted per-doc paragraph
     array stage table and its exploded (doc_id, pos, para, para_len)
     view — shared by exact (d15/d16) and near (d18) paragraph dedup."""
     staged = docs.select("doc_id", "text")
     if delimiter is None:
-        para_arr = _chunk_structs(F.col("_toks"), para_tokens)
+        para_arr = _chunk_structs(F.col("_toks"))
         staged = staged.withColumn("_toks", tokens(F.col("text")))
     else:
         spans = F.filter(
             F.transform(F.split(F.col("text"), delimiter), tokens),
             lambda t: F.size(t) > 0,
         )
-        para_arr = F.flatten(
-            F.transform(
-                F.col("_spans"), lambda t: _chunk_structs(t, para_tokens)
-            )
-        )
+        para_arr = F.flatten(F.transform(F.col("_spans"), _chunk_structs))
         staged = staged.withColumn("_spans", spans)
     base = (
         staged.select("doc_id", para_arr.alias("paras"))
@@ -144,12 +139,7 @@ def paragraph_table(
     return base, paras
 
 
-def dedup_paragraphs(
-    docs: DataFrame,
-    para_tokens: int = PARA_TOKENS,
-    min_tokens: int = MIN_TOKENS,
-    delimiter: str | None = None,
-) -> DataFrame:
+def dedup_paragraphs(docs: DataFrame, delimiter: str | None = None) -> DataFrame:
     """``(doc_id, text)`` → ``(doc_id, n_para, n_kept, text_dedup)``.
 
     ``docs`` must have unique ``doc_id`` (long) and string ``text``.
@@ -157,16 +147,16 @@ def dedup_paragraphs(
     ``delimiter``: a regex — when set, paragraphs
     follow the document's REAL structure: split the text on the regex
     (e.g. ``\\n\\s*\\n`` for blank-line paragraphs), drop empty spans,
-    then fixed-width chunk only the OVERSIZED spans (> ``para_tokens``
+    then fixed-width chunk only the OVERSIZED spans (> ``PARA_TOKENS``
     tokens) so a single run-on span cannot become an unboundedly long
     dedup key. ``None`` keeps the fixed-width split over the whole
     token stream (the d15 oracle twin's mode). Positions stay one
     global in-order sequence either way, so the keep-first packing and
     reassembly logic downstream is mode-independent.
     """
-    base, paras = paragraph_table(docs, para_tokens, delimiter)
+    base, paras = paragraph_table(docs, delimiter)
     packed = packed_para_id()
-    salt = F.when(F.col("para_len") < min_tokens, packed)
+    salt = F.when(F.col("para_len") < MIN_TOKENS, packed)
     kept = (
         paras.withColumn("_salt", salt)
         .groupBy("para", "_salt")
@@ -202,25 +192,19 @@ D18_TAU = 0.6  # confirm threshold on exact bigram-shingle Jaccard
 D18_SHINGLE_K = 2  # bigrams: a 1-token drift in a 12-token para -> J~0.69
 
 
-def near_dedup_paragraphs(
-    docs: DataFrame,
-    para_tokens: int = PARA_TOKENS,
-    min_tokens: int = MIN_TOKENS,
-    delimiter: str | None = None,
-    tau: float = D18_TAU,
-) -> DataFrame:
+def near_dedup_paragraphs(docs: DataFrame, delimiter: str | None = None) -> DataFrame:
     """``(doc_id, text)`` → ``(doc_id, n_para, n_kept, text_dedup)``,
     dropping paragraphs that are NEAR-duplicates of an earlier one.
 
     Pipeline (mirrored exactly by the d18 oracle, so the drop decision
     is hash-checked): paragraphize like d15/d16 → bigram-shingle each
-    eligible paragraph (≥ ``min_tokens`` tokens) → 16 minhashes carved
+    eligible paragraph (≥ ``MIN_TOKENS`` tokens) → 16 minhashes carved
     from ONE md5 per shingle (disjoint 32-bit hex slices — the d3
     one-permutation discipline: one hash pass, not 16) → 8 two-row
     band signatures → per band-bucket the min packed (doc_id, pos) is
     the bucket keeper → every paragraph confirms against its (≤ 8)
     distinct bucket keepers with EXACT shingle-set Jaccard and is
-    dropped iff any keeper reaches ``tau``. Short paragraphs are always
+    dropped iff any keeper reaches ``D18_TAU``. Short paragraphs are always
     kept (d15's noise rule).
 
     Scale: no window anywhere — bucket keepers come from a map-side-
@@ -232,9 +216,9 @@ def near_dedup_paragraphs(
     """
     from x17a5_spark.functions.text import word_shingles
 
-    base, paras = paragraph_table(docs, para_tokens, delimiter)
+    base, paras = paragraph_table(docs, delimiter)
     p = paras.withColumn("w", packed_para_id())
-    elig = p.filter(F.col("para_len") >= min_tokens)
+    elig = p.filter(F.col("para_len") >= MIN_TOKENS)
     # 16 minhashes = 4 salted md5s per shingle, 4 disjoint 32-bit hex
     # slices each (one md5 only covers 32 hex chars — 4 slices); the
     # 56-bit shingle id for the exact-Jaccard confirm rides the first
@@ -301,7 +285,7 @@ def near_dedup_paragraphs(
     dropped = (
         cand.join(ga, "w")
         .join(gb, "kw")
-        .filter(F.round(jac, 6) >= tau)
+        .filter(F.round(jac, 6) >= D18_TAU)
         .select("w")
         .distinct()
     )

@@ -59,17 +59,16 @@ def salted_join(
     *,
     salt_from: Sequence[str | Column],
     n_salt: int = 8,
-    how: str = "inner",
 ) -> DataFrame:
-    """Join ``fact`` to ``dim`` on ``on`` with a salted shuffle.
+    """Inner-join ``fact`` to ``dim`` on ``on`` with a salted shuffle.
 
     The dim side is hinted ``shuffle_hash`` so the salting is actually
     exercised (a broadcast join has no reducer to skew). Result is
-    bit-identical to ``fact.join(dim, on, how)``.
+    bit-identical to ``fact.join(dim, on)``.
     """
     f = with_salt(fact, salt_from, n_salt)
     d = explode_salt(dim, n_salt).hint("shuffle_hash")
-    return f.join(d, [*on, SALT_COL], how).drop(SALT_COL)
+    return f.join(d, [*on, SALT_COL], "inner").drop(SALT_COL)
 
 
 def salted_aggregate(

@@ -3,7 +3,8 @@ DatabaseStructured.py:161-267), re-expressed in long form.
 
 Reference flow: predict a canonical label per distinct line item (X5),
 overwrite with manual classifications where available (J5,
-manual_cl_merge :15-48), pivot-sum per filing × label (A3,
+manual_cl_merge :15-48; the builders here take the finished label map
+as an input), pivot-sum per filing × label (A3,
 structured_data :50-89), dedup amended filings per (CIK, fiscal year)
 keep-first (W5, :225,241), reconstruct totals and stamp the
 accounting-identity match class (A4/F12, :230-264).
@@ -39,22 +40,6 @@ TOTAL_ASSETS = "Total assets"
 TOTAL_LE = "Total liabilities and shareholder's equity"
 TOTAL_L = "Total liabilities"
 TOTAL_E = "Total shareholder's equity"
-
-
-def apply_manual_overrides(predicted: DataFrame, training: DataFrame) -> DataFrame:
-    """J5 — coalesce manual labels over model predictions.
-
-    ``predicted``: (lineitem, label); ``training``: (lineitem, label).
-    Single broadcast left join replaces the reference's semi/anti split
-    + concat (manual_cl_merge).
-    """
-    manual = training.select(
-        "lineitem", F.col("label").alias("manual_label")
-    ).dropDuplicates(["lineitem"])
-    return predicted.join(F.broadcast(manual), "lineitem", "left").select(
-        "lineitem",
-        F.coalesce("manual_label", "label").alias("label"),
-    )
 
 
 def pivot_by_label(

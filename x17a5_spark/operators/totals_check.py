@@ -59,9 +59,9 @@ def _is_power_of_ten_or_digit_drop(x1: float, x2: float) -> tuple[float, bool]:
     return x1, False
 
 
-def _is_epsilon_match(x1: float, x2: float, tol: float = 0.01) -> bool:
+def _is_epsilon_match(x1: float, x2: float) -> bool:
     """epsilon_error semantics: equal-length decimal renderings differing
-    in exactly one character, relative difference within tol."""
+    in exactly one character, relative difference within 1%."""
     if (
         x1 == 0 or x2 == 0
         or x1 is None or x1 != x1  # pd.isna on scalar floats
@@ -74,7 +74,7 @@ def _is_epsilon_match(x1: float, x2: float, tol: float = 0.01) -> bool:
     n_diff = sum(1 for a, b in zip(s1, s2) if a != b)
     if n_diff != 1:
         return False
-    return abs((x1 - x2) / x1) <= tol
+    return abs((x1 - x2) / x1) <= 0.01
 
 
 def totals_check_kernel(

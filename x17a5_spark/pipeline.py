@@ -42,6 +42,7 @@ an empty file.
 from __future__ import annotations
 
 import os
+import time
 from functools import partial
 
 from pyspark import StorageLevel
@@ -224,8 +225,6 @@ def run_pipeline(
     run attempted, i.e. every document given that was not yet in bronze,
     so a filing that failed once and landed on a rerun has no row.
     """
-    import time
-
     from x17a5_spark.operators.structured import build_structured_assets
     from x17a5_spark.sources.ocr import OcrSource, StubOcrBackend, quarantine
 
@@ -235,12 +234,12 @@ def run_pipeline(
         for d in ("bronze_cells", "ocr_errors", "silver", "gold_assets")
     )
     LAST_STAGE_SECONDS.clear()
-    t0 = time.time()
+    t0 = time.perf_counter()
 
     def _mark(stage: str) -> None:
         nonlocal t0
-        LAST_STAGE_SECONDS[stage] = round(time.time() - t0, 3)
-        t0 = time.time()
+        LAST_STAGE_SECONDS[stage] = round(time.perf_counter() - t0, 3)
+        t0 = time.perf_counter()
 
     # Steps 1-2 (main_p1/main_p2): OCR only the docs not yet in bronze;
     # failures go to the S10 quarantine ledger, not the job.

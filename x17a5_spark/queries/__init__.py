@@ -42,6 +42,8 @@ WINDOW_ORDER = [
     # --- F1 accounting parse ---
     "f1_parse_accounting",
     "c5_accounting_chain",
+    "f10_power_of_ten",
+    "f11_epsilon_match",
     # --- LLM-data-pipeline: dedup / similarity / text / multimodal ---
     "d2_ngram_jaccard",
     "d3_minhash_lsh",
@@ -64,13 +66,11 @@ WINDOW_ORDER = [
     "t18_bpe_train",
     "t29_ngram_novelty",
     "t30_decontamination",
-    "t31_pii_scrub",
-    "t32_repetition_filter",
     "t34_model_quality_filter",
-    # --- corpus-prep + packing layer ---
-    "k9_concat_chunking",
-    "k10_curriculum_order",
-    "k11_length_batching",
+    "t21_zipf_fit",
+    "t22_boilerplate_removal",
+    "t26_token_entropy",
+    # --- corpus-prep layer ---
     "e5_incremental_ingest",
     "e6_curation_funnel",
     "e7_dedup_audit",
@@ -83,8 +83,8 @@ WINDOW_ORDER = [
     "g1_pagerank",
     "g2_triangle_count",
     "m6_phash_dedup",
-    "j16_fuzzy_name_join",
     "j17_bucketed_join",
+    "a21_cohort_retention",
     # --- silver chain ---
     "e2_clean_pipeline",
     "k1_totals_check",

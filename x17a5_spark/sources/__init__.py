@@ -1,12 +1,6 @@
-"""Source connectors (SURVEY.md §2.1 S1-S10)."""
+"""Source connectors (SURVEY.md §2.1): the OCR stage over a binary
+document corpus and the multimodal media decoders."""
 
-from x17a5_spark.sources.fwf import read_fixed_width
-from x17a5_spark.sources.binary_docs import read_document_corpus
 from x17a5_spark.sources.ocr import OcrSource, StubOcrBackend
 
-__all__ = [
-    "OcrSource",
-    "StubOcrBackend",
-    "read_document_corpus",
-    "read_fixed_width",
-]
+__all__ = ["OcrSource", "StubOcrBackend"]

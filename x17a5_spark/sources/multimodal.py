@@ -294,14 +294,15 @@ def decode_mp4_duration(content: bytes) -> float:
     return dur
 
 
-def decode_metadata(df: DataFrame, content_col: str = "media") -> DataFrame:
-    """Extract typed metadata (width/height/bytes) from binary media.
+def decode_metadata(df: DataFrame) -> DataFrame:
+    """Extract typed metadata (width/height/bytes) from the binary
+    ``media`` column.
     Bad rows land in the ``error`` column, never fail the stage."""
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             widths, heights, sizes, errors = [], [], [], []
-            for content in pdf[content_col]:
+            for content in pdf["media"]:
                 try:
                     w, h = _decode_header(content)
                     widths.append(w)
@@ -313,7 +314,7 @@ def decode_metadata(df: DataFrame, content_col: str = "media") -> DataFrame:
                     heights.append(None)
                     sizes.append(len(content) if content is not None else None)
                     errors.append(f"{type(e).__name__}: {e}")
-            out = pdf[["media_id", "kind", content_col]].copy()
+            out = pdf[["media_id", "kind", "media"]].copy()
             out["width"] = pd.array(widths, dtype="Int32")
             out["height"] = pd.array(heights, dtype="Int32")
             out["n_bytes"] = pd.array(sizes, dtype="Int64")
@@ -323,16 +324,16 @@ def decode_metadata(df: DataFrame, content_col: str = "media") -> DataFrame:
     return df.mapInPandas(op, schema=MEDIA_SCHEMA)
 
 
-def extract_features(df: DataFrame, content_col: str = "media", dim: int = 8) -> DataFrame:
-    """Deterministic stand-in feature extractor: byte-histogram folded to
-    ``dim`` buckets, normalized. The Spark-side contract (Arrow batches
-    in, fixed-length array<double> out) is exactly what a real
-    embedding model would use."""
+def extract_features(df: DataFrame, dim: int = 8) -> DataFrame:
+    """Deterministic stand-in feature extractor over ``media``: its
+    byte histogram folded to ``dim`` buckets, normalized. The Spark-side
+    contract (Arrow batches in, fixed-length array<double> out) is
+    exactly what a real embedding model would use."""
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             feats, errors = [], []
-            for content in pdf[content_col]:
+            for content in pdf["media"]:
                 try:
                     if content is None:
                         raise ValueError("null media")
@@ -352,9 +353,9 @@ def extract_features(df: DataFrame, content_col: str = "media", dim: int = 8) ->
     return df.mapInPandas(op, schema=FEATURE_SCHEMA)
 
 
-def extract_pixel_stats(df: DataFrame, content_col: str = "media") -> DataFrame:
-    """Real per-channel pixel statistics for PNG media (stdlib decoder):
-    (width, height, channels, per-channel mean in [0, 1]). Decode
+def extract_pixel_stats(df: DataFrame) -> DataFrame:
+    """Real per-channel pixel statistics for PNG ``media`` (stdlib
+    decoder): (width, height, channels, per-channel mean in [0, 1]). Decode
     failures route to the error column — one corrupt blob never fails
     the stage. Same Arrow-batched mapInPandas contract a real
     vision-embedding stage uses."""
@@ -362,7 +363,7 @@ def extract_pixel_stats(df: DataFrame, content_col: str = "media") -> DataFrame:
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ws, hs, chs, means, errors = [], [], [], [], []
-            for content in pdf[content_col]:
+            for content in pdf["media"]:
                 try:
                     if content is None:
                         raise ValueError("null media")
@@ -399,10 +400,8 @@ def extract_pixel_stats(df: DataFrame, content_col: str = "media") -> DataFrame:
 FRAME_SCHEMA = "media_id bigint, frame_idx int, t_sec double, error string"
 
 
-def sample_frames(
-    df: DataFrame, stride_sec: float = 2.0, content_col: str = "media"
-) -> DataFrame:
-    """Frame-sampling plumbing for video media: parse the container
+def sample_frames(df: DataFrame, stride_sec: float = 2.0) -> DataFrame:
+    """Frame-sampling plumbing for video ``media``: parse the container
     duration with the real ISO-BMFF box walk (``decode_mp4_duration``)
     and emit one row per sampled timestamp (t = 0, stride, 2*stride, …
     <= duration) — the N-rows-in, M-rows-out UDTF shape a real
@@ -422,7 +421,7 @@ def sample_frames(
             # per sampled frame (~35 frames per media at the fixture
             # durations).
             ok_ids, ok_ns, err_ids, err_msgs = [], [], [], []
-            for media_id, content in zip(pdf["media_id"], pdf[content_col]):
+            for media_id, content in zip(pdf["media_id"], pdf["media"]):
                 try:
                     if content is None:
                         raise ValueError("null media")

@@ -52,10 +52,12 @@ class OcrBackend:
 class StubOcrBackend(OcrBackend):
     """Deterministic fake: 'reads' a two-row table from the content hash.
     Lets every piece of the Spark-side plumbing run in tests without any
-    OCR library or network."""
+    OCR library or network. A document containing ``FAIL_MARKER`` fails
+    its fetch."""
 
-    def __init__(self, fail_marker: bytes = b"__FAIL__"):
-        self.fail_marker = fail_marker
+    FAIL_MARKER = b"__FAIL__"
+
+    def __init__(self):
         self._jobs: dict[str, bytes] = {}
 
     def start(self, doc_id: str, content: bytes) -> str:
@@ -68,7 +70,7 @@ class StubOcrBackend(OcrBackend):
 
     def fetch(self, job_id: str) -> list[dict]:
         content = self._jobs[job_id]
-        if self.fail_marker in content:
+        if self.FAIL_MARKER in content:
             raise RuntimeError("stub OCR failure")
         text = content.decode("utf-8", errors="replace")
         rows = []
